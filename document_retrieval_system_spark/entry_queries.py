@@ -218,7 +218,8 @@ def _corpus_n(docs: DataFrame) -> int:
     dl = F.size(simple_tokens(F.col("text")))
     return int(
         docs.select(dl.alias("_dl"))
-        .agg(F.sum(F.when(F.col("_dl") > 0, 1).otherwise(0)))
+        .agg(F.coalesce(F.sum(F.when(F.col("_dl") > 0, 1).otherwise(0)),
+                        F.lit(0)))
         .collect()[0][0]
     )
 

@@ -251,11 +251,3 @@ def s8b_decode(buf: bytes) -> np.ndarray:
         idx = offsets[mask][:, None] + np.arange(count, dtype=np.int64)
         out[idx.ravel()] = vals.ravel()
     return out
-
-
-def bm25_tf_norm(tf: np.ndarray, doc_len: np.ndarray, avgdl: float,
-                 k1: float = 1.2, b: float = 0.75) -> np.ndarray:
-    """tf / (tf + k1*(1-b+b*dl/avgdl)) — search_engine.py:466, float64."""
-    tf = tf.astype(np.float64)
-    dl = doc_len.astype(np.float64)
-    return tf / (tf + k1 * (1.0 - b + b * dl / avgdl))

@@ -25,8 +25,9 @@ postings plus the docs/stats sidecars):
                         must match the decoded payloads (codec or
                         re-block corruption; block-max pruning would
                         silently return wrong results on bad bounds).
-- ``df_local``          block 0's df_local must equal the (shard,
-                        term)'s total decoded postings.
+- ``df_local``          block 0's df_local, summed over the segments
+                        of a (shard, term) as ``finalize_index`` sums
+                        it, must equal its total decoded postings.
 - ``doc_len_mismatch``  dl replicated in posting blocks must equal the
                         docs table's doc_len for that ordinal.
 - ``term_stats``        the term_stats sidecar must equal df/cf
@@ -127,7 +128,8 @@ def fsck_index(spark: SparkSession, index_dir: str) -> DataFrame:
         F.max("last_doc").alias("_adv_last"),
         F.max("max_tf").alias("_adv_maxtf"),
         F.min("min_dl").alias("_adv_mindl"),
-        F.max(F.when(F.col("block_no") == 0, F.col("df_local"))).alias("_df0"),
+        # each appended segment has its own block 0
+        F.sum(F.when(F.col("block_no") == 0, F.col("df_local"))).alias("_df0"),
     )
     act = decoded.groupBy("shard", "term").agg(
         F.count("*").alias("_act_n"),

@@ -85,8 +85,9 @@ def add_doc_identity(pages: DataFrame, n_shards: int) -> DataFrame:
     )
 
 
-def assign_local_no(docs: DataFrame) -> DataFrame:
-    """Dense per-shard ordinal, assigned in URL sort order.
+def assign_local_no(docs: DataFrame, base: DataFrame | None = None) -> DataFrame:
+    """Dense per-shard ordinal, assigned in URL sort order — the one
+    ordinal allocator of every writer.
 
     URL-ordered docIDs are the classic IR assignment for web corpora:
     pages of one host/topic share vocabulary and sort adjacent, so a
@@ -96,9 +97,22 @@ def assign_local_no(docs: DataFrame) -> DataFrame:
     because hashing whitens the docID axis (measured decoded_frac ~1.0
     regardless of corpus clustering).  It also tightens delta+varbyte:
     hot hosts yield dense ordinal runs.  One task per shard sorts its
-    urls; at larger scale raise n_shards so the sort fits an executor."""
-    w = Window.partitionBy("shard").orderBy("url")
-    return docs.withColumn("local_no", (F.row_number().over(w) - 1).cast("long"))
+    urls; at larger scale raise n_shards so the sort fits an executor.
+
+    ``base``: the docs rows a shard already holds.  Ordinals then start
+    past each shard's max ``local_no`` (superseded versions included), so
+    an ordinal is never reused by a different doc version — the
+    stable-ordinal rule the stream paths rely on
+    (streaming/incremental.py)."""
+    rank = F.row_number().over(Window.partitionBy("shard").orderBy("url")) - 1
+    if base is None:
+        return docs.withColumn("local_no", rank.cast("long"))
+    start = base.groupBy("shard").agg((F.max("local_no") + 1).alias("_start"))
+    return (
+        docs.join(F.broadcast(start), "shard", "left")
+        .withColumn("local_no", (F.coalesce("_start", F.lit(0)) + rank).cast("long"))
+        .drop("_start")
+    )
 
 
 def tokenize_docs(docs: DataFrame, analyzer=None) -> DataFrame:
@@ -123,11 +137,7 @@ def tokenize_docs(docs: DataFrame, analyzer=None) -> DataFrame:
     )
 
 
-_BLOCK_COLS = [
-    "shard", "term", "block_no", "n", "first_doc", "last_doc", "df_local",
-    "cf_local", "max_tf", "min_dl", "doc_bytes", "tf_bytes", "dl_bytes",
-    "pos_bytes",
-]
+_BLOCK_COLS = [field.split()[0] for field in POSTINGS_SCHEMA.split(",")]
 
 
 # Split a term's posting run at docID gaps wider than GAP_SPLIT_MIN and
@@ -401,36 +411,105 @@ def _done_shards(spark: SparkSession, paths: IndexPaths) -> set[int]:
     return {r["shard"] for r in rows}
 
 
+# the docs-table schema, shared by every writer — one definition so a new
+# column cannot silently vanish from one path
+DOC_TABLE_COLS = [
+    "shard", "local_no", "doc_id", "url", "warc_ts", "lang",
+    "title", "text", "doc_len",
+]
+
 # the manifest is an append-only event log; every writer emits this exact
 # column set.  ``kind`` gives rows aggregate semantics: an 'append' row's
 # posting counters describe segments ADDED by that event (build waves,
 # stream insert batches), a 'snapshot' row's counters describe the FULL
 # post-event state of its shard (shard rewrite, compaction) and supersede
 # everything earlier — see manifest_stats.
-# the docs-table schema, shared by every writer (build, merge) — one
-# definition so a new column cannot silently vanish from one path
-DOC_TABLE_COLS = [
-    "shard", "local_no", "doc_id", "url", "warc_ts", "lang",
-    "title", "text", "doc_len",
-]
-
 MANIFEST_COLS = [
     "shard", "docs_parsed", "docs_indexed", "postings_emitted", "blocks",
     "doc_bytes", "tf_bytes", "dl_bytes", "pos_bytes", "status", "kind",
     "committed_at",
 ]
 
+# ---------------------------------------------------------------------------
+# The commit protocol.  Every writer (build waves, stream batches, delete,
+# compaction, merge) lands its data through write_shards, then commits
+# through commit_manifest: data before its manifest row, so a row implies
+# complete partitions.
+# ---------------------------------------------------------------------------
 
-def block_counter_agg(blocks: DataFrame) -> DataFrame:
-    """Per-shard posting/compression counters over a blocks frame — the
-    one definition every manifest writer shares."""
-    return blocks.groupBy("shard").agg(
+# table -> (columns, sort key of a shard's files): docs by ordinal, postings
+# by term so row-group min/max statistics prune term-IN filters
+_SHARD_TABLES = {
+    "docs": (DOC_TABLE_COLS, ["local_no"]),
+    "postings": (_BLOCK_COLS, ["term", "block_no"]),
+}
+
+
+def write_shards(spark: SparkSession, paths: IndexPaths, table: str,
+                 frame: DataFrame, shards, overwrite: bool = False) -> None:
+    """Write ``frame``'s rows of ``table`` ('docs' or 'postings') as shard
+    partitions: one task (and so ~one file) per target shard, each file
+    sorted by the table's key.  Appends add segments; ``overwrite``
+    replaces exactly the partitions of ``shards``.
+
+    Dynamic overwrite only replaces partitions PRESENT in the written
+    frame, so a target shard left empty has its stale partition deleted
+    here; ``frame`` is read again for that, and overwriting callers pass
+    it materialized (its lineage reads the partitions being replaced)."""
+    cols, key = _SHARD_TABLES[table]
+    path = getattr(paths, table)
+    writer = (
+        frame.select(*cols)
+        .repartition(max(len(shards), 1), "shard")
+        .sortWithinPartitions("shard", *key)
+        .write.partitionBy("shard")
+    )
+    if not overwrite:
+        writer.mode("append").parquet(path)
+        return
+    writer.mode("overwrite").option("partitionOverwriteMode", "dynamic").parquet(path)
+    written = {r["shard"] for r in frame.select("shard").distinct().collect()}
+    for s in {int(x) for x in shards} - written:
+        fs_delete(spark, os.path.join(path, f"shard={s}"))
+
+
+def commit_manifest(spark: SparkSession, paths: IndexPaths, status: str,
+                    kind: str, blocks: DataFrame,
+                    parsed: DataFrame | None = None, shards=()) -> None:
+    """Append one manifest row per shard of the docs ``parsed`` by this
+    event (docs_parsed / docs_indexed counters), or per shard of
+    ``shards`` with NULL parse counters when the event parsed nothing —
+    after the data it describes is written.
+
+    ``blocks`` gives the posting counters, zero where a shard has none:
+    the event's own new segments for kind 'append', the shard's full
+    post-event postings for 'snapshot'.  Callers pass it materialized or
+    read back from the written partitions, so ``build_postings`` never
+    runs twice."""
+    if parsed is None:
+        rows = spark.createDataFrame(
+            [(int(s), None, None) for s in shards],
+            "shard int, docs_parsed long, docs_indexed long",
+        )
+    else:
+        rows = parsed.groupBy("shard").agg(
+            F.count("*").alias("docs_parsed"),
+            F.sum(F.when(F.col("doc_len") > 0, 1).otherwise(0)).alias("docs_indexed"),
+        )
+    per_shard = blocks.groupBy("shard").agg(
         F.sum("n").alias("postings_emitted"),
         F.count("*").alias("blocks"),
-        F.sum(F.length("doc_bytes")).alias("doc_bytes"),
-        F.sum(F.length("tf_bytes")).alias("tf_bytes"),
-        F.sum(F.length("dl_bytes")).alias("dl_bytes"),
-        F.sum(F.length("pos_bytes")).alias("pos_bytes"),
+        *[F.sum(F.length(c)).alias(c)
+          for c in ("doc_bytes", "tf_bytes", "dl_bytes", "pos_bytes")],
+    )
+    (
+        rows.join(per_shard, "shard", "left")
+        .na.fill(0, per_shard.columns[1:])
+        .withColumn("status", F.lit(status))
+        .withColumn("kind", F.lit(kind))
+        .withColumn("committed_at", F.current_timestamp())
+        .select(*MANIFEST_COLS)
+        .coalesce(1).write.mode("append").parquet(paths.manifest)
     )
 
 
@@ -601,52 +680,24 @@ def build_index(
         docs = base.filter(F.col("shard").isin([int(s) for s in wave]))
         # tokenize BEFORE the ordinal shuffle: the window then moves
         # text+tokens, never raw html bytes.  The explicit shard
-        # repartition comes BEFORE the ordinal window (r6): the window
-        # requires hash-by-shard distribution, so placing the write's
-        # repartition first lets the window reuse that one exchange —
-        # previously the wide tokenized rows crossed two exchanges per
-        # wave (window's own + the write's).
+        # repartition comes BEFORE the ordinal window (r6): it is the
+        # layout write_shards asks for, so the window and the docs write
+        # share one exchange instead of moving the wide tokenized rows
+        # twice.
         tok = assign_local_no(
             tokenize_docs(docs, analyzer=analyzer)
             .repartition(max(len(wave), 1), "shard")
         ).persist()
         try:
-            doc_cols = tok.select(*DOC_TABLE_COLS)
-            (
-                doc_cols.sortWithinPartitions("local_no")
-                .write.partitionBy("shard")
-                .mode("append")
-                .parquet(paths.docs)
+            write_shards(spark, paths, "docs", tok, wave)
+            write_shards(spark, paths, "postings",
+                         build_postings(doc_term_rows(tok)), wave)
+            # counters from the partitions just written: this wave's
+            # shards held nothing before it
+            written = _read_postings_or_empty(spark, paths).filter(
+                F.col("shard").isin(wave)
             )
-            blocks = build_postings(doc_term_rows(tok))
-            # one task (and so ~one file) per shard: compressed block rows
-            # are small, and the term-sorted layout gives row-group
-            # min/max pruning for term-IN filters at query time.
-            (
-                blocks.repartition(len(wave), "shard")
-                .sortWithinPartitions("term", "block_no")
-                .write.partitionBy("shard")
-                .mode("append")
-                .parquet(paths.postings)
-            )
-            # lineage counters per shard — committed AFTER the data it
-            # describes, so a manifest row implies complete partitions.
-            docs_agg = tok.groupBy("shard").agg(
-                F.count("*").alias("docs_parsed"),
-                F.sum(F.when(F.col("doc_len") > 0, 1).otherwise(0)).alias("docs_indexed"),
-            )
-            blk = _read_postings_or_empty(spark, paths).filter(
-                F.col("shard").isin([int(s) for s in wave])
-            )
-            blk_agg = block_counter_agg(blk)
-            manifest = (
-                docs_agg.join(blk_agg, "shard", "left")
-                .withColumn("status", F.lit("done"))
-                .withColumn("kind", F.lit("append"))
-                .withColumn("committed_at", F.current_timestamp())
-                .select(*MANIFEST_COLS)
-            )
-            manifest.coalesce(1).write.mode("append").parquet(paths.manifest)
+            commit_manifest(spark, paths, "done", "append", written, parsed=tok)
         finally:
             tok.unpersist()
 
@@ -734,17 +785,23 @@ def write_maintenance_intent(spark: SparkSession, paths: IndexPaths,
 
 
 def rebuild_shard_postings(spark: SparkSession, paths: IndexPaths,
-                           shards: list[int], status: str) -> None:
+                           shards: list[int], status: str,
+                           parsed: DataFrame | None = None) -> None:
     """Rebuild the posting partitions of ``shards`` from (decoded current
     postings ∩ current docs), dynamic-overwrite them, and append snapshot
     manifest rows.  Pure codec work — position payloads byte-sliced, the
     analyzer never runs.
 
-    This one primitive backs three operations:
+    This one primitive backs four operations:
     - **delete** (docs rows already dropped): the docs join filters the
       deleted docs' orphaned posting rows out;
     - **compaction**: N delta segments per (shard, term) re-block into
       one gap-aligned run (a no-orphan rebuild);
+    - **stream update** (docs partitions already rewritten): ``parsed``
+      holds the batch's tokenized rows, already in the docs table under
+      fresh ordinals; their posting rows join the survivors' and they
+      count as the event's docs_parsed.  The docs join drops the
+      superseded versions' postings;
     - **crash repair**: a maintenance op that died between its two
       overwrites left postings referencing docs that no longer exist (or
       a missing manifest snapshot); re-running the rebuild from current
@@ -755,48 +812,26 @@ def rebuild_shard_postings(spark: SparkSession, paths: IndexPaths,
         spark.read.parquet(paths.docs).filter(shard_filter)
         .select("shard", "local_no")
     )
+    # first-ever stream batch crash window: docs written, postings never
+    # created — the replay reads an empty frame, not PATH_NOT_FOUND
     old_blocks = _read_postings_or_empty(spark, paths).filter(shard_filter)
     rows = (
         decoded_term_rows(old_blocks)
         .join(doc_map, ["shard", "local_no"])  # inner join drops orphans
         .select("shard", "local_no", "term", "tf", "pos_bytes", "doc_len")
     )
+    if parsed is not None:
+        rows = rows.unionByName(doc_term_rows(parsed))
     # lineage reads paths.postings, which is overwritten below — freeze
     blocks = build_postings(rows).localCheckpoint(eager=True)
-
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            blocks.repartition(max(len(shards), 1), "shard")
-            .sortWithinPartitions("term", "block_no")
-            .write.partitionBy("shard").mode("overwrite").parquet(paths.postings)
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-    # dynamic overwrite only replaces partitions PRESENT in the written
-    # frame: a shard left with no postings must have its stale partition
-    # deleted explicitly or its old blocks silently survive
-    blk_shards = {r["shard"] for r in blocks.select("shard").distinct().collect()}
-    for s in {int(x) for x in shards} - blk_shards:
-        fs_delete(spark, os.path.join(paths.postings, f"shard={s}"))
+    write_shards(spark, paths, "postings", blocks, shards, overwrite=True)
     if _AFTER_POSTINGS_REWRITE_HOOK is not None:
         _AFTER_POSTINGS_REWRITE_HOOK()
     # snapshot rows for EVERY target shard (zero counters where emptied —
-    # without them manifest_stats would keep the pre-rewrite counts)
-    aff_df = spark.createDataFrame([(int(s),) for s in shards], "shard int")
-    (
-        aff_df.join(block_counter_agg(blocks), "shard", "left")
-        .na.fill(0, ["postings_emitted", "blocks", "doc_bytes", "tf_bytes",
-                     "dl_bytes", "pos_bytes"])
-        .withColumn("docs_parsed", F.lit(None).cast("long"))
-        .withColumn("docs_indexed", F.lit(None).cast("long"))
-        .withColumn("status", F.lit(status))
-        .withColumn("kind", F.lit("snapshot"))
-        .withColumn("committed_at", F.current_timestamp())
-        .select(*MANIFEST_COLS)
-        .coalesce(1).write.mode("append").parquet(paths.manifest)
-    )
+    # without them manifest_stats would keep the pre-rewrite counts); a
+    # stream update's batch has rows in every shard it rewrites
+    commit_manifest(spark, paths, status, "snapshot", blocks, parsed=parsed,
+                    shards=shards)
 
 
 def repair_maintenance(spark: SparkSession, paths: IndexPaths) -> dict | None:

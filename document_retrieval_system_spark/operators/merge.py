@@ -46,15 +46,16 @@ from pyspark.sql import functions as F
 
 from document_retrieval_system_spark.operators.index_build import (
     DOC_TABLE_COLS,
-    MANIFEST_COLS,
     IndexPaths,
     assign_local_no,
     auto_n_shards,
-    block_counter_agg,
     build_postings,
+    commit_manifest,
     decoded_term_rows,
     finalize_index,
     fs_delete,
+    write_shards,
+    _read_postings_or_empty,
 )
 
 
@@ -117,15 +118,9 @@ def merge_indexes(
     # persist: the remap feeds both the docs write and the postings join,
     # and row_number must not be recomputed under two different plans
     renum = assign_local_no(tagged).persist()
+    shards = range(n_shards)
     try:
-        (
-            renum.select(*DOC_TABLE_COLS)
-            .repartition(n_shards, "shard")
-            .sortWithinPartitions("local_no")
-            .write.partitionBy("shard")
-            .mode("append")
-            .parquet(out.docs)
-        )
+        write_shards(spark, out, "docs", renum, shards)
 
         # --------------------------------------------------------------
         # postings: decode each segment, remap ordinals, re-block.
@@ -146,33 +141,10 @@ def merge_indexes(
         rows = union_rows.join(remap, ["segment", "old_shard", "old_local"]).select(
             "shard", "local_no", "term", "tf", "pos_bytes", "doc_len"
         )
-        blocks = build_postings(rows).persist()
-        try:
-            (
-                blocks.repartition(n_shards, "shard")
-                .sortWithinPartitions("term", "block_no")
-                .write.partitionBy("shard")
-                .mode("append")
-                .parquet(out.postings)
-            )
-            # manifest: one 'merge' row per shard, committed AFTER the
-            # data it describes (same ordering contract as build_index)
-            docs_agg = renum.groupBy("shard").agg(
-                F.count("*").alias("docs_parsed"),
-                F.sum(
-                    F.when(F.col("doc_len") > 0, 1).otherwise(0)
-                ).alias("docs_indexed"),
-            )
-            manifest = (
-                docs_agg.join(block_counter_agg(blocks), "shard", "left")
-                .withColumn("status", F.lit("done"))
-                .withColumn("kind", F.lit("merge"))
-                .withColumn("committed_at", F.current_timestamp())
-                .select(*MANIFEST_COLS)
-            )
-            manifest.coalesce(1).write.mode("append").parquet(out.manifest)
-        finally:
-            blocks.unpersist()
+        write_shards(spark, out, "postings", build_postings(rows), shards)
+        # one 'merge' row per shard, counted from the fresh output
+        commit_manifest(spark, out, "done", "merge",
+                        _read_postings_or_empty(spark, out), parsed=renum)
     finally:
         renum.unpersist()
 

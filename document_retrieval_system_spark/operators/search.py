@@ -116,7 +116,7 @@ def flat_postings(blocks: DataFrame, with_positions: bool = False,
     return src.mapInPandas(decode, out_schema)
 
 
-def _term_weights(reader, terms: list[str], scheme: str) -> tuple[dict, dict]:
+def _term_weights(reader, terms: list[str]) -> dict:
     """Collect per-term df for the query terms (tiny driver-side lookup —
     the moral equivalent of the reference's get_doc_freq calls)."""
     rows = (
@@ -124,8 +124,7 @@ def _term_weights(reader, terms: list[str], scheme: str) -> tuple[dict, dict]:
         .filter(F.col("term").isin(list(set(terms))))
         .collect()
     )
-    dfs = {r["term"]: r["df"] for r in rows}
-    return dfs, {}
+    return {r["term"]: r["df"] for r in rows}
 
 
 def _attach_doc_id(scored: DataFrame, reader, k: int) -> DataFrame:
@@ -153,7 +152,7 @@ def bm25_search(
         return _empty_result(spark)
     corpus = reader.corpus()
     n, avgdl = corpus["total_docs"], corpus["avg_doc_length"]
-    dfs, _ = _term_weights(reader, query_terms, "bm25")
+    dfs = _term_weights(reader, query_terms)
     # duplicate query terms accumulate per occurrence (:450 loop)
     weights: dict[str, float] = {}
     for t in query_terms:
@@ -205,7 +204,7 @@ def tfidf_search(
     if not query_terms:
         return _empty_result(spark)
     n = reader.corpus()["total_docs"]
-    dfs, _ = _term_weights(reader, query_terms, "tfidf")
+    dfs = _term_weights(reader, query_terms)
     q_w: dict[str, float] = {}
     for t in query_terms:  # :364-373 (first occurrence sets the weight)
         if t not in q_w:

@@ -57,10 +57,6 @@ from document_retrieval_system_spark.oracle import (
 WAND_OUT_SCHEMA = "shard int, local_no long, score double"
 
 
-def _tf_norm_scalar(tf: float, dl: float, avgdl: float) -> float:
-    return tf / (tf + BM25_K1 * (1.0 - BM25_B + BM25_B * dl / avgdl))
-
-
 def _shard_kernel(pdf: pd.DataFrame, weights: dict[str, float], avgdl: float,
                   k: int, min_score: float,
                   stats: dict | None = None,

@@ -113,7 +113,6 @@ def delete_documents(spark: SparkSession, index_dir: str,
     affected-partition rewrite mapping from SURVEY.md §2.3.
     """
     import hashlib
-    import os
 
     from document_retrieval_system_spark.operators.index_build import (
         IndexPaths,
@@ -123,6 +122,7 @@ def delete_documents(spark: SparkSession, index_dir: str,
         rebuild_shard_postings,
         repair_maintenance,
         write_maintenance_intent,
+        write_shards,
     )
 
     paths = IndexPaths(index_dir)
@@ -153,23 +153,7 @@ def delete_documents(spark: SparkSession, index_dir: str,
     # manifest snapshot + finalize — a crash in between leaves the marker
     # and the next maintenance entry point repairs the shards
     write_maintenance_intent(spark, paths, "delete", affected)
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        keep.select(
-            "shard", "local_no", "doc_id", "url", "warc_ts", "lang",
-            "title", "text", "doc_len",
-        ).repartition(len(affected), "shard").write.partitionBy("shard").mode(
-            "overwrite"
-        ).parquet(paths.docs)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-    # dynamic overwrite only replaces partitions PRESENT in the written
-    # frame: a shard emptied by the delete keeps its stale docs partition
-    # unless deleted explicitly
-    kept_shards = {r["shard"] for r in keep.select("shard").distinct().collect()}
-    for s in {int(x) for x in affected} - kept_shards:
-        fs_delete(spark, os.path.join(paths.docs, f"shard={s}"))
+    write_shards(spark, paths, "docs", keep, affected, overwrite=True)
     rebuild_shard_postings(spark, paths, affected, status="delete")
     finalize_index(spark, paths)
     fs_delete(spark, maintenance_intent_path(paths))

@@ -19,32 +19,38 @@ feeding ``foreachBatch``:
   skip-check, indexer.py:443-445).
 
 Queries read base + delta segments transparently (all rows of the same
-postings table).  Periodic compaction = re-running the batch builder
-over the union — exactly Iceberg's merge-on-read vs compaction trade;
-the per-shard rewrite here is merge-on-WRITE for updates, which keeps
-every query path (WAND, boolean, phrase) free of tombstone filtering.
+postings table).  Periodic compaction = ``rebuild_shard_postings``, which
+decodes every segment of a shard and re-blocks the union — exactly
+Iceberg's merge-on-read vs compaction trade; the per-shard rewrite here
+is merge-on-WRITE for updates, which keeps every query path (WAND,
+boolean, phrase) free of tombstone filtering.
+
+Every write goes through the commit protocol of ``operators/index_build``
+(``write_shards`` then ``commit_manifest``), like the batch builder's.
 """
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-import os
-
 from document_retrieval_system_spark.operators.analyze import doc_term_rows
 from document_retrieval_system_spark.operators.index_build import (
-    MANIFEST_COLS,
+    DOC_TABLE_COLS,
     IndexPaths,
     add_doc_identity,
-    block_counter_agg,
+    assign_local_no,
     build_postings,
-    decoded_term_rows,
+    commit_manifest,
     finalize_index,
     fs_delete,
     fs_exists,
     fs_touch,
+    rebuild_shard_postings,
     tokenize_docs,
+    write_shards,
     _read_postings_or_empty,
 )
 from document_retrieval_system_spark.sources.corpus import PAGES_DDL
@@ -53,84 +59,39 @@ from document_retrieval_system_spark.sources.corpus import PAGES_DDL
 # postings overwrite of a shard rewrite (the replay crash window)
 _AFTER_DOCS_WRITE_HOOK = None
 
-DOC_COLS = [
-    "shard", "local_no", "doc_id", "url", "warc_ts", "lang",
-    "title", "text", "doc_len",
-]
 
-
-def _manifest_rows(tok: DataFrame, status: str, kind: str = "append",
-                   blocks: DataFrame | None = None) -> DataFrame:
-    """One manifest event row per shard of ``tok`` (columns =
-    MANIFEST_COLS).  ``blocks`` adds posting/compression counters —
-    append-delta counters for kind='append', full post-event shard
-    totals for kind='snapshot' (manifest_stats relies on this)."""
-    base = tok.groupBy("shard").agg(
-        F.count("*").alias("docs_parsed"),
-        F.sum(F.when(F.col("doc_len") > 0, 1).otherwise(0)).alias("docs_indexed"),
-    )
-    if blocks is None:
-        for c in ["postings_emitted", "blocks", "doc_bytes", "tf_bytes",
-                  "dl_bytes", "pos_bytes"]:
-            base = base.withColumn(c, F.lit(None).cast("long"))
-    else:
-        base = base.join(block_counter_agg(blocks), "shard", "left")
-    return (
-        base.withColumn("status", F.lit(status))
-        .withColumn("kind", F.lit(kind))
-        .withColumn("committed_at", F.current_timestamp())
-        .select(*MANIFEST_COLS)
-    )
-
-
-def _append_inserts(spark: SparkSession, ins: DataFrame, batch_id: int,
-                    paths: IndexPaths, have_docs: bool) -> None:
-    """Pure-append fast path for shards with no superseded versions."""
-    offsets = {}
-    if have_docs:
-        offsets = {
-            r["shard"]: r["mx"]
-            for r in spark.read.parquet(paths.docs)
-            .groupBy("shard").agg(F.max("local_no").alias("mx")).collect()
-        }
-    from pyspark.sql import Window
-
-    # url order within the batch — same locality rule as assign_local_no
-    w = Window.partitionBy("shard").orderBy("url")
-    off_expr = F.lit(0).cast("long")
-    for shard, mx in offsets.items():
-        off_expr = F.when(F.col("shard") == shard, F.lit(mx + 1)).otherwise(off_expr)
-    ins = ins.withColumn(
-        "local_no", (F.row_number().over(w) - 1).cast("long") + off_expr
-    )
+def _append_inserts(spark: SparkSession, ins: DataFrame, shards: list[int],
+                    batch_id: int, paths: IndexPaths) -> None:
+    """Pure-append fast path for shards with no superseded versions: a
+    delta segment per shard, under ordinals past the shard's current max."""
+    base = spark.read.parquet(paths.docs) if fs_exists(spark, paths.docs) else None
     # localCheckpoint (eager) truncates lineage: the plan reads paths.docs
-    # (offsets + upsert guard) and the append below would poison any
+    # (ordinal base + upsert guard) and the appends below would poison any
     # recomputation.  On a cluster use checkpoint() with a reliable dir.
-    tok = tokenize_docs(ins).localCheckpoint(eager=True)
-    tok.select(*DOC_COLS).write.partitionBy("shard").mode("append").parquet(paths.docs)
+    tok = assign_local_no(tokenize_docs(ins), base=base).localCheckpoint(eager=True)
+    write_shards(spark, paths, "docs", tok, shards)
     blocks = build_postings(doc_term_rows(tok)).localCheckpoint(eager=True)
-    blocks.write.partitionBy("shard").mode("append").parquet(paths.postings)
-    _manifest_rows(
-        tok, f"stream-batch-{batch_id}", kind="append", blocks=blocks
-    ).coalesce(1).write.mode("append").parquet(paths.manifest)
+    write_shards(spark, paths, "postings", blocks, shards)
+    commit_manifest(spark, paths, f"stream-batch-{batch_id}", "append", blocks,
+                    parsed=tok)
 
 
 def _rewrite_updated_shards(spark: SparkSession, batch_aff: DataFrame,
                             affected: list[int], batch_id: int,
                             paths: IndexPaths) -> None:
     """remove_document equivalent (indexer.py:405-411) at shard
-    granularity: rebuild the affected shards' docs + postings from
-    (old rows minus superseded doc_ids) + (this batch's rows), with
-    fresh dense local_no, and swap them in via dynamic partition
-    overwrite.  Bounded by the updated shards — untouched shards are
-    never read or written.
+    granularity, in two dynamic partition overwrites.  First the affected
+    shards' docs partitions become (old rows minus superseded doc_ids) +
+    (this batch's rows); then ``rebuild_shard_postings`` re-blocks their
+    postings from the surviving compressed blocks plus the batch's fresh
+    posting rows, and commits the snapshot manifest rows.  Bounded by the
+    updated shards — untouched shards are never read or written.
 
     Analyzer work is proportional to the BATCH, not the shard (r2
     re-tokenized every surviving doc of an updated shard — ~250k
     re-analyses to update 1 doc): survivors keep their stored docs-table
-    row, and their posting rows are recovered from the existing
-    compressed blocks (``decoded_term_rows`` — vectorized codec + byte
-    slicing) and re-blocked together with the fresh rows' postings.
+    row, and the rebuild recovers their posting rows from the existing
+    blocks (vectorized codec + byte slicing).
 
     ``local_no`` is STABLE: survivors keep their ordinal forever and
     fresh rows (including new versions of updated docs) allocate past
@@ -140,102 +101,30 @@ def _rewrite_updated_shards(spark: SparkSession, batch_aff: DataFrame,
     bound to exactly one doc version for the life of the shard — after a
     crash between the docs and postings overwrites, surviving ordinals
     still mean the same docs, and orphaned posting ordinals (a rewritten
-    doc's old number) simply have no docs row and drop out of the inner
-    join below.  (Renumbering survivors densely — the r2 design — made
-    replay silently shift every posting row one doc over whenever the
-    crashed attempt inserted a new doc into the shard.)  The holes cost
-    only slightly larger docID deltas; gap-aligned block splitting
+    doc's old number) simply have no docs row and drop out of the
+    rebuild's docs join.  (Renumbering survivors densely — the r2 design
+    — made replay silently shift every posting row one doc over whenever
+    the crashed attempt inserted a new doc into the shard.)  The holes
+    cost only slightly larger docID deltas; gap-aligned block splitting
     already handles sparse ranges."""
-    superseded = batch_aff.select("doc_id")
-    shard_filter = F.col("shard").isin([int(s) for s in affected])
-    old_docs = spark.read.parquet(paths.docs).filter(shard_filter)
-    # first-ever batch crash window: docs appended, postings never
-    # created — replay must see an empty blocks frame, not PATH_NOT_FOUND
-    old_blocks = _read_postings_or_empty(spark, paths).filter(shard_filter)
-
-    # the ONLY analyzer invocation: this batch's rows (checkpointed so the
-    # two consumers below don't re-run the UDF)
-    fresh_tok = tokenize_docs(batch_aff).localCheckpoint(eager=True)
-
-    surv_meta = (
-        old_docs.join(superseded, "doc_id", "left_anti")
-        .select("doc_id", "url", "warc_ts", "lang", "title", "text", "doc_len",
-                "shard", "local_no")
-    )
-    # fresh rows allocate past max(local_no) over ALL old rows (superseded
-    # included) so no ordinal is ever reused by a different doc version
-    from pyspark.sql import Window
-
-    base = old_docs.groupBy("shard").agg(F.max("local_no").alias("_base"))
-    # url order within the batch — same locality rule as assign_local_no
-    w = Window.partitionBy("shard").orderBy("url")
-    fresh_meta = (
-        fresh_tok.select("doc_id", "url", "warc_ts", "lang", "title", "text",
-                         "doc_len", "shard")
-        .join(base, "shard", "left")
-        .withColumn(
-            "local_no",
-            (F.coalesce(F.col("_base"), F.lit(-1).cast("long"))
-             + F.row_number().over(w)).cast("long"),
-        )
-        .drop("_base")
-    )
-    tok = surv_meta.unionByName(fresh_meta)
-    # the plan reads paths.docs which is about to be overwritten — freeze
-    tok = tok.localCheckpoint(eager=True)
-    new_no = tok.select("doc_id", "shard", "local_no")
-
-    # fresh posting rows: fused-UDF terms joined to the fresh numbering
-    fresh_rows = doc_term_rows(
-        fresh_tok.select("doc_id", "doc_len", "terms", "shard")
-        .join(new_no, ["doc_id", "shard"])
-    )
-    # survivor posting rows keep their ordinals: the (shard, local_no)
-    # inner join drops orphans (ordinals no docs row claims — superseded
-    # versions after a crashed attempt), the anti-join drops this batch's
-    # superseded docs
-    old_map = old_docs.select("shard", "local_no", "doc_id")
-    surv_rows = (
-        decoded_term_rows(old_blocks)
-        .join(old_map, ["shard", "local_no"])
-        .join(superseded, "doc_id", "left_anti")
-        .select("shard", "local_no", "term", "tf", "pos_bytes", "doc_len")
-    )
-    blocks = build_postings(
-        fresh_rows.unionByName(surv_rows)
+    old_docs = spark.read.parquet(paths.docs).filter(F.col("shard").isin(affected))
+    # the ONLY analyzer invocation: this batch's rows.  Checkpointed: its
+    # ordinals derive from paths.docs, which is overwritten below
+    fresh = assign_local_no(
+        tokenize_docs(batch_aff), base=old_docs
     ).localCheckpoint(eager=True)
-
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            tok.select(*DOC_COLS)
-            .repartition(len(affected), "shard")
-            .sortWithinPartitions("local_no")
-            .write.partitionBy("shard").mode("overwrite").parquet(paths.docs)
-        )
-        if _AFTER_DOCS_WRITE_HOOK is not None:
-            _AFTER_DOCS_WRITE_HOOK()
-        (
-            blocks.repartition(len(affected), "shard")
-            .sortWithinPartitions("term", "block_no")
-            .write.partitionBy("shard").mode("overwrite").parquet(paths.postings)
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-    # a shard whose rebuilt postings are EMPTY (every surviving doc
-    # tokenizes empty) is absent from `blocks`, so dynamic overwrite left
-    # its stale partition behind — drop it explicitly
-    got = {r["shard"] for r in blocks.select("shard").distinct().collect()}
-    for s in set(int(x) for x in affected) - got:
-        fs_delete(spark, os.path.join(paths.postings, f"shard={s}"))
-    # snapshot rows: docs_parsed counts THIS batch's parses only (the
-    # lineage event — survivors were not re-parsed), posting counters are
-    # the full post-rewrite shard totals, superseding earlier history
-    _manifest_rows(
-        fresh_tok, f"stream-update-batch-{batch_id}", kind="snapshot",
-        blocks=blocks,
-    ).coalesce(1).write.mode("append").parquet(paths.manifest)
+    # frozen too: the plan reads the partitions it replaces
+    docs = (
+        old_docs.join(fresh.select("doc_id"), "doc_id", "left_anti")
+        .select(*DOC_TABLE_COLS)
+        .unionByName(fresh.select(*DOC_TABLE_COLS))
+        .localCheckpoint(eager=True)
+    )
+    write_shards(spark, paths, "docs", docs, affected, overwrite=True)
+    if _AFTER_DOCS_WRITE_HOOK is not None:
+        _AFTER_DOCS_WRITE_HOOK()
+    rebuild_shard_postings(spark, paths, affected,
+                           f"stream-update-batch-{batch_id}", parsed=fresh)
 
 
 def _intent_marker(paths: IndexPaths, batch_id: int) -> str:
@@ -263,8 +152,7 @@ def _append_batch(spark: SparkSession, batch_df: DataFrame, batch_id: int,
 
     # I6 incremental-upsert guard: drop urls already indexed with
     # warc_ts >= incoming (indexer.py:443-445); flag true updates.
-    have_docs = fs_exists(spark, paths.docs)
-    if have_docs:
+    if fs_exists(spark, paths.docs):
         existing = spark.read.parquet(paths.docs).select(
             "doc_id", F.col("warc_ts").alias("old_ts")
         )
@@ -282,23 +170,25 @@ def _append_batch(spark: SparkSession, batch_df: DataFrame, batch_id: int,
         docs = docs.withColumn("is_update", F.lit(False))
     # freeze before ANY write below mutates paths this plan reads
     docs = docs.localCheckpoint(eager=True)
-    if docs.isEmpty():
+    has_update = {
+        r["shard"]: r["upd"]
+        for r in docs.groupBy("shard").agg(F.max("is_update").alias("upd")).collect()
+    }
+    if not has_update:
         fs_delete(spark, intent)  # nothing to redo; clear a stale marker
         return
 
-    affected = [
-        int(r["shard"])
-        for r in docs.filter("is_update").select("shard").distinct().collect()
-    ]
-    ins = docs.drop("is_update")
-    if affected:
-        ins = ins.filter(~F.col("shard").isin(affected))
+    # a shard with any update is rewritten whole, its inserts included
+    affected = sorted(s for s, upd in has_update.items() if upd)
+    inserted = sorted(s for s, upd in has_update.items() if not upd)
+    docs = docs.drop("is_update")
     fs_touch(spark, intent)  # intent BEFORE the first mutation
-    if not ins.isEmpty():
-        _append_inserts(spark, ins, batch_id, paths, have_docs)
+    if inserted:
+        _append_inserts(spark, docs.filter(F.col("shard").isin(inserted)),
+                        inserted, batch_id, paths)
     if affected:
-        batch_aff = docs.drop("is_update").filter(F.col("shard").isin(affected))
-        _rewrite_updated_shards(spark, batch_aff, affected, batch_id, paths)
+        _rewrite_updated_shards(spark, docs.filter(F.col("shard").isin(affected)),
+                                affected, batch_id, paths)
     fs_delete(spark, intent)  # commit point: marker gone = batch complete
 
 
@@ -326,7 +216,6 @@ def compact_shards(spark: SparkSession, paths: IndexPaths,
     happened — the surviving marker repairs it on the next entry."""
     from document_retrieval_system_spark.operators.index_build import (
         maintenance_intent_path,
-        rebuild_shard_postings,
         repair_maintenance,
         write_maintenance_intent,
     )

@@ -16,7 +16,11 @@ from document_retrieval_system_spark.operators.index_build import (
     IndexPaths,
     build_index,
 )
-from document_retrieval_system_spark.sources.corpus import pages_df
+from document_retrieval_system_spark.sources.corpus import (
+    PAGES_DDL,
+    gen_pages_pandas,
+    pages_df,
+)
 
 N = 100
 
@@ -164,5 +168,43 @@ def test_maintained_index_with_ordinal_holes_audits_clean(spark, built):
         rebuild_shard_postings(spark, paths, [2], status="delete")
         finalize_index(spark, paths)
         assert fsck_index(spark, d).count() == 0
+    finally:
+        shutil.rmtree(d, ignore_errors=True)
+
+
+def test_streamed_index_with_delta_segments_audits_clean(spark):
+    """Every appended stream segment carries its own block 0, and
+    finalize_index sums their df_local; fsck must sum them too.  Re-sent
+    urls come from one shard only, so the other shard keeps its appended
+    delta segment through the batch."""
+    import datetime
+
+    from document_retrieval_system_spark.operators.index_build import (
+        add_doc_identity,
+        finalize_index,
+    )
+    from document_retrieval_system_spark.streaming.incremental import (
+        _append_batch,
+    )
+
+    d = tempfile.mkdtemp(prefix="drs_fsck_stream_")
+    try:
+        build_index(spark, spark.createDataFrame(gen_pages_pandas(30), PAGES_DDL),
+                    d, n_shards=2)
+        paths = IndexPaths(d)
+        old = spark.read.parquet(paths.docs).filter("shard = 0").orderBy("url")
+        resent = [(r["url"], r["warc_ts"] + datetime.timedelta(days=1), None,
+                   "re-sent page fsckterm", "en")
+                  for r in old.limit(3).collect()]
+        new = spark.createDataFrame(gen_pages_pandas(10, start=30), PAGES_DDL)
+        assert {r["shard"] for r in add_doc_identity(new, 2).collect()} == {0, 1}
+        batch = new.unionByName(spark.createDataFrame(resent, PAGES_DDL))
+        _append_batch(spark, batch, 0, paths, 2)
+        finalize_index(spark, paths)
+        # shard 1 holds two segments: the build's and the batch's
+        assert (spark.read.parquet(paths.postings).filter("shard = 1")
+                .groupBy("term", "block_no").count()
+                .filter("count > 1").count() > 0)
+        assert fsck_index(spark, d).collect() == []
     finally:
         shutil.rmtree(d, ignore_errors=True)
