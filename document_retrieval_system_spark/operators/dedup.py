@@ -376,7 +376,14 @@ def simhash_neardup_pairs(df: DataFrame, id_col: str = "doc_id",
     agrees EXACTLY on >= 1 band — the banded equi-join is lossless for
     the target radius while avoiding the O(n^2) pair join.  Exact
     Hamming verify then runs on candidates only.
+
+    ``bits`` is at most 63: the verify packs a signature into a signed
+    long, and a 64-bit signature with its top bit set would overflow to
+    NULL and silently drop every pair it belongs to.
     """
+    if bits > 63:
+        raise ValueError(f"simhash_neardup_pairs: bits={bits} exceeds 63, "
+                         "the width of the packed-long Hamming verify")
     if n_bands is None:
         n_bands = max_hamming + 1
     sig = simhash(df, id_col, text_col, bits).withColumnRenamed(id_col, "id")
@@ -391,8 +398,9 @@ def simhash_neardup_pairs(df: DataFrame, id_col: str = "doc_id",
     # explode, so the verify needs NO join back onto the signature table
     # (two exchanges removed), and Hamming distance is one codegen'd
     # bit_count(xor) over packed longs instead of an interpreted
-    # split/zip_with over 32 one-char strings.  Exact for bits <= 63;
-    # identical counts to the per-character comparison by construction.
+    # split/zip_with over 32 one-char strings.  Exact for bits <= 63
+    # (enforced above); identical counts to the per-character comparison
+    # by construction.
     bands = sig.select(
         "id",
         F.conv("simhash_bits", 2, 10).cast("long").alias("sv"),

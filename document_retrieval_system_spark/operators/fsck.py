@@ -52,6 +52,8 @@ from pyspark.sql import functions as F
 from document_retrieval_system_spark.operators.index_build import (
     IndexPaths,
     decoded_term_rows,
+    read_table,
+    _read_postings_or_empty,
 )
 
 _OUT_COLS = ["check", "shard", "key", "expected", "actual"]
@@ -71,8 +73,8 @@ def fsck_index(spark: SparkSession, index_dir: str) -> DataFrame:
     """Audit the index at ``index_dir``; returns one row per violation
     (empty = consistent).  Read-only."""
     paths = IndexPaths(index_dir)
-    docs = spark.read.parquet(paths.docs)
-    blocks = spark.read.parquet(paths.postings)
+    docs = read_table(spark, paths, "docs")
+    blocks = _read_postings_or_empty(spark, paths)
     decoded = decoded_term_rows(blocks).persist()
     doc_keys = docs.select("shard", "local_no", "doc_len", "doc_id")
 
@@ -174,7 +176,7 @@ def fsck_index(spark: SparkSession, index_dir: str) -> DataFrame:
         F.col("_dl_doc"), F.col("_dl_post")))
 
     # sidecars: term_stats and corpus_stats must re-derive
-    ts = spark.read.parquet(paths.term_stats)
+    ts = read_table(spark, paths, "term_stats")
     re_ts = decoded.groupBy("term").agg(
         F.count("*").alias("_df"), F.sum("tf").alias("_cf"))
     ts_bad = (
@@ -187,7 +189,7 @@ def fsck_index(spark: SparkSession, index_dir: str) -> DataFrame:
         ts_bad, "term_stats", F.col("term"),
         F.concat_ws("/", "_df", "_cf"), F.concat_ws("/", "df", "cf")))
 
-    cs = spark.read.parquet(paths.corpus_stats)
+    cs = read_table(spark, paths, "corpus_stats")
     re_cs = docs.filter(F.col("doc_len") > 0).agg(
         F.count("*").alias("_td"), F.sum("doc_len").alias("_tt"))
     cs_bad = (

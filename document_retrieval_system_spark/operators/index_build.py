@@ -69,11 +69,43 @@ class ListAccumulatorParam:
         return a
 
 
+# The declared schema of every index table, in writer column order.  Every
+# read goes through ``read_table``, which hands Spark the schema instead of
+# letting it launch a job to infer one from the file footers; the layout
+# test pins each declaration to what the writers produce.
 POSTINGS_SCHEMA = (
     "shard int, term string, block_no int, n int, first_doc long, last_doc long, "
     "df_local int, cf_local long, max_tf int, min_dl int, "
     "doc_bytes binary, tf_bytes binary, dl_bytes binary, pos_bytes binary"
 )
+DOCS_SCHEMA = (
+    "shard int, local_no long, doc_id string, url string, warc_ts timestamp, "
+    "lang string, title string, text string, doc_len int"
+)
+# the manifest is an append-only event log; every writer emits this exact
+# column set.  ``kind`` gives rows aggregate semantics: an 'append' row's
+# posting counters describe segments ADDED by that event (build waves,
+# stream insert batches), a 'snapshot' row's counters describe the FULL
+# post-event state of its shard (shard rewrite, compaction) and supersede
+# everything earlier — see manifest_stats.
+MANIFEST_SCHEMA = (
+    "shard int, docs_parsed long, docs_indexed long, postings_emitted long, "
+    "blocks long, doc_bytes long, tf_bytes long, dl_bytes long, pos_bytes long, "
+    "status string, kind string, committed_at timestamp"
+)
+TABLE_SCHEMAS = {
+    "docs": DOCS_SCHEMA,
+    "postings": POSTINGS_SCHEMA,
+    "term_stats": "term string, df long, cf long",
+    "corpus_stats": "total_docs long, avg_doc_length double, total_tokens long",
+    "doc_norms": "shard int, local_no long, tfidf_veclen double",
+    "manifest": MANIFEST_SCHEMA,
+}
+
+
+def _columns(schema: str) -> list[str]:
+    return [field.split()[0] for field in schema.split(",")]
+
 
 DEFAULT_N_SHARDS = 32
 
@@ -137,7 +169,7 @@ def tokenize_docs(docs: DataFrame, analyzer=None) -> DataFrame:
     )
 
 
-_BLOCK_COLS = [field.split()[0] for field in POSTINGS_SCHEMA.split(",")]
+_BLOCK_COLS = _columns(POSTINGS_SCHEMA)
 
 
 # Split a term's posting run at docID gaps wider than GAP_SPLIT_MIN and
@@ -393,42 +425,35 @@ def fs_read_text(spark: SparkSession, path: str) -> str:
         stream.close()
 
 
+def read_table(spark: SparkSession, paths: IndexPaths, table: str) -> DataFrame:
+    """The index table ``table`` read under its declared schema — the one
+    read path of every index table.  A table directory that holds no
+    data files (a wave whose documents all tokenize empty writes only
+    ``_SUCCESS`` under postings/) reads as empty."""
+    return spark.read.schema(TABLE_SCHEMAS[table]).parquet(getattr(paths, table))
+
+
 def _read_postings_or_empty(spark: SparkSession, paths: IndexPaths) -> DataFrame:
-    """Postings table, or an empty frame when no blocks exist yet (a wave
-    whose documents all tokenize empty writes no posting files).  Only
-    the path-missing case maps to 'empty'; real read errors (corruption,
-    permissions, transient store failures) propagate instead of being
-    silently treated as an empty index."""
+    """Postings table, or an empty frame when no blocks exist yet.  A
+    missing postings path maps to 'empty' here, a directory without data
+    files in ``read_table``; real read errors (corruption, permissions,
+    transient store failures) propagate instead of being silently
+    treated as an empty index."""
     if not fs_exists(spark, paths.postings):
         return spark.createDataFrame([], POSTINGS_SCHEMA)
-    return spark.read.parquet(paths.postings)
+    return read_table(spark, paths, "postings")
 
 
 def _done_shards(spark: SparkSession, paths: IndexPaths) -> set[int]:
     if not fs_exists(spark, paths.manifest):
         return set()
-    rows = spark.read.parquet(paths.manifest).select("shard").collect()
+    rows = read_table(spark, paths, "manifest").select("shard").collect()
     return {r["shard"] for r in rows}
 
 
-# the docs-table schema, shared by every writer — one definition so a new
-# column cannot silently vanish from one path
-DOC_TABLE_COLS = [
-    "shard", "local_no", "doc_id", "url", "warc_ts", "lang",
-    "title", "text", "doc_len",
-]
-
-# the manifest is an append-only event log; every writer emits this exact
-# column set.  ``kind`` gives rows aggregate semantics: an 'append' row's
-# posting counters describe segments ADDED by that event (build waves,
-# stream insert batches), a 'snapshot' row's counters describe the FULL
-# post-event state of its shard (shard rewrite, compaction) and supersede
-# everything earlier — see manifest_stats.
-MANIFEST_COLS = [
-    "shard", "docs_parsed", "docs_indexed", "postings_emitted", "blocks",
-    "doc_bytes", "tf_bytes", "dl_bytes", "pos_bytes", "status", "kind",
-    "committed_at",
-]
+# shared by every writer, so a new column cannot silently vanish from one path
+DOC_TABLE_COLS = _columns(DOCS_SCHEMA)
+MANIFEST_COLS = _columns(MANIFEST_SCHEMA)
 
 # ---------------------------------------------------------------------------
 # The commit protocol.  Every writer (build waves, stream batches, delete,
@@ -710,7 +735,7 @@ def finalize_index(spark: SparkSession, paths: IndexPaths) -> None:
     """Global-stat passes that depend on the FULL corpus (rerun after any
     incremental wave, mirroring the reference's compute_doc_weights after
     every build, indexer.py:423)."""
-    docs = spark.read.parquet(paths.docs)
+    docs = read_table(spark, paths, "docs")
     blocks = _read_postings_or_empty(spark, paths)
 
     # corpus stats (I4): only docs with tokens count (indexer.py:53-54,86-90)
@@ -739,18 +764,24 @@ def finalize_index(spark: SparkSession, paths: IndexPaths) -> None:
     # the reference's O(V x D) loop (indexer.py:254-271).
     from document_retrieval_system_spark.operators.search import flat_postings
 
-    n_docs = corpus.collect()[0]["total_docs"]
-    ts = spark.read.parquet(paths.term_stats)
-    # join df at BLOCK granularity (one row per term-block, ~100x fewer
-    # rows than postings), then decode with idf attached — the per-doc
-    # groupBy is the only posting-cardinality shuffle in this pass
-    blocks_with_df = blocks.select(
-        "shard", "term", "n", "doc_bytes", "tf_bytes", "dl_bytes"
-    ).join(ts.select("term", "df"), "term")
-    flat = flat_postings(blocks_with_df, with_positions=False, extra_cols=["df"])
-    weighted = flat.withColumn(
-        "w", F.col("tf") * F.log(F.lit(float(n_docs)) / F.col("df"))
+    # ln(N/df) from the two sidecars just written: df joined at BLOCK
+    # granularity (one row per term-block, ~100x fewer rows than
+    # postings), N from the 1-row corpus_stats (so docs are scanned once,
+    # with no driver round trip), then decoded with idf attached — the
+    # per-doc groupBy is the only posting-cardinality shuffle in this
+    # pass.  df joins the blocks directly, not through a term-level
+    # (term_stats x corpus_stats) frame: a cross join's size estimate is
+    # the product of its inputs', so the planner would stream that frame
+    # past broadcast (or, at scale, shuffled) blocks, which reorders the
+    # terms of a doc's sum and moves its norm by an ulp.
+    blocks_with_idf = (
+        blocks.select("shard", "term", "n", "doc_bytes", "tf_bytes", "dl_bytes")
+        .join(read_table(spark, paths, "term_stats").select("term", "df"), "term")
+        .crossJoin(read_table(spark, paths, "corpus_stats").select("total_docs"))
+        .withColumn("idf", F.log(F.col("total_docs") / F.col("df")))
     )
+    flat = flat_postings(blocks_with_idf, with_positions=False, extra_cols=["idf"])
+    weighted = flat.withColumn("w", F.col("tf") * F.col("idf"))
     norms = (
         weighted.groupBy("shard", "local_no")
         .agg(F.sqrt(F.sum(F.col("w") * F.col("w"))).alias("tfidf_veclen"))
@@ -809,7 +840,7 @@ def rebuild_shard_postings(spark: SparkSession, paths: IndexPaths,
     """
     shard_filter = F.col("shard").isin([int(s) for s in shards])
     doc_map = (
-        spark.read.parquet(paths.docs).filter(shard_filter)
+        read_table(spark, paths, "docs").filter(shard_filter)
         .select("shard", "local_no")
     )
     # first-ever stream batch crash window: docs written, postings never
@@ -859,31 +890,54 @@ def repair_maintenance(spark: SparkSession, paths: IndexPaths) -> dict | None:
 
 
 class IndexReader:
-    """Lazy handles on the index tables + broadcast-able corpus scalars."""
+    """Lazy handles on the index tables + broadcast-able corpus scalars.
+    Every call reads the tables afresh: a reader never pins a snapshot."""
 
     def __init__(self, spark: SparkSession, index_dir: str):
         self.spark = spark
         self.paths = IndexPaths(index_dir)
 
+    def _table(self, table: str) -> DataFrame:
+        return read_table(self.spark, self.paths, table)
+
     def docs(self) -> DataFrame:
-        return self.spark.read.parquet(self.paths.docs)
+        return self._table("docs")
 
     def postings(self) -> DataFrame:
         return _read_postings_or_empty(self.spark, self.paths)
 
     def term_stats(self) -> DataFrame:
-        return self.spark.read.parquet(self.paths.term_stats)
+        return self._table("term_stats")
 
     def doc_norms(self) -> DataFrame:
-        return self.spark.read.parquet(self.paths.doc_norms)
+        return self._table("doc_norms")
 
     def manifest(self) -> DataFrame:
-        return self.spark.read.parquet(self.paths.manifest)
+        return self._table("manifest")
 
     def corpus(self) -> dict:
-        row = self.spark.read.parquet(self.paths.corpus_stats).collect()[0]
-        return {
-            "total_docs": row["total_docs"],
-            "avg_doc_length": float(row["avg_doc_length"] or 0.0),
-            "total_tokens": row["total_tokens"],
+        return _corpus_scalars(self._table("corpus_stats").collect()[0])
+
+    def query_stats(self, terms) -> tuple[dict, dict]:
+        """``(corpus(), {term: df})`` for the query ``terms`` in ONE Spark
+        job: the 1-row corpus_stats and the term-filtered term_stats,
+        unioned by name (each side's missing columns NULL) and collected
+        together.  Terms absent from the index are absent from the dict."""
+        ts = self._table("term_stats").filter(
+            F.col("term").isin(sorted(set(terms)))
+        ).select("term", "df")
+        rows = self._table("corpus_stats").unionByName(
+            ts, allowMissingColumns=True
+        ).collect()
+        corpus = next(r for r in rows if r["term"] is None)
+        return _corpus_scalars(corpus), {
+            r["term"]: r["df"] for r in rows if r["term"] is not None
         }
+
+
+def _corpus_scalars(row) -> dict:
+    return {
+        "total_docs": row["total_docs"],
+        "avg_doc_length": float(row["avg_doc_length"] or 0.0),
+        "total_tokens": row["total_tokens"],
+    }

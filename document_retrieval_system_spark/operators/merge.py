@@ -54,6 +54,7 @@ from document_retrieval_system_spark.operators.index_build import (
     decoded_term_rows,
     finalize_index,
     fs_delete,
+    read_table,
     write_shards,
     _read_postings_or_empty,
 )
@@ -94,7 +95,7 @@ def merge_indexes(
     # re-run the URL-ordered ordinal assignment
     # ------------------------------------------------------------------
     doc_frames = [
-        spark.read.parquet(sp.docs).withColumn("segment", F.lit(i))
+        read_table(spark, sp, "docs").withColumn("segment", F.lit(i))
         for i, sp in enumerate(srcs)
     ]
     union_docs = reduce(DataFrame.unionByName, doc_frames)
@@ -128,7 +129,7 @@ def merge_indexes(
         # postings — the losing copy's key is absent from `renum`.
         # --------------------------------------------------------------
         post_frames = [
-            decoded_term_rows(spark.read.parquet(sp.postings))
+            decoded_term_rows(_read_postings_or_empty(spark, sp))
             .withColumnRenamed("shard", "old_shard")
             .withColumnRenamed("local_no", "old_local")
             .withColumn("segment", F.lit(i))

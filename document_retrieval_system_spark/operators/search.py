@@ -116,15 +116,18 @@ def flat_postings(blocks: DataFrame, with_positions: bool = False,
     return src.mapInPandas(decode, out_schema)
 
 
-def _term_weights(reader, terms: list[str]) -> dict:
-    """Collect per-term df for the query terms (tiny driver-side lookup —
-    the moral equivalent of the reference's get_doc_freq calls)."""
-    rows = (
-        reader.term_stats()
-        .filter(F.col("term").isin(list(set(terms))))
-        .collect()
-    )
-    return {r["term"]: r["df"] for r in rows}
+def bm25_weights(n: int, dfs: dict, terms: list[str]) -> dict[str, float]:
+    """BM25 query weights: idf = ln((N-df+0.5)/(df+0.5)+1) (:456), summed
+    per query-term OCCURRENCE (:450 loop — duplicate query terms count
+    twice), in first-occurrence order.  Terms with no postings drop out.
+    ``dfs`` comes from ``IndexReader.query_stats``, the tiny driver-side
+    twin of the reference's get_doc_freq calls."""
+    weights: dict[str, float] = {}
+    for t in terms:
+        df = dfs.get(t, 0)
+        if df > 0:
+            weights[t] = weights.get(t, 0.0) + math.log((n - df + 0.5) / (df + 0.5) + 1)
+    return weights
 
 
 def _attach_doc_id(scored: DataFrame, reader, k: int) -> DataFrame:
@@ -150,17 +153,9 @@ def bm25_search(
     query_terms = analyzer(query, lang)
     if not query_terms:
         return _empty_result(spark)
-    corpus = reader.corpus()
-    n, avgdl = corpus["total_docs"], corpus["avg_doc_length"]
-    dfs = _term_weights(reader, query_terms)
-    # duplicate query terms accumulate per occurrence (:450 loop)
-    weights: dict[str, float] = {}
-    for t in query_terms:
-        df = dfs.get(t, 0)
-        if df <= 0:
-            continue
-        idf = math.log((n - df + 0.5) / (df + 0.5) + 1)  # :456, driver-side
-        weights[t] = weights.get(t, 0.0) + idf
+    corpus, dfs = reader.query_stats(query_terms)
+    avgdl = corpus["avg_doc_length"]
+    weights = bm25_weights(corpus["total_docs"], dfs, query_terms)
     if not weights:
         return _empty_result(spark)
 
@@ -203,8 +198,8 @@ def tfidf_search(
     query_terms = process_text(query, lang)
     if not query_terms:
         return _empty_result(spark)
-    n = reader.corpus()["total_docs"]
-    dfs = _term_weights(reader, query_terms)
+    corpus, dfs = reader.query_stats(query_terms)
+    n = corpus["total_docs"]
     q_w: dict[str, float] = {}
     for t in query_terms:  # :364-373 (first occurrence sets the weight)
         if t not in q_w:

@@ -38,8 +38,6 @@ globally by (score desc, doc_id asc).
 
 from __future__ import annotations
 
-import math
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -47,6 +45,7 @@ from pyspark.sql import functions as F
 
 from document_retrieval_system_spark.functions.analyzer import process_text
 from document_retrieval_system_spark.operators.codec import delta_decode, vb_decode
+from document_retrieval_system_spark.operators.search import _empty_result, bm25_weights
 from document_retrieval_system_spark.oracle import (
     BM25_B,
     BM25_K1,
@@ -277,24 +276,11 @@ def bm25_wand_search(
     spark = reader.spark
     query_terms = analyzer(query, lang)
     if not query_terms:
-        from document_retrieval_system_spark.operators.search import _empty_result
-
         return _empty_result(spark)
-    corpus = reader.corpus()
-    n, avgdl = corpus["total_docs"], corpus["avg_doc_length"]
-    stats = (
-        reader.term_stats().filter(F.col("term").isin(list(set(query_terms)))).collect()
-    )
-    dfs = {r["term"]: r["df"] for r in stats}
-    weights: dict[str, float] = {}
-    for t in query_terms:  # per-occurrence accumulation, as in the reference
-        df = dfs.get(t, 0)
-        if df <= 0:
-            continue
-        weights[t] = weights.get(t, 0.0) + math.log((n - df + 0.5) / (df + 0.5) + 1)
+    corpus, dfs = reader.query_stats(query_terms)
+    avgdl = corpus["avg_doc_length"]
+    weights = bm25_weights(corpus["total_docs"], dfs, query_terms)
     if not weights:
-        from document_retrieval_system_spark.operators.search import _empty_result
-
         return _empty_result(spark)
 
     blocks = reader.postings().filter(F.col("term").isin(list(weights))).select(
@@ -331,23 +317,20 @@ def bm25_wand_search_many(
     min_score: float = DEFAULT_MIN_SCORE,
     analyzer=process_text,
 ) -> DataFrame:
-    """Batched WAND: score N queries in ONE pass — one term-stats lookup,
-    one term-pushdown block scan over the union of query terms, and one
+    """Batched WAND: score N queries in ONE pass — one stats lookup, one
+    term-pushdown block scan over the union of query terms, and one
     per-shard kernel job that runs every query against the shard's
-    already-fetched blocks.  Amortizes the per-job scheduling overhead
-    that dominates single-query latency (p50 ~0.6 s of which the kernel
-    is milliseconds) into throughput: a serving tier evaluates a batch
-    at near-single-query wall time.
+    already-fetched blocks.  Amortizes the fixed per-job Spark overhead
+    that dominates single-query latency (the kernel is ~1 % of it) into
+    throughput: a serving tier evaluates a batch at near-single-query
+    wall time.
 
     Returns (qid, doc_id, url, score, shard, local_no) — per-query
     top-``max_results`` with the engine's (score desc, doc_id asc)
     tie-break; ``qid`` is the index into ``queries``."""
     spark = reader.spark
-    corpus = reader.corpus()
-    n, avgdl = corpus["total_docs"], corpus["avg_doc_length"]
     per_q_terms = {qid: analyzer(q, lang) for qid, q in enumerate(queries)}
     all_terms = sorted({t for ts in per_q_terms.values() for t in ts})
-    from document_retrieval_system_spark.operators.search import _empty_result
 
     def _empty_batch():
         # same column ORDER and types as the live path (qid first, int)
@@ -358,20 +341,10 @@ def bm25_wand_search_many(
 
     if not all_terms:
         return _empty_batch()
-    stats = (
-        reader.term_stats().filter(F.col("term").isin(all_terms)).collect()
-    )
-    dfs = {r["term"]: r["df"] for r in stats}
-    wq: dict[int, dict[str, float]] = {}
-    for qid, terms in per_q_terms.items():
-        w: dict[str, float] = {}
-        for t in terms:  # per-occurrence accumulation, as in the reference
-            df = dfs.get(t, 0)
-            if df <= 0:
-                continue
-            w[t] = w.get(t, 0.0) + math.log((n - df + 0.5) / (df + 0.5) + 1)
-        if w:
-            wq[qid] = w
+    corpus, dfs = reader.query_stats(all_terms)
+    avgdl = corpus["avg_doc_length"]
+    wq = {qid: w for qid, terms in per_q_terms.items()
+          if (w := bm25_weights(corpus["total_docs"], dfs, terms))}
     if not wq:
         return _empty_batch()
     live_terms = sorted({t for w in wq.values() for t in w})

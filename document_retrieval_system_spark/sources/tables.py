@@ -119,6 +119,7 @@ def delete_documents(spark: SparkSession, index_dir: str,
         finalize_index,
         fs_delete,
         maintenance_intent_path,
+        read_table,
         rebuild_shard_postings,
         repair_maintenance,
         write_maintenance_intent,
@@ -130,7 +131,7 @@ def delete_documents(spark: SparkSession, index_dir: str,
     # consistency before reading any state
     repair_maintenance(spark, paths)
     doc_ids = [hashlib.md5(u.encode("utf-8")).hexdigest() for u in urls]
-    docs = spark.read.parquet(paths.docs)
+    docs = read_table(spark, paths, "docs")
     affected = sorted(
         r["shard"]
         for r in docs.filter(F.col("doc_id").isin(doc_ids))

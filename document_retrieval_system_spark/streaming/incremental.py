@@ -48,6 +48,7 @@ from document_retrieval_system_spark.operators.index_build import (
     fs_delete,
     fs_exists,
     fs_touch,
+    read_table,
     rebuild_shard_postings,
     tokenize_docs,
     write_shards,
@@ -64,7 +65,7 @@ def _append_inserts(spark: SparkSession, ins: DataFrame, shards: list[int],
                     batch_id: int, paths: IndexPaths) -> None:
     """Pure-append fast path for shards with no superseded versions: a
     delta segment per shard, under ordinals past the shard's current max."""
-    base = spark.read.parquet(paths.docs) if fs_exists(spark, paths.docs) else None
+    base = read_table(spark, paths, "docs") if fs_exists(spark, paths.docs) else None
     # localCheckpoint (eager) truncates lineage: the plan reads paths.docs
     # (ordinal base + upsert guard) and the appends below would poison any
     # recomputation.  On a cluster use checkpoint() with a reliable dir.
@@ -107,7 +108,7 @@ def _rewrite_updated_shards(spark: SparkSession, batch_aff: DataFrame,
     the crashed attempt inserted a new doc into the shard.)  The holes
     cost only slightly larger docID deltas; gap-aligned block splitting
     already handles sparse ranges."""
-    old_docs = spark.read.parquet(paths.docs).filter(F.col("shard").isin(affected))
+    old_docs = read_table(spark, paths, "docs").filter(F.col("shard").isin(affected))
     # the ONLY analyzer invocation: this batch's rows.  Checkpointed: its
     # ordinals derive from paths.docs, which is overwritten below
     fresh = assign_local_no(
@@ -153,7 +154,7 @@ def _append_batch(spark: SparkSession, batch_df: DataFrame, batch_id: int,
     # I6 incremental-upsert guard: drop urls already indexed with
     # warc_ts >= incoming (indexer.py:443-445); flag true updates.
     if fs_exists(spark, paths.docs):
-        existing = spark.read.parquet(paths.docs).select(
+        existing = read_table(spark, paths, "docs").select(
             "doc_id", F.col("warc_ts").alias("old_ts")
         )
         newer = (

@@ -91,6 +91,13 @@ def test_simhash_pairs_lossless_within_radius(docs_df):
     assert (52, 53, 0) in got  # engineered clone pair
 
 
+def test_simhash_pairs_rejects_signatures_wider_than_a_long(docs_df):
+    """A 64-bit signature with its top bit set does not fit the packed
+    signed-long verify; the call must refuse instead of dropping pairs."""
+    with pytest.raises(ValueError, match="bits=64"):
+        dedup.simhash_neardup_pairs(docs_df, bits=64)
+
+
 def test_embedding_neardup_lsh_matches_exact(clustered_emb):
     exact = {
         (r.id_a, r.id_b)

@@ -13,15 +13,20 @@ import tempfile
 import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
+from document_retrieval_system_spark.operators.fsck import fsck_index
 from document_retrieval_system_spark.operators.index_build import (
     DOC_TABLE_COLS,
+    TABLE_SCHEMAS,
     IndexPaths,
     IndexReader,
     build_index,
     finalize_index,
     manifest_stats,
+    read_table,
 )
 from document_retrieval_system_spark.operators.merge import merge_indexes
+from document_retrieval_system_spark.operators.search import bm25_search
+from document_retrieval_system_spark.operators.wand import bm25_wand_search
 from document_retrieval_system_spark.sources.corpus import PAGES_DDL, gen_pages_pandas
 from document_retrieval_system_spark.sources.tables import delete_documents
 from document_retrieval_system_spark.streaming.incremental import (
@@ -40,6 +45,13 @@ def _non_decreasing(keys):
 
 def _check_layout(spark, index_dir, step):
     paths = IndexPaths(index_dir)
+    # every table's declared schema is what its writers put on disk:
+    # names, types and column order (the partition column last, as the
+    # inferring read places it)
+    for table in TABLE_SCHEMAS:
+        inferred = spark.read.parquet(getattr(paths, table)).schema
+        declared = read_table(spark, paths, table).schema
+        assert inferred == declared, (step, table, inferred, declared)
     doc_cols = [c for c in DOC_TABLE_COLS if c != "shard"]  # partition column
     for f in _files(paths.docs):
         t = pq.read_table(f)
@@ -96,6 +108,34 @@ def test_every_writer_keeps_the_layout_contract(spark):
 
         merge_indexes(spark, [idx], merged, n_shards=3)
         _check_layout(spark, merged, "merge")
+    finally:
+        shutil.rmtree(idx, ignore_errors=True)
+        shutil.rmtree(merged, ignore_errors=True)
+
+
+def test_all_empty_corpus_builds_serves_audits_and_merges(spark):
+    """Pages that all tokenize to nothing leave postings/ holding only
+    ``_SUCCESS``: the declared-schema reads see an empty table, so build,
+    search, audit and merge all work and queries return no rows."""
+    pages = spark.createDataFrame(
+        [(f"https://empty.example/{i}", datetime.datetime(2024, 1, 1),
+          b"<html><body></body></html>", None, "en") for i in range(3)],
+        PAGES_DDL,
+    )
+    idx = tempfile.mkdtemp(prefix="drs_empty_idx_")
+    merged = tempfile.mkdtemp(prefix="drs_empty_merged_")
+    try:
+        build_index(spark, pages, idx, n_shards=2)
+        assert not _files(IndexPaths(idx).postings)
+        reader = IndexReader(spark, idx)
+        assert reader.corpus()["total_docs"] == 0
+        assert reader.docs().count() == 3
+        assert bm25_search(reader, "anything at all", "en").collect() == []
+        assert bm25_wand_search(reader, "anything at all", "en").collect() == []
+        assert fsck_index(spark, idx).collect() == []
+        merge_indexes(spark, [idx], merged, n_shards=2)
+        assert IndexReader(spark, merged).docs().count() == 3
+        assert fsck_index(spark, merged).collect() == []
     finally:
         shutil.rmtree(idx, ignore_errors=True)
         shutil.rmtree(merged, ignore_errors=True)

@@ -1,6 +1,10 @@
 """Plan-quality gates: the properties that make the engine survive a
 100x scale-up must be visible in the physical plan, not assumed."""
 
+import shutil
+import tempfile
+import uuid
+
 from pyspark.sql import functions as F
 
 from document_retrieval_system_spark.operators.search import flat_postings
@@ -109,3 +113,48 @@ def test_prefix_search_pushes_startswith_and_matches_scan(reader):
                 reader.postings().filter(F.col("term") == t), False)
             want |= {(r["shard"], r["local_no"]) for r in flat.collect()}
     assert got == want and got
+
+
+def _spark_jobs(spark, action) -> int:
+    """Spark jobs ``action`` launches, counted in its own job group."""
+    sc = spark.sparkContext
+    group = f"job-budget-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_index_reads_run_only_the_jobs_that_move_data(spark, reader):
+    """Per-request job budgets.  Declared table schemas mean no read
+    launches a schema-inference job, the corpus scalars and query-term
+    dfs come back in one collect, and finalize_index takes N from the
+    corpus_stats file it just wrote instead of scanning docs again."""
+    from document_retrieval_system_spark.operators.index_build import (
+        build_index,
+        finalize_index,
+    )
+    from document_retrieval_system_spark.operators.wand import (
+        bm25_wand_search,
+        bm25_wand_search_many,
+    )
+    from document_retrieval_system_spark.sources.corpus import pages_df
+
+    single = _spark_jobs(spark, lambda: bm25_wand_search(
+        reader, "数据 算法", "zh", 10, 0.0).collect())
+    assert single <= 4, single
+    batch = ["数据 算法", "系统", "网络 数据", "算法"] * 4
+    many = _spark_jobs(spark, lambda: bm25_wand_search_many(
+        reader, batch, "zh", 10, 0.0).collect())
+    assert many <= 5, many
+
+    idx = tempfile.mkdtemp(prefix="drs_job_budget_")
+    try:
+        paths = build_index(spark, pages_df(spark, 40), idx, n_shards=4,
+                            finalize=False)
+        finalize = _spark_jobs(spark, lambda: finalize_index(spark, paths))
+        assert finalize <= 8, finalize
+    finally:
+        shutil.rmtree(idx, ignore_errors=True)
