@@ -75,7 +75,7 @@ bm25 AS (
 # Spark-side shared builders
 # ---------------------------------------------------------------------------
 
-_SCAN_SPLITS: dict[tuple[str, int], int] = {}
+_SCAN_SPLITS: dict[tuple[str, int, int, int], int] = {}
 
 # Minimum compressed source size for the scan spread to pay for itself:
 # the repartition costs a fixed exchange (~0.3-0.5 s of scheduling and a
@@ -89,16 +89,18 @@ _SPREAD_MIN_BYTES = int(os.environ.get("SPARK_GRAFT_SPREAD_MIN_BYTES",
                                        str(4 * 1024 * 1024)))
 
 
-def _src_bytes(path: str) -> int:
+def _src_stat(path: str) -> tuple[int, int]:
+    """(bytes, newest mtime in ns) of a source file or directory tree."""
     if os.path.isdir(path):
-        return sum(
-            os.path.getsize(os.path.join(r, f))
-            for r, _d, fs in os.walk(path) for f in fs
-        )
+        stats = [os.stat(os.path.join(r, f))
+                 for r, _d, fs in os.walk(path) for f in fs]
+        return (sum(st.st_size for st in stats),
+                max((st.st_mtime_ns for st in stats), default=0))
     try:
-        return os.path.getsize(path)
+        st = os.stat(path)
     except OSError:
-        return 1 << 60  # unknown (object store): assume big
+        return 1 << 60, 0  # unknown (object store): assume big
+    return st.st_size, st.st_mtime_ns
 
 
 def _spread(spark: SparkSession, df: DataFrame, path: str) -> DataFrame:
@@ -110,12 +112,14 @@ def _spread(spark: SparkSession, df: DataFrame, path: str) -> DataFrame:
     parallelism, one cheap round-robin exchange of the raw rows buys
     full-width execution for everything downstream; on real multi-split
     inputs (any production table) this is a no-op.  The split count is
-    memoized per (path, parallelism) so repeated builders don't re-plan
-    the scan."""
+    memoized per (path, parallelism, size, mtime) so repeated calls
+    don't re-plan the scan, and a source rewritten in the same process
+    is planned afresh."""
     n = spark.sparkContext.defaultParallelism
-    if _src_bytes(path) < _SPREAD_MIN_BYTES:
+    size, mtime = _src_stat(path)
+    if size < _SPREAD_MIN_BYTES:
         return df
-    key = (path, n)
+    key = (path, n, size, mtime)
     if key not in _SCAN_SPLITS:
         _SCAN_SPLITS[key] = df.rdd.getNumPartitions()
     if _SCAN_SPLITS[key] < n:

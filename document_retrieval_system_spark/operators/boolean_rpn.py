@@ -144,7 +144,7 @@ def evaluate_rpn(reader, rpn: list[Token]) -> DataFrame:
     Returns a DataFrame of (shard, local_no) doc keys.
     """
     from document_retrieval_system_spark.operators.search import (
-        flat_postings,
+        _doc_set,
         near_search,
         phrase_search,
     )
@@ -152,12 +152,6 @@ def evaluate_rpn(reader, rpn: list[Token]) -> DataFrame:
     spark = reader.spark
     empty = spark.createDataFrame([], "shard int, local_no long")
     all_docs = reader.docs().filter(F.col("doc_len") > 0).select("shard", "local_no")
-
-    def doc_set(term: str) -> DataFrame:
-        return (
-            flat_postings(reader.postings().filter(F.col("term") == term), False)
-            .select("shard", "local_no")
-        )
 
     stack: list[DataFrame | str] = []
     # NEAR needs its operand TERMS (the reference's simplification :332-336
@@ -172,7 +166,7 @@ def evaluate_rpn(reader, rpn: list[Token]) -> DataFrame:
 
     for token in rpn:
         if token.type == TokenType.TERM:
-            push(doc_set(token.value), token.value)
+            push(_doc_set(reader, token.value), token.value)
         elif token.type == TokenType.PHRASE:
             push(phrase_search(reader, token.value.lower().split()))
         elif token.type == TokenType.AND:

@@ -1,9 +1,12 @@
 """docID-delta + variable-byte posting compression (vectorized numpy).
 
 The reference keeps posting lists as uncompressed Python lists
-(/root/reference/core/retrieval/index/indexer.py:28-30).  BASELINE.json
-mandates "docID-delta + varbyte compressed" posting blocks with
-"block-level max-score metadata" — this module is that codec.
+(indexer.py:28-30).  BASELINE.json mandates "docID-delta + varbyte
+compressed" posting blocks with "block-level max-score metadata" — this
+module is that codec, and the only module that knows a block's byte
+layout: ``encode_block``/``decode_block`` for the doc/tf/dl payloads,
+``encode_position_payloads``/``decode_block_positions`` for the position
+payload.  Every index writer and reader goes through them.
 
 Encoding is classic LEB128 varbyte (7 payload bits/byte, MSB =
 continuation), applied to docID deltas so sorted dense docIDs compress to
@@ -72,6 +75,25 @@ def delta_encode(sorted_ids: np.ndarray) -> np.ndarray:
 
 def delta_decode(deltas: np.ndarray) -> np.ndarray:
     return np.cumsum(deltas, dtype=np.uint64)
+
+
+def encode_block(docs: np.ndarray, tfs: np.ndarray,
+                 dls: np.ndarray) -> tuple[bytes, bytes, bytes]:
+    """A posting block's (doc_bytes, tf_bytes, dl_bytes) payloads: the
+    strictly increasing docIDs delta+varbyte, term frequencies and doc
+    lengths plain varbyte."""
+    return vb_encode(delta_encode(docs)), vb_encode(tfs), vb_encode(dls)
+
+
+def decode_block(doc_bytes: bytes, tf_bytes: bytes,
+                 dl_bytes: bytes) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Inverse of ``encode_block``: (docIDs int64, tfs int32, dls int32),
+    the dtypes of the ``local_no``/``tf``/``doc_len`` columns."""
+    return (
+        delta_decode(vb_decode(doc_bytes)).astype(np.int64),
+        vb_decode(tf_bytes).astype(np.int32),
+        vb_decode(dl_bytes).astype(np.int32),
+    )
 
 
 def encode_position_payloads(positions_per_term: list[list[int]]) -> list[bytes]:
@@ -158,96 +180,11 @@ def decode_positions(buf: bytes, n_docs: int) -> list[np.ndarray]:
     return out
 
 
-# ---------------------------------------------------------------------------
-# Simple8b (Anh & Moffat 2010, "Index compression using 64-bit words") —
-# the word-aligned alternative to varbyte: each 64-bit word carries a
-# 4-bit selector + 60 payload bits packing 1..240 equal-width values.
-# Decode is branch-free per selector class (no per-byte continuation-bit
-# scan), which is why column stores and time-series engines favor it;
-# varbyte stays the on-disk default here because BASELINE.json mandates
-# it, and tools/bench_codec.py records the measured trade between the
-# two on real posting deltas.
-# ---------------------------------------------------------------------------
-
-_S8B_COUNTS = (240, 120, 60, 30, 20, 15, 12, 10, 8, 7, 6, 5, 4, 3, 2, 1)
-_S8B_BITS = (0, 0, 1, 2, 3, 4, 5, 6, 7, 8, 10, 12, 15, 20, 30, 60)
-_S8B_MAX = (1 << 60) - 1
-
-
-def _bit_widths(vals: np.ndarray) -> np.ndarray:
-    """Bit width of each uint64 value (0 for value 0), vectorized —
-    the loop is over BIT POSITION (<= 60 iterations), never values."""
-    widths = np.zeros(vals.shape, dtype=np.int64)
-    tmp = vals.copy()
-    while tmp.any():
-        widths[tmp > 0] += 1
-        tmp >>= np.uint64(1)
-    return widths
-
-
-def s8b_encode(values: np.ndarray) -> bytes:
-    """Simple8b-encode a uint64 array (values < 2^60) to little-endian
-    64-bit words.  Greedy packing: each word takes the densest selector
-    whose width covers the next `count` values; every word is FULLY
-    populated (tail words fall back to smaller counts), so decode
-    yields exactly the encoded count with no padding sentinel.
-
-    The per-word Python loop runs once per OUTPUT word — posting
-    blocks are 128 deltas, i.e. a handful of words; inside, only numpy
-    slice ops.
-    """
-    vals = np.ascontiguousarray(values, dtype=np.uint64)
-    if vals.size == 0:
-        return b""
-    if int(vals.max()) > _S8B_MAX:
-        raise ValueError("simple8b value exceeds 60 bits")
-    widths = _bit_widths(vals)
-    # running max of widths over each candidate window via cummax per
-    # word start (windows are <= 240 long, slices are cheap)
-    out = []
-    i = 0
-    n = vals.size
-    while i < n:
-        remaining = n - i
-        for sel, (count, bits) in enumerate(zip(_S8B_COUNTS, _S8B_BITS)):
-            if count > remaining:
-                continue
-            window = widths[i:i + count]
-            if int(window.max()) <= bits or (bits == 0 and not window.any()):
-                word = np.uint64(sel) << np.uint64(60)
-                if bits:
-                    shifts = (np.arange(count, dtype=np.uint64)
-                              * np.uint64(bits))
-                    word |= np.bitwise_or.reduce(
-                        vals[i:i + count] << shifts)
-                out.append(word)
-                i += count
-                break
-        else:  # pragma: no cover - sel 15 (1 x 60 bits) always fits
-            raise AssertionError("no selector matched")
-    return np.asarray(out, dtype="<u8").tobytes()
-
-
-def s8b_decode(buf: bytes) -> np.ndarray:
-    """Decode Simple8b words back to uint64 — vectorized per selector
-    CLASS: words are grouped by selector, each class unpacks with one
-    broadcast shift matrix, and results scatter back into encoded
-    order.  No per-value Python loop."""
-    if not buf:
-        return np.empty(0, dtype=np.uint64)
-    words = np.frombuffer(buf, dtype="<u8")
-    sels = (words >> np.uint64(60)).astype(np.int64)
-    counts = np.asarray(_S8B_COUNTS, dtype=np.int64)[sels]
-    offsets = np.concatenate(([0], np.cumsum(counts)[:-1]))
-    out = np.zeros(int(counts.sum()), dtype=np.uint64)
-    for sel in np.unique(sels):
-        count, bits = _S8B_COUNTS[sel], _S8B_BITS[sel]
-        if bits == 0:
-            continue  # zero-width runs decode to the zeros already there
-        mask = sels == sel
-        shifts = (np.arange(count, dtype=np.uint64) * np.uint64(bits))
-        vals = (words[mask][:, None] >> shifts[None, :]) \
-            & np.uint64((1 << bits) - 1)
-        idx = offsets[mask][:, None] + np.arange(count, dtype=np.int64)
-        out[idx.ravel()] = vals.ravel()
-    return out
+def decode_block_positions(buf: bytes, n_docs: int,
+                           sliced: bool = False) -> list:
+    """A block's position payload, one entry per posting: its position
+    list, or with ``sliced`` its own payload bytes (byte-sliced, so
+    re-blocking them is byte-identical)."""
+    if sliced:
+        return split_position_payloads(buf, n_docs)
+    return [p.tolist() for p in decode_positions(buf, n_docs)]

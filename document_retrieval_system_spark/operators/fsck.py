@@ -51,7 +51,7 @@ from pyspark.sql import functions as F
 
 from document_retrieval_system_spark.operators.index_build import (
     IndexPaths,
-    decoded_term_rows,
+    flat_postings,
     read_table,
     _read_postings_or_empty,
 )
@@ -75,7 +75,7 @@ def fsck_index(spark: SparkSession, index_dir: str) -> DataFrame:
     paths = IndexPaths(index_dir)
     docs = read_table(spark, paths, "docs")
     blocks = _read_postings_or_empty(spark, paths)
-    decoded = decoded_term_rows(blocks).persist()
+    decoded = flat_postings(blocks, with_positions="bytes").persist()
     doc_keys = docs.select("shard", "local_no", "doc_len", "doc_id")
 
     out: list[DataFrame] = []

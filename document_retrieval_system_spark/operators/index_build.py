@@ -52,8 +52,9 @@ from pyspark.sql import functions as F
 from document_retrieval_system_spark.operators.analyze import doc_term_rows
 from document_retrieval_system_spark.operators.codec import (
     BLOCK_SIZE,
-    delta_encode,
-    vb_encode,
+    decode_block,
+    decode_block_positions,
+    encode_block,
 )
 
 class ListAccumulatorParam:
@@ -212,9 +213,10 @@ def _emit_group_blocks(out: dict, shard: int, term: str, docs, tfs, dls, poss):
         out["cf_local"].append(cf_local)
         out["max_tf"].append(int(t.max()))
         out["min_dl"].append(int(l.min()))
-        out["doc_bytes"].append(vb_encode(delta_encode(d)))
-        out["tf_bytes"].append(vb_encode(t))
-        out["dl_bytes"].append(vb_encode(l))
+        doc_bytes, tf_bytes, dl_bytes = encode_block(d, t, l)
+        out["doc_bytes"].append(doc_bytes)
+        out["tf_bytes"].append(tf_bytes)
+        out["dl_bytes"].append(dl_bytes)
         # per-(doc, term) payloads were varbyte-encoded in the fused map
         # stage; the block payload is their docID-ordered concatenation
         # (byte-identical to encode_positions over the raw lists)
@@ -303,65 +305,76 @@ def build_postings(term_rows: DataFrame, timing_acc=None) -> DataFrame:
     return src.mapInPandas(build, POSTINGS_SCHEMA)
 
 
-DECODED_ROW_SCHEMA = (
-    "shard int, local_no long, term string, tf int, pos_bytes binary, doc_len int"
-)
+FLAT_SCHEMA = "shard int, term string, local_no long, tf int, doc_len int"
+# with_positions -> (position column, its type, byte-sliced?)
+_POSITION_FORMS = {
+    True: ("positions", "array<int>", False),
+    "bytes": ("pos_bytes", "binary", True),
+}
 
 
-def decoded_term_rows(blocks: DataFrame) -> DataFrame:
-    """Decode posting blocks back into ``build_postings`` input rows
-    (shard, local_no, term, tf, pos_bytes, doc_len).
+def flat_postings(blocks: DataFrame, with_positions: bool | str = False,
+                  extra_cols: list[str] | None = None) -> DataFrame:
+    """Decode posting blocks back to one row per (term, doc) posting —
+    the one posting decoder of every index reader.
 
-    Per-(doc, term) position payloads are recovered by SLICING the block
-    payload at varbyte boundaries (``split_position_payloads``), never
-    decoded+re-encoded — re-blocking is byte-identical.  This is the
-    cheap currency for index maintenance: vectorized codec work instead
-    of re-running the Python analyzer over stored text (measured ~790
-    docs/s/core for the analyzer vs memory-bandwidth for the codec)."""
-    from document_retrieval_system_spark.operators.codec import (
-        delta_decode,
-        split_position_payloads,
-        vb_decode,
-    )
+    ``with_positions`` picks the position form:
 
-    src = blocks.select(
-        "shard", "term", "n", "doc_bytes", "tf_bytes", "dl_bytes", "pos_bytes"
-    )
+    - ``False``: none (ranked scorers, doc sets, ``finalize_index``).
+      Column pruning then keeps pos_bytes out of the scan entirely
+      (check .explain ReadSchema);
+    - ``True``: decoded ``positions array<int>`` (phrase/NEAR, the SQL
+      flat view);
+    - ``"bytes"``: each posting's ``pos_bytes`` payload, SLICED from the
+      block payload at varbyte boundaries, never decoded+re-encoded — so
+      ``build_postings`` over these rows re-blocks byte-identically.
+      This is the cheap currency of index maintenance (shard rewrites,
+      merge, fsck): vectorized codec work instead of re-running the
+      Python analyzer over stored text (measured ~790 docs/s/core for
+      the analyzer vs memory-bandwidth for the codec).
+
+    ``extra_cols`` are block-level double columns replicated onto every
+    posting row (e.g. a pre-joined idf), which lets callers join tiny
+    block-cardinality data BEFORE the posting-cardinality explosion.
+    """
+    extra_cols = extra_cols or []
+    cols = ["shard", "term", "n", "doc_bytes", "tf_bytes", "dl_bytes"] + extra_cols
+    # numeric columns collect numpy chunks, object columns (None) python lists
+    dtypes = {"shard": np.int32, "term": None, "local_no": np.int64,
+              "tf": np.int32, "doc_len": np.int32}
+    schema = FLAT_SCHEMA
+    if with_positions:
+        pos_col, pos_type, sliced = _POSITION_FORMS[with_positions]
+        cols.append("pos_bytes")
+        dtypes[pos_col] = None
+        schema += f", {pos_col} {pos_type}"
+    dtypes.update(dict.fromkeys(extra_cols, np.float64))
+    schema += "".join(f", {c} double" for c in extra_cols)
 
     def decode(batches):
         for pdf in batches:
-            shards, terms, locs, tfs_o, poss, dls_o = [], [], [], [], [], []
+            parts: dict[str, list] = {c: [] for c in dtypes}
             for row in pdf.itertuples(index=False):
-                docs = delta_decode(vb_decode(row.doc_bytes)).astype(np.int64)
-                tf_arr = vb_decode(row.tf_bytes).astype(np.int32)
-                dl_arr = vb_decode(row.dl_bytes).astype(np.int32)
-                segs = split_position_payloads(row.pos_bytes, int(row.n))
-                shards.append(np.full(docs.size, row.shard, dtype=np.int32))
-                terms.extend([row.term] * docs.size)
-                locs.append(docs)
-                tfs_o.append(tf_arr)
-                dls_o.append(dl_arr)
-                poss.extend(segs)
-            if not terms:
-                yield pd.DataFrame(
-                    {"shard": pd.Series(dtype="int32"),
-                     "local_no": pd.Series(dtype="int64"),
-                     "term": pd.Series(dtype="object"),
-                     "tf": pd.Series(dtype="int32"),
-                     "pos_bytes": pd.Series(dtype="object"),
-                     "doc_len": pd.Series(dtype="int32")}
-                )
-                continue
-            yield pd.DataFrame(
-                {"shard": np.concatenate(shards),
-                 "local_no": np.concatenate(locs),
-                 "term": terms,
-                 "tf": np.concatenate(tfs_o),
-                 "pos_bytes": poss,
-                 "doc_len": np.concatenate(dls_o)}
-            )
+                docs, tfs, dls = decode_block(row.doc_bytes, row.tf_bytes,
+                                              row.dl_bytes)
+                parts["shard"].append(np.full(docs.size, row.shard, dtype=np.int32))
+                parts["term"].extend([row.term] * docs.size)
+                parts["local_no"].append(docs)
+                parts["tf"].append(tfs)
+                parts["doc_len"].append(dls)
+                if with_positions:
+                    parts[pos_col].extend(
+                        decode_block_positions(row.pos_bytes, int(row.n), sliced)
+                    )
+                for c in extra_cols:
+                    parts[c].append(np.full(docs.size, float(getattr(row, c))))
+            yield pd.DataFrame({
+                c: (pd.Series(v, dtype=object) if dtypes[c] is None
+                    else np.concatenate(v) if v else np.empty(0, dtypes[c]))
+                for c, v in parts.items()
+            })
 
-    return src.mapInPandas(decode, DECODED_ROW_SCHEMA)
+    return blocks.select(*cols).mapInPandas(decode, schema)
 
 
 class IndexPaths:
@@ -762,8 +775,6 @@ def finalize_index(spark: SparkSession, paths: IndexPaths) -> None:
     # TF-IDF doc norms (I7): ||(tf * ln(N/df))_t||_2 per doc, computed by
     # decoding the index (term-major) and re-grouping by doc — replaces
     # the reference's O(V x D) loop (indexer.py:254-271).
-    from document_retrieval_system_spark.operators.search import flat_postings
-
     # ln(N/df) from the two sidecars just written: df joined at BLOCK
     # granularity (one row per term-block, ~100x fewer rows than
     # postings), N from the 1-row corpus_stats (so docs are scanned once,
@@ -847,7 +858,7 @@ def rebuild_shard_postings(spark: SparkSession, paths: IndexPaths,
     # created — the replay reads an empty frame, not PATH_NOT_FOUND
     old_blocks = _read_postings_or_empty(spark, paths).filter(shard_filter)
     rows = (
-        decoded_term_rows(old_blocks)
+        flat_postings(old_blocks, with_positions="bytes")
         .join(doc_map, ["shard", "local_no"])  # inner join drops orphans
         .select("shard", "local_no", "term", "tf", "pos_bytes", "doc_len")
     )

@@ -24,8 +24,8 @@ Semantics
 
 Why decode, not re-analyze: postings are decoded back to
 ``build_postings`` input rows with position payloads byte-SLICED at
-varbyte boundaries (``decoded_term_rows``) — pure vectorized codec
-work at memory bandwidth.  The Python analyzer (the ~790 docs/s/core
+varbyte boundaries (``flat_postings(..., with_positions="bytes")``) —
+pure vectorized codec work at memory bandwidth.  The Python analyzer (the ~790 docs/s/core
 floor) never runs; merging is independent of document text size.
 
 Scale shape (100 TB): per segment, one map-only decode over its
@@ -51,8 +51,8 @@ from document_retrieval_system_spark.operators.index_build import (
     auto_n_shards,
     build_postings,
     commit_manifest,
-    decoded_term_rows,
     finalize_index,
+    flat_postings,
     fs_delete,
     read_table,
     write_shards,
@@ -129,7 +129,7 @@ def merge_indexes(
         # postings — the losing copy's key is absent from `renum`.
         # --------------------------------------------------------------
         post_frames = [
-            decoded_term_rows(_read_postings_or_empty(spark, sp))
+            flat_postings(_read_postings_or_empty(spark, sp), with_positions="bytes")
             .withColumnRenamed("shard", "old_shard")
             .withColumnRenamed("local_no", "old_local")
             .withColumn("segment", F.lit(i))

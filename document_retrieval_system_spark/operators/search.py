@@ -19,21 +19,20 @@ to the Parquet/Iceberg scan (partition column ``shard`` + term-sorted row
 groups), per-term stats are collected to the driver (tiny) and shipped as
 literals/broadcasts, and the only shuffle is the final tiny
 groupBy(doc)/top-k.  The exhaustive scorers here decode posting blocks
-with a vectorized mapInPandas; the pruned path is operators/wand.py.
+with ``index_build.flat_postings``, the one posting decoder; the pruned
+path is operators/wand.py.  Both BM25 paths share the query preamble
+(``bm25_query_blocks``) and the term score (``bm25_term_score``).
 """
 
 from __future__ import annotations
 
 import math
-from collections.abc import Iterator
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from document_retrieval_system_spark.functions.analyzer import process_text
-from document_retrieval_system_spark.operators.codec import delta_decode, vb_decode
+from document_retrieval_system_spark.operators.index_build import flat_postings
 from document_retrieval_system_spark.oracle import (
     BM25_B,
     BM25_K1,
@@ -41,80 +40,6 @@ from document_retrieval_system_spark.oracle import (
     DEFAULT_MIN_SCORE,
     OracleEngine,
 )
-
-FLAT_SCHEMA = "shard int, term string, local_no long, tf int, doc_len int"
-FLAT_POS_SCHEMA = FLAT_SCHEMA + ", positions array<int>"
-
-
-def flat_postings(blocks: DataFrame, with_positions: bool = False,
-                  extra_cols: list[str] | None = None) -> DataFrame:
-    """Decode compressed blocks back to one row per (term, doc) posting.
-
-    Column pruning matters: without positions the scan never reads
-    pos_bytes (check .explain ReadSchema).  ``extra_cols`` are block-level
-    columns replicated onto every posting row (e.g. a pre-joined ``df``),
-    which lets callers join tiny block-cardinality data BEFORE the
-    posting-cardinality explosion.
-    """
-    extra_cols = extra_cols or []
-    cols = ["shard", "term", "n", "doc_bytes", "tf_bytes", "dl_bytes"] + extra_cols
-    if with_positions:
-        cols.append("pos_bytes")
-    src = blocks.select(*cols)
-    extra_schema = "".join(f", {c} double" for c in extra_cols)
-    out_schema = (FLAT_POS_SCHEMA if with_positions else FLAT_SCHEMA) + extra_schema
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from document_retrieval_system_spark.operators.codec import decode_positions
-
-        for pdf in batches:
-            out_shard, out_term, out_doc, out_tf, out_dl = [], [], [], [], []
-            out_pos = []
-            out_extra: dict[str, list] = {c: [] for c in extra_cols}
-            for row in pdf.itertuples(index=False):
-                docs = delta_decode(vb_decode(row.doc_bytes)).astype(np.int64)
-                tfs = vb_decode(row.tf_bytes).astype(np.int32)
-                dls = vb_decode(row.dl_bytes).astype(np.int32)
-                out_shard.append(np.full(docs.size, row.shard, dtype=np.int32))
-                out_term.extend([row.term] * docs.size)
-                out_doc.append(docs)
-                out_tf.append(tfs)
-                out_dl.append(dls)
-                for c in extra_cols:
-                    out_extra[c].append(
-                        np.full(docs.size, float(getattr(row, c)), dtype=np.float64)
-                    )
-                if with_positions:
-                    out_pos.extend(
-                        [p.astype(np.int32).tolist() for p in
-                         decode_positions(row.pos_bytes, int(row.n))]
-                    )
-            if not out_term:
-                yield pd.DataFrame(
-                    {"shard": pd.Series(dtype="int32"),
-                     "term": pd.Series(dtype="object"),
-                     "local_no": pd.Series(dtype="int64"),
-                     "tf": pd.Series(dtype="int32"),
-                     "doc_len": pd.Series(dtype="int32"),
-                     **({"positions": pd.Series(dtype="object")} if with_positions else {}),
-                     **{c: pd.Series(dtype="float64") for c in extra_cols}}
-                )
-                continue
-            data = {
-                "shard": np.concatenate(out_shard),
-                "term": out_term,
-                "local_no": np.concatenate(out_doc),
-                "tf": np.concatenate(out_tf),
-                "doc_len": np.concatenate(out_dl),
-            }
-            if with_positions:
-                data["positions"] = out_pos
-            for c in extra_cols:
-                data[c] = np.concatenate(out_extra[c])
-            yield pd.DataFrame(data)
-
-    return src.mapInPandas(decode, out_schema)
-
 
 def bm25_weights(n: int, dfs: dict, terms: list[str]) -> dict[str, float]:
     """BM25 query weights: idf = ln((N-df+0.5)/(df+0.5)+1) (:456), summed
@@ -128,6 +53,37 @@ def bm25_weights(n: int, dfs: dict, terms: list[str]) -> dict[str, float]:
         if df > 0:
             weights[t] = weights.get(t, 0.0) + math.log((n - df + 0.5) / (df + 0.5) + 1)
     return weights
+
+
+def bm25_term_score(w, tf, dl, avgdl):
+    """A query term's BM25 contribution to one document,
+    w * tf / (tf + k1*(1-b+b*dl/avgdl)) (:458-471), on Spark Columns or
+    numpy arrays alike.  Every BM25 score of the engine takes this one
+    operation order, so the exhaustive scorer, the WAND posting scores
+    and the WAND block bounds (``max_tf``, ``min_dl``) agree to the bit."""
+    return w * (tf / (tf + BM25_K1 * (1.0 - BM25_B + BM25_B * dl / avgdl)))
+
+
+def bm25_query_blocks(reader, queries: list[str], lang: str, analyzer):
+    """The query preamble of every BM25 scorer: analyze each query, fetch
+    the corpus scalars and the terms' dfs in one collect, weigh each
+    query's terms, and scan the posting blocks of every weighted term.
+
+    Returns ``({query index: {term: w}}, avgdl, blocks)``.  A query with
+    no indexed term is absent from the dict; when none is left the dict
+    is empty and ``blocks`` None."""
+    per_query = [analyzer(q, lang) for q in queries]
+    all_terms = sorted({t for terms in per_query for t in terms})
+    if not all_terms:
+        return {}, 0.0, None
+    corpus, dfs = reader.query_stats(all_terms)
+    weights = {qid: w for qid, terms in enumerate(per_query)
+               if (w := bm25_weights(corpus["total_docs"], dfs, terms))}
+    if not weights:
+        return {}, 0.0, None
+    live = sorted({t for w in weights.values() for t in w})
+    blocks = reader.postings().filter(F.col("term").isin(live))
+    return weights, corpus["avg_doc_length"], blocks
 
 
 def _attach_doc_id(scored: DataFrame, reader, k: int) -> DataFrame:
@@ -149,35 +105,17 @@ def bm25_search(
     analyzer=process_text,
 ) -> DataFrame:
     """Exhaustive relational BM25 (R3 naive form)."""
-    spark = reader.spark
-    query_terms = analyzer(query, lang)
-    if not query_terms:
-        return _empty_result(spark)
-    corpus, dfs = reader.query_stats(query_terms)
-    avgdl = corpus["avg_doc_length"]
-    weights = bm25_weights(corpus["total_docs"], dfs, query_terms)
+    weights, avgdl, blocks = bm25_query_blocks(reader, [query], lang, analyzer)
     if not weights:
-        return _empty_result(spark)
-
-    wdf = spark.createDataFrame(
-        [(t, w) for t, w in weights.items()], "term string, w double"
-    )
-    flat = flat_postings(
-        reader.postings().filter(F.col("term").isin(list(weights))), False
+        return _empty_result(reader.spark)
+    wdf = reader.spark.createDataFrame(
+        list(weights[0].items()), "term string, w double"
     )
     scored = (
-        flat.join(F.broadcast(wdf), "term")
+        flat_postings(blocks)
+        .join(F.broadcast(wdf), "term")
         .withColumn(
-            "part",
-            F.col("w")
-            * (
-                F.col("tf")
-                / (
-                    F.col("tf")
-                    + F.lit(BM25_K1)
-                    * (1.0 - BM25_B + BM25_B * F.col("doc_len") / F.lit(avgdl))
-                )
-            ),
+            "part", bm25_term_score(F.col("w"), F.col("tf"), F.col("doc_len"), avgdl)
         )
         .groupBy("shard", "local_no")
         .agg(F.sum("part").alias("score"))
@@ -253,11 +191,6 @@ def boolean_search(
     if not tokens:
         return _empty_result(spark)
 
-    def doc_set(term: str) -> DataFrame:
-        return flat_postings(
-            reader.postings().filter(F.col("term") == term), False
-        ).select("shard", "local_no")
-
     if len(tokens) == 1:  # :248-269 — tf/doc_len scoring
         processed = process_text(tokens[0], lang)
         if not processed:
@@ -277,7 +210,7 @@ def boolean_search(
         processed = process_text(raw, lang)
         if not processed:
             continue
-        sets.append(doc_set(processed[0]))
+        sets.append(_doc_set(reader, processed[0]))
     if not sets:
         return _empty_result(spark)
     final = sets[0]

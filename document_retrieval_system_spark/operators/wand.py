@@ -44,16 +44,25 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from document_retrieval_system_spark.functions.analyzer import process_text
-from document_retrieval_system_spark.operators.codec import delta_decode, vb_decode
-from document_retrieval_system_spark.operators.search import _empty_result, bm25_weights
-from document_retrieval_system_spark.oracle import (
-    BM25_B,
-    BM25_K1,
-    DEFAULT_MAX_RESULTS,
-    DEFAULT_MIN_SCORE,
+from document_retrieval_system_spark.operators.codec import decode_block
+from document_retrieval_system_spark.operators.search import (
+    _attach_doc_id,
+    _empty_result,
+    bm25_query_blocks,
+    bm25_term_score,
 )
+from document_retrieval_system_spark.oracle import DEFAULT_MAX_RESULTS, DEFAULT_MIN_SCORE
 
 WAND_OUT_SCHEMA = "shard int, local_no long, score double"
+# the block columns the kernel reads
+_KERNEL_COLS = ["shard", "term", "first_doc", "last_doc", "max_tf", "min_dl",
+                "doc_bytes", "tf_bytes", "dl_bytes"]
+
+
+def _no_scores() -> pd.DataFrame:
+    return pd.DataFrame({"shard": pd.Series(dtype="int32"),
+                         "local_no": pd.Series(dtype="int64"),
+                         "score": pd.Series(dtype="float64")})
 
 
 def _shard_kernel(pdf: pd.DataFrame, weights: dict[str, float], avgdl: float,
@@ -71,7 +80,7 @@ def _shard_kernel(pdf: pd.DataFrame, weights: dict[str, float], avgdl: float,
     min-heap (O(log k) per candidate).
     """
     if pdf.empty:
-        return pd.DataFrame({"shard": [], "local_no": [], "score": []})
+        return _no_scores()
     shard = int(pdf["shard"].iloc[0])
 
     # Block table: arrays over all (term, block) rows
@@ -79,13 +88,8 @@ def _shard_kernel(pdf: pd.DataFrame, weights: dict[str, float], avgdl: float,
     firsts = pdf["first_doc"].to_numpy(dtype=np.int64)
     lasts = pdf["last_doc"].to_numpy(dtype=np.int64)
     w_arr = np.array([weights[t] for t in terms], dtype=np.float64)
-    ub = w_arr * (
-        pdf["max_tf"].to_numpy(dtype=np.float64)
-        / (
-            pdf["max_tf"].to_numpy(dtype=np.float64)
-            + BM25_K1 * (1.0 - BM25_B + BM25_B * pdf["min_dl"].to_numpy(np.float64) / avgdl)
-        )
-    )
+    ub = bm25_term_score(w_arr, pdf["max_tf"].to_numpy(np.float64),
+                         pdf["min_dl"].to_numpy(np.float64), avgdl)
 
     # Boundary sweep: piecewise-constant sum of active block bounds.
     bounds = np.unique(np.concatenate([firsts, lasts + 1]))
@@ -138,18 +142,11 @@ def _shard_kernel(pdf: pd.DataFrame, weights: dict[str, float], avgdl: float,
             key = (terms[i], int(firsts[i]), int(lasts[i]))
             raw = raw_cache.get(key) if raw_cache is not None else None
             if raw is None:
-                raw = (
-                    delta_decode(vb_decode(doc_bytes[i])).astype(np.int64),
-                    vb_decode(tf_bytes[i]).astype(np.float64),
-                    vb_decode(dl_bytes[i]).astype(np.float64),
-                )
+                raw = decode_block(doc_bytes[i], tf_bytes[i], dl_bytes[i])
                 if raw_cache is not None:
                     raw_cache[key] = raw
             docs, tfs, dls = raw
-            scores = w_arr[i] * (
-                tfs / (tfs + BM25_K1 * (1.0 - BM25_B + BM25_B * dls / avgdl))
-            )
-            got = (docs, scores)
+            got = (docs, bm25_term_score(w_arr[i], tfs, dls, avgdl))
             decoded[i] = got
         return got
 
@@ -241,9 +238,7 @@ def _shard_kernel(pdf: pd.DataFrame, weights: dict[str, float], avgdl: float,
         stats["decoded_blocks"] = len(decoded)
 
     if not acc_docs:
-        return pd.DataFrame({"shard": pd.Series(dtype="int32"),
-                             "local_no": pd.Series(dtype="int64"),
-                             "score": pd.Series(dtype="float64")})
+        return _no_scores()
     docs = np.concatenate(acc_docs)
     scores = np.concatenate(acc_scores)
     # per-shard cut: keep top-k AND everything tying the kth score, so the
@@ -255,6 +250,34 @@ def _shard_kernel(pdf: pd.DataFrame, weights: dict[str, float], avgdl: float,
     return pd.DataFrame(
         {"shard": np.full(docs.size, shard, dtype=np.int32),
          "local_no": docs, "score": scores}
+    )
+
+
+def _wand_scores(blocks: DataFrame, weights: dict[int, dict[str, float]],
+                 avgdl: float, k: int, min_score: float,
+                 counters: dict | None = None) -> DataFrame:
+    """(qid, shard, local_no, score): each query's per-shard WAND top-k
+    (``weights`` is {qid: {term: w}}), in ONE per-shard kernel job over
+    the shard's already-fetched blocks.  The queries of a shard share
+    its block decodes; the weight math stays per query."""
+    k, ms, a = int(k), float(min_score), float(avgdl)
+
+    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
+        raw_cache: dict = {}
+        outs = []
+        for qid, w in weights.items():
+            st: dict = {}
+            out = _shard_kernel(pdf[pdf["term"].isin(w)], w, a, k, ms,
+                                stats=st, raw_cache=raw_cache)
+            if counters is not None:
+                counters["total_blocks"].add(st.get("total_blocks", 0))
+                counters["decoded_blocks"].add(st.get("decoded_blocks", 0))
+            out.insert(0, "qid", np.int32(qid))
+            outs.append(out)
+        return pd.concat(outs, ignore_index=True)
+
+    return blocks.select(*_KERNEL_COLS).groupBy("shard").applyInPandas(
+        kernel, "qid int, " + WAND_OUT_SCHEMA
     )
 
 
@@ -273,40 +296,11 @@ def bm25_wand_search(
     Accumulator} — each shard kernel adds its block totals, so a bench can
     report the decoded fraction (the pruning effectiveness) without
     touching the result schema."""
-    spark = reader.spark
-    query_terms = analyzer(query, lang)
-    if not query_terms:
-        return _empty_result(spark)
-    corpus, dfs = reader.query_stats(query_terms)
-    avgdl = corpus["avg_doc_length"]
-    weights = bm25_weights(corpus["total_docs"], dfs, query_terms)
+    weights, avgdl, blocks = bm25_query_blocks(reader, [query], lang, analyzer)
     if not weights:
-        return _empty_result(spark)
-
-    blocks = reader.postings().filter(F.col("term").isin(list(weights))).select(
-        "shard", "term", "first_doc", "last_doc", "max_tf", "min_dl",
-        "doc_bytes", "tf_bytes", "dl_bytes",
-    )
-    k, ms = int(max_results), float(min_score)
-    w, a = dict(weights), float(avgdl)
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        if counters is None:
-            return _shard_kernel(pdf, w, a, k, ms)
-        st: dict = {}
-        out = _shard_kernel(pdf, w, a, k, ms, stats=st)
-        counters["total_blocks"].add(st.get("total_blocks", 0))
-        counters["decoded_blocks"].add(st.get("decoded_blocks", 0))
-        return out
-
-    scored = blocks.groupBy("shard").applyInPandas(kernel, WAND_OUT_SCHEMA)
-    docs = reader.docs().select("shard", "local_no", "doc_id", "url")
-    return (
-        scored.join(docs, ["shard", "local_no"])
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
-        .select("doc_id", "url", "score", "shard", "local_no")
-    )
+        return _empty_result(reader.spark)
+    scored = _wand_scores(blocks, weights, avgdl, max_results, min_score, counters)
+    return _attach_doc_id(scored, reader, int(max_results))
 
 
 def bm25_wand_search_many(
@@ -328,55 +322,14 @@ def bm25_wand_search_many(
     Returns (qid, doc_id, url, score, shard, local_no) — per-query
     top-``max_results`` with the engine's (score desc, doc_id asc)
     tie-break; ``qid`` is the index into ``queries``."""
-    spark = reader.spark
-    per_q_terms = {qid: analyzer(q, lang) for qid, q in enumerate(queries)}
-    all_terms = sorted({t for ts in per_q_terms.values() for t in ts})
-
-    def _empty_batch():
+    weights, avgdl, blocks = bm25_query_blocks(reader, queries, lang, analyzer)
+    if not weights:
         # same column ORDER and types as the live path (qid first, int)
-        return spark.createDataFrame(
+        return reader.spark.createDataFrame(
             [], "qid int, doc_id string, url string, score double, "
                 "shard int, local_no long"
         )
-
-    if not all_terms:
-        return _empty_batch()
-    corpus, dfs = reader.query_stats(all_terms)
-    avgdl = corpus["avg_doc_length"]
-    wq = {qid: w for qid, terms in per_q_terms.items()
-          if (w := bm25_weights(corpus["total_docs"], dfs, terms))}
-    if not wq:
-        return _empty_batch()
-    live_terms = sorted({t for w in wq.values() for t in w})
-    blocks = reader.postings().filter(F.col("term").isin(live_terms)).select(
-        "shard", "term", "first_doc", "last_doc", "max_tf", "min_dl",
-        "doc_bytes", "tf_bytes", "dl_bytes",
-    )
-    k, ms, a = int(max_results), float(min_score), float(avgdl)
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        outs = []
-        raw_cache: dict = {}  # share block decodes across the batch
-        for qid, w in wq.items():
-            sub = pdf[pdf["term"].isin(w)]
-            if len(sub) == 0:
-                continue
-            out = _shard_kernel(sub, w, a, k, ms, raw_cache=raw_cache)
-            if len(out):
-                out.insert(0, "qid", np.int32(qid))
-                outs.append(out)
-        if not outs:
-            return pd.DataFrame(
-                {"qid": pd.Series(dtype="int32"),
-                 "shard": pd.Series(dtype="int32"),
-                 "local_no": pd.Series(dtype="int64"),
-                 "score": pd.Series(dtype="float64")}
-            )
-        return pd.concat(outs, ignore_index=True)
-
-    scored = blocks.groupBy("shard").applyInPandas(
-        kernel, "qid int, " + WAND_OUT_SCHEMA
-    )
+    scored = _wand_scores(blocks, weights, avgdl, max_results, min_score)
     docs = reader.docs().select("shard", "local_no", "doc_id", "url")
     from pyspark.sql import Window
 
@@ -386,6 +339,6 @@ def bm25_wand_search_many(
     return (
         scored.join(docs, ["shard", "local_no"])
         .withColumn("_rn", rank)
-        .filter(F.col("_rn") <= k)
+        .filter(F.col("_rn") <= int(max_results))
         .select("qid", "doc_id", "url", "score", "shard", "local_no")
     )

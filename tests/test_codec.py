@@ -84,78 +84,26 @@ def test_split_position_payloads_inverts_concatenation():
     assert split_position_payloads(b"", 0) == []
 
 
-# --------------------------------------------------------------------------
-# Simple8b
-# --------------------------------------------------------------------------
+def test_posting_bytes_are_decoded_only_in_the_codec():
+    """The codec is the only package module that knows the posting byte
+    layout: every other module decodes through decode_block /
+    decode_block_positions, never the varbyte and position primitives."""
+    import ast
+    from pathlib import Path
 
-@given(st.lists(st.integers(min_value=0, max_value=(1 << 60) - 1),
-                max_size=600))
-@settings(max_examples=200, deadline=None)
-def test_s8b_roundtrip(values):
-    from document_retrieval_system_spark.operators.codec import (
-        s8b_decode,
-        s8b_encode,
-    )
+    import document_retrieval_system_spark as pkg
 
-    arr = np.asarray(values, dtype=np.uint64)
-    got = s8b_decode(s8b_encode(arr))
-    assert got.dtype == np.uint64
-    assert np.array_equal(got, arr)
-
-
-@given(st.lists(st.integers(min_value=0, max_value=(1 << 60) - 1),
-                max_size=400))
-@settings(max_examples=100, deadline=None)
-def test_s8b_agrees_with_varbyte(values):
-    from document_retrieval_system_spark.operators.codec import (
-        s8b_decode,
-        s8b_encode,
-        vb_decode,
-        vb_encode,
-    )
-
-    arr = np.asarray(values, dtype=np.uint64)
-    assert np.array_equal(s8b_decode(s8b_encode(arr)),
-                          vb_decode(vb_encode(arr)))
-
-
-def test_s8b_edges_and_packing_density():
-    from document_retrieval_system_spark.operators.codec import (
-        s8b_decode,
-        s8b_encode,
-    )
-
-    assert s8b_encode(np.empty(0, dtype=np.uint64)) == b""
-    assert s8b_decode(b"").size == 0
-    # 240 zeros pack into ONE 8-byte word (selector 0)
-    assert len(s8b_encode(np.zeros(240, dtype=np.uint64))) == 8
-    # 60 one-bit values pack into one word
-    assert len(s8b_encode(np.ones(60, dtype=np.uint64))) == 8
-    # max 60-bit value round-trips alone
-    big = np.asarray([(1 << 60) - 1], dtype=np.uint64)
-    assert np.array_equal(s8b_decode(s8b_encode(big)), big)
-    # dense docID deltas (all 1s, the sorted-dense-corpus case) cost
-    # well under 1 byte/posting — the win over varbyte's 1-byte floor
-    deltas = np.ones(1200, dtype=np.uint64)
-    assert len(s8b_encode(deltas)) / deltas.size < 0.2
-
-
-def test_s8b_rejects_values_over_60_bits():
-    import pytest
-
-    from document_retrieval_system_spark.operators.codec import s8b_encode
-
-    with pytest.raises(ValueError, match="60 bits"):
-        s8b_encode(np.asarray([1 << 60], dtype=np.uint64))
-
-
-def test_s8b_mixed_width_tail():
-    from document_retrieval_system_spark.operators.codec import (
-        s8b_decode,
-        s8b_encode,
-    )
-
-    # widths forcing several selector classes + a partial tail window
-    arr = np.asarray([0] * 300 + [1] * 61 + [2 ** 30] * 3 + [5],
-                     dtype=np.uint64)
-    assert np.array_equal(s8b_decode(s8b_encode(arr)), arr)
+    root = Path(pkg.__file__).parent
+    primitives = {"vb_decode", "delta_decode", "split_position_payloads",
+                  "decode_positions"}
+    calls = []
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        for node in ast.walk(ast.parse(path.read_text(encoding="utf-8"))):
+            if isinstance(node, ast.Call):
+                f = node.func
+                name = getattr(f, "id", None) or getattr(f, "attr", None)
+                if name in primitives:
+                    calls.append((rel, node.lineno, name))
+    assert calls, "the scan found no primitive call at all"
+    assert [c for c in calls if c[0] != "operators/codec.py"] == []

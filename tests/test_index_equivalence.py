@@ -93,3 +93,30 @@ def test_manifest_lineage_counters(reader, oracle_engine):
     )
     assert agg["postings"] == total_oracle_postings
     assert {r["status"] for r in m.collect()} == {"done"}
+
+
+def test_decoder_position_forms_agree_and_reblock_byte_identically(reader):
+    """The decoder's two position forms describe the same positions, and
+    re-blocking its byte-sliced rows reproduces every postings row."""
+    from document_retrieval_system_spark.operators.codec import decode_positions
+    from document_retrieval_system_spark.operators.index_build import build_postings
+
+    key = ("shard", "term", "local_no")
+    decoded = {
+        tuple(r[k] for k in key): list(r["positions"])
+        for r in flat_postings(reader.postings(), with_positions=True).collect()
+    }
+    sliced = flat_postings(reader.postings(), with_positions="bytes")
+    rows = sliced.collect()
+    assert rows and len(rows) == len(decoded)
+    for r in rows:
+        got = decode_positions(bytes(r["pos_bytes"]), 1)[0].tolist()
+        assert got == decoded[tuple(r[k] for k in key)], r
+
+    cols = reader.postings().columns
+    rebuilt = build_postings(
+        sliced.select("shard", "local_no", "term", "tf", "pos_bytes", "doc_len")
+    )
+    assert sorted(map(tuple, rebuilt.select(*cols).collect())) == sorted(
+        map(tuple, reader.postings().select(*cols).collect())
+    )

@@ -590,11 +590,11 @@ def test_delete_crash_before_postings_rebuild_repairs(spark, monkeypatch):
         assert fs_exists(spark, maintenance_intent_path(paths))
         r = IndexReader(spark, idx)
         from document_retrieval_system_spark.operators.index_build import (
-            decoded_term_rows,
+            flat_postings,
         )
 
         orphans = (
-            decoded_term_rows(r.postings())
+            flat_postings(r.postings(), with_positions="bytes")
             .join(r.docs().select("shard", "local_no"),
                   ["shard", "local_no"], "left_anti").count()
         )
@@ -607,7 +607,7 @@ def test_delete_crash_before_postings_rebuild_repairs(spark, monkeypatch):
         finalize_index(spark, paths)
         r = IndexReader(spark, idx)
         assert (
-            decoded_term_rows(r.postings())
+            flat_postings(r.postings(), with_positions="bytes")
             .join(r.docs().select("shard", "local_no"),
                   ["shard", "local_no"], "left_anti").count() == 0
         )

@@ -90,3 +90,29 @@ def test_wand_batch_empty_and_unknown_queries(reader):
     ).collect()
     qids = {r["qid"] for r in out}
     assert qids == {2}, qids
+
+
+def test_block_bounds_cover_every_posting_score(reader):
+    """Block-max soundness, checked directly: for every block of every
+    term, the bound from the block's (max_tf, min_dl) is at least the
+    score of each decoded posting, at the index's avgdl and at others
+    (the metadata is avgdl-independent)."""
+    from document_retrieval_system_spark.operators.codec import decode_block
+    from document_retrieval_system_spark.operators.search import (
+        bm25_term_score,
+        bm25_weights,
+    )
+
+    corpus = reader.corpus()
+    dfs = {r["term"]: r["df"] for r in reader.term_stats().collect()}
+    weights = bm25_weights(corpus["total_docs"], dfs, list(dfs))
+    blocks = reader.postings().select(
+        "term", "max_tf", "min_dl", "doc_bytes", "tf_bytes", "dl_bytes"
+    ).collect()
+    assert blocks
+    for avgdl in (corpus["avg_doc_length"], 1.0, 1e4):
+        for b in blocks:
+            _docs, tfs, dls = decode_block(b["doc_bytes"], b["tf_bytes"], b["dl_bytes"])
+            w = weights[b["term"]]
+            bound = bm25_term_score(w, float(b["max_tf"]), float(b["min_dl"]), avgdl)
+            assert bound >= bm25_term_score(w, tfs, dls, avgdl).max(), b["term"]
