@@ -19,6 +19,7 @@ from __future__ import annotations
 
 import os
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from document_retrieval_system_spark.operators import dedup, fuzzy, similarity, textstats
@@ -75,8 +76,6 @@ bm25 AS (
 # Spark-side shared builders
 # ---------------------------------------------------------------------------
 
-_SCAN_SPLITS: dict[tuple[str, int, int, int], int] = {}
-
 # Minimum compressed source size for the scan spread to pay for itself:
 # the repartition costs a fixed exchange (~0.3-0.5 s of scheduling and a
 # serial shuffle write) and a pushdown barrier, so below ~4 MB of
@@ -88,19 +87,82 @@ _SCAN_SPLITS: dict[tuple[str, int, int, int], int] = {}
 _SPREAD_MIN_BYTES = int(os.environ.get("SPARK_GRAFT_SPREAD_MIN_BYTES",
                                        str(4 * 1024 * 1024)))
 
+# Bump when analyzer / index-build logic changes so stale cached entry
+# artifacts (shared temp dir across driver runs) are never reused.
+# v3: gap-aligned posting block boundaries.  v4: tagged ("b"-prefixed)
+# ANN bucket partition values.  v5: manifest kind+committed_at.
+# v6: URL-ordered local_no assignment (docID locality).
+ENTRY_CACHE_VERSION = 6
 
-def _src_stat(path: str) -> tuple[int, int]:
-    """(bytes, newest mtime in ns) of a source file or directory tree."""
-    if os.path.isdir(path):
-        stats = [os.stat(os.path.join(r, f))
-                 for r, _d, fs in os.walk(path) for f in fs]
-        return (sum(st.st_size for st in stats),
-                max((st.st_mtime_ns for st in stats), default=0))
+
+def _fingerprint(path: str) -> tuple[tuple[str, int, int], ...] | None:
+    """The one identity of an entry source: sorted per-file (name, size,
+    mtime_ns) of a file or of every file under a directory tree; None
+    when os.stat cannot see the path (an object-store URI).
+
+    Everything derived from a source is keyed on it.  An in-process
+    result (`_memo`) is recomputed when the fingerprint or its params
+    change; an on-disk cache dir (`_cached_dir`) is rebuilt when the
+    fingerprint, its params, codec.FORMAT_VERSION or ENTRY_CACHE_VERSION
+    change.  The mtime is kept in nanoseconds, so a same-size rewrite
+    within one second is new content too; only two writes inside one
+    tick of the file system's clock look alike."""
     try:
-        st = os.stat(path)
+        if not os.path.isdir(path):
+            st = os.stat(path)
+            return ((os.path.basename(path), st.st_size, st.st_mtime_ns),)
+        files = sorted(os.path.join(r, f) for r, _d, fs in os.walk(path) for f in fs)
+        stats = [(os.path.relpath(f, path), os.stat(f)) for f in files]
+        return tuple((name, st.st_size, st.st_mtime_ns) for name, st in stats)
     except OSError:
-        return 1 << 60, 0  # unknown (object store): assume big
-    return st.st_size, st.st_mtime_ns
+        return None
+
+
+_MEMO: dict = {}
+
+
+def _memo(path: str, params: tuple, make):
+    """The one in-process memo of values derived from a source: make()
+    runs once per (abspath, `_fingerprint`, params)."""
+    key = (os.path.abspath(path), _fingerprint(path), params)
+    if key not in _MEMO:
+        _MEMO[key] = make()
+    return _MEMO[key]
+
+
+def _cached_dir(kind: str, sf_dir: str, src_file: str, params, build) -> str:
+    """The one on-disk entry cache: a temp dir keyed on the source's
+    `_fingerprint`, ``params``, FORMAT_VERSION and ENTRY_CACHE_VERSION.
+    On a miss build(tmp) writes a private staging dir that is then
+    renamed into place, so concurrent drivers never see a partial
+    build.  An empty src_file keys a fixture on the versions alone."""
+    import hashlib
+    import tempfile
+
+    from document_retrieval_system_spark.operators.codec import FORMAT_VERSION
+
+    src = os.path.join(sf_dir, src_file)
+    tag = hashlib.md5(repr(
+        (src, _fingerprint(src), FORMAT_VERSION, ENTRY_CACHE_VERSION, params)
+    ).encode()).hexdigest()[:10]
+    final = os.path.join(tempfile.gettempdir(), f"drs_entry_{kind}_{tag}")
+    if not os.path.exists(final):
+        tmp = f"{final}.tmp-{os.getpid()}"
+        build(tmp)
+        _publish_cache_dir(tmp, final)
+    return final
+
+
+def _publish_cache_dir(tmp: str, final: str) -> None:
+    """Atomically promote a staged cache dir; lose the race gracefully."""
+    import shutil
+
+    try:
+        os.rename(tmp, final)
+    except OSError:
+        shutil.rmtree(tmp, ignore_errors=True)
+        if not os.path.exists(final):
+            raise
 
 
 def _spread(spark: SparkSession, df: DataFrame, path: str) -> DataFrame:
@@ -112,17 +174,13 @@ def _spread(spark: SparkSession, df: DataFrame, path: str) -> DataFrame:
     parallelism, one cheap round-robin exchange of the raw rows buys
     full-width execution for everything downstream; on real multi-split
     inputs (any production table) this is a no-op.  The split count is
-    memoized per (path, parallelism, size, mtime) so repeated calls
-    don't re-plan the scan, and a source rewritten in the same process
-    is planned afresh."""
+    memoized per source and parallelism, so repeated calls don't
+    re-plan the scan; a source os.stat cannot see counts as big."""
     n = spark.sparkContext.defaultParallelism
-    size, mtime = _src_stat(path)
-    if size < _SPREAD_MIN_BYTES:
+    fp = _fingerprint(path)
+    if fp is not None and sum(size for _f, size, _t in fp) < _SPREAD_MIN_BYTES:
         return df
-    key = (path, n, size, mtime)
-    if key not in _SCAN_SPLITS:
-        _SCAN_SPLITS[key] = df.rdd.getNumPartitions()
-    if _SCAN_SPLITS[key] < n:
+    if _memo(path, ("splits", n), lambda: df.rdd.getNumPartitions()) < n:
         # The always-true non-deterministic guard is a predicate-pushdown
         # BARRIER: without it, any later filter on a text-derived
         # expression (size(tokenize(text)) > 0, sampling keys, ...)
@@ -1121,7 +1179,13 @@ IVF_K, IVF_NPROBE, IVF_SEED = 16, 4, 11
 
 _IVF_SAMPLE = 100_000
 _IVF_ITERS = 10
-_ivf_cents_cache: dict = {}
+
+
+def _emb_sample(sf_dir: str, salt: int, n: int) -> np.ndarray:
+    """The md5-ranked embeddings fit sample as a float64 matrix."""
+    t = similarity.md5_ranked_table(os.path.join(sf_dir, "embeddings.parquet"),
+                                    "vec_id", ["embedding"], salt, n)
+    return np.asarray(t.column("embedding").to_pylist(), dtype=np.float64)
 
 
 def _ivf_fitted_cents(sf_dir: str):
@@ -1137,48 +1201,18 @@ def _ivf_fitted_cents(sf_dir: str):
     similarity.ivf_centroids: the sample ranks rows by
     md5(vec_id || seed) (never file order), init draws from a seeded
     PCG64, Lloyd runs a fixed iteration count in float64."""
-    import hashlib
-
-    import numpy as np
-    import pyarrow.parquet as pq
-
-    path = os.path.join(sf_dir, "embeddings.parquet")
-    key = (os.path.abspath(path), IVF_K, IVF_SEED)
-    if key in _ivf_cents_cache:
-        return _ivf_cents_cache[key]
-    t = pq.read_table(path, columns=["vec_id", "embedding"])
-    ids = t.column("vec_id").to_pylist()
-    vecs = t.column("embedding").to_pylist()
-    ranked = sorted(
-        range(len(ids)),
-        key=lambda i: hashlib.md5(f"{ids[i]}{IVF_SEED}".encode()).hexdigest(),
-    )[:_IVF_SAMPLE]
-    x = np.asarray([vecs[i] for i in ranked], dtype=np.float64)
-    rng = np.random.default_rng(IVF_SEED)
-    cents = x[rng.choice(len(x), size=min(IVF_K, len(x)), replace=False)]
-    for _ in range(_IVF_ITERS):
-        d = ((x[:, None, :] - cents[None, :, :]) ** 2).sum(axis=2)
-        assign = d.argmin(axis=1)
-        for c in range(len(cents)):
-            m = assign == c
-            if m.any():
-                cents[c] = x[m].mean(axis=0)
-    _ivf_cents_cache[key] = cents
-    return cents
+    return _memo(
+        os.path.join(sf_dir, "embeddings.parquet"), ("ivf", IVF_K, IVF_SEED),
+        lambda: similarity.fit_centroids(
+            _emb_sample(sf_dir, IVF_SEED, _IVF_SAMPLE), IVF_K, _IVF_ITERS,
+            np.random.default_rng(IVF_SEED)))
 
 
 def _ensure_ivf_index(spark, sf_dir: str) -> str:
     cents = _ivf_fitted_cents(sf_dir)
-    import hashlib
-
-    cfp = hashlib.md5(cents.tobytes()).hexdigest()[:10]
-    params = f"ivf{IVF_K}-fit-{cfp}"
-    idx = _entry_cache_dir("ivf", sf_dir, "embeddings.parquet", params)
-    if not os.path.exists(idx):
-        tmp = f"{idx}.tmp-{os.getpid()}"
-        similarity.build_ivf_index(_emb(spark, sf_dir), tmp, cents)
-        _publish_cache_dir(tmp, idx)
-    return idx
+    return _cached_dir(
+        "ivf", sf_dir, "embeddings.parquet", ("ivf", IVF_K, cents.tobytes()),
+        lambda tmp: similarity.build_ivf_index(_emb(spark, sf_dir), tmp, cents))
 
 
 def q_ann_ivf_topk(spark, sf_dir):
@@ -1260,7 +1294,6 @@ SQL_ANN_IVF = _sql_ann_ivf
 
 PQ_M, PQ_KSUB, PQ_SEED, PQ_RERANK = 8, 16, 13, 50
 _PQ_ITERS, _PQ_SAMPLE = 10, 100_000
-_pq_books_cache: dict = {}
 
 
 def _pq_fitted_books(sf_dir: str):
@@ -1269,42 +1302,18 @@ def _pq_fitted_books(sf_dir: str):
     PCG64 stream drawn per subspace in order, same fixed-iteration Lloyd
     in float64) — shared by the Spark entry and the call-time oracle SQL
     builder exactly like _ivf_fitted_cents."""
-    import hashlib
-
-    import numpy as np
-    import pyarrow.parquet as pq
-
-    path = os.path.join(sf_dir, "embeddings.parquet")
-    key = (os.path.abspath(path), PQ_M, PQ_KSUB, PQ_SEED)
-    if key in _pq_books_cache:
-        return _pq_books_cache[key]
-    t = pq.read_table(path, columns=["vec_id", "embedding"])
-    ids = t.column("vec_id").to_pylist()
-    vecs = t.column("embedding").to_pylist()
-    ranked = sorted(
-        range(len(ids)),
-        key=lambda i: hashlib.md5(f"{ids[i]}{PQ_SEED}".encode()).hexdigest(),
-    )[:_PQ_SAMPLE]
-    x = np.asarray([vecs[i] for i in ranked], dtype=np.float64)
-    books = similarity.fit_subspace_books(
-        x, PQ_M, PQ_KSUB, _PQ_ITERS, np.random.default_rng(PQ_SEED)
-    )
-    _pq_books_cache[key] = books
-    return books
+    return _memo(
+        os.path.join(sf_dir, "embeddings.parquet"), ("pq", PQ_M, PQ_KSUB, PQ_SEED),
+        lambda: similarity.fit_subspace_books(
+            _emb_sample(sf_dir, PQ_SEED, _PQ_SAMPLE), PQ_M, PQ_KSUB, _PQ_ITERS,
+            np.random.default_rng(PQ_SEED)))
 
 
 def _ensure_pq_index(spark, sf_dir: str) -> str:
     books = _pq_fitted_books(sf_dir)
-    import hashlib
-
-    bfp = hashlib.md5(books.tobytes()).hexdigest()[:10]
-    params = f"pq{PQ_M}x{PQ_KSUB}-fit-{bfp}"
-    idx = _entry_cache_dir("pq", sf_dir, "embeddings.parquet", params)
-    if not os.path.exists(idx):
-        tmp = f"{idx}.tmp-{os.getpid()}"
-        similarity.build_pq_index(_emb(spark, sf_dir), tmp, books)
-        _publish_cache_dir(tmp, idx)
-    return idx
+    return _cached_dir(
+        "pq", sf_dir, "embeddings.parquet", ("pq", PQ_M, PQ_KSUB, books.tobytes()),
+        lambda tmp: similarity.build_pq_index(_emb(spark, sf_dir), tmp, books))
 
 
 def q_ann_pq_topk(spark, sf_dir):
@@ -1394,54 +1403,27 @@ ORDER BY cosine DESC, vec_id LIMIT {k}"""
 SQL_ANN_PQ = _sql_ann_pq
 
 
-_ivfpq_books_cache: dict = {}
-
-
 def _ivfpq_fitted_books(sf_dir: str):
     """Residual PQ codebooks over the fitted IVF centroids — pyarrow+
     numpy twin of similarity.ivfpq_residual_books (same md5-ranked
-    sample, numpy-argmin cell assignment with first-index = lower-cid
-    ties, one seeded PCG64 stream drawn per subspace in order)."""
-    import hashlib
-
-    import numpy as np
-    import pyarrow.parquet as pq
-
-    path = os.path.join(sf_dir, "embeddings.parquet")
-    key = (os.path.abspath(path), PQ_M, PQ_KSUB, PQ_SEED, IVF_K, IVF_SEED)
-    if key in _ivfpq_books_cache:
-        return _ivfpq_books_cache[key]
-    cents = _ivf_fitted_cents(sf_dir)
-    t = pq.read_table(path, columns=["vec_id", "embedding"])
-    ids = t.column("vec_id").to_pylist()
-    vecs = t.column("embedding").to_pylist()
-    ranked = sorted(
-        range(len(ids)),
-        key=lambda i: hashlib.md5(f"{ids[i]}{PQ_SEED}".encode()).hexdigest(),
-    )[:_PQ_SAMPLE]
-    x = np.asarray([vecs[i] for i in ranked], dtype=np.float64)
-    assign = ((x[:, None, :] - cents[None, :, :]) ** 2).sum(axis=2).argmin(axis=1)
-    resid = x - cents[assign]
-    books = similarity.fit_subspace_books(
-        resid, PQ_M, PQ_KSUB, _PQ_ITERS, np.random.default_rng(PQ_SEED)
-    )
-    _ivfpq_books_cache[key] = books
-    return books
+    sample, same residual step, one seeded PCG64 stream drawn per
+    subspace in order)."""
+    return _memo(
+        os.path.join(sf_dir, "embeddings.parquet"),
+        ("ivfpq", PQ_M, PQ_KSUB, PQ_SEED, IVF_K, IVF_SEED),
+        lambda: similarity.fit_subspace_books(
+            similarity.ivf_residuals(_emb_sample(sf_dir, PQ_SEED, _PQ_SAMPLE),
+                                     _ivf_fitted_cents(sf_dir)),
+            PQ_M, PQ_KSUB, _PQ_ITERS, np.random.default_rng(PQ_SEED)))
 
 
 def _ensure_ivfpq_index(spark, sf_dir: str) -> str:
     cents = _ivf_fitted_cents(sf_dir)
     books = _ivfpq_fitted_books(sf_dir)
-    import hashlib
-
-    fp = hashlib.md5(cents.tobytes() + books.tobytes()).hexdigest()[:10]
-    params = f"ivfpq{IVF_K}x{PQ_M}x{PQ_KSUB}-fit-{fp}"
-    idx = _entry_cache_dir("ivfpq", sf_dir, "embeddings.parquet", params)
-    if not os.path.exists(idx):
-        tmp = f"{idx}.tmp-{os.getpid()}"
-        similarity.build_ivfpq_index(_emb(spark, sf_dir), tmp, cents, books)
-        _publish_cache_dir(tmp, idx)
-    return idx
+    return _cached_dir(
+        "ivfpq", sf_dir, "embeddings.parquet",
+        ("ivfpq", IVF_K, PQ_M, PQ_KSUB, cents.tobytes() + books.tobytes()),
+        lambda tmp: similarity.build_ivfpq_index(_emb(spark, sf_dir), tmp, cents, books))
 
 
 def q_ann_ivfpq_topk(spark, sf_dir):
@@ -1471,7 +1453,6 @@ def _sql_ann_ivfpq(k: int = 10) -> str:
     the flat-PQ oracle — so the only SQL-computed floats are the cell
     assignment and residual-code argmins, which reuse the proven
     ordered-fold shape."""
-    import numpy as np
     import pyarrow.parquet as pq
 
     sf = _oracle_sf_dir()
@@ -3105,7 +3086,6 @@ QM_JUNK_BASE = "buy now click here free win prize money "
 QM_JUNK_VOCAB = ["cheap", "pills", "casino", "winner", "bonus", "deal",
                  "gratis", "lotto", "rich", "offer", "spam"]
 QM_FIT_PER_CLASS = 120
-_qm_model_cache: dict = {}
 
 
 def _qm_junk_text(doc_id: int) -> str:
@@ -3122,35 +3102,26 @@ def _qm_fitted(sf_dir: str):
     negative class, untouched docs the positive.  Runs driver-side on
     pyarrow (no SparkSession) so the same ints serve the Spark builder
     and the call-time oracle SQL (the _ivf_fitted_cents pattern)."""
-    import hashlib
-
-    import pyarrow.parquet as pq
-
     from document_retrieval_system_spark.operators.quality_model import (
         fit_quality_model,
         quantize_weights,
     )
 
-    key = os.path.abspath(sf_dir)
-    if key in _qm_model_cache:
-        return _qm_model_cache[key]
-    t = pq.read_table(os.path.join(sf_dir, "documents.parquet"),
-                      columns=["doc_id", "text"])
-    ids = t.column("doc_id").to_pylist()
-    texts = t.column("text").to_pylist()
-    ranked = sorted(range(len(ids)),
-                    key=lambda i: hashlib.md5(f"{ids[i]}qm".encode()).hexdigest())
-    pos, neg = [], []
-    for i in ranked:
-        if ids[i] % QM_JUNK_MOD == 3:
-            if len(neg) < QM_FIT_PER_CLASS:
-                neg.append(_qm_junk_text(ids[i]))
-        elif len(pos) < QM_FIT_PER_CLASS:
-            pos.append(texts[i] or "")
-    w, b = fit_quality_model(pos, neg)
-    out = (quantize_weights(w), float(b))
-    _qm_model_cache[key] = out
-    return out
+    path = os.path.join(sf_dir, "documents.parquet")
+
+    def fit():
+        t = similarity.md5_ranked_table(path, "doc_id", ["text"], "qm")
+        pos, neg = [], []
+        for i, text in zip(t.column("doc_id").to_pylist(), t.column("text").to_pylist()):
+            if i % QM_JUNK_MOD == 3:
+                if len(neg) < QM_FIT_PER_CLASS:
+                    neg.append(_qm_junk_text(i))
+            elif len(pos) < QM_FIT_PER_CLASS:
+                pos.append(text or "")
+        w, b = fit_quality_model(pos, neg)
+        return quantize_weights(w), float(b)
+
+    return _memo(path, ("qm", QM_FIT_PER_CLASS), fit)
 
 
 def _qm_planted_docs(spark, sf_dir):
@@ -3199,75 +3170,19 @@ def _sql_ta_quality_model() -> str:
 # Spark-only entries (no SQL-expressible oracle -> driver rows-only check)
 # ---------------------------------------------------------------------------
 
-# Bump when analyzer / index-build logic changes so stale cached entry
-# artifacts (shared temp dir across driver runs) are never reused.
-# v3: gap-aligned posting block boundaries.  v4: tagged ("b"-prefixed)
-# ANN bucket partition values.  v5: manifest kind+committed_at.
-# v6: URL-ordered local_no assignment (docID locality).
-ENTRY_CACHE_VERSION = 6
-
-
-def _content_fingerprint(path: str) -> str:
-    """size:mtime fingerprint of a parquet file (or every file under a
-    parquet dir) — changed data at the same path must miss the cache."""
-    import glob
-
-    if os.path.isdir(path):
-        files = sorted(
-            p for p in glob.glob(os.path.join(path, "**"), recursive=True)
-            if os.path.isfile(p)
-        )
-    else:
-        files = [path]
-    parts = []
-    for p in files:
-        st = os.stat(p)
-        parts.append(f"{os.path.basename(p)}:{st.st_size}:{int(st.st_mtime)}")
-    return "|".join(parts)
-
-
-def _entry_cache_dir(kind: str, sf_dir: str, src_file: str, extra: str = "") -> str:
-    import hashlib as _h
-    import tempfile
-
-    from document_retrieval_system_spark.operators.codec import FORMAT_VERSION
-
-    fp = _content_fingerprint(os.path.join(sf_dir, src_file))
-    tag = _h.md5(
-        f"{sf_dir}|{fp}|v{FORMAT_VERSION}|e{ENTRY_CACHE_VERSION}|{extra}".encode()
-    ).hexdigest()[:10]
-    return os.path.join(tempfile.gettempdir(), f"drs_entry_{kind}_{tag}")
-
-
-def _publish_cache_dir(tmp: str, final: str) -> None:
-    """Atomically promote a staged cache dir; lose the race gracefully."""
-    import shutil
-
-    try:
-        os.rename(tmp, final)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)
-        if not os.path.exists(final):
-            raise
-
-
 def _ensure_entry_index(spark, sf_dir: str):
     """Build (once per documents.parquet content) a compressed sharded
     index using the SQL-expressible analyzer, so the WAND query below is
-    checkable against the DuckDB BM25 oracle.  Staged into a unique temp
-    dir and renamed into place so concurrent drivers can't interleave."""
+    checkable against the DuckDB BM25 oracle."""
     from document_retrieval_system_spark.operators.index_build import (
         IndexReader,
         build_index,
     )
 
-    idx = _entry_cache_dir("index", sf_dir, "documents.parquet")
-    if not os.path.exists(idx):
-        tmp = f"{idx}.tmp-{os.getpid()}"
-        pages = _docs_as_pages(_docs(spark, sf_dir))
-        build_index(spark, pages, tmp, n_shards=8, analyzer=simple_process_text)
-        _publish_cache_dir(tmp, idx)
-    return IndexReader(spark, idx)
+    return IndexReader(spark, _cached_dir(
+        "index", sf_dir, "documents.parquet", (),
+        lambda tmp: build_index(spark, _docs_as_pages(_docs(spark, sf_dir)), tmp,
+                                n_shards=8, analyzer=simple_process_text)))
 
 
 def _ensure_merged_index(spark, sf_dir: str):
@@ -3275,18 +3190,16 @@ def _ensure_merged_index(spark, sf_dir: str):
     half-corpus indexes and their segment merge — the fixture for the
     ``i9_index_merge`` entry.  The halves overlap on doc_id % 7 == 0, so
     the merge also exercises the newest-segment-wins supersede path."""
-    from document_retrieval_system_spark.operators.index_build import IndexReader
+    import shutil
+
+    from document_retrieval_system_spark.operators.index_build import (
+        IndexReader,
+        build_index,
+    )
     from document_retrieval_system_spark.operators.merge import merge_indexes
 
-    idx = _entry_cache_dir("mergedidx", sf_dir, "documents.parquet")
-    if not os.path.exists(idx):
-        from document_retrieval_system_spark.operators.index_build import (
-            build_index,
-        )
-
-        tmp = f"{idx}.tmp-{os.getpid()}"
-        docs = _docs(spark, sf_dir)
-        pages = _docs_as_pages(docs).withColumn(
+    def build(tmp):
+        pages = _docs_as_pages(_docs(spark, sf_dir)).withColumn(
             "_id", F.expr("cast(substring(url, 7) as bigint)"))
         overlap = F.col("_id") % 7 == 0
         segs = [os.path.join(tmp, f"seg{i}") for i in (0, 1)]
@@ -3299,11 +3212,10 @@ def _ensure_merged_index(spark, sf_dir: str):
         merge_indexes(spark, segs, os.path.join(tmp, "merged"), n_shards=8)
         # the merged index is self-contained (stats re-finalized); the
         # segments would triple the cache footprint for nothing
-        import shutil as _shutil
+        for seg in segs:
+            shutil.rmtree(seg, ignore_errors=True)
 
-        for s in segs:
-            _shutil.rmtree(s, ignore_errors=True)
-        _publish_cache_dir(tmp, idx)
+    idx = _cached_dir("mergedidx", sf_dir, "documents.parquet", (), build)
     return IndexReader(spark, os.path.join(idx, "merged"))
 
 
@@ -3360,16 +3272,12 @@ def q_i9_index_merge(spark, sf_dir):
 def _ensure_ann_index(spark, sf_dir: str) -> str:
     """Persist (once per embeddings.parquet content) the LSH-bucketed ANN
     index: parquet partitioned by the signature's 6-bit prefix."""
-    params = f"sb{ANN_SIG_BITS}-bb{ANN_BUCKET_BITS}-s{ANN_SEED}"
-    idx = _entry_cache_dir("ann", sf_dir, "embeddings.parquet", params)
-    if not os.path.exists(idx):
-        tmp = f"{idx}.tmp-{os.getpid()}"
-        similarity.build_lsh_index(
+    return _cached_dir(
+        "ann", sf_dir, "embeddings.parquet",
+        ("lsh", ANN_SIG_BITS, ANN_BUCKET_BITS, ANN_SEED),
+        lambda tmp: similarity.build_lsh_index(
             _emb(spark, sf_dir), tmp, sig_bits=ANN_SIG_BITS,
-            bucket_bits=ANN_BUCKET_BITS, seed=ANN_SEED, dim=EMB_DIM,
-        )
-        _publish_cache_dir(tmp, idx)
-    return idx
+            bucket_bits=ANN_BUCKET_BITS, seed=ANN_SEED, dim=EMB_DIM))
 
 
 def q_r3_bm25_wand(spark, sf_dir):
@@ -3649,8 +3557,6 @@ def q_s8_assets(spark, sf_dir):
     extraction over a deterministic fixture directory of all four
     formats (rows-only: byte payloads and OOXML part walking are not
     SQL-expressible; per-format semantics are pytest goldens)."""
-    import tempfile
-
     from document_retrieval_system_spark.sources.asset_extract import (
         assets_from_dir,
     )
@@ -3662,11 +3568,8 @@ def q_s8_assets(spark, sf_dir):
 
     # deterministic fixture, built once per cache version (a mkdtemp per
     # invocation litters the shared temp dir across bench/driver runs)
-    d = os.path.join(
-        tempfile.gettempdir(), f"drs_s8_fixture_e{ENTRY_CACHE_VERSION}"
-    )
-    if not os.path.isdir(d):
-        tmp = tempfile.mkdtemp(prefix="drs_s8_stage_")
+    def build(tmp):
+        os.makedirs(tmp, exist_ok=True)
         html = "".join(
             f'<p>x</p><img src="https://cdn.example.com/{i}.png" alt="img {i}">'
             for i in range(5)
@@ -3682,7 +3585,8 @@ def q_s8_assets(spark, sf_dir):
                 {"S1": [["v", 1]]},
                 charts={"S1": [("barChart", "B"), ("pieChart", "P")]},
             ))
-        _publish_cache_dir(tmp, d)
+
+    d = _cached_dir("s8", "", "", (), build)
     return (
         assets_from_dir(spark, d)
         .select(
@@ -3954,9 +3858,6 @@ FROM r"""
 SQL_TA_C4_FILTERS = "WITH " + _SQL_C4_CTES + _SQL_C4_FINAL
 
 
-_BPE_MERGES_MEMO: dict = {}
-
-
 def q_ta_bpe_tokens(spark, sf_dir):
     """Exact BPE token counts per document (Sennrich '16): merges fitted
     deterministically on the md5-ranked sample of THIS corpus (memoized
@@ -3970,10 +3871,9 @@ def q_ta_bpe_tokens(spark, sf_dir):
     )
 
     docs = _docs(spark, sf_dir)
-    if sf_dir not in _BPE_MERGES_MEMO:
-        _BPE_MERGES_MEMO[sf_dir] = fit_bpe_on_sample(
-            docs, n_merges=200, sample=256)
-    return bpe_token_counts(docs, _BPE_MERGES_MEMO[sf_dir])
+    merges = _memo(os.path.join(sf_dir, "documents.parquet"), ("bpe", 200, 256),
+                   lambda: fit_bpe_on_sample(docs, n_merges=200, sample=256))
+    return bpe_token_counts(docs, merges)
 
 
 def q_e2e_curation(spark, sf_dir):
@@ -4271,22 +4171,16 @@ GROUP BY term
 ORDER BY cf DESC, term LIMIT {COMPLETION_K}"""
 
 
-_lm_model_cache: dict[str, tuple] = {}
-
-
 def _lm_fitted(sf_dir: str):
     """DATA-FITTED bigram LM (operators/lm.py): counts from an
-    md5-ranked LM_FIT_N-doc sample, cached per sf_dir so the Spark
+    md5-ranked LM_FIT_N-doc sample, memoized per source so the Spark
     builder and the call-time oracle SQL ship identical tables."""
-    from document_retrieval_system_spark.operators.lm import (
-        fit_bigram_lm,
-        sample_texts,
-    )
+    from document_retrieval_system_spark.operators.lm import fit_bigram_lm
 
-    key = os.path.abspath(sf_dir)
-    if key not in _lm_model_cache:
-        _lm_model_cache[key] = fit_bigram_lm(sample_texts(sf_dir, LM_FIT_N))
-    return _lm_model_cache[key]
+    path = os.path.join(sf_dir, "documents.parquet")
+    return _memo(path, ("lm", LM_FIT_N), lambda: fit_bigram_lm(
+        [x or "" for x in similarity.md5_ranked_table(
+            path, "doc_id", ["text"], "lm", LM_FIT_N).column("text").to_pylist()]))
 
 
 def q_ta_lm_perplexity(spark, sf_dir):
@@ -5308,12 +5202,8 @@ SUBSTRING_PATTERN = "data stream"
 def _ensure_trigram_index(spark, sf_dir: str) -> str:
     from document_retrieval_system_spark.operators import substring as sub
 
-    idx = _entry_cache_dir("tgm", sf_dir, "documents.parquet")
-    if not os.path.exists(idx):
-        tmp = f"{idx}.tmp-{os.getpid()}"
-        sub.build_trigram_index(_docs(spark, sf_dir), tmp)
-        _publish_cache_dir(tmp, idx)
-    return idx
+    return _cached_dir("tgm", sf_dir, "documents.parquet", (),
+                       lambda tmp: sub.build_trigram_index(_docs(spark, sf_dir), tmp))
 
 
 def q_search_substring(spark, sf_dir):

@@ -71,15 +71,6 @@ def _ends_cvc(word: str) -> bool:
     )
 
 
-def _replace_suffix(word: str, suffix: str, repl: str, min_m: int) -> str | None:
-    if not word.endswith(suffix):
-        return None
-    stem = word[: len(word) - len(suffix)]
-    if _measure(stem) > min_m:
-        return stem + repl
-    return word  # suffix matched but condition failed -> stop rule group
-
-
 @lru_cache(maxsize=1 << 17)
 def porter_stem(word: str) -> str:
     """Memoized: web-text vocabulary is Zipfian, so the per-worker cache

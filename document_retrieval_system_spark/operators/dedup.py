@@ -476,18 +476,26 @@ def embedding_neardup_pairs(emb: DataFrame, id_col: str = "vec_id",
     (angle ≈ 25.8°, per-bit agreement ≈ 0.857) is missed with
     probability (1 - 0.857^2)^8 ≈ 2e-5; everything surfaced is then
     exactly verified, so precision is 1.0.
+
+    The dimension is the length of the first non-null vector.  Rows
+    whose vector is null, has another length, or holds a null or NaN
+    element have no cosine and take part in no pair: they are dropped
+    before the signature.
     """
     from document_retrieval_system_spark.operators.similarity import (
         hyperplanes,
     )
 
-    row = emb.select(vec_col).head()
-    if row is None:  # empty input: no pairs (and no dim to derive)
+    vec = F.col(vec_col)
+    row = emb.select(vec_col).where(vec.isNotNull()).head()
+    if row is None:  # no vector: no pairs (and no dim to derive)
         return emb.select(
             F.col(id_col).alias("id_a"), F.col(id_col).alias("id_b"),
             F.lit(0.0).alias("cosine"),
         ).limit(0)
     dim = len(row[0])
+    emb = emb.where(vec.isNotNull() & (F.size(vec) == dim)
+                    & ~F.exists(vec, lambda x: x.isNull() | F.isnan(x)))
     planes = hyperplanes(dim, sig_bits, seed)
 
     # (id, vec, sig, nrm) MATERIALIZED before the band explode: the

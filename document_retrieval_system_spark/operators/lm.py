@@ -12,18 +12,17 @@ pipeline shape: an add-alpha-smoothed bigram model.
 
 Fit/score split mirrors `operators/quality_model` and the IVF centroid
 pattern (`similarity.py`): the model is FITTED driver-side on a
-deterministic md5-ranked sample (pyarrow, no SparkSession, O(sample)
-regardless of corpus size) and shipped to the cluster as two small
-broadcast count tables.  Scoring is then two broadcast hash joins plus
-one per-doc aggregation — no Python in the hot path, no shuffle of
-anything wider than (doc_id, w1, w2), and the count tables are the only
-state (a few thousand rows for the sample sizes used here; a production
-KenLM would swap the tables, not the plan).
+deterministic md5-ranked sample (`similarity.md5_ranked_table`: pyarrow,
+no SparkSession, O(sample) regardless of corpus size) and shipped to the
+cluster as two small broadcast count tables.  Scoring is then two
+broadcast hash joins plus one per-doc aggregation — no Python in the hot
+path, no shuffle of anything wider than (doc_id, w1, w2), and the count
+tables are the only state (a few thousand rows for the sample sizes
+used here; a production KenLM would swap the tables, not the plan).
 """
 
 from __future__ import annotations
 
-import hashlib
 import re
 
 from pyspark.sql import DataFrame
@@ -56,24 +55,6 @@ def fit_bigram_lm(texts: list[str], max_types: int = 20000):
         kept = sorted(bi.items(), key=lambda kv: (-kv[1], kv[0]))[:max_types]
         bi = dict(kept)
     return uni, bi, len(uni)
-
-
-def sample_texts(sf_dir: str, n_fit: int = 16, salt: str = "lm") -> list[str]:
-    """Deterministic md5-ranked document sample read driver-side with
-    pyarrow — the same fit-sample pattern as the IVF centroids and the
-    quality model, so the identical texts (hence identical counts) are
-    available to both the Spark builder and the call-time oracle SQL."""
-    import os
-
-    import pyarrow.parquet as pq
-
-    t = pq.read_table(os.path.join(sf_dir, "documents.parquet"),
-                      columns=["doc_id", "text"])
-    ids = t.column("doc_id").to_pylist()
-    texts = t.column("text").to_pylist()
-    ranked = sorted(range(len(ids)),
-                    key=lambda i: hashlib.md5(f"{ids[i]}{salt}".encode()).hexdigest())
-    return [texts[i] or "" for i in ranked[:n_fit]]
 
 
 def score_bigram_lm(docs: DataFrame, uni: dict[str, int],

@@ -198,6 +198,72 @@ def lsh_index_topk(spark, index_dir: str, query: list[float], k: int = 10,
 # IVF (inverted-file) ANN — the centroid-bucketed scale path
 # ---------------------------------------------------------------------------
 
+def _md5_ranked_sample(emb: DataFrame, seed: int, sample: int,
+                       vec_col: str, id_col: str) -> np.ndarray:
+    """Deterministic sample as float64 matrix: rows ranked by
+    md5(id || seed), the first ``sample`` taken — a bare ``limit()``
+    depends on partition/file order, which repartitioning silently
+    changes.  Cost is one bounded top-k sort (TakeOrderedAndProject).
+    `md5_ranked_table` is the same ranking read driver-side."""
+    rows = (
+        emb.select(
+            F.col(vec_col),
+            F.md5(F.concat(F.col(id_col).cast("string"), F.lit(str(seed)))).alias("_h"),
+        )
+        .orderBy("_h")
+        .limit(sample)
+        .collect()
+    )
+    return np.asarray([r[0] for r in rows], dtype=np.float64)
+
+
+def md5_ranked_table(path: str, id_col: str, columns: list[str],
+                     salt: int | str, n: int | None = None):
+    """Driver-side twin of `_md5_ranked_sample` for a parquet file: the
+    rows read with pyarrow (no SparkSession), ordered by md5(id || salt),
+    the first ``n`` (all when None).  Every data-fitted model of the
+    entry family samples through this, so the Spark builder and the
+    call-time oracle SQL see identical rows."""
+    import hashlib
+
+    import pyarrow.parquet as pq
+
+    t = pq.read_table(path, columns=[id_col, *columns])
+    ids = t.column(id_col).to_pylist()
+    order = sorted(range(len(ids)),
+                   key=lambda i: hashlib.md5(f"{ids[i]}{salt}".encode()).hexdigest())
+    return t.take(order[:n])
+
+
+def _nearest(x: np.ndarray, cents: np.ndarray) -> np.ndarray:
+    """Row index of each sample row's nearest centroid (ties to the lower
+    index — numpy argmin's first-index rule)."""
+    return ((x[:, None, :] - cents[None, :, :]) ** 2).sum(axis=2).argmin(axis=1)
+
+
+def fit_centroids(x: np.ndarray, k: int, iters: int,
+                  rng: np.random.Generator) -> np.ndarray:
+    """The ONE Lloyd k-means fit: ``k`` initial rows drawn by one
+    ``rng.choice``, then a fixed number of float64 assign/update rounds
+    (an empty cell keeps its centroid).  IVF centroids and every PQ
+    subspace codebook — Spark-sampled or pyarrow-sampled — fit here, so
+    the engines that must agree bit-for-bit cannot diverge."""
+    cents = x[rng.choice(len(x), size=min(k, len(x)), replace=False)]
+    for _ in range(iters):
+        assign = _nearest(x, cents)
+        for c in range(len(cents)):
+            m = assign == c
+            if m.any():
+                cents[c] = x[m].mean(axis=0)
+    return cents
+
+
+def ivf_residuals(x: np.ndarray, cents: np.ndarray) -> np.ndarray:
+    """Each sample row minus its nearest IVF centroid (the IVF-PQ fit
+    input)."""
+    return x - cents[_nearest(x, cents)]
+
+
 def ivf_centroids(emb: DataFrame, n_clusters: int = 16, iters: int = 10,
                   seed: int = 7, sample: int = 100_000,
                   vec_col: str = "embedding", id_col: str = "vec_id") -> np.ndarray:
@@ -208,32 +274,10 @@ def ivf_centroids(emb: DataFrame, n_clusters: int = 16, iters: int = 10,
     less) and the resulting centroids ship as literals to the
     assignment/query plans — fitting cost is O(sample), independent of
     corpus size, and the centroids are reproducible bit-for-bit from
-    (data, seed), which is what lets the DuckDB oracle share them.
-
-    The sample itself is a pure function of the data: rows are ranked by
-    md5(id || seed) and the first ``sample`` taken — a bare ``limit()``
-    depends on partition/file order, which repartitioning silently
-    changes.  Cost is one bounded top-k sort (TakeOrderedAndProject)."""
-    rows = (
-        emb.select(
-            F.col(vec_col),
-            F.md5(F.concat(F.col(id_col).cast("string"), F.lit(str(seed)))).alias("_h"),
-        )
-        .orderBy("_h")
-        .limit(sample)
-        .collect()
-    )
-    x = np.asarray([r[0] for r in rows], dtype=np.float64)
-    rng = np.random.default_rng(seed)
-    cents = x[rng.choice(len(x), size=min(n_clusters, len(x)), replace=False)]
-    for _ in range(iters):
-        d = ((x[:, None, :] - cents[None, :, :]) ** 2).sum(axis=2)
-        assign = d.argmin(axis=1)
-        for c in range(len(cents)):
-            m = assign == c
-            if m.any():
-                cents[c] = x[m].mean(axis=0)
-    return cents
+    (data, seed), which is what lets the DuckDB oracle share them.  The
+    sample is a pure function of the data (`_md5_ranked_sample`)."""
+    x = _md5_ranked_sample(emb, seed, sample, vec_col, id_col)
+    return fit_centroids(x, n_clusters, iters, np.random.default_rng(seed))
 
 
 def _sq_dist_expr(vec_col, center_col):
@@ -503,44 +547,18 @@ def lsh_topk(emb: DataFrame, query: list[float], k: int = 10, sig_bits: int = 16
 
 def fit_subspace_books(x: np.ndarray, m: int, ksub: int, iters: int,
                        rng: np.random.Generator) -> np.ndarray:
-    """The ONE per-subspace Lloyd fit: (n, d) float64 sample -> (m, ksub,
-    d/m) codebooks.  Every PQ fitter — Spark-sampled or pyarrow-sampled,
-    raw or residual — calls this, so the init-draw stream (one `choice`
-    per subspace, in order) and the fixed-iteration update rule can
-    never diverge between the engines that must agree bit-for-bit."""
+    """Per-subspace `fit_centroids`: (n, d) float64 sample -> (m, ksub,
+    d/m) codebooks.  Every PQ fitter — raw or residual — calls this, so
+    the init-draw stream (one `choice` per subspace, in order) is shared
+    by all of them."""
     d = x.shape[1]
     if d % m:
         raise ValueError(f"dim {d} not divisible by m={m}")
     dsub = d // m
     books = np.empty((m, ksub, dsub))
     for j in range(m):
-        xj = x[:, j * dsub : (j + 1) * dsub]
-        cents = xj[rng.choice(len(xj), size=min(ksub, len(xj)), replace=False)]
-        for _ in range(iters):
-            dist = ((xj[:, None, :] - cents[None, :, :]) ** 2).sum(axis=2)
-            assign = dist.argmin(axis=1)
-            for c in range(len(cents)):
-                mask = assign == c
-                if mask.any():
-                    cents[c] = xj[mask].mean(axis=0)
-        books[j] = cents
+        books[j] = fit_centroids(x[:, j * dsub : (j + 1) * dsub], ksub, iters, rng)
     return books
-
-
-def _md5_ranked_sample(emb: DataFrame, seed: int, sample: int,
-                       vec_col: str, id_col: str) -> np.ndarray:
-    """Deterministic sample as float64 matrix: rows ranked by
-    md5(id || seed) — never file/partition order (see ivf_centroids)."""
-    rows = (
-        emb.select(
-            F.col(vec_col),
-            F.md5(F.concat(F.col(id_col).cast("string"), F.lit(str(seed)))).alias("_h"),
-        )
-        .orderBy("_h")
-        .limit(sample)
-        .collect()
-    )
-    return np.asarray([r[0] for r in rows], dtype=np.float64)
 
 
 def pq_codebooks(emb: DataFrame, m: int = 8, ksub: int = 16, iters: int = 10,
@@ -658,9 +676,8 @@ def ivfpq_residual_books(emb: DataFrame, cents: np.ndarray, m: int = 8,
     same determinism contract as pq_codebooks/ivf_centroids, same fit
     core (`fit_subspace_books`)."""
     x = _md5_ranked_sample(emb, seed, sample, vec_col, id_col)
-    assign = ((x[:, None, :] - cents[None, :, :]) ** 2).sum(axis=2).argmin(axis=1)
-    resid = x - cents[assign]
-    return fit_subspace_books(resid, m, ksub, iters, np.random.default_rng(seed))
+    return fit_subspace_books(ivf_residuals(x, cents), m, ksub, iters,
+                              np.random.default_rng(seed))
 
 
 def build_ivfpq_index(emb: DataFrame, index_dir: str, cents: np.ndarray,

@@ -67,12 +67,6 @@ def word_ngrams(tokens: Column, n: int = 3) -> Column:
     return _sliding_concat(tokens, n, " ")
 
 
-def char_shingles(text_col: Column, k: int = 8) -> Column:
-    """Character k-gram shingles over lowercased text (distinct)."""
-    chars = F.split(F.lower(text_col), "")
-    return F.array_distinct(_sliding_concat(chars, k, ""))
-
-
 def lang_id(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """n-gram-heuristic language ID: CJK presence -> zh; English marker
     stopword hits -> en; else other."""

@@ -19,26 +19,6 @@ def formatted_plan(df: DataFrame) -> str:
     )
 
 
-def scan_nodes(df: DataFrame) -> list[str]:
-    """The '(N) Scan parquet' sections of the formatted plan."""
-    plan = formatted_plan(df)
-    chunks = []
-    current: list[str] = []
-    for line in plan.splitlines():
-        if "Scan parquet" in line:
-            if current:
-                chunks.append("\n".join(current))
-            current = [line]
-        elif current and (line.startswith("Output") or ":" in line or line.strip()):
-            current.append(line)
-        elif current:
-            chunks.append("\n".join(current))
-            current = []
-    if current:
-        chunks.append("\n".join(current))
-    return chunks
-
-
 def pushed_filters(df: DataFrame) -> str:
     plan = formatted_plan(df)
     return "\n".join(l for l in plan.splitlines() if "PushedFilters" in l)

@@ -266,7 +266,7 @@ def test_quality_model_separates_and_is_map_only(spark):
     assert "SinglePartition" not in plan
 
     w1, b1 = eq._qm_fitted(sf)
-    eq._qm_model_cache.clear()
+    eq._MEMO.clear()
     w2, b2 = eq._qm_fitted(sf)
     assert w1 == w2 and b1 == b2
     # quantized ints are genuinely informative, not all-zero

@@ -180,6 +180,29 @@ def test_embedding_neardup_empty_input(spark):
     assert out.count() == 0
 
 
+def test_embedding_neardup_drops_null_ragged_and_nan_vectors(spark):
+    """A null, a short and a NaN vector have no cosine: the LSH path
+    drops those rows (the null one comes first, so the dimension must
+    come from the first non-null vector) and finds exactly the pairs the
+    exact path finds over the clean rows."""
+    rng = np.random.default_rng(5)
+    centers = rng.standard_normal((3, 16))
+    clean = [
+        (4 * c + i, (centers[c] + 0.01 * rng.standard_normal(16)).astype(np.float32).tolist())
+        for c in range(3) for i in range(4)
+    ]
+    bad = [(100, None), (101, [0.5] * 8), (102, [float("nan")] + [0.25] * 15)]
+    schema = "vec_id long, embedding array<float>"
+    dirty = spark.createDataFrame(bad[:1] + clean + bad[1:], schema).coalesce(1)
+    exact = {
+        tuple(r) for r in dedup.embedding_neardup_pairs_exact(
+            spark.createDataFrame(clean, schema), threshold=0.95).collect()
+    }
+    got = {tuple(r) for r in dedup.embedding_neardup_pairs(dirty, threshold=0.95).collect()}
+    assert len(exact) == 18  # 3 clusters x C(4, 2)
+    assert got == exact
+
+
 def test_ann_index_scan_reads_subset_of_buckets(spark, clustered_emb, tmp_path):
     """File-level evidence: rows surviving the scan come from a strict
     subset of the bucket partitions on disk."""
