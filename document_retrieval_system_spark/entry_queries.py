@@ -254,29 +254,11 @@ def _tfs_df(docs: DataFrame) -> DataFrame:
     )
 
 
-def _corpus_nd(docs: DataFrame) -> DataFrame:
-    """Corpus constants (n docs with tokens, avgdl) as ONE conditional
-    aggregation.  The former ``filter(size(toks) > 0).agg(...)`` pushed
-    the whole tokenizer expression below the `_spread` repartition (a
-    deterministic filter slides under an exchange), so the tokenize ran
-    on the source's single scan partition.  ``sum(when)/sum(when)``
-    needs no filter and keeps exact-long inputs: identical bits to
-    ``count(*)`` / ``avg(int)`` (Spark's Average is sum.toDouble /
-    count.toDouble over the same exact longs)."""
-    dl = F.size(simple_tokens(F.col("text")))
-    return docs.select(dl.alias("_dl")).agg(
-        F.sum(F.when(F.col("_dl") > 0, 1).otherwise(0)).alias("n"),
-        (
-            F.sum(F.when(F.col("_dl") > 0, F.col("_dl"))).cast("double")
-            / F.sum(F.when(F.col("_dl") > 0, 1)).cast("double")
-        ).alias("avgdl"),
-    )
-
-
 def _corpus_n(docs: DataFrame) -> int:
-    """Count of docs with >= 1 token, without the filter-pushdown
-    single-core tokenize of ``filter(size(toks) > 0).count()`` — see
-    `_corpus_nd`."""
+    """Count of docs with >= 1 token.  ``sum(when)`` needs no filter: a
+    deterministic ``filter(size(toks) > 0)`` slides below the `_spread`
+    repartition and would run the tokenizer on the source's single scan
+    partition."""
     dl = F.size(simple_tokens(F.col("text")))
     return int(
         docs.select(dl.alias("_dl"))
@@ -286,61 +268,81 @@ def _corpus_n(docs: DataFrame) -> int:
     )
 
 
-def _bm25_scores(docs: DataFrame, terms_df: DataFrame | None = None,
-                 weighted: bool = False,
-                 postings: DataFrame | None = None) -> DataFrame:
-    """Unrounded BM25 scores over the documents table — for BM25_TERMS,
-    or for a (small, broadcastable) `terms_df` when the query term set
-    is computed (e.g. fuzzy expansion).  ``weighted=True`` scales each
-    term's contribution by `terms_df`'s ``weight`` column (RM3
-    expansion) — explicit opt-in, never sniffed from the schema.
-    ``postings`` overrides the (doc_id, term, tf, dl) rows actually
-    scored (e.g. a statically pruned tier) while df/avgdl stay those
-    of the FULL corpus, so surviving postings score identically."""
-    if weighted and (terms_df is None or "weight" not in terms_df.columns):
-        raise ValueError("weighted scoring needs a terms_df with a "
-                         "'weight' column")
-    # r6 shape (guide §2.3 — shuffle fewer bytes): the query-term filter
-    # runs BEFORE the (doc, term) tf aggregation, so only postings of
-    # query terms ever enter a shuffle; df for those terms falls out of
-    # the matched tf rows themselves (row count per term == docs
-    # containing the term — identical to the full-corpus groupBy
-    # restricted to the matched terms).  The former full-vocabulary
-    # tfs + stats exchanges are gone; the corpus constants remain one
-    # map-only tokenize pass.
-    pos = _pos_df(docs)
-    if terms_df is None:
-        fpos = pos.filter(F.col("term").isin(BM25_TERMS))
-    else:
-        fpos = pos.join(
-            F.broadcast(terms_df.select("term").distinct()), "term",
-            "left_semi",
-        )
-    tfs = (
-        fpos.groupBy("doc_id", "term")
-        .agg(F.count("*").alias("tf"), F.max("dl").alias("dl"))
+# ---------------------------------------------------------------------------
+# the entry index: documents.parquet as a compressed sharded index
+# ---------------------------------------------------------------------------
+
+_PAGE_URL = "doc://"
+
+
+def _docs_as_pages(docs):
+    """documents-table rows -> the synthetic pages schema the index
+    builders ingest (url = doc://<id>, text-only, English)."""
+    return docs.select(
+        F.concat(F.lit(_PAGE_URL), F.col("doc_id").cast("string")).alias("url"),
+        F.to_timestamp(F.lit("2025-01-01 00:00:00")).alias("warc_ts"),
+        F.lit(None).cast("binary").alias("html"),
+        F.col("text"),
+        F.lit("en").alias("lang"),
     )
-    stats = tfs.groupBy("term").agg(F.count("*").alias("df"))
-    if postings is not None:
-        tfs = postings
-    corpus = _corpus_nd(docs)
-    matched = (
-        tfs.filter(F.col("term").isin(BM25_TERMS)) if terms_df is None
-        else tfs.join(F.broadcast(terms_df), "term")
+
+
+def _page_doc_id():
+    """The bigint doc_id of an index page, decoded from the url that
+    `_docs_as_pages` wrote."""
+    return F.expr(f"cast(substring(url, {len(_PAGE_URL) + 1}) as bigint)")
+
+
+def _ensure_entry_index(spark, sf_dir: str):
+    """Build (once per documents.parquet content) a compressed sharded
+    index using the SQL-expressible analyzer, so every BM25 entry scores
+    from it and stays checkable against the DuckDB BM25 oracle."""
+    from document_retrieval_system_spark.operators.index_build import (
+        IndexReader,
+        build_index,
     )
-    return (
-        matched
-        .join(stats, "term")
-        .crossJoin(F.broadcast(corpus))
-        .withColumn(
-            "part",
-            F.log((F.col("n") - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1)
-            * F.col("tf")
-            / (F.col("tf") + K1 * (1 - B + B * F.col("dl") / F.col("avgdl")))
-            * (F.col("weight") if weighted else F.lit(1.0)),
-        )
-        .groupBy("doc_id")
-        .agg(F.sum("part").alias("score"))
+
+    return IndexReader(spark, _cached_dir(
+        "index", sf_dir, "documents.parquet", (),
+        lambda tmp: build_index(spark, _docs_as_pages(_docs(spark, sf_dir)), tmp,
+                                n_shards=8, analyzer=simple_process_text)))
+
+
+def _bm25_all(reader, terms: list[str]) -> DataFrame:
+    """(doc_id, score): the unrounded BM25 score of every indexed doc
+    holding any of the distinct ``terms``, from the index's term stats
+    and postings.  Block-max WAND with k above the corpus size never
+    fills its heap, so it prunes nothing: this is the exhaustive set."""
+    from document_retrieval_system_spark.operators.wand import bm25_wand_search
+
+    res = bm25_wand_search(reader, " ".join(terms), "en", 10**6, 0.0,
+                           analyzer=simple_process_text)
+    return res.select(_page_doc_id().alias("doc_id"), "score")
+
+
+def _bm25_weighted(reader, qweights: dict[str, float],
+                   prune=None) -> DataFrame:
+    """(doc_id, score): BM25 with each term's idf scaled by its query
+    weight, summed by the relational core `search.bm25_posting_sum`
+    over the terms' decoded postings.  ``prune`` maps those postings
+    (term, doc_id, tf, ...) to the ones kept; idf and avgdl stay those
+    of the full index, so a kept posting scores as before."""
+    from document_retrieval_system_spark.operators.index_build import flat_postings
+    from document_retrieval_system_spark.operators.search import (
+        bm25_posting_sum,
+        bm25_weights,
+    )
+
+    corpus, dfs = reader.query_stats(list(qweights))
+    idf = bm25_weights(corpus["total_docs"], dfs, list(qweights))
+    ids = reader.docs().select("shard", "local_no", _page_doc_id().alias("doc_id"))
+    postings = flat_postings(
+        reader.postings().filter(F.col("term").isin(sorted(idf)))
+    ).join(ids, ["shard", "local_no"])
+    return bm25_posting_sum(
+        postings if prune is None else prune(postings),
+        {t: w * qweights[t] for t, w in idf.items()},
+        corpus["avg_doc_length"], by=["doc_id"],
     )
 
 
@@ -403,7 +405,7 @@ FROM toks WHERE len(toks) > 0"""
 def q_r3_bm25_topk(spark, sf_dir):
     """R3 (search_engine.py:427-482): BM25 top-20, k1=1.2 b=0.75."""
     return (
-        _bm25_scores(_docs(spark, sf_dir))
+        _bm25_all(_ensure_entry_index(spark, sf_dir), BM25_TERMS)
         .select("doc_id", F.round("score", 6).alias("score"))
         .orderBy(F.desc("score"), F.asc("doc_id"))
         .limit(20)
@@ -592,8 +594,9 @@ JOIN (SELECT doc_id, pos FROM pos WHERE term = 'scan') b
 
 def q_u2_boost_rescore(spark, sf_dir):
     """U2 (rule_engine.py:174-192): per-word boost multipliers on BM25."""
-    docs = _docs(spark, sf_dir)
-    scored = _bm25_scores(docs).join(docs.select("doc_id", "text"), "doc_id")
+    # raw scan: only the match set's text is read, after the join
+    scored = _bm25_all(_ensure_entry_index(spark, sf_dir), BM25_TERMS).join(
+        _docs_raw(spark, sf_dir).select("doc_id", "text"), "doc_id")
     content = F.lower(F.coalesce(F.col("text"), F.lit("")))
     boosted = (
         F.col("score")
@@ -1641,7 +1644,7 @@ def q_b8_prefix_search(spark, sf_dir):
     matched = prefix_search(reader, "co")
     docs = reader.docs().select("shard", "local_no", "url")
     return matched.join(docs, ["shard", "local_no"]).select(
-        F.expr("cast(substring(url, 7) as bigint)").alias("doc_id")
+        _page_doc_id().alias("doc_id")
     )
 
 
@@ -1658,15 +1661,14 @@ def q_fuzzy_search(spark, sf_dir):
     """Typo-tolerant search end-to-end: each misspelled query term is
     expanded to its best dictionary match (min edit distance, then
     lexicographic — deterministic) via the deletion-variant join, and
-    the corrected term set feeds the standard BM25 ranking.  The whole
-    correction→retrieval pipeline is one lazy plan; the expansion side
-    stays broadcast-sized."""
+    the corrected term set feeds the standard BM25 ranking.  The
+    dictionary is the entry index's term stats; the few corrected terms
+    are collected and scored from the same index."""
     from pyspark.sql import Window
 
-    docs = _docs(spark, sf_dir)
-    # vocabulary straight off the exploded tokens: identical distinct
-    # set, without the per-(doc, term) aggregation the tfs shape pays
-    dictionary = _pos_df(docs).select("term").distinct()
+    reader = _ensure_entry_index(spark, sf_dir)
+    # the index vocabulary is the corpus's distinct token set
+    dictionary = reader.term_stats().select("term")
     queries = spark.createDataFrame(
         [(t,) for t in FUZZY_SEARCH_QUERY], "query_term string"
     )
@@ -1681,7 +1683,7 @@ def q_fuzzy_search(spark, sf_dir):
         .distinct()
     )
     return (
-        _bm25_scores(docs, terms_df=best)
+        _bm25_all(reader, sorted(r["term"] for r in best.collect()))
         .select("doc_id", F.round("score", 6).alias("score"))
         .orderBy(F.desc("score"), F.asc("doc_id"))
         .limit(20)
@@ -2356,7 +2358,7 @@ def q_search_eval(spark, sf_dir):
         analyzer=simple_process_text,
     ).select(
         "qid",
-        F.expr("cast(substring(url, 7) as bigint)").alias("doc_id"),
+        _page_doc_id().alias("doc_id"),
         F.round("score", 6).alias("score"),
     )
     q = spark.createDataFrame(
@@ -3170,21 +3172,6 @@ def _sql_ta_quality_model() -> str:
 # Spark-only entries (no SQL-expressible oracle -> driver rows-only check)
 # ---------------------------------------------------------------------------
 
-def _ensure_entry_index(spark, sf_dir: str):
-    """Build (once per documents.parquet content) a compressed sharded
-    index using the SQL-expressible analyzer, so the WAND query below is
-    checkable against the DuckDB BM25 oracle."""
-    from document_retrieval_system_spark.operators.index_build import (
-        IndexReader,
-        build_index,
-    )
-
-    return IndexReader(spark, _cached_dir(
-        "index", sf_dir, "documents.parquet", (),
-        lambda tmp: build_index(spark, _docs_as_pages(_docs(spark, sf_dir)), tmp,
-                                n_shards=8, analyzer=simple_process_text)))
-
-
 def _ensure_merged_index(spark, sf_dir: str):
     """Build (once per documents.parquet content) TWO overlapping
     half-corpus indexes and their segment merge — the fixture for the
@@ -3200,7 +3187,7 @@ def _ensure_merged_index(spark, sf_dir: str):
 
     def build(tmp):
         pages = _docs_as_pages(_docs(spark, sf_dir)).withColumn(
-            "_id", F.expr("cast(substring(url, 7) as bigint)"))
+            "_id", _page_doc_id())
         overlap = F.col("_id") % 7 == 0
         segs = [os.path.join(tmp, f"seg{i}") for i in (0, 1)]
         for i, half in enumerate(
@@ -3217,18 +3204,6 @@ def _ensure_merged_index(spark, sf_dir: str):
 
     idx = _cached_dir("mergedidx", sf_dir, "documents.parquet", (), build)
     return IndexReader(spark, os.path.join(idx, "merged"))
-
-
-def _docs_as_pages(docs):
-    """documents-table rows -> the synthetic pages schema the index
-    builders ingest (url = doc://<id>, text-only, English)."""
-    return docs.select(
-        F.concat(F.lit("doc://"), F.col("doc_id").cast("string")).alias("url"),
-        F.to_timestamp(F.lit("2025-01-01 00:00:00")).alias("warc_ts"),
-        F.lit(None).cast("binary").alias("html"),
-        F.col("text"),
-        F.lit("en").alias("lang"),
-    )
 
 
 def q_i10_index_fsck(spark, sf_dir):
@@ -3256,17 +3231,8 @@ def q_i9_index_merge(spark, sf_dir):
     half-corpus indexes merged into one, then WAND-searched.  The oracle
     never sees a merge — it runs plain BM25 over the union corpus — so a
     hash match proves supersede + ordinal remap + re-blocking end-to-end."""
-    from document_retrieval_system_spark.operators.wand import bm25_wand_search
-
-    reader = _ensure_merged_index(spark, sf_dir)
-    res = bm25_wand_search(
-        reader, " ".join(BM25_TERMS), "en", 10**6, 0.0,
-        analyzer=simple_process_text,
-    )
-    return res.select(
-        F.expr("cast(substring(url, 7) as bigint)").alias("doc_id"),
-        F.round("score", 6).alias("score"),
-    )
+    return _bm25_all(_ensure_merged_index(spark, sf_dir), BM25_TERMS).select(
+        "doc_id", F.round("score", 6).alias("score"))
 
 
 def _ensure_ann_index(spark, sf_dir: str) -> str:
@@ -3282,19 +3248,11 @@ def _ensure_ann_index(spark, sf_dir: str) -> str:
 
 def q_r3_bm25_wand(spark, sf_dir):
     """R3 pruned path: block-max WAND over a real compressed index built
-    from the documents table — must hash-match the DuckDB BM25 SQL."""
-    from document_retrieval_system_spark.operators.wand import bm25_wand_search
-
-    reader = _ensure_entry_index(spark, sf_dir)
-    # k larger than the corpus: no top-k boundary, so md5-vs-bigint
-    # tiebreak order cannot change the (order-insensitive) result set.
-    res = bm25_wand_search(
-        reader, " ".join(BM25_TERMS), "en", 10**6, 0.0, analyzer=simple_process_text
-    )
-    # url is "doc://<doc_id>"; map back to the bigint doc_id for comparison
-    return res.select(
-        F.expr("cast(substring(url, 7) as bigint)").alias("doc_id"),
-        F.round("score", 6).alias("score"),
+    from the documents table — must hash-match the DuckDB BM25 SQL.
+    k is larger than the corpus (`_bm25_all`): no top-k boundary, so
+    md5-vs-bigint tiebreak order cannot change the result set."""
+    return _bm25_all(_ensure_entry_index(spark, sf_dir), BM25_TERMS).select(
+        "doc_id", F.round("score", 6).alias("score"),
     ).orderBy(F.desc("score"), F.asc("doc_id"))
 
 
@@ -3321,7 +3279,7 @@ def q_r3_bm25_batch(spark, sf_dir):
     )
     return res.select(
         "qid",
-        F.expr("cast(substring(url, 7) as bigint)").alias("doc_id"),
+        _page_doc_id().alias("doc_id"),
         F.round("score", 6).alias("score"),
     ).orderBy("qid", F.desc("score"), F.asc("doc_id"))
 
@@ -3373,12 +3331,8 @@ def q_e2e_search_pipeline(spark, sf_dir):
         rule_content_length,
         rule_keyword_density,
     )
-    from document_retrieval_system_spark.operators.wand import bm25_wand_search
 
-    reader = _ensure_entry_index(spark, sf_dir)
-    res = bm25_wand_search(
-        reader, E2E_QUERY, "en", 10**6, 0.0, analyzer=simple_process_text
-    ).select(F.expr("cast(substring(url, 7) as bigint)").alias("doc_id"), "score")
+    res = _bm25_all(_ensure_entry_index(spark, sf_dir), E2E_QUERY.split())
     # raw scan: the rules run only on the WAND match set after the join,
     # so the spread exchange would move all text for nothing
     docs = _docs_raw(spark, sf_dir).select("doc_id", "text", "source")
@@ -3462,7 +3416,7 @@ def q_b5_boolean_rpn(spark, sf_dir):
     docs = reader.docs().select("shard", "local_no", "url")
     return (
         hits.join(docs, ["shard", "local_no"])
-        .select(F.expr("cast(substring(url, 7) as bigint)").alias("doc_id"))
+        .select(_page_doc_id().alias("doc_id"))
         .orderBy("doc_id")
     )
 
@@ -3500,12 +3454,11 @@ def q_t8_highlights(spark, sf_dir):
     """T8 snippets over the BM25 top-k (reference highlight algorithm)."""
     from document_retrieval_system_spark.operators.highlight import make_highlights
 
-    docs = _docs(spark, sf_dir)
     top = (
-        _bm25_scores(docs)
+        _bm25_all(_ensure_entry_index(spark, sf_dir), BM25_TERMS)
         .orderBy(F.desc("score"), F.asc("doc_id"))
         .limit(10)
-        .join(docs.select("doc_id", "text"), "doc_id")
+        .join(_docs_raw(spark, sf_dir).select("doc_id", "text"), "doc_id")
     )
     import pandas as pd
     from pyspark.sql.types import ArrayType, StringType
@@ -3861,19 +3814,20 @@ SQL_TA_C4_FILTERS = "WITH " + _SQL_C4_CTES + _SQL_C4_FINAL
 def q_ta_bpe_tokens(spark, sf_dir):
     """Exact BPE token counts per document (Sennrich '16): merges fitted
     deterministically on the md5-ranked sample of THIS corpus (memoized
-    per sf_dir), encoding via the Arrow-batched greedy-merge UDF with a
+    per source), encoding via the Arrow-batched greedy-merge UDF with a
     per-executor word cache.  rows-only: a greedy iterative tokenizer is
     not SQL-expressible; the pure-Python twin is pytest-pinned
     (`tests/test_bpe.py` proves Spark counts == reference encoder)."""
     from document_retrieval_system_spark.functions.bpe import (
         bpe_token_counts,
-        fit_bpe_on_sample,
+        train_bpe,
     )
 
-    docs = _docs(spark, sf_dir)
-    merges = _memo(os.path.join(sf_dir, "documents.parquet"), ("bpe", 200, 256),
-                   lambda: fit_bpe_on_sample(docs, n_merges=200, sample=256))
-    return bpe_token_counts(docs, merges)
+    path = os.path.join(sf_dir, "documents.parquet")
+    merges = _memo(path, ("bpe", 200, 256), lambda: train_bpe(
+        similarity.md5_ranked_table(path, "doc_id", ["text"], "", 256)
+        .column("text").to_pylist(), n_merges=200))
+    return bpe_token_counts(_docs(spark, sf_dir), merges)
 
 
 def q_e2e_curation(spark, sf_dir):
@@ -3998,11 +3952,12 @@ def q_search_prf(spark, sf_dir):
     )
 
     docs = _docs(spark, sf_dir)
+    reader = _ensure_entry_index(spark, sf_dir)
     # the k-row feedback list is materialized once: it feeds both the
     # harvest semi-join and rm3's weight join, and each reference would
     # otherwise re-run the whole first-pass scoring
     feedback = (
-        _bm25_scores(docs)
+        _bm25_all(reader, BM25_TERMS)
         .select("doc_id", F.round("score", 6).alias("w"))
         .orderBy(F.desc("w"), F.asc("doc_id"))
         .limit(PRF_K_DOCS)
@@ -4020,8 +3975,9 @@ def q_search_prf(spark, sf_dir):
         tfs_fb, feedback, BM25_TERMS,
         m_terms=PRF_M_TERMS, beta=PRF_BETA,
     )
+    qweights = {r["term"]: r["weight"] for r in terms.collect()}
     return (
-        _bm25_scores(docs, terms, weighted=True)
+        _bm25_weighted(reader, qweights)
         .select("doc_id", F.round("score", 6).alias("score"))
         .orderBy(F.desc("score"), F.asc("doc_id"))
         .limit(20)
@@ -4060,20 +4016,25 @@ ORDER BY score DESC, doc_id LIMIT 20"""
 def q_mlt_search(spark, sf_dir):
     """More-like-this: document MLT_DOC's top-8 tf x idf terms become
     the BM25 query (operators/mlt.py); retrieval is the ordinary scorer
-    with the source doc excluded.  The term extraction is a tiny
-    broadcast-bound plan — the corpus side is untouched BM25."""
-    from document_retrieval_system_spark.operators.mlt import doc_top_terms
+    with the source doc excluded.  Only the source doc is tokenized,
+    driver-side; df and n come from one index stats lookup, and
+    `mlt.doc_top_terms` ranks its terms (tf x idf desc, term asc)."""
+    from collections import Counter
 
-    docs = _docs(spark, sf_dir)
-    # (r6 note: a src-doc-pushed-scan + semi-joined-df variant was tried
-    # and reverted — its extra broadcast/distinct jobs cost more than
-    # the corpus-wide tfs it avoided, at sf0.1 and sf1.0 alike)
-    tfs = _tfs_df(docs)
-    stats = tfs.groupBy("term").agg(F.count("*").alias("df"))
-    corpus = _corpus_nd(docs)
-    terms = doc_top_terms(tfs, stats, corpus, MLT_DOC, MLT_M)
+    import pyarrow.parquet as pq
+
+    from document_retrieval_system_spark.operators.mlt import doc_top_terms
+    from document_retrieval_system_spark.operators.search import bm25_weights
+
+    reader = _ensure_entry_index(spark, sf_dir)
+    src = pq.read_table(os.path.join(sf_dir, "documents.parquet"), columns=["text"],
+                        filters=[("doc_id", "=", MLT_DOC)])
+    tf = Counter(t for x in src.column("text").to_pylist() for t in simple_process_text(x))
+    corpus, dfs = reader.query_stats(list(tf))
+    idf = bm25_weights(corpus["total_docs"], dfs, list(tf))
+    terms = doc_top_terms(tf, idf, MLT_M)
     return (
-        _bm25_scores(docs, terms_df=terms)
+        _bm25_all(reader, terms)
         .filter(F.col("doc_id") != MLT_DOC)
         .select("doc_id", F.round("score", 6).alias("score"))
         .orderBy(F.desc("score"), F.asc("doc_id"))
@@ -4240,9 +4201,8 @@ def q_r3_bm25_proximity(spark, sf_dir):
         proximity_boosted,
     )
 
-    docs = _docs(spark, sf_dir)
-    base = _bm25_scores(docs)
-    gaps = min_pair_gap(_pos_df(docs), BM25_TERMS)
+    base = _bm25_all(_ensure_entry_index(spark, sf_dir), BM25_TERMS)
+    gaps = min_pair_gap(_pos_df(_docs(spark, sf_dir)), BM25_TERMS)
     out = proximity_boosted(base, gaps, PROX_W)
     return (
         out.select("doc_id", F.round("score", 6).alias("score"), "min_gap")
@@ -4273,9 +4233,8 @@ def q_search_facets(spark, sf_dir):
     """Faceted result counts: the BM25 match set rolled up per
     (lang, source) facet — the result-page sidebar every search UI
     ships; one groupBy over the match set joined to doc metadata."""
-    docs = _docs(spark, sf_dir)
-    base = _bm25_scores(docs)
-    meta = docs.select("doc_id", "lang", "source")
+    base = _bm25_all(_ensure_entry_index(spark, sf_dir), BM25_TERMS)
+    meta = _docs_raw(spark, sf_dir).select("doc_id", "lang", "source")
     return (
         base.join(meta, "doc_id")
         .groupBy("lang", "source")
@@ -4365,11 +4324,10 @@ def q_search_diversified(spark, sf_dir):
         diversify_topk,
     )
 
-    docs = _docs(spark, sf_dir)
     scored = (
-        _bm25_scores(docs)
+        _bm25_all(_ensure_entry_index(spark, sf_dir), BM25_TERMS)
         .select("doc_id", F.round("score", 6).alias("score"))
-        .join(docs.select("doc_id", "source"), "doc_id")
+        .join(_docs_raw(spark, sf_dir).select("doc_id", "source"), "doc_id")
     )
     return diversify_topk(
         scored, "source", DIVERSIFY_PER_GROUP, DIVERSIFY_K
@@ -4438,7 +4396,7 @@ def q_search_page2(spark, sf_dir):
     (operators/fusion.search_after)."""
     from document_retrieval_system_spark.operators.fusion import search_after
 
-    base = _bm25_scores(_docs(spark, sf_dir)).select(
+    base = _bm25_all(_ensure_entry_index(spark, sf_dir), BM25_TERMS).select(
         "doc_id", F.round("score", 6).alias("score")
     )
     # cursor = the rank-PAGE_CURSOR_RANK row = the LAST row of the
@@ -4697,9 +4655,8 @@ def q_search_static_rank(spark, sf_dir):
     )
     from document_retrieval_system_spark.operators.linkgraph import pagerank
 
-    docs = _docs(spark, sf_dir)
     # the graph legs are id-only: derive them from the raw scan (no
-    # spread exchange/barrier — see _docs_raw), scoring keeps the spread
+    # spread exchange/barrier — see _docs_raw)
     nodes = _docs_raw(spark, sf_dir).select(F.col("doc_id").alias("node"))
     n = nodes.count()
     pr = pagerank(_link_edges(nodes, n), nodes,
@@ -4709,7 +4666,8 @@ def q_search_static_rank(spark, sf_dir):
         (F.col("pr") * F.lit(float(n))).alias("prior"),
     )
     blended = static_rank_blend(
-        _bm25_scores(docs), prior, weight=_STATIC_RANK_W)
+        _bm25_all(_ensure_entry_index(spark, sf_dir), BM25_TERMS), prior,
+        weight=_STATIC_RANK_W)
     return (
         blended.select("doc_id", F.round("score", 6).alias("score"))
         .orderBy(F.desc("score"), F.asc("doc_id"))
@@ -4748,11 +4706,14 @@ def q_i11_impact_prune(spark, sf_dir):
         impact_prune_tfs,
     )
 
-    docs = _docs(spark, sf_dir)
-    pruned = impact_prune_tfs(_tfs_df(docs), keep_frac=PRUNE_KEEP_FRAC,
-                              keep_min=PRUNE_KEEP_MIN)
+    # pruning ranks each term's postings on their own, so pruning only
+    # the query terms' postings keeps the same survivors
     return (
-        _bm25_scores(docs, postings=pruned)
+        _bm25_weighted(
+            _ensure_entry_index(spark, sf_dir), dict.fromkeys(BM25_TERMS, 1.0),
+            prune=lambda p: impact_prune_tfs(
+                p, keep_frac=PRUNE_KEEP_FRAC, keep_min=PRUNE_KEEP_MIN),
+        )
         .select("doc_id", F.round("score", 6).alias("score"))
         .orderBy(F.desc("score"), F.asc("doc_id"))
         .limit(20)

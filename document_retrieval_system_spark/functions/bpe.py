@@ -4,7 +4,7 @@ deterministic merge training on a sample, memoized greedy encoding, and
 an Arrow-batched Spark column for per-document token counts.
 
 Scale shape: training runs driver-side on a bounded, deterministically
-chosen sample (the md5-ranked-sample pattern used for ANN centroid
+chosen sample (the caller's md5-ranked sample, as for the ANN centroid
 fits) and the learned merge ranks ship to executors as one broadcast;
 encoding is a Pandas UDF — genuinely Python-tier work (per-word greedy
 merge loop), so the Arrow batch path is the right hot path, with a
@@ -104,22 +104,6 @@ def encode(text: str, ranks: dict[tuple[str, str], int],
         if w:
             out.extend(encode_word(w, ranks, cache))
     return out
-
-
-def fit_bpe_on_sample(df, n_merges: int = 200, sample: int = 512,
-                      text_col: str = "text",
-                      id_col: str = "doc_id") -> list[tuple[str, str]]:
-    """Deterministic sample fit: the ``sample`` docs with the smallest
-    md5(id) (order-free, partitioning-free — the same rule that picks
-    ANN centroid fit samples) train the merges driver-side."""
-    from pyspark.sql import functions as F
-
-    rows = (
-        df.select(F.col(text_col),
-                  F.md5(F.col(id_col).cast("string")).alias("_r"))
-        .orderBy("_r").limit(sample).collect()
-    )
-    return train_bpe((r[0] or "" for r in rows), n_merges)
 
 
 def bpe_token_counts(df, merges: list[tuple[str, str]],

@@ -9,46 +9,24 @@ query string); this operator is the standard IR extension that makes
 "find documents similar to this one" a first-class query type over the
 same index and scorer.
 
-Scale shape: the source document's term list is O(|doc|) rows reduced to
-the top-m — a driver-free computation whose result is a tiny one-column
-DataFrame, broadcast into the BM25 scorer exactly like a typed query's
-term set.  Nothing about the corpus side changes: the retrieval is the
-same posting-join + per-doc sum the engine already runs, so the operator
-inherits WAND/batched serving unchanged.  No collect, no new shuffle
-beyond the one BM25 already pays.
+Scale shape: the source is one document, so its term counts and their
+idfs (from one ``IndexReader.query_stats`` lookup) are a few dozen
+entries on the driver, and ranking them is a driver sort that runs no
+Spark job.  The top-m terms then go to the unchanged BM25 scorer like a
+typed query's term set, so the corpus side is the same index scan the
+engine already runs.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
-from pyspark.sql import functions as F
 
+def doc_top_terms(tf: dict, idf: dict, m: int = 8) -> list[str]:
+    """The top-``m`` most characteristic terms of one document: rank by
+    tf x BM25-idf, ties by term ascending — the deterministic tie order
+    that keeps the Spark and oracle term sets identical even when
+    weights collide exactly.
 
-def doc_top_terms(tfs: DataFrame, stats: DataFrame, corpus: DataFrame,
-                  src_id, m: int = 8) -> DataFrame:
-    """The top-``m`` most characteristic terms of document ``src_id``:
-    rank by tf x BM25-idf (ln((n - df + 0.5)/(df + 0.5) + 1)), ties by
-    term ascending — the deterministic tie order that keeps the Spark
-    and oracle term sets identical even when weights collide exactly.
-
-    ``tfs``: (doc_id, term, tf[, dl]); ``stats``: (term, df);
-    ``corpus``: one row with (n, ...).  Returns one column ``term``.
-    """
-    src = tfs.filter(F.col("doc_id") == F.lit(src_id))
-    weighted = (
-        src.join(stats, "term")
-        .crossJoin(F.broadcast(corpus.select("n")))
-        .withColumn(
-            "w",
-            F.col("tf")
-            * F.log((F.col("n") - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1),
-        )
-    )
-    rk = F.row_number().over(
-        Window.orderBy(F.col("w").desc(), F.col("term"))
-    )
-    return (
-        weighted.withColumn("_rk", rk)
-        .filter(F.col("_rk") <= F.lit(m))
-        .select("term")
-    )
+    ``tf``: {term: count in the document}; ``idf``: {term: idf} as
+    ``search.bm25_weights`` returns it.  Terms without an idf (no
+    postings) drop out."""
+    return sorted(idf, key=lambda t: (-(tf[t] * idf[t]), t))[:m]

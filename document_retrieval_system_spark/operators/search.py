@@ -21,7 +21,11 @@ literals/broadcasts, and the only shuffle is the final tiny
 groupBy(doc)/top-k.  The exhaustive scorers here decode posting blocks
 with ``index_build.flat_postings``, the one posting decoder; the pruned
 path is operators/wand.py.  Both BM25 paths share the query preamble
-(``bm25_query_blocks``) and the term score (``bm25_term_score``).
+(``bm25_query_blocks``) and the term score (``bm25_term_score``).  The
+relational core of the exhaustive scorer, ``bm25_posting_sum`` (decoded
+postings + ``{term: w}`` + avgdl -> per-doc sum), is also what the
+entry queries call when they need per-posting control: per-term
+feedback weights (RM3) or statically pruned postings.
 """
 
 from __future__ import annotations
@@ -86,6 +90,27 @@ def bm25_query_blocks(reader, queries: list[str], lang: str, analyzer):
     return weights, corpus["avg_doc_length"], blocks
 
 
+def bm25_posting_sum(postings: DataFrame, weights: dict[str, float],
+                     avgdl: float, by=("shard", "local_no")) -> DataFrame:
+    """The relational BM25 core: decoded posting rows (term, tf,
+    doc_len, *by) and per-term weights ``{term: w}`` -> (*by, score),
+    the per-doc sum of `bm25_term_score` over the postings of weighted
+    terms.  ``w`` is the idf for plain BM25, or idf x a feedback weight
+    for an expanded query; the caller may prune the postings first
+    (static pruning keeps full-corpus weights and avgdl)."""
+    wdf = postings.sparkSession.createDataFrame(
+        list(weights.items()), "term string, w double"
+    )
+    return (
+        postings.join(F.broadcast(wdf), "term")
+        .withColumn(
+            "part", bm25_term_score(F.col("w"), F.col("tf"), F.col("doc_len"), avgdl)
+        )
+        .groupBy(*by)
+        .agg(F.sum("part").alias("score"))
+    )
+
+
 def _attach_doc_id(scored: DataFrame, reader, k: int) -> DataFrame:
     docs = reader.docs().select("shard", "local_no", "doc_id", "url")
     return (
@@ -108,18 +133,8 @@ def bm25_search(
     weights, avgdl, blocks = bm25_query_blocks(reader, [query], lang, analyzer)
     if not weights:
         return _empty_result(reader.spark)
-    wdf = reader.spark.createDataFrame(
-        list(weights[0].items()), "term string, w double"
-    )
-    scored = (
-        flat_postings(blocks)
-        .join(F.broadcast(wdf), "term")
-        .withColumn(
-            "part", bm25_term_score(F.col("w"), F.col("tf"), F.col("doc_len"), avgdl)
-        )
-        .groupBy("shard", "local_no")
-        .agg(F.sum("part").alias("score"))
-        .filter(F.col("score") >= min_score)
+    scored = bm25_posting_sum(flat_postings(blocks), weights[0], avgdl).filter(
+        F.col("score") >= min_score
     )
     return _attach_doc_id(scored, reader, max_results)
 

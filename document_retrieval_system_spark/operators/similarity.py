@@ -389,46 +389,57 @@ def ivf_upsert(spark, index_dir: str, new_emb: DataFrame, cents: np.ndarray,
                  ivf_assign_col(F.col(vec_col), cents).cast("string"))
         .alias("ivf_cell"),
     ).localCheckpoint(eager=True)
-    new_ids = assigned.select(id_col).distinct()
-    existing = spark.read.parquet(index_dir)
-    old_cells = {
-        r["ivf_cell"]
-        for r in existing.join(F.broadcast(new_ids), id_col, "leftsemi")
-        .select("ivf_cell").distinct().collect()
-    }
-    new_cells = {r["ivf_cell"] for r in assigned.select("ivf_cell").distinct().collect()}
-    affected = sorted(old_cells | new_cells)
-    survivors = (
-        existing.filter(F.col("ivf_cell").isin(affected))
-        .join(F.broadcast(new_ids), id_col, "left_anti")
-        .select(id_col, vec_col, "ivf_cell")
-    )
-    out = survivors.unionByName(assigned).localCheckpoint(eager=True)
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        out.write.mode("overwrite").partitionBy("ivf_cell").parquet(index_dir)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-    _delete_emptied_cells(spark, index_dir, affected, out)
-    return {"batch_rows": assigned.count(), "affected_cells": len(affected),
-            "rewritten_rows": out.count()}
+    return _rewrite_affected(spark, index_dir, assigned, "ivf_cell",
+                             [id_col, vec_col, "ivf_cell"], id_col)
 
 
-def _delete_emptied_cells(spark, index_dir: str, affected: list,
-                          out: DataFrame, part_col: str = "ivf_cell") -> None:
-    """Dynamic partition overwrite only rewrites partitions present in
-    the output; an affected cell with no output rows keeps its stale
-    files and must be deleted explicitly (same pattern as emptied
-    shards in `tables.delete_documents`)."""
+def _rewrite_affected(spark, index_dir: str, assigned: DataFrame, part_col: str,
+                      cols: list[str], id_col: str) -> dict:
+    """The shared tail of every ANN upsert: rewrite only the partitions
+    the ``assigned`` batch touches.
+
+    The affected set is the partitions that hold old versions of the
+    batch's ids (one column-pruned, id-semi-joined scan) plus the
+    partitions the batch lands in.  Their survivors (rows whose id is not
+    resent, a broadcast anti-join) and the batch are checkpointed eagerly,
+    because the read path is about to be overwritten, and then only those
+    partitions are dynamically overwritten.  Dynamic overwrite rewrites
+    only partitions present in the output, so an affected partition left
+    with no rows keeps its stale files and is deleted explicitly (the
+    pattern of emptied shards in `tables.delete_documents`).  Returns
+    the batch, affected-partition (``affected_cells``, LSH buckets
+    included) and rewritten-row counts."""
     import os
 
     from document_retrieval_system_spark.operators.index_build import fs_delete
 
-    out_cells = {r[part_col] for r in out.select(part_col).distinct().collect()}
-    for cell in affected:
-        if cell not in out_cells:
-            fs_delete(spark, os.path.join(index_dir, f"{part_col}={cell}"))
+    new_ids = assigned.select(id_col).distinct()
+    existing = spark.read.parquet(index_dir)
+    old_parts = {
+        r[part_col]
+        for r in existing.join(F.broadcast(new_ids), id_col, "leftsemi")
+        .select(part_col).distinct().collect()
+    }
+    new_parts = {r[part_col] for r in assigned.select(part_col).distinct().collect()}
+    affected = sorted(old_parts | new_parts)
+    survivors = (
+        existing.filter(F.col(part_col).isin(affected))
+        .join(F.broadcast(new_ids), id_col, "left_anti")
+        .select(*cols)
+    )
+    out = survivors.unionByName(assigned.select(*cols)).localCheckpoint(eager=True)
+    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
+    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    try:
+        out.write.mode("overwrite").partitionBy(part_col).parquet(index_dir)
+    finally:
+        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    out_parts = {r[part_col] for r in out.select(part_col).distinct().collect()}
+    for part in affected:
+        if part not in out_parts:
+            fs_delete(spark, os.path.join(index_dir, f"{part_col}={part}"))
+    return {"batch_rows": assigned.count(), "affected_cells": len(affected),
+            "rewritten_rows": out.count()}
 
 
 def lsh_upsert(spark, index_dir: str, new_emb: DataFrame,
@@ -459,33 +470,8 @@ def lsh_upsert(spark, index_dir: str, new_emb: DataFrame,
     ).withColumn(
         "bucket", F.concat(F.lit(_BUCKET_TAG), F.substring("sig", 1, bucket_bits))
     ).localCheckpoint(eager=True)
-    new_ids = assigned.select(id_col).distinct()
-    existing = spark.read.parquet(index_dir)
-    old_buckets = {
-        r["bucket"]
-        for r in existing.join(F.broadcast(new_ids), id_col, "leftsemi")
-        .select("bucket").distinct().collect()
-    }
-    new_buckets = {r["bucket"] for r in assigned.select("bucket").distinct().collect()}
-    affected = sorted(old_buckets | new_buckets)
-    survivors = (
-        existing.filter(F.col("bucket").isin(affected))
-        .join(F.broadcast(new_ids), id_col, "left_anti")
-        .select(id_col, vec_col, "sig", "bucket")
-    )
-    out = survivors.unionByName(
-        assigned.select(id_col, vec_col, "sig", "bucket")
-    ).localCheckpoint(eager=True)
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        out.write.mode("overwrite").partitionBy("bucket").parquet(index_dir)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-    _delete_emptied_cells(spark, index_dir, affected, out, part_col="bucket")
-    return {"batch_rows": assigned.count(),
-            "affected_buckets": len(affected),
-            "rewritten_rows": out.count()}
+    return _rewrite_affected(spark, index_dir, assigned, "bucket",
+                             [id_col, vec_col, "sig", "bucket"], id_col)
 
 
 def ivf_refit_needed(spark, index_dir: str, cents: np.ndarray,
@@ -794,31 +780,5 @@ def ivfpq_upsert(spark, index_dir: str, new_emb: DataFrame,
         F.col(id_col), F.col("ivf_cell"),
         pq_encode_col(F.col("_resid"), books).alias("pq_code"),
     ).localCheckpoint(eager=True)
-    new_ids = assigned.select(id_col).distinct()
-    existing = spark.read.parquet(index_dir)
-    old_cells = {
-        r["ivf_cell"]
-        for r in existing.join(F.broadcast(new_ids), id_col, "leftsemi")
-        .select("ivf_cell").distinct().collect()
-    }
-    new_cells = {
-        r["ivf_cell"] for r in assigned.select("ivf_cell").distinct().collect()
-    }
-    affected = sorted(old_cells | new_cells)
-    survivors = (
-        existing.filter(F.col("ivf_cell").isin(affected))
-        .join(F.broadcast(new_ids), id_col, "left_anti")
-        .select(id_col, "pq_code", "ivf_cell")
-    )
-    out = survivors.unionByName(
-        assigned.select(id_col, "pq_code", "ivf_cell")
-    ).localCheckpoint(eager=True)
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        out.write.mode("overwrite").partitionBy("ivf_cell").parquet(index_dir)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-    _delete_emptied_cells(spark, index_dir, affected, out)
-    return {"batch_rows": assigned.count(), "affected_cells": len(affected),
-            "rewritten_rows": out.count()}
+    return _rewrite_affected(spark, index_dir, assigned, "ivf_cell",
+                             [id_col, "pq_code", "ivf_cell"], id_col)

@@ -20,6 +20,7 @@ from document_retrieval_system_spark.operators.lm import (
     score_bigram_lm,
 )
 from document_retrieval_system_spark.operators.mlt import doc_top_terms
+from document_retrieval_system_spark.operators.search import bm25_weights
 
 
 # ---------------------------------------------------------------------------
@@ -36,29 +37,21 @@ def _mini_tfs(spark):
     return spark.createDataFrame(rows, "doc_id long, term string, tf long, dl long")
 
 
-def test_doc_top_terms_ranks_by_tf_idf_with_term_tiebreak(spark):
-    tfs = _mini_tfs(spark)
-    stats = tfs.groupBy("term").agg(F.count("*").alias("df"))
-    corpus = spark.createDataFrame([(3,)], "n long")
+def test_doc_top_terms_ranks_by_tf_idf_with_term_tiebreak():
+    # doc 1 of `_mini_tfs`
+    tf = {"alpha": 3, "beta": 1}
+    idf = bm25_weights(3, {"alpha": 2, "beta": 2, "gamma": 1}, list(tf))
     # doc 1 weights: alpha tf=3 df=2, beta tf=1 df=2 -> alpha first
-    got = [r["term"] for r in
-           doc_top_terms(tfs, stats, corpus, 1, m=1).collect()]
-    assert got == ["alpha"]
-    # m=2 keeps both; tie-break path: doc 3 beta tf=2 vs gamma tf=1
-    got2 = {r["term"] for r in
-            doc_top_terms(tfs, stats, corpus, 1, m=2).collect()}
-    assert got2 == {"alpha", "beta"}
+    assert doc_top_terms(tf, idf, m=1) == ["alpha"]
+    # m=2 keeps both
+    assert set(doc_top_terms(tf, idf, m=2)) == {"alpha", "beta"}
 
 
-def test_doc_top_terms_exact_tie_broken_by_term_asc(spark):
+def test_doc_top_terms_exact_tie_broken_by_term_asc():
     # two terms with IDENTICAL tf and df -> identical weight; term asc wins
-    rows = [(1, "zed", 2, 4), (1, "ant", 2, 4), (2, "zed", 1, 2),
-            (2, "ant", 1, 2)]
-    tfs = spark.createDataFrame(rows, "doc_id long, term string, tf long, dl long")
-    stats = tfs.groupBy("term").agg(F.count("*").alias("df"))
-    corpus = spark.createDataFrame([(2,)], "n long")
-    got = [r["term"] for r in doc_top_terms(tfs, stats, corpus, 1, m=1).collect()]
-    assert got == ["ant"]
+    tf = {"zed": 2, "ant": 2}
+    idf = bm25_weights(2, {"zed": 2, "ant": 2}, list(tf))
+    assert doc_top_terms(tf, idf, m=1) == ["ant"]
 
 
 # ---------------------------------------------------------------------------

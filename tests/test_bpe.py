@@ -56,22 +56,32 @@ def test_encode_lossless_and_cached():
     assert train_bpe([text], n_merges=60) == merges
 
 
-def test_bpe_spark_counts_match_pure_python(spark):
-    from document_retrieval_system_spark.functions.bpe import (
-        bpe_token_counts,
-        fit_bpe_on_sample,
+def test_bpe_spark_counts_match_pure_python(spark, tmp_path):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from document_retrieval_system_spark.functions.bpe import bpe_token_counts
+    from document_retrieval_system_spark.operators.similarity import (
+        md5_ranked_table,
     )
 
     rows = [(i, f"the quick brown fox number {i} jumps over the lazy dog")
             for i in range(40)] + [(99, None)]
+
+    def fit(rows, name):
+        path = str(tmp_path / name)
+        pq.write_table(pa.table({"doc_id": [r[0] for r in rows],
+                                 "text": [r[1] for r in rows]}), path)
+        sample = md5_ranked_table(path, "doc_id", ["text"], "", 16)
+        return train_bpe(sample.column("text").to_pylist(), n_merges=50)
+
+    merges = fit(rows, "a.parquet")
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    merges = fit_bpe_on_sample(df, n_merges=50, sample=16)
     ranks = merge_ranks(merges)
     got = {r["doc_id"]: r["n_bpe_tokens"]
            for r in bpe_token_counts(df, merges).collect()}
     want = {i: len(encode(t, ranks)) for i, t in rows if t is not None}
     want[99] = 0
     assert got == want
-    # the sample rule is order-independent: shuffled input, same merges
-    assert fit_bpe_on_sample(df.orderBy("text"), n_merges=50,
-                             sample=16) == merges
+    # the sample rule is order-independent: shuffled rows, same merges
+    assert fit(sorted(rows, key=lambda r: r[1] or ""), "b.parquet") == merges

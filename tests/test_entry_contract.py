@@ -60,7 +60,7 @@ ALL = entry_mod.queries()
 # No checked-in scale reaches the 4 MB spread gate, so these entries run
 # once more with the gate at 0: between them they read documents,
 # embeddings and events through the round-robin spread.
-SPREAD = ["i3_term_stats", "r3_bm25_topk", "dedup_minhash_lsh", "emb_neardup",
+SPREAD = ["i3_term_stats", "r1_tfidf_topk", "dedup_minhash_lsh", "emb_neardup",
           "events_json_props"]
 
 

@@ -110,8 +110,9 @@ def test_cache_dir_follows_a_same_size_rewrite_within_one_second(spark, tmp_path
 
 def test_entry_cache_pieces_have_one_definition():
     """Every on-disk entry cache is published by `_cached_dir`, every fit
-    sample is md5-ranked by one function per engine, and `_MEMO` is the
-    only in-process memo of the entry family."""
+    sample is md5-ranked by one function per engine anywhere in the
+    package, and `_MEMO` is the only in-process memo of the entry
+    family."""
     import ast
     from pathlib import Path
 
@@ -136,6 +137,14 @@ def test_entry_cache_pieces_have_one_definition():
                 ):
                     md5_sites.append((rel, fn.name))
                 if rel == "operators/similarity.py" and name == "md5":
+                    md5_sites.append((rel, fn.name))
+                # a Spark sort keyed on an md5 column aliased in its own chain
+                if name in ("orderBy", "sort") and {
+                    getattr(c.args[0], "value", None) for c in ast.walk(node.func)
+                    if isinstance(c, ast.Call) and getattr(c.func, "attr", None) == "alias"
+                    and getattr(getattr(c.func.value, "func", None), "attr", None) == "md5"
+                } & {a.value for k in node.args for a in ast.walk(k)
+                     if isinstance(a, ast.Constant)}:
                     md5_sites.append((rel, fn.name))
         if rel == "entry_queries.py":
             memos = [t.id for n in tree.body if isinstance(n, (ast.Assign, ast.AnnAssign))

@@ -57,13 +57,10 @@ def test_fuzzy_search_expansion_equals_direct_bm25(spark):
 
     sf = "/root/testdata/sf0.01"
     got = [tuple(r) for r in eq.q_fuzzy_search(spark, sf).collect()]
-    docs = eq._docs(spark, sf)
-    direct = spark.createDataFrame(
-        [("table",), ("merge",), ("window",), ("fast",)], "term string"
-    )
+    direct = ["table", "merge", "window", "fast"]
     want = [
         tuple(r)
-        for r in eq._bm25_scores(docs, terms_df=direct)
+        for r in eq._bm25_all(eq._ensure_entry_index(spark, sf), direct)
         .select("doc_id", F.round("score", 6).alias("score"))
         .orderBy(F.desc("score"), F.asc("doc_id"))
         .limit(20)

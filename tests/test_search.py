@@ -91,3 +91,33 @@ def test_duplicate_content_tie_break(reader, oracle_engine):
     rows = [(r["doc_id"], r["score"]) for r in df.collect()]
     for (d1, s1), (d2, s2) in zip(rows, rows[1:]):
         assert s1 > s2 or (s1 == s2 and d1 < d2)
+
+
+def test_bm25_saturation_is_written_only_in_bm25_term_score():
+    """Outside the oracle and the fielded BM25F fold, the one BM25
+    saturation ``tf / (tf + k1 * ...)`` on Spark Columns or numpy arrays
+    is `search.bm25_term_score`: an AST scan of the package for
+    arithmetic on K1/BM25_K1.  SQL text only interpolates ``{K1}`` into
+    the DuckDB twins, which is no arithmetic and so is not matched."""
+    import ast
+    from pathlib import Path
+
+    import document_retrieval_system_spark as pkg
+
+    root = Path(pkg.__file__).parent
+    sites = set()
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        if rel in ("oracle.py", "operators/bm25f.py"):
+            continue
+        tree = ast.parse(path.read_text(encoding="utf-8"))
+        for fn in ast.walk(tree):
+            if not isinstance(fn, ast.FunctionDef):
+                continue
+            for node in ast.walk(fn):
+                if isinstance(node, ast.BinOp) and any(
+                    getattr(o, "id", getattr(o, "attr", None)) in ("K1", "BM25_K1")
+                    for o in (node.left, node.right)
+                ):
+                    sites.add((rel, fn.name))
+    assert sorted(sites) == [("operators/search.py", "bm25_term_score")]
