@@ -42,10 +42,15 @@ Design notes for 10^12 docs / 1000 executors:
 
 from __future__ import annotations
 
+import bisect
 import os
+from urllib.parse import urlparse
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.dataset as ds
+import pyarrow.fs as pafs
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -71,9 +76,10 @@ class ListAccumulatorParam:
 
 
 # The declared schema of every index table, in writer column order.  Every
-# read goes through ``read_table``, which hands Spark the schema instead of
-# letting it launch a job to infer one from the file footers; the layout
-# test pins each declaration to what the writers produce.
+# Spark read goes through ``read_table``, which hands Spark the schema
+# instead of letting it launch a job to infer one from the file footers, and
+# every driver read through ``read_table_arrow``; the layout test pins each
+# declaration to what the writers produce.
 POSTINGS_SCHEMA = (
     "shard int, term string, block_no int, n int, first_doc long, last_doc long, "
     "df_local int, cf_local long, max_tf int, min_dl int, "
@@ -106,6 +112,19 @@ TABLE_SCHEMAS = {
 
 def _columns(schema: str) -> list[str]:
     return [field.split()[0] for field in schema.split(",")]
+
+
+_ARROW_TYPES = {
+    "int": pa.int32(), "long": pa.int64(), "double": pa.float64(),
+    "string": pa.string(), "binary": pa.binary(),
+    "timestamp": pa.timestamp("us", tz="UTC"),
+}
+
+
+def _arrow_schema(schema: str) -> pa.Schema:
+    """A declared table schema as the Arrow schema Spark writes it under."""
+    return pa.schema([(name, _ARROW_TYPES[typ])
+                      for name, typ in (f.split() for f in schema.split(","))])
 
 
 DEFAULT_N_SHARDS = 32
@@ -440,10 +459,111 @@ def fs_read_text(spark: SparkSession, path: str) -> str:
 
 def read_table(spark: SparkSession, paths: IndexPaths, table: str) -> DataFrame:
     """The index table ``table`` read under its declared schema — the one
-    read path of every index table.  A table directory that holds no
+    Spark read path of every index table.  A table directory that holds no
     data files (a wave whose documents all tokenize empty writes only
     ``_SUCCESS`` under postings/) reads as empty."""
     return spark.read.schema(TABLE_SCHEMAS[table]).parquet(getattr(paths, table))
+
+
+def _covers(stats: dict | None, values: list) -> bool:
+    """Whether a row group whose column statistics are ``stats`` may hold
+    one of the sorted ``values``: some value lies in [min, max]."""
+    if not stats or stats.get("min") is None or stats.get("max") is None:
+        return True
+    i = bisect.bisect_left(values, stats["min"])
+    return i < len(values) and values[i] <= stats["max"]
+
+
+def _data_files(fs, directory: str, missing_ok: bool = False) -> list:
+    """The entries of ``directory`` that Spark reads as data: names
+    starting with ``_`` or ``.`` are not (``_SUCCESS``, ``.crc`` side
+    files, dynamic-overwrite staging directories)."""
+    sel = pafs.FileSelector(directory, allow_not_found=missing_ok)
+    return [i for i in fs.get_file_info(sel) if not i.base_name.startswith(("_", "."))]
+
+
+def table_fragments(paths: IndexPaths, table: str, filter: dict | None = None) -> list:
+    """The parquet fragments of ``table`` that ``read_table_arrow`` scans
+    under ``filter``, each narrowed to the row groups it must read.  A
+    ``shard`` filter on a shard-partitioned table lists only those shard
+    directories (a missing one is an empty shard); a row group survives
+    when, for every filtered data column, its min/max statistics cover
+    at least one filter value.  (pyarrow's own scan prunes row groups on
+    equalities, not on ``is_in``.)  The table must be on the local file
+    system (``driver_reads``)."""
+    uri = getattr(paths, table)
+    if urlparse(uri).scheme:
+        fs, root = pafs.FileSystem.from_uri(uri)
+    else:
+        fs, root = pafs.LocalFileSystem(), uri
+    want = {c: sorted(set(v)) for c, v in (filter or {}).items()}
+    if table in _SHARD_TABLES:
+        shards = want.pop("shard", None)
+        if shards is None:
+            shards = [int(i.base_name.split("=", 1)[1]) for i in _data_files(fs, root)
+                      if i.type == pafs.FileType.Directory and i.base_name.startswith("shard=")]
+        dirs = [(f"{root}/shard={s}", ds.field("shard") == s) for s in shards]
+    else:
+        dirs = [(root, None)]
+    fmt = ds.ParquetFileFormat()
+    out = []
+    for directory, part in dirs:
+        for info in _data_files(fs, directory, missing_ok=part is not None):
+            if info.type != pafs.FileType.File:
+                continue
+            frag = fmt.make_fragment(info.path, fs, partition_expression=part)
+            if want:
+                frag.ensure_complete_metadata()
+                keep = [rg.id for rg in frag.row_groups
+                        if all(_covers(rg.statistics.get(c), v) for c, v in want.items())]
+                if not keep:
+                    continue
+                frag = frag.subset(row_group_ids=keep)
+            out.append(frag)
+    return out
+
+
+def driver_reads(spark: SparkSession, uri: str) -> bool:
+    """Whether Spark resolves ``uri`` to the local file system, the one
+    file system the driver's pyarrow reads open exactly as Spark does.  A
+    path without a scheme takes Spark's ``fs.defaultFS``.  Any other
+    scheme (``s3a://``, ``gs://``, ``hdfs://``, ``viewfs://``) is Spark's
+    to read, under its Hadoop configuration and credentials."""
+    scheme = urlparse(uri).scheme or urlparse(
+        spark._jsc.hadoopConfiguration().get("fs.defaultFS", "file:///")).scheme
+    return scheme == "file"
+
+
+def read_table_arrow(spark: SparkSession, paths: IndexPaths, table: str,
+                     columns: list[str] | None = None,
+                     filter: dict | None = None) -> pa.Table:
+    """The index table ``table`` under its declared schema, as an Arrow
+    table in the driver: the twin of ``read_table`` for lookups too small
+    to be worth a Spark job (the corpus scalars, a query's term dfs, the
+    display fields of a top-k).  ``filter`` maps columns to the values
+    they must be IN.  On the local file system pyarrow reads the table
+    with no Spark job: the filter prunes shard directories and row groups
+    (see ``table_fragments``), then rows.  Names starting with ``_`` or
+    ``.`` are skipped, so a table directory that holds no data files
+    reads as empty.  Any other file system is read by Spark and collected
+    (``driver_reads``)."""
+    full = _arrow_schema(TABLE_SCHEMAS[table])
+    schema = pa.schema([full.field(c) for c in columns or full.names])
+    if not driver_reads(spark, getattr(paths, table)):
+        df = read_table(spark, paths, table)
+        for c, values in (filter or {}).items():
+            df = df.filter(F.col(c).isin(sorted(set(values))))
+        return df.select(*schema.names).toArrow().cast(schema)
+    frags = table_fragments(paths, table, filter)
+    if not frags:
+        return schema.empty_table()
+    rows = None
+    for c, values in (filter or {}).items():
+        cond = ds.field(c).isin(list(values))
+        rows = cond if rows is None else rows & cond
+    dataset = ds.FileSystemDataset(frags, full, ds.ParquetFileFormat(),
+                                   frags[0].filesystem)
+    return dataset.to_table(columns=schema.names, filter=rows)
 
 
 def _read_postings_or_empty(spark: SparkSession, paths: IndexPaths) -> DataFrame:
@@ -744,6 +864,11 @@ def build_index(
     return paths
 
 
+# the row-group size bound of a term_stats file: a lookup reads one such
+# group per file per query term
+TERM_STATS_ROW_GROUP_BYTES = 1 << 17
+
+
 def finalize_index(spark: SparkSession, paths: IndexPaths) -> None:
     """Global-stat passes that depend on the FULL corpus (rerun after any
     incremental wave, mirroring the reference's compute_doc_weights after
@@ -761,7 +886,10 @@ def finalize_index(spark: SparkSession, paths: IndexPaths) -> None:
 
     # term stats (I3): global df/cf from per-shard partial aggregates —
     # the two-stage "salted" aggregation: big groupBy was (shard, term),
-    # this second stage reduces tiny per-shard rows.
+    # this second stage reduces tiny per-shard rows.  Each file is sorted
+    # by term in row groups of bounded size, so a query's term lookup
+    # reads, per file, only the row groups whose term range holds a
+    # query term (``read_table_arrow``).
     term_stats = (
         blocks.filter(F.col("block_no") == 0)
         .groupBy("term")
@@ -769,8 +897,11 @@ def finalize_index(spark: SparkSession, paths: IndexPaths) -> None:
             F.sum("df_local").alias("df"),
             F.sum("cf_local").alias("cf"),
         )
+        .sortWithinPartitions("term")
     )
-    term_stats.write.mode("overwrite").parquet(paths.term_stats)
+    (term_stats.write.mode("overwrite")
+     .option("parquet.block.size", TERM_STATS_ROW_GROUP_BYTES)
+     .parquet(paths.term_stats))
 
     # TF-IDF doc norms (I7): ||(tf * ln(N/df))_t||_2 per doc, computed by
     # decoding the index (term-major) and re-grouping by doc — replaces
@@ -927,23 +1058,19 @@ class IndexReader:
         return self._table("manifest")
 
     def corpus(self) -> dict:
-        return _corpus_scalars(self._table("corpus_stats").collect()[0])
+        """The corpus scalars from the 1-row corpus_stats, read in the
+        driver (no Spark job on a local index, see ``read_table_arrow``)."""
+        return _corpus_scalars(
+            read_table_arrow(self.spark, self.paths, "corpus_stats").to_pylist()[0])
 
     def query_stats(self, terms) -> tuple[dict, dict]:
-        """``(corpus(), {term: df})`` for the query ``terms`` in ONE Spark
-        job: the 1-row corpus_stats and the term-filtered term_stats,
-        unioned by name (each side's missing columns NULL) and collected
-        together.  Terms absent from the index are absent from the dict."""
-        ts = self._table("term_stats").filter(
-            F.col("term").isin(sorted(set(terms)))
-        ).select("term", "df")
-        rows = self._table("corpus_stats").unionByName(
-            ts, allowMissingColumns=True
-        ).collect()
-        corpus = next(r for r in rows if r["term"] is None)
-        return _corpus_scalars(corpus), {
-            r["term"]: r["df"] for r in rows if r["term"] is not None
-        }
+        """``(corpus(), {term: df})`` for the query ``terms``, read in the
+        driver (no Spark job on a local index): the 1-row corpus_stats and
+        the rows of the term-sorted term_stats whose row groups can hold a
+        query term.  Terms absent from the index are absent from the dict."""
+        ts = read_table_arrow(self.spark, self.paths, "term_stats", ["term", "df"],
+                              {"term": terms})
+        return self.corpus(), dict(zip(ts["term"].to_pylist(), ts["df"].to_pylist()))
 
 
 def _corpus_scalars(row) -> dict:

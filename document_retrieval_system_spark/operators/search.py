@@ -16,7 +16,8 @@ oracle.py docstring.
 
 Scale shape: query terms are a handful of rows — term filters push down
 to the Parquet/Iceberg scan (partition column ``shard`` + term-sorted row
-groups), per-term stats are collected to the driver (tiny) and shipped as
+groups), per-term stats are read in the driver (``IndexReader.query_stats``,
+a pyarrow read of a few row groups, no Spark job) and shipped as
 literals/broadcasts, and the only shuffle is the final tiny
 groupBy(doc)/top-k.  The exhaustive scorers here decode posting blocks
 with ``index_build.flat_postings``, the one posting decoder; the pruned
@@ -69,8 +70,8 @@ def bm25_term_score(w, tf, dl, avgdl):
 
 
 def bm25_query_blocks(reader, queries: list[str], lang: str, analyzer):
-    """The query preamble of every BM25 scorer: analyze each query, fetch
-    the corpus scalars and the terms' dfs in one collect, weigh each
+    """The query preamble of every BM25 scorer: analyze each query, read
+    the corpus scalars and the terms' dfs in the driver, weigh each
     query's terms, and scan the posting blocks of every weighted term.
 
     Returns ``({query index: {term: w}}, avgdl, blocks)``.  A query with
@@ -345,10 +346,12 @@ def near_search(reader, term_a: str, term_b: str, distance: int = 5) -> DataFram
     )
 
 
+# the columns and types of every ranked search result
+RESULT_SCHEMA = "doc_id string, url string, score double, shard int, local_no long"
+
+
 def _empty_result(spark) -> DataFrame:
-    return spark.createDataFrame(
-        [], "doc_id string, url string, score double, shard int, local_no long"
-    )
+    return spark.createDataFrame([], RESULT_SCHEMA)
 
 
 def prefix_search(reader, prefix: str) -> DataFrame:
@@ -378,10 +381,13 @@ def prefix_completions(reader, prefix: str, k: int = 10) -> DataFrame:
     search box needs, served from index metadata alone.
 
     Reads ONLY the term-stats sidecar (one row per vocabulary term, df +
-    cf — orders of magnitude smaller than postings); the StartsWith
-    predicate pushes into the term-sorted parquet scan as a dictionary
-    range (same pushdown shape as `prefix_search`, which pays the
-    full postings decode this operator never touches).  Top-k is a
+    cf — orders of magnitude smaller than postings).  The StartsWith
+    predicate pushes into its parquet scan: each term_stats file is
+    sorted by term in bounded row groups, so per file the scan reads
+    only the row groups whose term range meets the prefix.  The files
+    are hash-partitioned by term, so every file is opened.  (Same
+    pushdown shape as `prefix_search`, which pays the full postings
+    decode this operator never touches.)  Top-k is a
     TakeOrderedAndProject — no full sort, no shuffle beyond the k-row
     reduction."""
     return (

@@ -26,8 +26,19 @@ top-k with **block-max pruning** per index shard:
 
 The kernel runs inside ``applyInPandas`` grouped by shard — shards are
 independent (document-sharded index), so a 1000-executor cluster runs
-1000 kernels in parallel with no cross-talk; the only shuffle is the
-final k-row-per-shard merge.
+1000 kernels in parallel with no cross-talk.  The ``groupBy("shard")``
+exchange stays: a shard's blocks may span several files (delta
+segments) and file splits, so a scan partition is not shard-aligned.
+A request on a local index therefore runs two Spark jobs, the block
+scan with that exchange and the kernel stage; everything else happens
+in the driver.  The term dfs and corpus scalars are pyarrow reads of
+the term_stats and corpus_stats files, and the merge is a driver merge
+of the kernel's <= k(+ties) rows per shard per query, not a shuffle:
+each query is cut at its k-th score, the doc_id and url of the rows
+left come from a row-group-pruned pyarrow lookup of the docs files, and
+each query keeps its top-k.  (An index on another file system is read
+by Spark instead, see ``index_build.read_table_arrow``; a request whose
+k covers the corpus keeps a lazy docs join, see ``_finish``.)
 
 Correctness contract (tested metamorphically in
 tests/test_wand.py): identical (doc_id, score) top-k as the exhaustive
@@ -40,20 +51,27 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from document_retrieval_system_spark.functions.analyzer import process_text
 from document_retrieval_system_spark.operators.codec import decode_block
+from document_retrieval_system_spark.operators.index_build import (
+    _arrow_schema,
+    _columns,
+    read_table_arrow,
+)
 from document_retrieval_system_spark.operators.search import (
+    RESULT_SCHEMA,
     _attach_doc_id,
-    _empty_result,
     bm25_query_blocks,
     bm25_term_score,
 )
 from document_retrieval_system_spark.oracle import DEFAULT_MAX_RESULTS, DEFAULT_MIN_SCORE
 
-WAND_OUT_SCHEMA = "shard int, local_no long, score double"
+WAND_OUT_SCHEMA = "qid int, shard int, local_no long, score double"
+# the docs columns the driver finish looks up
+_DOC_FIELDS = "shard int, local_no long, doc_id string, url string"
 # the block columns the kernel reads
 _KERNEL_COLS = ["shard", "term", "first_doc", "last_doc", "max_tf", "min_dl",
                 "doc_bytes", "tf_bytes", "dl_bytes"]
@@ -277,8 +295,58 @@ def _wand_scores(blocks: DataFrame, weights: dict[int, dict[str, float]],
         return pd.concat(outs, ignore_index=True)
 
     return blocks.select(*_KERNEL_COLS).groupBy("shard").applyInPandas(
-        kernel, "qid int, " + WAND_OUT_SCHEMA
+        kernel, WAND_OUT_SCHEMA
     )
+
+
+def _finish(reader, scored: DataFrame | None, k: int, with_qid: bool) -> DataFrame:
+    """The finish shared by both WAND entry points: each query's top-k by
+    (score desc, doc_id asc) with its doc_id and url.
+
+    The kernel's (qid, shard, local_no, score) rows, <= k(+ties) per
+    shard per query, are collected, and each query is cut to its rows
+    scoring at least its k-th score (ties kept: doc_id breaks them), so at
+    most k(+ties) rows per query are looked up in the docs table: one
+    ``shard IN (...) AND local_no IN (...)`` read over files sorted by
+    local_no, so row groups prune.  The join is inner, like
+    ``bm25_search``'s: a hit with no docs row (a delete or rewrite caught
+    between its docs and postings commits) is dropped, and the rows below
+    the cut are then looked up too so that another takes its place.
+    Returns a local DataFrame: collecting it runs no job.
+
+    When k covers the corpus no query has rows to cut, so nothing would
+    bound the collect: the finish is then a lazy Spark join with docs."""
+    schema = ("qid int, " if with_qid else "") + RESULT_SCHEMA
+    if scored is not None and k >= reader.corpus()["total_docs"]:
+        if not with_qid:
+            return _attach_doc_id(scored.drop("qid"), reader, k)
+        docs = reader.docs().select(*_columns(_DOC_FIELDS))
+        return scored.join(docs, ["shard", "local_no"]).select(*_columns(schema))
+    hits = (scored.toArrow() if scored is not None
+            else _arrow_schema(WAND_OUT_SCHEMA).empty_table())
+    hits = hits.sort_by([("qid", "ascending"), ("score", "descending")])
+    qid, score = hits["qid"].to_numpy(), hits["score"].to_numpy()
+    first, end = np.searchsorted(qid, qid), np.searchsorted(qid, qid, side="right")
+    kth = first + max(k, 1) - 1
+    cut = hits.filter(score >= np.where(kth < end, score[np.minimum(kth, qid.size - 1)],
+                                        -np.inf))
+
+    def with_docs(rows: pa.Table) -> pa.Table:
+        docs = read_table_arrow(reader.spark, reader.paths, "docs", _columns(_DOC_FIELDS),
+                                {"shard": rows["shard"].to_pylist(),
+                                 "local_no": rows["local_no"].to_pylist()})
+        return rows.join(docs, ["shard", "local_no"], join_type="inner")
+
+    ranked = with_docs(cut)
+    if ranked.num_rows != cut.num_rows:
+        ranked = with_docs(hits)
+    ranked = ranked.sort_by(
+        [("qid", "ascending"), ("score", "descending"), ("doc_id", "ascending")])
+    qid = ranked["qid"].to_numpy()
+    ranked = ranked.filter(np.arange(qid.size) - np.searchsorted(qid, qid) < k)
+    # from pandas, not the Arrow table: measured cheaper per call (30 vs 39
+    # ms of process CPU for a 320-row batch result, equal for 20 rows)
+    return reader.spark.createDataFrame(ranked.select(_columns(schema)).to_pandas(), schema)
 
 
 def bm25_wand_search(
@@ -290,17 +358,18 @@ def bm25_wand_search(
     analyzer=process_text,
     counters: dict | None = None,
 ) -> DataFrame:
-    """Block-max WAND BM25 top-k; same contract as search.bm25_search.
+    """Block-max WAND BM25 top-k; same rows as search.bm25_search.  The
+    two Spark jobs (block scan, kernel) run in this call and the returned
+    frame is local, unless k covers the corpus (see ``_finish``).
 
     ``counters``: optional {"total_blocks": Accumulator, "decoded_blocks":
     Accumulator} — each shard kernel adds its block totals, so a bench can
     report the decoded fraction (the pruning effectiveness) without
     touching the result schema."""
     weights, avgdl, blocks = bm25_query_blocks(reader, [query], lang, analyzer)
-    if not weights:
-        return _empty_result(reader.spark)
-    scored = _wand_scores(blocks, weights, avgdl, max_results, min_score, counters)
-    return _attach_doc_id(scored, reader, int(max_results))
+    scored = (_wand_scores(blocks, weights, avgdl, max_results, min_score, counters)
+              if weights else None)
+    return _finish(reader, scored, int(max_results), with_qid=False)
 
 
 def bm25_wand_search_many(
@@ -311,34 +380,19 @@ def bm25_wand_search_many(
     min_score: float = DEFAULT_MIN_SCORE,
     analyzer=process_text,
 ) -> DataFrame:
-    """Batched WAND: score N queries in ONE pass — one stats lookup, one
-    term-pushdown block scan over the union of query terms, and one
-    per-shard kernel job that runs every query against the shard's
-    already-fetched blocks.  Amortizes the fixed per-job Spark overhead
-    that dominates single-query latency (the kernel is ~1 % of it) into
-    throughput: a serving tier evaluates a batch at near-single-query
-    wall time.
+    """Batched WAND: score N queries in ONE pass — one driver-side stats
+    lookup, one term-pushdown block scan over the union of query terms,
+    and one per-shard kernel job that runs every query against the
+    shard's already-fetched blocks — then one driver finish over every
+    query's <= k(+ties) rows per shard.  Two Spark jobs whatever N is,
+    the same as a single query: a serving tier evaluates a batch at
+    near-single-query cost.
 
-    Returns (qid, doc_id, url, score, shard, local_no) — per-query
-    top-``max_results`` with the engine's (score desc, doc_id asc)
-    tie-break; ``qid`` is the index into ``queries``."""
+    Returns a frame of (qid, doc_id, url, score, shard, local_no), local
+    unless k covers the corpus (see ``_finish``) —
+    per-query top-``max_results`` with the engine's (score desc, doc_id
+    asc) tie-break; ``qid`` is the index into ``queries``."""
     weights, avgdl, blocks = bm25_query_blocks(reader, queries, lang, analyzer)
-    if not weights:
-        # same column ORDER and types as the live path (qid first, int)
-        return reader.spark.createDataFrame(
-            [], "qid int, doc_id string, url string, score double, "
-                "shard int, local_no long"
-        )
-    scored = _wand_scores(blocks, weights, avgdl, max_results, min_score)
-    docs = reader.docs().select("shard", "local_no", "doc_id", "url")
-    from pyspark.sql import Window
-
-    rank = F.row_number().over(
-        Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("doc_id"))
-    )
-    return (
-        scored.join(docs, ["shard", "local_no"])
-        .withColumn("_rn", rank)
-        .filter(F.col("_rn") <= int(max_results))
-        .select("qid", "doc_id", "url", "score", "shard", "local_no")
-    )
+    scored = (_wand_scores(blocks, weights, avgdl, max_results, min_score)
+              if weights else None)
+    return _finish(reader, scored, int(max_results), with_qid=True)

@@ -23,10 +23,14 @@ from document_retrieval_system_spark.operators.index_build import (
     finalize_index,
     manifest_stats,
     read_table,
+    read_table_arrow,
 )
 from document_retrieval_system_spark.operators.merge import merge_indexes
-from document_retrieval_system_spark.operators.search import bm25_search
-from document_retrieval_system_spark.operators.wand import bm25_wand_search
+from document_retrieval_system_spark.operators.search import RESULT_SCHEMA, bm25_search
+from document_retrieval_system_spark.operators.wand import (
+    bm25_wand_search,
+    bm25_wand_search_many,
+)
 from document_retrieval_system_spark.sources.corpus import PAGES_DDL, gen_pages_pandas
 from document_retrieval_system_spark.sources.tables import delete_documents
 from document_retrieval_system_spark.streaming.incremental import (
@@ -43,15 +47,31 @@ def _non_decreasing(keys):
     return all(a <= b for a, b in zip(keys, keys[1:]))
 
 
+def _plain(v):
+    """A cell as a comparable Python value: timestamps as naive UTC (how
+    the UTC session returns them), binary as bytes."""
+    if isinstance(v, datetime.datetime) and v.tzinfo is not None:
+        return v.astimezone(datetime.timezone.utc).replace(tzinfo=None)
+    return bytes(v) if isinstance(v, bytearray) else v
+
+
 def _check_layout(spark, index_dir, step):
     paths = IndexPaths(index_dir)
     # every table's declared schema is what its writers put on disk:
     # names, types and column order (the partition column last, as the
-    # inferring read places it)
+    # inferring read places it); and the driver's pyarrow read of a table
+    # holds exactly the rows Spark's read holds (same live files)
     for table in TABLE_SCHEMAS:
         inferred = spark.read.parquet(getattr(paths, table)).schema
-        declared = read_table(spark, paths, table).schema
-        assert inferred == declared, (step, table, inferred, declared)
+        declared = read_table(spark, paths, table)
+        assert inferred == declared.schema, (step, table, inferred, declared.schema)
+        cols = declared.columns
+        by_spark = sorted((tuple(_plain(v) for v in r) for r in declared.collect()),
+                          key=repr)
+        by_arrow = sorted((tuple(_plain(r[c]) for c in cols)
+                           for r in read_table_arrow(spark, paths, table).to_pylist()),
+                          key=repr)
+        assert by_arrow == by_spark, (step, table)
     doc_cols = [c for c in DOC_TABLE_COLS if c != "shard"]  # partition column
     for f in _files(paths.docs):
         t = pq.read_table(f)
@@ -131,7 +151,11 @@ def test_all_empty_corpus_builds_serves_audits_and_merges(spark):
         assert reader.corpus()["total_docs"] == 0
         assert reader.docs().count() == 3
         assert bm25_search(reader, "anything at all", "en").collect() == []
-        assert bm25_wand_search(reader, "anything at all", "en").collect() == []
+        single = bm25_wand_search(reader, "anything at all", "en")
+        batch = bm25_wand_search_many(reader, ["anything", "at all"], "en")
+        assert single.collect() == [] and batch.collect() == []
+        assert single.schema == spark.createDataFrame([], RESULT_SCHEMA).schema
+        assert batch.schema == spark.createDataFrame([], "qid int, " + RESULT_SCHEMA).schema
         assert fsck_index(spark, idx).collect() == []
         merge_indexes(spark, [idx], merged, n_shards=2)
         assert IndexReader(spark, merged).docs().count() == 3
