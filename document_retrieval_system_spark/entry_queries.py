@@ -91,8 +91,9 @@ _SPREAD_MIN_BYTES = int(os.environ.get("SPARK_GRAFT_SPREAD_MIN_BYTES",
 # artifacts (shared temp dir across driver runs) are never reused.
 # v3: gap-aligned posting block boundaries.  v4: tagged ("b"-prefixed)
 # ANN bucket partition values.  v5: manifest kind+committed_at.
-# v6: URL-ordered local_no assignment (docID locality).
-ENTRY_CACHE_VERSION = 6
+# v6: URL-ordered local_no assignment (docID locality).  v7: per-shard
+# term_stats and corpus_stats written by each commit.
+ENTRY_CACHE_VERSION = 7
 
 
 def _fingerprint(path: str) -> tuple[tuple[str, int, int], ...] | None:

@@ -26,14 +26,21 @@ postings plus the docs/stats sidecars):
                         re-block corruption; block-max pruning would
                         silently return wrong results on bad bounds).
 - ``df_local``          block 0's df_local, summed over the segments
-                        of a (shard, term) as ``finalize_index`` sums
-                        it, must equal its total decoded postings.
+                        of a (shard, term) as the shard's term_stats
+                        rows sum it, must equal its total decoded
+                        postings.
 - ``doc_len_mismatch``  dl replicated in posting blocks must equal the
                         docs table's doc_len for that ordinal.
-- ``term_stats``        the term_stats sidecar must equal df/cf
-                        re-aggregated from the postings.
-- ``corpus_stats``      the corpus sidecar must equal totals
-                        re-derived from the docs table.
+- ``term_stats``        each shard's term_stats rows, summed per term
+                        over its stats segments, must equal the df/cf
+                        of that shard's own decoded postings.
+- ``corpus_stats``      each shard's corpus row must equal the totals
+                        of that shard's own docs (docs with tokens,
+                        their summed doc_len).
+- ``stats_stamp``       each shard's corpus row must carry the stamp
+                        of its latest manifest event (µs): a stamp
+                        behind it is a commit whose stats never landed,
+                        which ``finalize_index`` recounts.
 
 Scale shape: one decode (map-only) + a handful of aggregates and
 joins, each keyed on (shard, term) or (shard, ordinal) — the same
@@ -53,6 +60,7 @@ from document_retrieval_system_spark.operators.index_build import (
     IndexPaths,
     flat_postings,
     read_table,
+    stats_state,
     _read_postings_or_empty,
 )
 
@@ -175,33 +183,42 @@ def fsck_index(spark: SparkSession, index_dir: str) -> DataFrame:
         dlm, "doc_len_mismatch", F.col("local_no"),
         F.col("_dl_doc"), F.col("_dl_post")))
 
-    # sidecars: term_stats and corpus_stats must re-derive
-    ts = read_table(spark, paths, "term_stats")
-    re_ts = decoded.groupBy("term").agg(
+    # per-shard stats: each shard's rows must re-derive from its own
+    # postings and docs, and carry the stamp of its latest manifest event
+    ts = read_table(spark, paths, "term_stats").groupBy("shard", "term").agg(
+        F.sum("df").alias("df"), F.sum("cf").alias("cf"))
+    re_ts = decoded.groupBy("shard", "term").agg(
         F.count("*").alias("_df"), F.sum("tf").alias("_cf"))
     ts_bad = (
-        ts.join(re_ts, "term", "full")
+        ts.join(re_ts, ["shard", "term"], "full")
         .filter((F.col("df") != F.col("_df")) | (F.col("cf") != F.col("_cf"))
                 | F.col("df").isNull() | F.col("_df").isNull())
-        .withColumn("shard", F.lit(None).cast("int"))
     )
     out.append(_violation(
         ts_bad, "term_stats", F.col("term"),
         F.concat_ws("/", "_df", "_cf"), F.concat_ws("/", "df", "cf")))
 
     cs = read_table(spark, paths, "corpus_stats")
-    re_cs = docs.filter(F.col("doc_len") > 0).agg(
+    re_cs = docs.filter(F.col("doc_len") > 0).groupBy("shard").agg(
         F.count("*").alias("_td"), F.sum("doc_len").alias("_tt"))
     cs_bad = (
-        cs.crossJoin(re_cs)
+        cs.join(re_cs, "shard", "full")
+        .na.fill(0, ["total_docs", "total_tokens", "_td", "_tt"])
         .filter((F.col("total_docs") != F.col("_td"))
                 | (F.col("total_tokens") != F.col("_tt")))
-        .withColumn("shard", F.lit(None).cast("int"))
     )
     out.append(_violation(
         cs_bad, "corpus_stats", F.lit("corpus"),
         F.concat_ws("/", "_td", "_tt"),
         F.concat_ws("/", "total_docs", "total_tokens")))
+
+    heads, stats = stats_state(spark, paths)
+    behind = [(s, str(head), str(stats[s][2]) if s in stats else None)
+              for s, head in sorted(heads.items())
+              if s not in stats or stats[s][2] != head]
+    out.append(_violation(
+        spark.createDataFrame(behind, "shard int, _head string, _stamp string"),
+        "stats_stamp", F.lit("committed_at"), F.col("_head"), F.col("_stamp")))
 
     # materialize the (damage-bounded) violation set, then release the
     # decoded cache — returning a lazy plan would leak the persist

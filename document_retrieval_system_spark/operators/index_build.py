@@ -29,9 +29,10 @@ Design notes for 10^12 docs / 1000 executors:
   computed at query time, so bounds stay valid when the corpus (and
   avgdl) grows across incremental builds.
 - **Resumable waves + lineage** (north_star): shards are processed in
-  waves; each wave appends its partitions and then its manifest rows
-  (data-before-marker ordering).  ``build_index(resume=True)`` skips
-  shards already in the manifest.  The manifest carries per-shard
+  waves; each wave appends its partitions, then its manifest rows
+  (data-before-marker ordering), then its shards' term and corpus
+  stats.  ``build_index(resume=True)`` skips shards already in the
+  manifest.  The manifest carries per-shard
   counters: docs parsed, docs indexed, postings emitted, bytes compressed
   — the reference has only a tqdm bar (indexer.py:403).
 - The table layout (partition column ``shard``, files sorted by term,
@@ -44,6 +45,8 @@ from __future__ import annotations
 
 import bisect
 import os
+import time
+from functools import reduce
 from urllib.parse import urlparse
 
 import numpy as np
@@ -100,14 +103,25 @@ MANIFEST_SCHEMA = (
     "blocks long, doc_bytes long, tf_bytes long, dl_bytes long, pos_bytes long, "
     "status string, kind string, committed_at timestamp"
 )
+# The global stats are kept per shard by the commit that changes a shard
+# (``commit_manifest``).  A term_stats row is one segment's (df, cf) of a
+# term in a shard — an append adds its segment's rows, a snapshot
+# replaces the shard's — so a term's global df is the integer sum of its
+# rows.  corpus_stats holds one row per shard, stamped with the manifest
+# event (``committed_at``) it reflects.
+TERM_STATS_SCHEMA = "shard int, term string, df long, cf long"
+CORPUS_STATS_SCHEMA = (
+    "shard int, total_docs long, total_tokens long, committed_at timestamp"
+)
 TABLE_SCHEMAS = {
     "docs": DOCS_SCHEMA,
     "postings": POSTINGS_SCHEMA,
-    "term_stats": "term string, df long, cf long",
-    "corpus_stats": "total_docs long, avg_doc_length double, total_tokens long",
-    "doc_norms": "shard int, local_no long, tfidf_veclen double",
+    "term_stats": TERM_STATS_SCHEMA,
+    "corpus_stats": CORPUS_STATS_SCHEMA,
     "manifest": MANIFEST_SCHEMA,
 }
+# derived on demand per manifest snapshot (``IndexReader.doc_norms``)
+DOC_NORMS_SCHEMA = "shard int, local_no long, tfidf_veclen double"
 
 
 def _columns(schema: str) -> list[str]:
@@ -339,7 +353,7 @@ def flat_postings(blocks: DataFrame, with_positions: bool | str = False,
 
     ``with_positions`` picks the position form:
 
-    - ``False``: none (ranked scorers, doc sets, ``finalize_index``).
+    - ``False``: none (ranked scorers, doc sets, TF-IDF doc norms).
       Column pruning then keeps pos_bytes out of the scan entirely
       (check .explain ReadSchema);
     - ``True``: decoded ``positions array<int>`` (phrase/NEAR, the SQL
@@ -482,6 +496,13 @@ def _data_files(fs, directory: str, missing_ok: bool = False) -> list:
     return [i for i in fs.get_file_info(sel) if not i.base_name.startswith(("_", "."))]
 
 
+def _fs_root(uri: str):
+    """The pyarrow file system and root path of a local table ``uri``."""
+    if urlparse(uri).scheme:
+        return pafs.FileSystem.from_uri(uri)
+    return pafs.LocalFileSystem(), uri
+
+
 def table_fragments(paths: IndexPaths, table: str, filter: dict | None = None) -> list:
     """The parquet fragments of ``table`` that ``read_table_arrow`` scans
     under ``filter``, each narrowed to the row groups it must read.  A
@@ -492,10 +513,7 @@ def table_fragments(paths: IndexPaths, table: str, filter: dict | None = None) -
     equalities, not on ``is_in``.)  The table must be on the local file
     system (``driver_reads``)."""
     uri = getattr(paths, table)
-    if urlparse(uri).scheme:
-        fs, root = pafs.FileSystem.from_uri(uri)
-    else:
-        fs, root = pafs.LocalFileSystem(), uri
+    fs, root = _fs_root(uri)
     want = {c: sorted(set(v)) for c, v in (filter or {}).items()}
     if table in _SHARD_TABLES:
         shards = want.pop("shard", None)
@@ -577,98 +595,266 @@ def _read_postings_or_empty(spark: SparkSession, paths: IndexPaths) -> DataFrame
     return read_table(spark, paths, "postings")
 
 
-def _done_shards(spark: SparkSession, paths: IndexPaths) -> set[int]:
-    if not fs_exists(spark, paths.manifest):
-        return set()
-    rows = read_table(spark, paths, "manifest").select("shard").collect()
-    return {r["shard"] for r in rows}
-
-
 # shared by every writer, so a new column cannot silently vanish from one path
 DOC_TABLE_COLS = _columns(DOCS_SCHEMA)
-MANIFEST_COLS = _columns(MANIFEST_SCHEMA)
 
 # ---------------------------------------------------------------------------
 # The commit protocol.  Every writer (build waves, stream batches, delete,
 # compaction, merge) lands its data through write_shards, then commits
-# through commit_manifest: data before its manifest row, so a row implies
-# complete partitions.
+# through commit_manifest: data, then its manifest rows, then the stats of
+# the shards it touched.  A manifest row implies complete partitions, and a
+# crash leaves a shard's stats behind its manifest, never ahead of it.
 # ---------------------------------------------------------------------------
 
 # table -> (columns, sort key of a shard's files): docs by ordinal, postings
-# by term so row-group min/max statistics prune term-IN filters
+# and term_stats by term so row-group min/max statistics prune term-IN
+# filters
 _SHARD_TABLES = {
     "docs": (DOC_TABLE_COLS, ["local_no"]),
     "postings": (_BLOCK_COLS, ["term", "block_no"]),
+    "term_stats": (_columns(TERM_STATS_SCHEMA), ["term"]),
+    "corpus_stats": (_columns(CORPUS_STATS_SCHEMA), []),
 }
+
+# the row-group size bound of a term_stats file: a lookup reads one such
+# group per file per query term
+TERM_STATS_ROW_GROUP_BYTES = 1 << 17
+
+
+def shard_layout(frame: DataFrame, table: str, shards) -> DataFrame:
+    """``frame``'s rows of ``table`` laid out as ``write_shards`` writes
+    them: hash-partitioned on shard into one partition per target shard,
+    each partition sorted by the table's key.  A persisted frame keeps
+    this layout, so its shard writes and per-shard aggregates run with no
+    exchange.  It has at least two partitions: Spark plans a one-partition
+    repartition as a single partition, which a second ``shard_layout``
+    over the persisted frame would not recognize and shuffle again."""
+    cols, key = _SHARD_TABLES[table]
+    return (frame.select(*cols)
+            .repartition(max(len(shards), 2), "shard")
+            .sortWithinPartitions("shard", *key))
 
 
 def write_shards(spark: SparkSession, paths: IndexPaths, table: str,
-                 frame: DataFrame, shards, overwrite: bool = False) -> None:
-    """Write ``frame``'s rows of ``table`` ('docs' or 'postings') as shard
-    partitions: one task (and so ~one file) per target shard, each file
-    sorted by the table's key.  Appends add segments; ``overwrite``
+                 frame: DataFrame, shards, overwrite: bool = False,
+                 present=None) -> None:
+    """Write ``frame``'s rows of ``table`` as shard partitions in the
+    ``shard_layout``: one task (and so ~one file) per target shard, each
+    file sorted by the table's key.  Appends add segments; ``overwrite``
     replaces exactly the partitions of ``shards``.
 
     Dynamic overwrite only replaces partitions PRESENT in the written
     frame, so a target shard left empty has its stale partition deleted
-    here; ``frame`` is read again for that, and overwriting callers pass
-    it materialized (its lineage reads the partitions being replaced)."""
-    cols, key = _SHARD_TABLES[table]
+    here.  ``present`` names the shards that have rows; when the caller
+    does not know it, ``frame`` is read again for it, and overwriting
+    callers pass it materialized (its lineage reads the partitions being
+    replaced)."""
     path = getattr(paths, table)
-    writer = (
-        frame.select(*cols)
-        .repartition(max(len(shards), 1), "shard")
-        .sortWithinPartitions("shard", *key)
-        .write.partitionBy("shard")
-    )
+    writer = shard_layout(frame, table, shards).write.partitionBy("shard")
+    if table == "term_stats":
+        writer = writer.option("parquet.block.size", TERM_STATS_ROW_GROUP_BYTES)
     if not overwrite:
         writer.mode("append").parquet(path)
         return
     writer.mode("overwrite").option("partitionOverwriteMode", "dynamic").parquet(path)
-    written = {r["shard"] for r in frame.select("shard").distinct().collect()}
-    for s in {int(x) for x in shards} - written:
+    if present is None:
+        present = {r["shard"] for r in frame.select("shard").distinct().collect()}
+    for s in {int(x) for x in shards} - set(present):
         fs_delete(spark, os.path.join(path, f"shard={s}"))
+
+
+_BYTE_COLS = ("doc_bytes", "tf_bytes", "dl_bytes", "pos_bytes")
+
+
+def _counters() -> dict:
+    """frame -> {counter: per-row value}, summed per shard by
+    ``shard_counts``: ``parsed`` is an event's tokenized docs, ``docs`` a
+    shard's whole post-event docs, ``blocks`` posting blocks."""
+    return {
+        "parsed": {"docs_parsed": F.lit(1), "docs_indexed": F.col("doc_len") > 0,
+                   "tokens": F.col("doc_len")},
+        "docs": {"total_docs": F.col("doc_len") > 0, "total_tokens": F.col("doc_len")},
+        "blocks": {"postings_emitted": F.col("n"), "blocks": F.lit(1),
+                   **{c: F.length(c) for c in _BYTE_COLS}},
+    }
+
+
+_COUNTER_NAMES = ["docs_parsed", "docs_indexed", "tokens", "total_docs", "total_tokens",
+                  "postings_emitted", "blocks", *_BYTE_COLS]
+
+
+def shard_counts(parsed: DataFrame | None = None, docs: DataFrame | None = None,
+                 blocks: DataFrame | None = None) -> dict[int, dict]:
+    """Every per-shard counter of a commit in ONE aggregate and collect:
+    the manifest row's, the corpus stats' and ``write_shards``' emptied
+    partitions all read this dict.  ``{shard: {counter: int}}`` holds the
+    shards with a row in any frame; a counter a frame does not feed is 0."""
+    counters = _counters()
+    frames = {"parsed": parsed, "docs": docs, "blocks": blocks}
+    parts = [
+        df.select("shard", *[
+            F.coalesce(counters[name].get(c, F.lit(0)).cast("long"), F.lit(0)).alias(c)
+            for c in _COUNTER_NAMES])
+        for name, df in frames.items() if df is not None
+    ]
+    agg = reduce(DataFrame.unionByName, parts).groupBy("shard").agg(
+        *[F.sum(c).alias(c) for c in _COUNTER_NAMES])
+    return {r["shard"]: r.asDict() for r in agg.collect()}
+
+
+def _micros(column) -> list:
+    """A timestamp column of a driver read as integer microseconds."""
+    return column.cast(pa.int64()).to_pylist()
+
+
+def manifest_heads(spark: SparkSession, paths: IndexPaths) -> dict[int, int]:
+    """Each committed shard's latest manifest event (``committed_at`` in
+    microseconds), read in the driver."""
+    heads: dict[int, int] = {}
+    if fs_exists(spark, paths.manifest):
+        m = read_table_arrow(spark, paths, "manifest", ["shard", "committed_at"])
+        for s, t in zip(m["shard"].to_pylist(), _micros(m["committed_at"])):
+            heads[s] = max(t, heads.get(s, t))
+    return heads
+
+
+def stats_state(spark: SparkSession, paths: IndexPaths) -> tuple[dict, dict]:
+    """``(heads, stats)``: each shard's latest manifest event
+    (``committed_at`` in microseconds) and its corpus_stats row
+    ``(total_docs, total_tokens, stamp)``.  A shard's stats are current
+    when its stamp equals its head.  Both are driver reads (no Spark job
+    on a local index)."""
+    heads = manifest_heads(spark, paths)
+    c = read_table_arrow(spark, paths, "corpus_stats") if fs_exists(
+        spark, paths.corpus_stats) else _arrow_schema(CORPUS_STATS_SCHEMA).empty_table()
+    stats = {s: (td, tt, t) for s, td, tt, t in zip(
+        c["shard"].to_pylist(), c["total_docs"].to_pylist(),
+        c["total_tokens"].to_pylist(), _micros(c["committed_at"]))}
+    return heads, stats
+
+
+def write_rows(spark: SparkSession, paths: IndexPaths, table: str,
+               rows: list[tuple]) -> None:
+    """Write a commit's few driver rows of ``table``: manifest rows are
+    appended as a new file; a corpus_stats row replaces its shard's row.
+    On the local file system pyarrow writes each file under a hidden name
+    and renames it into place — a shard's corpus row always to the same
+    name, which replaces the old row atomically — so a reader sees every
+    file whole and no Spark job runs.  Elsewhere Spark writes them (a
+    dynamic partition overwrite for corpus_stats)."""
+    if not rows:
+        return
+    arrow = _arrow_schema(TABLE_SCHEMAS[table])
+    t = pa.table([pa.array(col, type=f.type) for col, f in zip(zip(*rows), arrow)],
+                 schema=arrow)
+    uri = getattr(paths, table)
+    if not driver_reads(spark, uri):
+        writer = spark.createDataFrame(t).coalesce(1).write
+        if table == "manifest":
+            writer.mode("append").parquet(uri)
+        else:
+            (writer.partitionBy("shard").mode("overwrite")
+             .option("partitionOverwriteMode", "dynamic").parquet(uri))
+        return
+    import pyarrow.parquet as pq
+    import uuid
+
+    fs, root = _fs_root(uri)
+
+    def publish(directory: str, name: str, table: pa.Table) -> None:
+        fs.create_dir(directory, recursive=True)
+        tmp = f"{directory}/.{uuid.uuid4().hex}.tmp"
+        pq.write_table(table, tmp, filesystem=fs)
+        fs.move(tmp, f"{directory}/{name}")
+
+    if table == "manifest":
+        publish(root, f"part-{uuid.uuid4().hex}.parquet", t)
+        return
+    for i, s in enumerate(t["shard"].to_pylist()):
+        publish(f"{root}/shard={s}", "part-00000.parquet", t.slice(i, 1).drop(["shard"]))
+
+
+def _segment_stats(blocks: DataFrame) -> DataFrame:
+    """term_stats rows of posting blocks: every segment's block 0 carries
+    its (shard, term) df_local and cf_local."""
+    return blocks.filter(F.col("block_no") == 0).select(
+        "shard", "term", F.col("df_local").cast("long").alias("df"),
+        F.col("cf_local").alias("cf"))
 
 
 def commit_manifest(spark: SparkSession, paths: IndexPaths, status: str,
                     kind: str, blocks: DataFrame,
-                    parsed: DataFrame | None = None, shards=()) -> None:
-    """Append one manifest row per shard of the docs ``parsed`` by this
-    event (docs_parsed / docs_indexed counters), or per shard of
-    ``shards`` with NULL parse counters when the event parsed nothing —
-    after the data it describes is written.
+                    parsed: DataFrame | None = None, shards=(),
+                    docs: DataFrame | None = None,
+                    counts: dict | None = None) -> None:
+    """Commit an event whose data is written: append one manifest row per
+    shard of the docs ``parsed`` by it (docs_parsed / docs_indexed
+    counters), or per shard of ``shards`` with NULL parse counters when
+    the event parsed nothing; then bring those shards' stats to the new
+    manifest row.  ``shards`` also names the layout of ``blocks``.
 
     ``blocks`` gives the posting counters, zero where a shard has none:
-    the event's own new segments for kind 'append', the shard's full
-    post-event postings for 'snapshot'.  Callers pass it materialized or
-    read back from the written partitions, so ``build_postings`` never
-    runs twice."""
-    if parsed is None:
-        rows = spark.createDataFrame(
-            [(int(s), None, None) for s in shards],
-            "shard int, docs_parsed long, docs_indexed long",
-        )
+    the event's own new segments for kind 'append' (and 'merge'), the
+    shard's full post-event postings for 'snapshot'.  Callers pass it
+    materialized and laid out by ``shard_layout(.., "postings", shards)``,
+    so ``build_postings`` never runs twice and the stats write runs with
+    no exchange.
+
+    The stats:
+    - 'snapshot': the shard's term_stats partition is replaced by the
+      block-0 rows of ``blocks`` and its corpus row recounted from
+      ``docs``, the shard's whole post-event docs;
+    - 'append': the event's block-0 rows are appended as the shard's new
+      stats segment and the event's counts added to its corpus row —
+      only where the shard's stats were current before the event.  A
+      stale shard (a crash left its stamp behind) is left stale for
+      ``finalize_index`` to recount.
+
+    ``counts``: this event's ``shard_counts(parsed, docs, blocks)``, when
+    the caller already collected it."""
+    if counts is None:
+        counts = shard_counts(parsed, docs, blocks)
+    zero = dict.fromkeys(_COUNTER_NAMES, 0)
+    if parsed is not None:
+        event = sorted(s for s, c in counts.items() if c["docs_parsed"])
     else:
-        rows = parsed.groupBy("shard").agg(
-            F.count("*").alias("docs_parsed"),
-            F.sum(F.when(F.col("doc_len") > 0, 1).otherwise(0)).alias("docs_indexed"),
-        )
-    per_shard = blocks.groupBy("shard").agg(
-        F.sum("n").alias("postings_emitted"),
-        F.count("*").alias("blocks"),
-        *[F.sum(F.length(c)).alias(c)
-          for c in ("doc_bytes", "tf_bytes", "dl_bytes", "pos_bytes")],
-    )
-    (
-        rows.join(per_shard, "shard", "left")
-        .na.fill(0, per_shard.columns[1:])
-        .withColumn("status", F.lit(status))
-        .withColumn("kind", F.lit(kind))
-        .withColumn("committed_at", F.current_timestamp())
-        .select(*MANIFEST_COLS)
-        .coalesce(1).write.mode("append").parquet(paths.manifest)
-    )
+        event = sorted(int(s) for s in shards)
+    if not event:
+        return
+    heads, stats = stats_state(spark, paths)
+    stamp = int(time.time_ns() // 1000)
+    rows = []
+    for s in event:
+        c = counts.get(s, zero)
+        parse = (c["docs_parsed"], c["docs_indexed"]) if parsed is not None else (None, None)
+        rows.append((s, *parse, c["postings_emitted"], c["blocks"],
+                     *[c[b] for b in _BYTE_COLS], status, kind, stamp))
+    write_rows(spark, paths, "manifest", rows)
+
+    # an index whose docs all tokenize empty has no term rows: its
+    # term_stats table is an empty directory, not a missing one
+    fs_touch(spark, paths.term_stats)
+    layout = [int(s) for s in shards] or event  # the layout of ``blocks``
+    with_blocks = [s for s in event if counts.get(s, zero)["blocks"]]
+    if kind == "snapshot":
+        write_shards(spark, paths, "term_stats", _segment_stats(blocks), layout,
+                     overwrite=True, present=with_blocks)
+        corpus = [(s, counts.get(s, zero)["total_docs"],
+                   counts.get(s, zero)["total_tokens"], stamp) for s in event]
+    else:
+        current = [s for s in event
+                   if heads.get(s) == (stats[s][2] if s in stats else None)]
+        seg = [s for s in current if s in with_blocks]
+        if seg:
+            write_shards(spark, paths, "term_stats",
+                         _segment_stats(blocks.filter(F.col("shard").isin(seg))), layout)
+        corpus = []
+        for s in current:
+            td, tt, _ = stats.get(s, (0, 0, None))
+            c = counts.get(s, zero)
+            corpus.append((s, td + c["docs_indexed"], tt + c["tokens"], stamp))
+    # last: a shard's corpus row stamp vouches for its term_stats rows
+    write_rows(spark, paths, "corpus_stats", corpus)
 
 
 def manifest_stats(manifest: DataFrame) -> dict:
@@ -791,7 +977,6 @@ def build_index(
     n_shards: int | None = DEFAULT_N_SHARDS,
     wave_size: int | None = None,
     resume: bool = False,
-    finalize: bool = True,
     analyzer=None,
 ) -> IndexPaths:
     """Build (or resume) the sharded compressed index under ``index_dir``.
@@ -801,17 +986,17 @@ def build_index(
 
     ``wave_size``: shards per commit wave (None = all pending in one
     wave).  Each wave appends docs+postings partitions for its shards,
-    then appends manifest rows — the manifest row IS the per-partition
-    checkpoint; on resume, shards present in the manifest are skipped
-    without recomputation.  Data partitions for shards NOT in the
-    manifest are deleted before reprocessing: a crash between the docs
-    append and the manifest commit leaves orphaned partitions that a
-    naive re-append would duplicate.
+    then appends manifest rows and writes the shards' stats — the
+    manifest row IS the per-partition checkpoint; on resume, shards
+    present in the manifest are skipped without recomputation.  Data and
+    stats partitions for shards NOT in the manifest are deleted before
+    reprocessing: a crash between the docs append and the manifest commit
+    leaves orphaned partitions that a naive re-append would duplicate.
     """
     paths = IndexPaths(index_dir)
     if n_shards is None:
         n_shards = auto_n_shards(pages.count())
-    done = _done_shards(spark, paths) if resume else set()
+    done = set(manifest_heads(spark, paths)) if resume else set()
     pending = [s for s in range(n_shards) if s not in done]
     if not resume:
         # fresh build: clear any previous index (overwrite semantics);
@@ -822,8 +1007,8 @@ def build_index(
         # shards (data-before-marker means no manifest row => the
         # partition contents are not trustworthy)
         for s in pending:
-            fs_delete(spark, os.path.join(paths.docs, f"shard={s}"))
-            fs_delete(spark, os.path.join(paths.postings, f"shard={s}"))
+            for table in _SHARD_TABLES:
+                fs_delete(spark, os.path.join(getattr(paths, table), f"shard={s}"))
 
     waves = (
         [pending]
@@ -841,94 +1026,65 @@ def build_index(
         # repartition comes BEFORE the ordinal window (r6): it is the
         # layout write_shards asks for, so the window and the docs write
         # share one exchange instead of moving the wide tokenized rows
-        # twice.
+        # twice.  Both frames are persisted in that layout, so the
+        # commit's counters and stats read them with no exchange.
         tok = assign_local_no(
             tokenize_docs(docs, analyzer=analyzer)
             .repartition(max(len(wave), 1), "shard")
         ).persist()
+        blocks = shard_layout(build_postings(doc_term_rows(tok)), "postings",
+                              wave).persist()
         try:
             write_shards(spark, paths, "docs", tok, wave)
-            write_shards(spark, paths, "postings",
-                         build_postings(doc_term_rows(tok)), wave)
-            # counters from the partitions just written: this wave's
-            # shards held nothing before it
-            written = _read_postings_or_empty(spark, paths).filter(
-                F.col("shard").isin(wave)
-            )
-            commit_manifest(spark, paths, "done", "append", written, parsed=tok)
+            write_shards(spark, paths, "postings", blocks, wave)
+            commit_manifest(spark, paths, "done", "append", blocks, parsed=tok,
+                            shards=wave)
         finally:
+            blocks.unpersist()
             tok.unpersist()
 
-    if finalize:
-        finalize_index(spark, paths)
+    finalize_index(spark, paths)
     return paths
 
 
-# the row-group size bound of a term_stats file: a lookup reads one such
-# group per file per query term
-TERM_STATS_ROW_GROUP_BYTES = 1 << 17
-
-
 def finalize_index(spark: SparkSession, paths: IndexPaths) -> None:
-    """Global-stat passes that depend on the FULL corpus (rerun after any
-    incremental wave, mirroring the reference's compute_doc_weights after
-    every build, indexer.py:423)."""
-    docs = read_table(spark, paths, "docs")
-    blocks = _read_postings_or_empty(spark, paths)
+    """Bring every shard's stats up to its latest manifest event.
 
-    # corpus stats (I4): only docs with tokens count (indexer.py:53-54,86-90)
-    corpus = docs.filter(F.col("doc_len") > 0).agg(
-        F.count("*").alias("total_docs"),
-        F.avg("doc_len").alias("avg_doc_length"),
-        F.sum("doc_len").alias("total_tokens"),
-    )
-    corpus.coalesce(1).write.mode("overwrite").parquet(paths.corpus_stats)
+    Commits keep the stats of the shards they touch current
+    (``commit_manifest``), so after a normal commit this only reads the
+    manifest and the corpus rows in the driver and runs no Spark job.
+    A shard whose stamp is behind its manifest head — a crash between a
+    commit's manifest row and its stats — is recounted from its own
+    postings and docs (``refresh_shard_stats``).  The reference recomputes
+    its global weights after every build (indexer.py:423); the semantics
+    are kept, the full-corpus rescan is not.  TF-IDF doc norms are not
+    stats of a commit: ``IndexReader.doc_norms`` derives them on demand."""
+    heads, stats = stats_state(spark, paths)
+    stale = sorted(s for s, head in heads.items()
+                   if s not in stats or stats[s][2] != head)
+    if stale:
+        refresh_shard_stats(spark, paths, stale, heads)
 
-    # term stats (I3): global df/cf from per-shard partial aggregates —
-    # the two-stage "salted" aggregation: big groupBy was (shard, term),
-    # this second stage reduces tiny per-shard rows.  Each file is sorted
-    # by term in row groups of bounded size, so a query's term lookup
-    # reads, per file, only the row groups whose term range holds a
-    # query term (``read_table_arrow``).
-    term_stats = (
-        blocks.filter(F.col("block_no") == 0)
-        .groupBy("term")
-        .agg(
-            F.sum("df_local").alias("df"),
-            F.sum("cf_local").alias("cf"),
-        )
-        .sortWithinPartitions("term")
-    )
-    (term_stats.write.mode("overwrite")
-     .option("parquet.block.size", TERM_STATS_ROW_GROUP_BYTES)
-     .parquet(paths.term_stats))
 
-    # TF-IDF doc norms (I7): ||(tf * ln(N/df))_t||_2 per doc, computed by
-    # decoding the index (term-major) and re-grouping by doc — replaces
-    # the reference's O(V x D) loop (indexer.py:254-271).
-    # ln(N/df) from the two sidecars just written: df joined at BLOCK
-    # granularity (one row per term-block, ~100x fewer rows than
-    # postings), N from the 1-row corpus_stats (so docs are scanned once,
-    # with no driver round trip), then decoded with idf attached — the
-    # per-doc groupBy is the only posting-cardinality shuffle in this
-    # pass.  df joins the blocks directly, not through a term-level
-    # (term_stats x corpus_stats) frame: a cross join's size estimate is
-    # the product of its inputs', so the planner would stream that frame
-    # past broadcast (or, at scale, shuffled) blocks, which reorders the
-    # terms of a doc's sum and moves its norm by an ulp.
-    blocks_with_idf = (
-        blocks.select("shard", "term", "n", "doc_bytes", "tf_bytes", "dl_bytes")
-        .join(read_table(spark, paths, "term_stats").select("term", "df"), "term")
-        .crossJoin(read_table(spark, paths, "corpus_stats").select("total_docs"))
-        .withColumn("idf", F.log(F.col("total_docs") / F.col("df")))
-    )
-    flat = flat_postings(blocks_with_idf, with_positions=False, extra_cols=["idf"])
-    weighted = flat.withColumn("w", F.col("tf") * F.col("idf"))
-    norms = (
-        weighted.groupBy("shard", "local_no")
-        .agg(F.sqrt(F.sum(F.col("w") * F.col("w"))).alias("tfidf_veclen"))
-    )
-    norms.write.mode("overwrite").parquet(paths.doc_norms)
+def refresh_shard_stats(spark: SparkSession, paths: IndexPaths, shards: list[int],
+                        heads: dict) -> None:
+    """Recount the stats of ``shards`` from their own postings and docs,
+    stamped with their manifest ``heads``: term_stats from every
+    segment's block 0 (I3), summed per (shard, term); corpus stats from
+    the docs with tokens (I4, indexer.py:53-54,86-90).  Other shards are
+    never read."""
+    shard_filter = F.col("shard").isin([int(s) for s in shards])
+    docs = read_table(spark, paths, "docs").filter(shard_filter)
+    counts = shard_counts(docs=docs)
+    rows = (_segment_stats(_read_postings_or_empty(spark, paths).filter(shard_filter))
+            .repartition(max(len(shards), 1), "shard")
+            .groupBy("shard", "term").agg(F.sum("df").alias("df"), F.sum("cf").alias("cf")))
+    write_shards(spark, paths, "term_stats", rows, shards, overwrite=True,
+                 present=[s for s, c in counts.items() if c["total_docs"]])
+    zero = dict.fromkeys(_COUNTER_NAMES, 0)
+    write_rows(spark, paths, "corpus_stats", [
+        (s, counts.get(s, zero)["total_docs"], counts.get(s, zero)["total_tokens"],
+         heads[s]) for s in shards])
 
 
 # ---------------------------------------------------------------------------
@@ -961,8 +1117,8 @@ def rebuild_shard_postings(spark: SparkSession, paths: IndexPaths,
                            shards: list[int], status: str,
                            parsed: DataFrame | None = None) -> None:
     """Rebuild the posting partitions of ``shards`` from (decoded current
-    postings ∩ current docs), dynamic-overwrite them, and append snapshot
-    manifest rows.  Pure codec work — position payloads byte-sliced, the
+    postings ∩ current docs), dynamic-overwrite them, and commit snapshot
+    manifest rows and stats.  Pure codec work — position payloads byte-sliced, the
     analyzer never runs.
 
     This one primitive backs four operations:
@@ -981,30 +1137,34 @@ def rebuild_shard_postings(spark: SparkSession, paths: IndexPaths,
       state is idempotent and converges to the op's intended outcome.
     """
     shard_filter = F.col("shard").isin([int(s) for s in shards])
-    doc_map = (
-        read_table(spark, paths, "docs").filter(shard_filter)
-        .select("shard", "local_no")
-    )
+    docs = read_table(spark, paths, "docs").filter(shard_filter)
     # first-ever stream batch crash window: docs written, postings never
     # created — the replay reads an empty frame, not PATH_NOT_FOUND
     old_blocks = _read_postings_or_empty(spark, paths).filter(shard_filter)
     rows = (
         flat_postings(old_blocks, with_positions="bytes")
-        .join(doc_map, ["shard", "local_no"])  # inner join drops orphans
+        .join(docs.select("shard", "local_no"), ["shard", "local_no"])  # drops orphans
         .select("shard", "local_no", "term", "tf", "pos_bytes", "doc_len")
     )
     if parsed is not None:
         rows = rows.unionByName(doc_term_rows(parsed))
-    # lineage reads paths.postings, which is overwritten below — freeze
-    blocks = build_postings(rows).localCheckpoint(eager=True)
-    write_shards(spark, paths, "postings", blocks, shards, overwrite=True)
-    if _AFTER_POSTINGS_REWRITE_HOOK is not None:
-        _AFTER_POSTINGS_REWRITE_HOOK()
-    # snapshot rows for EVERY target shard (zero counters where emptied —
-    # without them manifest_stats would keep the pre-rewrite counts); a
-    # stream update's batch has rows in every shard it rewrites
-    commit_manifest(spark, paths, status, "snapshot", blocks, parsed=parsed,
-                    shards=shards)
+    # lineage reads paths.postings, which is overwritten below — freeze;
+    # the blocks built from the frozen rows keep the shard layout
+    rows = rows.localCheckpoint(eager=True)
+    blocks = shard_layout(build_postings(rows), "postings", shards).persist()
+    try:
+        counts = shard_counts(parsed, docs, blocks)
+        write_shards(spark, paths, "postings", blocks, shards, overwrite=True,
+                     present=[s for s, c in counts.items() if c["blocks"]])
+        if _AFTER_POSTINGS_REWRITE_HOOK is not None:
+            _AFTER_POSTINGS_REWRITE_HOOK()
+        # snapshot rows for EVERY target shard (zero counters where emptied —
+        # without them manifest_stats would keep the pre-rewrite counts); a
+        # stream update's batch has rows in every shard it rewrites
+        commit_manifest(spark, paths, status, "snapshot", blocks, parsed=parsed,
+                        shards=shards, docs=docs, counts=counts)
+    finally:
+        blocks.unpersist()
 
 
 def repair_maintenance(spark: SparkSession, paths: IndexPaths) -> dict | None:
@@ -1031,6 +1191,42 @@ def repair_maintenance(spark: SparkSession, paths: IndexPaths) -> dict | None:
     return intent
 
 
+def snapshot_id(spark: SparkSession, paths: IndexPaths) -> str:
+    """A name for the index's current state: a digest of every shard's
+    manifest head and stats stamp (``stats_state``).  Every commit moves
+    the head of each shard it touches, so any change of the data or the
+    stats gives a new name."""
+    import hashlib
+
+    heads, stats = stats_state(spark, paths)
+    state = sorted((s, heads.get(s), stats.get(s, (0, 0, None))[2])
+                   for s in set(heads) | set(stats))
+    return hashlib.sha1(repr(state).encode()).hexdigest()[:16]
+
+
+def _tfidf_norms(reader) -> DataFrame:
+    """TF-IDF doc norms (I7): ||(tf * ln(N/df))_t||_2 per doc, computed by
+    decoding the index (term-major) and re-grouping by doc — replaces the
+    reference's O(V x D) loop (indexer.py:254-271).  df joins at BLOCK
+    granularity (one row per term-block, ~100x fewer rows than postings)
+    and N is the corpus literal, then the blocks decode with idf attached
+    — the per-doc groupBy is the only posting-cardinality shuffle.  The
+    small global df view is the broadcast side, so the blocks stream in
+    scan order and every doc sums its terms in one fixed order."""
+    n = reader.corpus()["total_docs"]
+    blocks_with_idf = (
+        reader.postings().select("shard", "term", "n", "doc_bytes", "tf_bytes", "dl_bytes")
+        .join(reader.term_stats().select("term", "df"), "term")
+        .withColumn("idf", F.log(F.lit(n) / F.col("df")))
+    )
+    flat = flat_postings(blocks_with_idf, with_positions=False, extra_cols=["idf"])
+    weighted = flat.withColumn("w", F.col("tf") * F.col("idf"))
+    return (
+        weighted.groupBy("shard", "local_no")
+        .agg(F.sqrt(F.sum(F.col("w") * F.col("w"))).alias("tfidf_veclen"))
+    )
+
+
 class IndexReader:
     """Lazy handles on the index tables + broadcast-able corpus scalars.
     Every call reads the tables afresh: a reader never pins a snapshot."""
@@ -1049,33 +1245,69 @@ class IndexReader:
         return _read_postings_or_empty(self.spark, self.paths)
 
     def term_stats(self) -> DataFrame:
-        return self._table("term_stats")
+        """The global ``(term, df, cf)``: the integer sums of every shard's
+        per-segment rows."""
+        return self._table("term_stats").groupBy("term").agg(
+            F.sum("df").alias("df"), F.sum("cf").alias("cf"))
 
     def doc_norms(self) -> DataFrame:
-        return self._table("doc_norms")
+        """The TF-IDF doc norms of the current snapshot (``snapshot_id``),
+        only read by ``tfidf_search``.  The first call after a commit
+        computes them (``_tfidf_norms``) into a hidden directory and
+        renames it to ``doc_norms/<snapshot>``, so a concurrent reader
+        sees the whole table or none; earlier snapshots' tables are then
+        deleted.  Later calls read the published table."""
+        spark, root = self.spark, self.paths.doc_norms
+        snap = os.path.join(root, snapshot_id(spark, self.paths))
+        if not fs_exists(spark, snap):
+            import uuid
+
+            tmp = os.path.join(root, f"_tmp-{uuid.uuid4().hex}")
+            _tfidf_norms(self).write.parquet(tmp)
+            fs, hsnap = _hadoop_fs(spark, snap)
+            fs.rename(_hadoop_fs(spark, tmp)[1], hsnap)
+            # a concurrent reader that published first leaves ours nested
+            # in (or beside) its table, under a hidden name: drop it
+            fs_delete(spark, tmp)
+            fs_delete(spark, os.path.join(snap, os.path.basename(tmp)))
+            for st in fs.listStatus(hsnap.getParent()):
+                name = st.getPath().getName()
+                if name != hsnap.getName() and not name.startswith(("_", ".")):
+                    fs.delete(st.getPath(), True)
+        return spark.read.schema(DOC_NORMS_SCHEMA).parquet(snap)
 
     def manifest(self) -> DataFrame:
         return self._table("manifest")
 
     def corpus(self) -> dict:
-        """The corpus scalars from the 1-row corpus_stats, read in the
-        driver (no Spark job on a local index, see ``read_table_arrow``)."""
-        return _corpus_scalars(
-            read_table_arrow(self.spark, self.paths, "corpus_stats").to_pylist()[0])
+        """The corpus scalars: the sums of the per-shard corpus_stats rows,
+        read in the driver (no Spark job on a local index, see
+        ``read_table_arrow``)."""
+        t = read_table_arrow(self.spark, self.paths, "corpus_stats",
+                             ["total_docs", "total_tokens"])
+        return _corpus_scalars(sum(t["total_docs"].to_pylist()),
+                               sum(t["total_tokens"].to_pylist()))
 
     def query_stats(self, terms) -> tuple[dict, dict]:
         """``(corpus(), {term: df})`` for the query ``terms``, read in the
-        driver (no Spark job on a local index): the 1-row corpus_stats and
-        the rows of the term-sorted term_stats whose row groups can hold a
-        query term.  Terms absent from the index are absent from the dict."""
+        driver (no Spark job on a local index): the corpus rows and the
+        rows of the term-sorted term_stats files whose row groups can hold
+        a query term, one file per shard and stats segment, summed per
+        term.  Terms absent from the index are absent from the dict."""
         ts = read_table_arrow(self.spark, self.paths, "term_stats", ["term", "df"],
                               {"term": terms})
-        return self.corpus(), dict(zip(ts["term"].to_pylist(), ts["df"].to_pylist()))
+        dfs: dict[str, int] = {}
+        for t, df in zip(ts["term"].to_pylist(), ts["df"].to_pylist()):
+            dfs[t] = dfs.get(t, 0) + df
+        return self.corpus(), dfs
 
 
-def _corpus_scalars(row) -> dict:
+def _corpus_scalars(total_docs: int, total_tokens: int) -> dict:
+    # Spark's avg(doc_len) sums the int column as doubles — exact below
+    # 2**53 — then divides by the count: this division gives its bits
+    assert total_tokens < 2 ** 53, total_tokens
     return {
-        "total_docs": row["total_docs"],
-        "avg_doc_length": float(row["avg_doc_length"] or 0.0),
-        "total_tokens": row["total_tokens"],
+        "total_docs": total_docs,
+        "avg_doc_length": float(total_tokens) / total_docs if total_docs else 0.0,
+        "total_tokens": total_tokens,
     }

@@ -55,6 +55,7 @@ from document_retrieval_system_spark.operators.index_build import (
     flat_postings,
     fs_delete,
     read_table,
+    shard_layout,
     write_shards,
     _read_postings_or_empty,
 )
@@ -142,10 +143,15 @@ def merge_indexes(
         rows = union_rows.join(remap, ["segment", "old_shard", "old_local"]).select(
             "shard", "local_no", "term", "tf", "pos_bytes", "doc_len"
         )
-        write_shards(spark, out, "postings", build_postings(rows), shards)
-        # one 'merge' row per shard, counted from the fresh output
-        commit_manifest(spark, out, "done", "merge",
-                        _read_postings_or_empty(spark, out), parsed=renum)
+        blocks = shard_layout(build_postings(rows), "postings", shards).persist()
+        try:
+            write_shards(spark, out, "postings", blocks, shards)
+            # one 'merge' row and the stats per shard, counted from the
+            # materialized output
+            commit_manifest(spark, out, "done", "merge", blocks, parsed=renum,
+                            shards=shards)
+        finally:
+            blocks.unpersist()
     finally:
         renum.unpersist()
 

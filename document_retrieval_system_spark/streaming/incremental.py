@@ -8,7 +8,8 @@ feeding ``foreachBatch``:
 
 - **inserts** (urls never seen) append **delta segments** to the same
   index layout the batch builder writes: docs + posting blocks under a
-  fresh ``local_no`` range per shard, manifest row per batch.
+  fresh ``local_no`` range per shard, manifest row per batch, and a
+  term-stats segment (the new blocks' block-0 df/cf) per shard.
 - **updates** (url re-sent with newer warc_ts) map the reference's
   remove-then-add: the affected shards' docs and postings partitions are
   REWRITTEN without the superseded rows (dynamic partition overwrite),
@@ -27,6 +28,10 @@ boolean, phrase) free of tombstone filtering.
 
 Every write goes through the commit protocol of ``operators/index_build``
 (``write_shards`` then ``commit_manifest``), like the batch builder's.
+The commit brings the touched shards' term and corpus stats up to their
+new manifest row from the frames the batch already holds, so a batch
+costs O(batch + touched shards): untouched shards are never read, and
+``finalize_index`` has nothing left to rescan.
 """
 
 from __future__ import annotations
@@ -50,6 +55,7 @@ from document_retrieval_system_spark.operators.index_build import (
     fs_touch,
     read_table,
     rebuild_shard_postings,
+    shard_layout,
     tokenize_docs,
     write_shards,
     _read_postings_or_empty,
@@ -65,16 +71,24 @@ def _append_inserts(spark: SparkSession, ins: DataFrame, shards: list[int],
                     batch_id: int, paths: IndexPaths) -> None:
     """Pure-append fast path for shards with no superseded versions: a
     delta segment per shard, under ordinals past the shard's current max."""
-    base = read_table(spark, paths, "docs") if fs_exists(spark, paths.docs) else None
+    base = (read_table(spark, paths, "docs").filter(F.col("shard").isin(shards))
+            if fs_exists(spark, paths.docs) else None)
     # localCheckpoint (eager) truncates lineage: the plan reads paths.docs
     # (ordinal base + upsert guard) and the appends below would poison any
     # recomputation.  On a cluster use checkpoint() with a reliable dir.
     tok = assign_local_no(tokenize_docs(ins), base=base).localCheckpoint(eager=True)
     write_shards(spark, paths, "docs", tok, shards)
-    blocks = build_postings(doc_term_rows(tok)).localCheckpoint(eager=True)
-    write_shards(spark, paths, "postings", blocks, shards)
-    commit_manifest(spark, paths, f"stream-batch-{batch_id}", "append", blocks,
-                    parsed=tok)
+    # built from the frozen tok only, so persisting is safe; kept in the
+    # shard layout, the postings write, the counters and the stats segment
+    # all read it with no exchange
+    blocks = shard_layout(build_postings(doc_term_rows(tok)), "postings",
+                          shards).persist()
+    try:
+        write_shards(spark, paths, "postings", blocks, shards)
+        commit_manifest(spark, paths, f"stream-batch-{batch_id}", "append", blocks,
+                        parsed=tok, shards=shards)
+    finally:
+        blocks.unpersist()
 
 
 def _rewrite_updated_shards(spark: SparkSession, batch_aff: DataFrame,
@@ -121,7 +135,9 @@ def _rewrite_updated_shards(spark: SparkSession, batch_aff: DataFrame,
         .unionByName(fresh.select(*DOC_TABLE_COLS))
         .localCheckpoint(eager=True)
     )
-    write_shards(spark, paths, "docs", docs, affected, overwrite=True)
+    # every affected shard holds rows of this batch: none is emptied
+    write_shards(spark, paths, "docs", docs, affected, overwrite=True,
+                 present=affected)
     if _AFTER_DOCS_WRITE_HOOK is not None:
         _AFTER_DOCS_WRITE_HOOK()
     rebuild_shard_postings(spark, paths, affected,
@@ -134,8 +150,6 @@ def _intent_marker(paths: IndexPaths, batch_id: int) -> str:
 
 def _append_batch(spark: SparkSession, batch_df: DataFrame, batch_id: int,
                   paths: IndexPaths, n_shards: int) -> None:
-    if batch_df.isEmpty():
-        return
     docs = add_doc_identity(batch_df, n_shards)
 
     # Idempotency across crash/replay: an intent marker is written before
@@ -152,11 +166,13 @@ def _append_batch(spark: SparkSession, batch_df: DataFrame, batch_id: int,
     replay_incomplete = fs_exists(spark, intent)
 
     # I6 incremental-upsert guard: drop urls already indexed with
-    # warc_ts >= incoming (indexer.py:443-445); flag true updates.
+    # warc_ts >= incoming (indexer.py:443-445); flag true updates.  Only
+    # the docs partitions of the shards the batch touches are read.
     if fs_exists(spark, paths.docs):
-        existing = read_table(spark, paths, "docs").select(
-            "doc_id", F.col("warc_ts").alias("old_ts")
-        )
+        touched = [r["shard"] for r in docs.select("shard").distinct().collect()]
+        existing = read_table(spark, paths, "docs").filter(
+            F.col("shard").isin(touched)
+        ).select("doc_id", F.col("warc_ts").alias("old_ts"))
         newer = (
             (F.col("warc_ts") >= F.col("old_ts")) if replay_incomplete
             else (F.col("warc_ts") > F.col("old_ts"))
@@ -171,6 +187,8 @@ def _append_batch(spark: SparkSession, batch_df: DataFrame, batch_id: int,
         docs = docs.withColumn("is_update", F.lit(False))
     # freeze before ANY write below mutates paths this plan reads
     docs = docs.localCheckpoint(eager=True)
+    # an empty batch (or one whose every url is already indexed as new or
+    # newer) collects nothing here and returns below
     has_update = {
         r["shard"]: r["upd"]
         for r in docs.groupBy("shard").agg(F.max("is_update").alias("upd")).collect()
@@ -237,10 +255,11 @@ def compact_shards(spark: SparkSession, paths: IndexPaths,
 
 def run_incremental(spark: SparkSession, incoming_dir: str, index_dir: str,
                     checkpoint_dir: str, n_shards: int = 32,
-                    finalize: bool = True, compact: bool = False) -> None:
-    """Process all currently-available new-page files once (availableNow),
-    then refresh global stats.  Long-running deployments drop
-    availableNow and leave the stream up."""
+                    compact: bool = False) -> None:
+    """Process all currently-available new-page files once (availableNow).
+    Every batch commits the stats of the shards it touches; the closing
+    ``finalize_index`` only recounts a shard a crash left stale.
+    Long-running deployments drop availableNow and leave the stream up."""
     paths = IndexPaths(index_dir)
     from document_retrieval_system_spark.operators.index_build import (
         repair_maintenance,
@@ -262,5 +281,4 @@ def run_incremental(spark: SparkSession, incoming_dir: str, index_dir: str,
     query.awaitTermination()
     if compact:
         compact_shards(spark, paths)
-    if finalize:
-        finalize_index(spark, paths)
+    finalize_index(spark, paths)

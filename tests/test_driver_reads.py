@@ -42,12 +42,14 @@ K = 10
 
 
 def _spark_query_stats(reader, terms):
-    """The Spark twin of ``IndexReader.query_stats``: the 1-row
-    corpus_stats and the term-filtered term_stats, collected."""
-    corpus = reader._table("corpus_stats").collect()[0]
+    """The Spark twin of ``IndexReader.query_stats``: the per-shard
+    corpus_stats rows summed, and the term-filtered global term_stats,
+    collected."""
+    corpus = reader._table("corpus_stats").agg(
+        F.sum("total_docs").alias("td"), F.sum("total_tokens").alias("tt")).collect()[0]
     dfs = {r["term"]: r["df"] for r in reader.term_stats().filter(
         F.col("term").isin(sorted(set(terms)))).collect()}
-    return index_build._corpus_scalars(corpus), dfs
+    return index_build._corpus_scalars(corpus["td"], corpus["tt"]), dfs
 
 
 def _rows(df):
@@ -87,7 +89,7 @@ def test_wand_equals_exhaustive_on_absent_and_duplicate_terms(reader):
 
 
 def test_term_stats_lookup_reads_only_covering_row_groups(spark, monkeypatch):
-    """finalize_index writes each term_stats file sorted by term in
+    """A commit writes each shard's term_stats file sorted by term in
     bounded row groups; the driver's term lookup opens only the row
     groups whose term min/max covers a query term, and returns what
     Spark's filtered read returns."""
@@ -97,7 +99,7 @@ def test_term_stats_lookup_reads_only_covering_row_groups(spark, monkeypatch):
         build_index(spark, spark.createDataFrame(gen_pages_pandas(60), PAGES_DDL),
                     idx, n_shards=2)
         paths = IndexPaths(idx)
-        files = sorted(glob.glob(os.path.join(paths.term_stats, "*.parquet")))
+        files = sorted(glob.glob(os.path.join(paths.term_stats, "shard=*", "*.parquet")))
         ranges = {}
         for f in files:
             pf = pq.ParquetFile(f)
@@ -230,3 +232,30 @@ def test_driver_reads_leave_other_file_systems_to_spark(spark, reader, index_dir
     assert remote.query_stats(terms) == reader.query_stats(terms)
     _assert_wand_is_exhaustive(remote, ["数据 算法", "系统"], "zh", "viewfs",
                                exhaustive=reader)
+
+
+def test_commits_on_other_file_systems_write_through_spark(spark, assert_stats_current):
+    """On a file system pyarrow does not share with Spark, a commit's
+    manifest and corpus rows are Spark writes: a build and a stream batch
+    through a ``viewfs://`` mount keep the stats the same commits keep on
+    the local file system."""
+    local = tempfile.mkdtemp(prefix="drs_local_commits_")
+    target = tempfile.mkdtemp(prefix="drs_viewfs_commits_")
+    mount = f"drs{uuid.uuid4().hex[:8]}"
+    spark.sparkContext._jsc.hadoopConfiguration().set(
+        f"fs.viewfs.mounttable.{mount}.link./data", "file://" + target)
+    remote = f"viewfs://{mount}/data/idx"
+    try:
+        assert not index_build.driver_reads(spark, remote)
+        pages = spark.createDataFrame(gen_pages_pandas(30), PAGES_DDL)
+        batch = spark.createDataFrame(gen_pages_pandas(8, start=30), PAGES_DDL)
+        for d in (local, remote):
+            build_index(spark, pages, d, n_shards=2)
+            _append_batch(spark, batch, 0, IndexPaths(d), 2)
+        terms = ["search", "engine", "zzzzunknowntermzzz"]
+        assert (IndexReader(spark, remote).query_stats(terms)
+                == IndexReader(spark, local).query_stats(terms))
+        assert_stats_current(os.path.join(target, "idx"), "viewfs commits")
+    finally:
+        shutil.rmtree(local, ignore_errors=True)
+        shutil.rmtree(target, ignore_errors=True)

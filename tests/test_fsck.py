@@ -112,19 +112,27 @@ def test_tampered_block_max_tf_detected(spark, built):
 
 
 def test_tampered_term_stats_detected(spark, built):
+    """One shard's df of one term is off: the per-shard audit names that
+    shard and term, and nothing else fires."""
+    import glob
+
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
     d = _copy(built)
     try:
         paths = IndexPaths(d)
-        ts = spark.read.parquet(paths.term_stats)
-        t = ts.orderBy("term").limit(1).collect()[0]["term"]
-        mut = ts.withColumn(
-            "df",
-            F.when(F.col("term") == t, F.col("df") + 7).otherwise(F.col("df")),
-        ).localCheckpoint(eager=True)
-        shutil.rmtree(paths.term_stats)
-        mut.write.parquet(paths.term_stats)
-        got = _checks(spark, d)
-        assert got == {"term_stats"}
+        (f,) = glob.glob(os.path.join(paths.term_stats, "shard=1", "*.parquet"))
+        t = pq.read_table(f)
+        term = t["term"][0].as_py()
+        t = t.set_column(t.schema.get_field_index("df"), "df", pc.if_else(
+            pc.equal(t["term"], term), pc.add(t["df"], 7), t["df"]))
+        os.remove(f)
+        os.remove(os.path.join(os.path.dirname(f), f".{os.path.basename(f)}.crc"))
+        pq.write_table(t, f)
+        got = fsck_index(spark, d).collect()
+        assert {(r["check"], r["shard"], r["key"]) for r in got} == {
+            ("term_stats", 1, term)}
     finally:
         shutil.rmtree(d, ignore_errors=True)
 

@@ -1,10 +1,12 @@
 """Plan-quality gates: the properties that make the engine survive a
 100x scale-up must be visible in the physical plan, not assumed."""
 
+import datetime
 import shutil
 import tempfile
 import uuid
 
+import pandas as pd
 from pyspark.sql import functions as F
 
 from document_retrieval_system_spark.operators.search import flat_postings
@@ -115,6 +117,11 @@ def test_prefix_search_pushes_startswith_and_matches_scan(reader):
     assert got == want and got
 
 
+# job counts measured on the 40-page, 4-shard index below
+BUILD_JOBS = 9
+STREAM_BATCH_JOBS = 36
+
+
 def _spark_jobs(spark, action) -> int:
     """Spark jobs ``action`` launches, counted in its own job group."""
     sc = spark.sparkContext
@@ -132,9 +139,13 @@ def test_index_reads_run_only_the_jobs_that_move_data(spark, reader):
     launches a schema-inference job; the corpus scalars and query-term
     dfs are driver reads with no job; a WAND request, single or batched,
     runs only the block scan with its shard exchange and the kernel
-    stage, and finishes in the driver; finalize_index takes N from the
-    corpus_stats file it just wrote instead of scanning docs again."""
+    stage, and finishes in the driver.  Commits keep the stats current,
+    so finalize_index on a committed index only reads the manifest and
+    corpus rows in the driver; a build and a stream batch (one shard
+    appended to, one rewritten) each run at most their pinned counts."""
     from document_retrieval_system_spark.operators.index_build import (
+        IndexPaths,
+        add_doc_identity,
         build_index,
         finalize_index,
     )
@@ -142,7 +153,12 @@ def test_index_reads_run_only_the_jobs_that_move_data(spark, reader):
         bm25_wand_search,
         bm25_wand_search_many,
     )
-    from document_retrieval_system_spark.sources.corpus import pages_df
+    from document_retrieval_system_spark.sources.corpus import (
+        PAGES_DDL,
+        gen_pages_pandas,
+        pages_df,
+    )
+    from document_retrieval_system_spark.streaming.incremental import _append_batch
 
     assert _spark_jobs(spark, lambda: reader.query_stats(["数据", "算法"])) == 0
     assert _spark_jobs(spark, reader.corpus) == 0
@@ -156,9 +172,24 @@ def test_index_reads_run_only_the_jobs_that_move_data(spark, reader):
 
     idx = tempfile.mkdtemp(prefix="drs_job_budget_")
     try:
-        paths = build_index(spark, pages_df(spark, 40), idx, n_shards=4,
-                            finalize=False)
+        pages = pages_df(spark, 40)
+        paths = IndexPaths(idx)
+        build = _spark_jobs(spark, lambda: build_index(spark, pages, idx, n_shards=4))
+        assert build <= BUILD_JOBS, build
         finalize = _spark_jobs(spark, lambda: finalize_index(spark, paths))
-        assert finalize <= 8, finalize
+        assert finalize <= 1, finalize
+        # new urls (appended to their shards) and re-sent urls of shard 0
+        # with a newer warc_ts (shard 0 rewritten)
+        old = spark.read.parquet(paths.docs).filter("shard = 0").orderBy("url")
+        resent = pd.DataFrame(
+            [(r["url"], r["warc_ts"] + datetime.timedelta(days=1), None,
+              "re-sent budget page", "en") for r in old.limit(2).collect()],
+            columns=["url", "warc_ts", "html", "text", "lang"])
+        batch = spark.createDataFrame(
+            pd.concat([gen_pages_pandas(8, start=40), resent]), PAGES_DDL)
+        assert {r["shard"] for r in add_doc_identity(batch, 4).collect()} - {0}
+        stream = _spark_jobs(spark, lambda: (_append_batch(spark, batch, 0, paths, 4),
+                                             finalize_index(spark, paths)))
+        assert stream <= STREAM_BATCH_JOBS, stream
     finally:
         shutil.rmtree(idx, ignore_errors=True)

@@ -33,17 +33,17 @@ def test_partial_build_then_resume_matches_oneshot(spark):
     try:
         build_index(spark, pages, one, n_shards=SHARDS)
 
-        # interrupted build: first wave only (2 of 6 shards), no finalize
+        # interrupted build: first wave only (2 of 6 shards)
         build_index(
             spark, pages.filter(F.pmod(F.xxhash64(F.md5("url")), F.lit(SHARDS)) < 2),
-            two, n_shards=SHARDS, wave_size=2, finalize=False,
+            two, n_shards=SHARDS, wave_size=2,
         )
         partial = IndexReader(spark, two)
         done_before = {r["shard"] for r in partial.manifest().select("shard").collect()}
         assert 0 < len(done_before) < SHARDS
 
         # resume: completed shards are skipped (their manifest rows survive
-        # unchanged), remaining shards are appended, then finalize.
+        # unchanged), remaining shards are appended with their stats.
         build_index(spark, pages, two, n_shards=SHARDS, wave_size=2, resume=True)
         resumed = IndexReader(spark, two)
         assert {r["shard"] for r in resumed.manifest().select("shard").collect()} == set(
@@ -88,7 +88,7 @@ def test_resume_repairs_crash_between_data_and_manifest(spark):
         # wave 1 committed cleanly (shards 0-1)
         build_index(
             spark, pages.filter(F.pmod(F.xxhash64(F.md5("url")), F.lit(SHARDS)) < 2),
-            two, n_shards=SHARDS, wave_size=2, finalize=False,
+            two, n_shards=SHARDS, wave_size=2,
         )
         # simulate the crash: shard 2's docs land WITHOUT a manifest row
         paths = IndexPaths(two)

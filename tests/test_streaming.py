@@ -207,7 +207,8 @@ def test_update_rewrite_analyzer_bounded_by_batch(spark, monkeypatch):
             shutil.rmtree(p, ignore_errors=True)
 
 
-def test_crash_replay_between_docs_and_postings_is_idempotent(spark, monkeypatch):
+def test_crash_replay_between_docs_and_postings_is_idempotent(spark, monkeypatch,
+                                                              assert_stats_current):
     """The replay crash window (ADVICE r2): docs partitions overwritten,
     crash before the postings overwrite, Structured Streaming re-runs the
     SAME batch whose warc_ts now EQUALS the stored ones.  The intent
@@ -253,6 +254,7 @@ def test_crash_replay_between_docs_and_postings_is_idempotent(spark, monkeypatch
             finalize_index,
         )
         finalize_index(spark, paths)
+        assert_stats_current(d["index"], "after the replay")
 
         r2 = IndexReader(spark, d["index"])
         assert r2.docs().count() == 40
@@ -321,7 +323,8 @@ def test_compaction_merges_delta_segments(spark):
             shutil.rmtree(p, ignore_errors=True)
 
 
-def test_crash_replay_with_inserts_into_updated_shard(spark, monkeypatch):
+def test_crash_replay_with_inserts_into_updated_shard(spark, monkeypatch,
+                                                      assert_stats_current):
     """The r3 review's corruption repro: a batch carrying BOTH an update
     and brand-new urls that land in the same shard, crashing between the
     docs and postings overwrites.  Under dense renumbering the replay
@@ -385,6 +388,7 @@ def test_crash_replay_with_inserts_into_updated_shard(spark, monkeypatch):
             finalize_index,
         )
         finalize_index(spark, paths)
+        assert_stats_current(idx, "after the replay")
 
         r2 = IndexReader(spark, idx)
         assert r2.docs().count() == 48
@@ -404,7 +408,8 @@ def test_crash_replay_with_inserts_into_updated_shard(spark, monkeypatch):
         shutil.rmtree(oneshot, ignore_errors=True)
 
 
-def test_first_batch_crash_before_postings_replays_clean(spark, monkeypatch):
+def test_first_batch_crash_before_postings_replays_clean(spark, monkeypatch,
+                                                         assert_stats_current):
     """Very first batch of a brand-new index crashing after the docs
     append but before any postings exist: the replay routes every row
     (equal warc_ts + intent marker => >= guard) through the shard
@@ -438,6 +443,7 @@ def test_first_batch_crash_before_postings_replays_clean(spark, monkeypatch):
         inc._append_batch(spark, batch, 0, paths, 2)  # replay
         assert not fs_exists(spark, inc._intent_marker(paths, 0))
         finalize_index(spark, paths)
+        assert_stats_current(idx, "after the replay")
 
         build_index(spark, batch, oneshot, n_shards=2)
         r, ro = IndexReader(spark, idx), IndexReader(spark, oneshot)
@@ -552,7 +558,8 @@ def test_manifest_stats_full_lifecycle(spark):
     finally:
         shutil.rmtree(idx, ignore_errors=True)
 
-def test_delete_crash_before_postings_rebuild_repairs(spark, monkeypatch):
+def test_delete_crash_before_postings_rebuild_repairs(spark, monkeypatch,
+                                                      assert_stats_current):
     """A delete that dies between the docs overwrite and the postings
     rebuild leaves orphaned postings + a surviving intent marker; the
     next maintenance entry point must repair the shards (orphans dropped,
@@ -605,6 +612,7 @@ def test_delete_crash_before_postings_rebuild_repairs(spark, monkeypatch):
         delete_documents(spark, idx, victims)
         assert not fs_exists(spark, maintenance_intent_path(paths))
         finalize_index(spark, paths)
+        assert_stats_current(idx, "after the replay")
         r = IndexReader(spark, idx)
         assert (
             flat_postings(r.postings(), with_positions="bytes")
@@ -620,7 +628,8 @@ def test_delete_crash_before_postings_rebuild_repairs(spark, monkeypatch):
         shutil.rmtree(idx, ignore_errors=True)
 
 
-def test_compaction_crash_before_manifest_snapshot_repairs(spark, monkeypatch):
+def test_compaction_crash_before_manifest_snapshot_repairs(spark, monkeypatch,
+                                                           assert_stats_current):
     """A compaction that dies after the postings overwrite but before its
     manifest snapshot leaves counters stale with no record of the
     rewrite; the surviving marker must repair on the next compaction."""
@@ -668,6 +677,7 @@ def test_compaction_crash_before_manifest_snapshot_repairs(spark, monkeypatch):
         compact_shards(spark, paths)  # repairs, then compacts
         assert not fs_exists(spark, maintenance_intent_path(paths))
         finalize_index(spark, paths)
+        assert_stats_current(idx, "after the replay")
         r = IndexReader(spark, idx)
         stats = index_statistics(r)
         truth = r.postings().agg(F.sum("n").alias("n")).collect()[0]["n"] or 0

@@ -99,7 +99,7 @@ def main() -> None:
         idx = tempfile.mkdtemp(prefix=f"drs_slice_{n_shards}_")
         slc = tempfile.mkdtemp(prefix=f"drs_slice_t_{n_shards}_")
         try:
-            build_index(spark, pages, idx, n_shards=n_shards, finalize=False)
+            build_index(spark, pages, idx, n_shards=n_shards)
             postings = os.path.join(idx, "postings")
             term_sliced_layout(spark, postings, slc)
             # a rare term: bottom-decile df
