@@ -151,7 +151,7 @@ def add_doc_identity(pages: DataFrame, n_shards: int) -> DataFrame:
     )
 
 
-def assign_local_no(docs: DataFrame, base: DataFrame | None = None) -> DataFrame:
+def assign_local_no(docs: DataFrame, base: dict[int, int] | None = None) -> DataFrame:
     """Dense per-shard ordinal, assigned in URL sort order — the one
     ordinal allocator of every writer.
 
@@ -165,20 +165,16 @@ def assign_local_no(docs: DataFrame, base: DataFrame | None = None) -> DataFrame
     hot hosts yield dense ordinal runs.  One task per shard sorts its
     urls; at larger scale raise n_shards so the sort fits an executor.
 
-    ``base``: the docs rows a shard already holds.  Ordinals then start
-    past each shard's max ``local_no`` (superseded versions included), so
-    an ordinal is never reused by a different doc version — the
-    stable-ordinal rule the stream paths rely on
+    ``base``: ``{shard: first free ordinal}`` (``ordinal_base``).
+    Ordinals then start past each shard's max ``local_no`` (superseded
+    versions included), so an ordinal is never reused by a different doc
+    version — the stable-ordinal rule the stream paths rely on
     (streaming/incremental.py)."""
     rank = F.row_number().over(Window.partitionBy("shard").orderBy("url")) - 1
-    if base is None:
-        return docs.withColumn("local_no", rank.cast("long"))
-    start = base.groupBy("shard").agg((F.max("local_no") + 1).alias("_start"))
-    return (
-        docs.join(F.broadcast(start), "shard", "left")
-        .withColumn("local_no", (F.coalesce("_start", F.lit(0)) + rank).cast("long"))
-        .drop("_start")
-    )
+    if base:
+        start = F.create_map(*[F.lit(x) for kv in sorted(base.items()) for x in kv])
+        rank = F.coalesce(F.element_at(start, F.col("shard")), F.lit(0)) + rank
+    return docs.withColumn("local_no", rank.cast("long"))
 
 
 def tokenize_docs(docs: DataFrame, analyzer=None) -> DataFrame:
@@ -584,6 +580,25 @@ def read_table_arrow(spark: SparkSession, paths: IndexPaths, table: str,
     return dataset.to_table(columns=schema.names, filter=rows)
 
 
+def ordinal_base(spark: SparkSession, paths: IndexPaths, shards) -> dict[int, int]:
+    """Each shard's first free ordinal: one past the largest ``local_no``
+    of its docs rows, or 0.  On the local file system it is read from the
+    docs files' row-group footers in the driver, with no Spark job;
+    elsewhere one aggregate over those shards' docs answers it."""
+    base = dict.fromkeys((int(s) for s in shards), 0)
+    if driver_reads(spark, paths.docs):
+        for s in base:
+            for frag in table_fragments(paths, "docs", {"shard": [s]}):
+                frag.ensure_complete_metadata()
+                for rg in frag.row_groups:
+                    base[s] = max(base[s], rg.statistics["local_no"]["max"] + 1)
+        return base
+    docs = read_table(spark, paths, "docs").filter(F.col("shard").isin(list(base)))
+    for r in docs.groupBy("shard").agg(F.max("local_no").alias("m")).collect():
+        base[r["shard"]] = r["m"] + 1
+    return base
+
+
 def _read_postings_or_empty(spark: SparkSession, paths: IndexPaths) -> DataFrame:
     """Postings table, or an empty frame when no blocks exist yet.  A
     missing postings path maps to 'empty' here, a directory without data
@@ -621,27 +636,42 @@ _SHARD_TABLES = {
 TERM_STATS_ROW_GROUP_BYTES = 1 << 17
 
 
+def layout_partitions(shards) -> int:
+    """One partition per shard, and at least two: Spark plans a
+    one-partition repartition as a single partition, which a second
+    ``shard_layout`` over the persisted frame would shuffle again."""
+    return max(len(shards), 2)
+
+
 def shard_layout(frame: DataFrame, table: str, shards) -> DataFrame:
     """``frame``'s rows of ``table`` laid out as ``write_shards`` writes
-    them: hash-partitioned on shard into one partition per target shard,
+    them: hash-partitioned on shard into ``layout_partitions(shards)``,
     each partition sorted by the table's key.  A persisted frame keeps
-    this layout, so its shard writes and per-shard aggregates run with no
-    exchange.  It has at least two partitions: Spark plans a one-partition
-    repartition as a single partition, which a second ``shard_layout``
-    over the persisted frame would not recognize and shuffle again."""
+    this layout, so its shard writes and per-shard aggregates (over a
+    union of frames in one layout too) run with no exchange."""
     cols, key = _SHARD_TABLES[table]
     return (frame.select(*cols)
-            .repartition(max(len(shards), 2), "shard")
+            .repartition(layout_partitions(shards), "shard")
             .sortWithinPartitions("shard", *key))
+
+
+def of_shards(frame: DataFrame, shards) -> DataFrame:
+    """``frame``'s rows of ``shards``.  The list is one array literal, so
+    one generated class serves every list (``isin`` compiles its values
+    into the class); file scans keep ``isin`` for partition pruning."""
+    return frame.filter(F.array_contains(F.lit(sorted(int(s) for s in shards)),
+                                         F.col("shard")))
 
 
 def write_shards(spark: SparkSession, paths: IndexPaths, table: str,
                  frame: DataFrame, shards, overwrite: bool = False,
-                 present=None) -> None:
+                 present=None, layout=None) -> None:
     """Write ``frame``'s rows of ``table`` as shard partitions in the
     ``shard_layout``: one task (and so ~one file) per target shard, each
     file sorted by the table's key.  Appends add segments; ``overwrite``
-    replaces exactly the partitions of ``shards``.
+    replaces exactly the partitions of ``shards``.  ``layout``: the shards
+    a persisted ``frame`` is laid out for when it holds more than
+    ``shards``, so the write keeps that layout and runs no exchange.
 
     Dynamic overwrite only replaces partitions PRESENT in the written
     frame, so a target shard left empty has its stale partition deleted
@@ -650,7 +680,7 @@ def write_shards(spark: SparkSession, paths: IndexPaths, table: str,
     callers pass it materialized (its lineage reads the partitions being
     replaced)."""
     path = getattr(paths, table)
-    writer = shard_layout(frame, table, shards).write.partitionBy("shard")
+    writer = shard_layout(frame, table, layout or shards).write.partitionBy("shard")
     if table == "term_stats":
         writer = writer.option("parquet.block.size", TERM_STATS_ROW_GROUP_BYTES)
     if not overwrite:
@@ -783,22 +813,22 @@ def _segment_stats(blocks: DataFrame) -> DataFrame:
 
 
 def commit_manifest(spark: SparkSession, paths: IndexPaths, status: str,
-                    kind: str, blocks: DataFrame,
-                    parsed: DataFrame | None = None, shards=(),
+                    kind: str, blocks: DataFrame, shards,
+                    parsed: DataFrame | None = None,
                     docs: DataFrame | None = None,
-                    counts: dict | None = None) -> None:
-    """Commit an event whose data is written: append one manifest row per
-    shard of the docs ``parsed`` by it (docs_parsed / docs_indexed
-    counters), or per shard of ``shards`` with NULL parse counters when
-    the event parsed nothing; then bring those shards' stats to the new
-    manifest row.  ``shards`` also names the layout of ``blocks``.
+                    counts: dict | None = None, layout=None) -> None:
+    """Commit an event of ``shards`` whose data is written: append one
+    manifest row per shard of ``shards`` — only those with docs ``parsed``
+    by the event when it parsed any (docs_parsed / docs_indexed
+    counters), all of them with NULL parse counters when it parsed
+    nothing — then bring those shards' stats to the new manifest row.
 
     ``blocks`` gives the posting counters, zero where a shard has none:
     the event's own new segments for kind 'append' (and 'merge'), the
     shard's full post-event postings for 'snapshot'.  Callers pass it
-    materialized and laid out by ``shard_layout(.., "postings", shards)``,
-    so ``build_postings`` never runs twice and the stats write runs with
-    no exchange.
+    materialized and laid out by ``shard_layout(.., "postings", layout)``
+    (``layout`` defaults to ``shards``), so ``build_postings`` never runs
+    twice and the stats write runs with no exchange.
 
     The stats:
     - 'snapshot': the shard's term_stats partition is replaced by the
@@ -815,10 +845,8 @@ def commit_manifest(spark: SparkSession, paths: IndexPaths, status: str,
     if counts is None:
         counts = shard_counts(parsed, docs, blocks)
     zero = dict.fromkeys(_COUNTER_NAMES, 0)
-    if parsed is not None:
-        event = sorted(s for s, c in counts.items() if c["docs_parsed"])
-    else:
-        event = sorted(int(s) for s in shards)
+    event = sorted(int(s) for s in shards
+                   if parsed is None or counts.get(s, zero)["docs_parsed"])
     if not event:
         return
     heads, stats = stats_state(spark, paths)
@@ -834,11 +862,12 @@ def commit_manifest(spark: SparkSession, paths: IndexPaths, status: str,
     # an index whose docs all tokenize empty has no term rows: its
     # term_stats table is an empty directory, not a missing one
     fs_touch(spark, paths.term_stats)
-    layout = [int(s) for s in shards] or event  # the layout of ``blocks``
+    layout = list(layout or shards)
     with_blocks = [s for s in event if counts.get(s, zero)["blocks"]]
     if kind == "snapshot":
-        write_shards(spark, paths, "term_stats", _segment_stats(blocks), layout,
-                     overwrite=True, present=with_blocks)
+        write_shards(spark, paths, "term_stats",
+                     _segment_stats(of_shards(blocks, event)), event,
+                     overwrite=True, present=with_blocks, layout=layout)
         corpus = [(s, counts.get(s, zero)["total_docs"],
                    counts.get(s, zero)["total_tokens"], stamp) for s in event]
     else:
@@ -847,7 +876,8 @@ def commit_manifest(spark: SparkSession, paths: IndexPaths, status: str,
         seg = [s for s in current if s in with_blocks]
         if seg:
             write_shards(spark, paths, "term_stats",
-                         _segment_stats(blocks.filter(F.col("shard").isin(seg))), layout)
+                         _segment_stats(of_shards(blocks, seg)), seg,
+                         layout=layout)
         corpus = []
         for s in current:
             td, tt, _ = stats.get(s, (0, 0, None))
@@ -1113,56 +1143,56 @@ def write_maintenance_intent(spark: SparkSession, paths: IndexPaths,
     )
 
 
-def rebuild_shard_postings(spark: SparkSession, paths: IndexPaths,
-                           shards: list[int], status: str,
-                           parsed: DataFrame | None = None) -> None:
-    """Rebuild the posting partitions of ``shards`` from (decoded current
-    postings ∩ current docs), dynamic-overwrite them, and commit snapshot
-    manifest rows and stats.  Pure codec work — position payloads byte-sliced, the
-    analyzer never runs.
+def live_postings(spark: SparkSession, paths: IndexPaths, shards,
+                  docs: DataFrame) -> DataFrame:
+    """The stored posting rows of ``shards`` whose ``(shard, local_no)``
+    is in ``docs``, decoded for ``build_postings`` (positions byte-sliced,
+    the analyzer never runs).  The join drops orphans: postings of docs a
+    delete, a stream rewrite or a crashed attempt removed."""
+    # first-ever stream batch crash window: docs written, postings never
+    # created — the replay reads an empty frame, not PATH_NOT_FOUND
+    old_blocks = _read_postings_or_empty(spark, paths).filter(
+        F.col("shard").isin([int(s) for s in shards]))
+    return (
+        flat_postings(old_blocks, with_positions="bytes")
+        .join(docs.select("shard", "local_no"), ["shard", "local_no"])
+        .select("shard", "local_no", "term", "tf", "pos_bytes", "doc_len")
+    )
 
-    This one primitive backs four operations:
+
+def rebuild_shard_postings(spark: SparkSession, paths: IndexPaths,
+                           shards: list[int], status: str) -> None:
+    """Rebuild the posting partitions of ``shards`` from their
+    ``live_postings`` under the current docs, dynamic-overwrite them, and
+    commit snapshot manifest rows and stats.  Pure codec work — position
+    payloads byte-sliced, the analyzer never runs.
+
+    It backs three operations (a stream rewrite shares ``live_postings``):
     - **delete** (docs rows already dropped): the docs join filters the
       deleted docs' orphaned posting rows out;
     - **compaction**: N delta segments per (shard, term) re-block into
       one gap-aligned run (a no-orphan rebuild);
-    - **stream update** (docs partitions already rewritten): ``parsed``
-      holds the batch's tokenized rows, already in the docs table under
-      fresh ordinals; their posting rows join the survivors' and they
-      count as the event's docs_parsed.  The docs join drops the
-      superseded versions' postings;
     - **crash repair**: a maintenance op that died between its two
       overwrites left postings referencing docs that no longer exist (or
       a missing manifest snapshot); re-running the rebuild from current
       state is idempotent and converges to the op's intended outcome.
     """
-    shard_filter = F.col("shard").isin([int(s) for s in shards])
-    docs = read_table(spark, paths, "docs").filter(shard_filter)
-    # first-ever stream batch crash window: docs written, postings never
-    # created — the replay reads an empty frame, not PATH_NOT_FOUND
-    old_blocks = _read_postings_or_empty(spark, paths).filter(shard_filter)
-    rows = (
-        flat_postings(old_blocks, with_positions="bytes")
-        .join(docs.select("shard", "local_no"), ["shard", "local_no"])  # drops orphans
-        .select("shard", "local_no", "term", "tf", "pos_bytes", "doc_len")
-    )
-    if parsed is not None:
-        rows = rows.unionByName(doc_term_rows(parsed))
+    docs = read_table(spark, paths, "docs").filter(
+        F.col("shard").isin([int(s) for s in shards]))
     # lineage reads paths.postings, which is overwritten below — freeze;
     # the blocks built from the frozen rows keep the shard layout
-    rows = rows.localCheckpoint(eager=True)
+    rows = live_postings(spark, paths, shards, docs).localCheckpoint(eager=True)
     blocks = shard_layout(build_postings(rows), "postings", shards).persist()
     try:
-        counts = shard_counts(parsed, docs, blocks)
+        counts = shard_counts(docs=docs, blocks=blocks)
         write_shards(spark, paths, "postings", blocks, shards, overwrite=True,
                      present=[s for s, c in counts.items() if c["blocks"]])
         if _AFTER_POSTINGS_REWRITE_HOOK is not None:
             _AFTER_POSTINGS_REWRITE_HOOK()
         # snapshot rows for EVERY target shard (zero counters where emptied —
-        # without them manifest_stats would keep the pre-rewrite counts); a
-        # stream update's batch has rows in every shard it rewrites
-        commit_manifest(spark, paths, status, "snapshot", blocks, parsed=parsed,
-                        shards=shards, docs=docs, counts=counts)
+        # without them manifest_stats would keep the pre-rewrite counts)
+        commit_manifest(spark, paths, status, "snapshot", blocks, shards, docs=docs,
+                        counts=counts)
     finally:
         blocks.unpersist()
 

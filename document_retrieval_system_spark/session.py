@@ -68,6 +68,11 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
+        # the JVM-wide cache of generated classes: one build + stream batch
+        # + queries compiles ~180 classes, past the default of 100, so a
+        # long-running stream or a repeated workload recompiled most of
+        # them on every pass
+        .config("spark.sql.codegen.cache.maxEntries", "2000")
     )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)

@@ -14,10 +14,20 @@ feeding ``foreachBatch``:
   remove-then-add: the affected shards' docs and postings partitions are
   REWRITTEN without the superseded rows (dynamic partition overwrite),
   so no stale version survives — queries can never see the same doc_id
-  twice and df/corpus stats never double-count.  Untouched shards keep
-  the pure-append fast path.
+  twice and df/corpus stats never double-count.  Untouched shards are
+  never read; touched shards without an update keep the pure-append path.
 - re-sends with warc_ts <= the indexed version are dropped (the mtime
   skip-check, indexer.py:443-445).
+
+A batch is ONE pass (``_append_batch``): one guard scan of the touched
+shards' ``(doc_id, warc_ts)``, one analyzer run over the surviving rows
+of every touched shard (ordinals from ``ordinal_base``), one
+``build_postings`` over those rows and the rewritten shards' surviving
+postings, one counter pass.  It writes through the commit protocol of
+``operators/index_build``: the docs of every touched shard, their
+postings, then per event the manifest rows, term stats and corpus rows.
+Untouched shards are never read, and ``finalize_index`` has nothing left
+to rescan.
 
 Queries read base + delta segments transparently (all rows of the same
 postings table).  Periodic compaction = ``rebuild_shard_postings``, which
@@ -25,13 +35,6 @@ decodes every segment of a shard and re-blocks the union — exactly
 Iceberg's merge-on-read vs compaction trade; the per-shard rewrite here
 is merge-on-WRITE for updates, which keeps every query path (WAND,
 boolean, phrase) free of tombstone filtering.
-
-Every write goes through the commit protocol of ``operators/index_build``
-(``write_shards`` then ``commit_manifest``), like the batch builder's.
-The commit brings the touched shards' term and corpus stats up to their
-new manifest row from the frames the batch already holds, so a batch
-costs O(batch + touched shards): untouched shards are never read, and
-``finalize_index`` has nothing left to rescan.
 """
 
 from __future__ import annotations
@@ -53,8 +56,13 @@ from document_retrieval_system_spark.operators.index_build import (
     fs_delete,
     fs_exists,
     fs_touch,
+    layout_partitions,
+    live_postings,
+    of_shards,
+    ordinal_base,
     read_table,
     rebuild_shard_postings,
+    shard_counts,
     shard_layout,
     tokenize_docs,
     write_shards,
@@ -67,46 +75,20 @@ from document_retrieval_system_spark.sources.corpus import PAGES_DDL
 _AFTER_DOCS_WRITE_HOOK = None
 
 
-def _append_inserts(spark: SparkSession, ins: DataFrame, shards: list[int],
-                    batch_id: int, paths: IndexPaths) -> None:
-    """Pure-append fast path for shards with no superseded versions: a
-    delta segment per shard, under ordinals past the shard's current max."""
-    base = (read_table(spark, paths, "docs").filter(F.col("shard").isin(shards))
-            if fs_exists(spark, paths.docs) else None)
-    # localCheckpoint (eager) truncates lineage: the plan reads paths.docs
-    # (ordinal base + upsert guard) and the appends below would poison any
-    # recomputation.  On a cluster use checkpoint() with a reliable dir.
-    tok = assign_local_no(tokenize_docs(ins), base=base).localCheckpoint(eager=True)
-    write_shards(spark, paths, "docs", tok, shards)
-    # built from the frozen tok only, so persisting is safe; kept in the
-    # shard layout, the postings write, the counters and the stats segment
-    # all read it with no exchange
-    blocks = shard_layout(build_postings(doc_term_rows(tok)), "postings",
-                          shards).persist()
-    try:
-        write_shards(spark, paths, "postings", blocks, shards)
-        commit_manifest(spark, paths, f"stream-batch-{batch_id}", "append", blocks,
-                        parsed=tok, shards=shards)
-    finally:
-        blocks.unpersist()
-
-
-def _rewrite_updated_shards(spark: SparkSession, batch_aff: DataFrame,
-                            affected: list[int], batch_id: int,
-                            paths: IndexPaths) -> None:
+def _rewrite_updated_shards(spark: SparkSession, paths: IndexPaths, tok: DataFrame,
+                            affected: list[int], layout: list[int]) -> DataFrame:
     """remove_document equivalent (indexer.py:405-411) at shard
-    granularity, in two dynamic partition overwrites.  First the affected
-    shards' docs partitions become (old rows minus superseded doc_ids) +
-    (this batch's rows); then ``rebuild_shard_postings`` re-blocks their
-    postings from the surviving compressed blocks plus the batch's fresh
-    posting rows, and commits the snapshot manifest rows.  Bounded by the
-    updated shards — untouched shards are never read or written.
+    granularity: the docs partitions of the ``affected`` shards become
+    (stored rows minus this batch's doc_ids) + (the batch's rows of
+    ``tok``), in one dynamic partition overwrite that reads the stored
+    docs once.  Returns that post-event docs frame, persisted in the
+    ``shard_layout`` of ``layout``, which the postings rebuild joins.
 
     Analyzer work is proportional to the BATCH, not the shard (r2
     re-tokenized every surviving doc of an updated shard — ~250k
     re-analyses to update 1 doc): survivors keep their stored docs-table
     row, and the rebuild recovers their posting rows from the existing
-    blocks (vectorized codec + byte slicing).
+    blocks (``live_postings``: vectorized codec + byte slicing).
 
     ``local_no`` is STABLE: survivors keep their ordinal forever and
     fresh rows (including new versions of updated docs) allocate past
@@ -122,26 +104,20 @@ def _rewrite_updated_shards(spark: SparkSession, batch_aff: DataFrame,
     the crashed attempt inserted a new doc into the shard.)  The holes
     cost only slightly larger docID deltas; gap-aligned block splitting
     already handles sparse ranges."""
-    old_docs = read_table(spark, paths, "docs").filter(F.col("shard").isin(affected))
-    # the ONLY analyzer invocation: this batch's rows.  Checkpointed: its
-    # ordinals derive from paths.docs, which is overwritten below
-    fresh = assign_local_no(
-        tokenize_docs(batch_aff), base=old_docs
-    ).localCheckpoint(eager=True)
-    # frozen too: the plan reads the partitions it replaces
-    docs = (
-        old_docs.join(fresh.select("doc_id"), "doc_id", "left_anti")
-        .select(*DOC_TABLE_COLS)
-        .unionByName(fresh.select(*DOC_TABLE_COLS))
-        .localCheckpoint(eager=True)
+    fresh = of_shards(tok, affected).select(*DOC_TABLE_COLS)
+    # frozen: the overwrite re-caches every cached plan that reads docs/
+    survivors = (
+        read_table(spark, paths, "docs").filter(F.col("shard").isin(affected))
+        .join(fresh.select("doc_id"), "doc_id", "left_anti")
+        .localCheckpoint(eager=False)
     )
+    docs = shard_layout(survivors.unionByName(fresh), "docs", layout).persist()
     # every affected shard holds rows of this batch: none is emptied
     write_shards(spark, paths, "docs", docs, affected, overwrite=True,
-                 present=affected)
+                 present=affected, layout=layout)
     if _AFTER_DOCS_WRITE_HOOK is not None:
         _AFTER_DOCS_WRITE_HOOK()
-    rebuild_shard_postings(spark, paths, affected,
-                           f"stream-update-batch-{batch_id}", parsed=fresh)
+    return docs
 
 
 def _intent_marker(paths: IndexPaths, batch_id: int) -> str:
@@ -150,26 +126,30 @@ def _intent_marker(paths: IndexPaths, batch_id: int) -> str:
 
 def _append_batch(spark: SparkSession, batch_df: DataFrame, batch_id: int,
                   paths: IndexPaths, n_shards: int) -> None:
-    docs = add_doc_identity(batch_df, n_shards)
+    """Commit one stream batch in one pass over it (module docstring).
 
-    # Idempotency across crash/replay: an intent marker is written before
-    # ANY mutation and deleted only after the manifest commit.  If this
-    # batch_id's marker already exists, a previous attempt died mid-write
-    # (e.g. docs overwritten, postings not — Structured Streaming then
-    # replays the same batch, whose rows now carry warc_ts EQUAL to the
-    # stored ones).  The strict `>` guard would silently drop those rows
-    # and leave docs/postings numbering divergent forever; under an
-    # incomplete marker the guard widens to `>=` and every equal-ts
-    # re-send routes through the shard rewrite, which rebuilds from
-    # (survivors ∪ batch) and is idempotent by construction.
+    Idempotency across crash/replay: an intent marker is written before
+    ANY mutation and deleted only after the last commit.  If this
+    batch_id's marker already exists, a previous attempt died mid-write
+    (e.g. docs overwritten, postings not — Structured Streaming then
+    replays the same batch, whose rows now carry warc_ts EQUAL to the
+    stored ones).  The strict `>` guard would silently drop those rows
+    and leave docs/postings numbering divergent forever; under an
+    incomplete marker the guard widens to `>=` and every equal-ts
+    re-send routes through the shard rewrite, which rebuilds from
+    (survivors ∪ batch) and is idempotent by construction."""
+    docs = add_doc_identity(batch_df, n_shards)
     intent = _intent_marker(paths, batch_id)
     replay_incomplete = fs_exists(spark, intent)
+    indexed = fs_exists(spark, paths.docs)
 
     # I6 incremental-upsert guard: drop urls already indexed with
-    # warc_ts >= incoming (indexer.py:443-445); flag true updates.  Only
-    # the docs partitions of the shards the batch touches are read.
-    if fs_exists(spark, paths.docs):
-        touched = [r["shard"] for r in docs.select("shard").distinct().collect()]
+    # warc_ts >= incoming (indexer.py:443-445); flag true updates.  One
+    # scan of (doc_id, warc_ts) of the touched shards' docs — files sorted
+    # by ordinal, so read whole — frozen, as this batch writes to them
+    if indexed:
+        touched = [r["shard"] for r in
+                   docs.select("shard").coalesce(1).distinct().collect()]
         existing = read_table(spark, paths, "docs").filter(
             F.col("shard").isin(touched)
         ).select("doc_id", F.col("warc_ts").alias("old_ts"))
@@ -182,32 +162,66 @@ def _append_batch(spark: SparkSession, batch_df: DataFrame, batch_id: int,
             .filter(F.col("old_ts").isNull() | newer)
             .withColumn("is_update", F.col("old_ts").isNotNull())
             .drop("old_ts")
+            .localCheckpoint(eager=False)
         )
     else:
         docs = docs.withColumn("is_update", F.lit(False))
-    # freeze before ANY write below mutates paths this plan reads
-    docs = docs.localCheckpoint(eager=True)
     # an empty batch (or one whose every url is already indexed as new or
-    # newer) collects nothing here and returns below
+    # newer) collects nothing here and returns below, before the analyzer
     has_update = {
-        r["shard"]: r["upd"]
-        for r in docs.groupBy("shard").agg(F.max("is_update").alias("upd")).collect()
+        r["shard"]: r["upd"] for r in
+        docs.coalesce(1).groupBy("shard").agg(F.max("is_update").alias("upd")).collect()
     }
     if not has_update:
         fs_delete(spark, intent)  # nothing to redo; clear a stale marker
         return
 
     # a shard with any update is rewritten whole, its inserts included
-    affected = sorted(s for s, upd in has_update.items() if upd)
-    inserted = sorted(s for s, upd in has_update.items() if not upd)
-    docs = docs.drop("is_update")
+    touched = sorted(has_update)
+    affected = [s for s in touched if has_update[s]]
+    inserted = [s for s in touched if not has_update[s]]
+    # the ONLY analyzer invocation.  Its lineage reads the frozen guard,
+    # not the index, so it is persisted, partitioned as the touched
+    # shards' shard_layout: its docs writes and counters need no exchange
+    tok = assign_local_no(
+        tokenize_docs(docs.drop("is_update"))
+        .repartition(layout_partitions(touched), "shard"),
+        base=ordinal_base(spark, paths, touched) if indexed else None,
+    ).persist()
+    cached = [tok]
     fs_touch(spark, intent)  # intent BEFORE the first mutation
-    if inserted:
-        _append_inserts(spark, docs.filter(F.col("shard").isin(inserted)),
-                        inserted, batch_id, paths)
-    if affected:
-        _rewrite_updated_shards(spark, docs.filter(F.col("shard").isin(affected)),
-                                affected, batch_id, paths)
+    try:
+        if inserted:
+            write_shards(spark, paths, "docs", of_shards(tok, inserted), inserted,
+                         layout=touched)
+        rows, new_docs = doc_term_rows(tok), None
+        if affected:
+            new_docs = _rewrite_updated_shards(spark, paths, tok, affected, touched)
+            cached.append(new_docs)
+            # frozen: the survivors' postings are read from the partitions
+            # the postings overwrite below replaces
+            rows = (live_postings(spark, paths, affected, new_docs).unionByName(rows)
+                    .localCheckpoint(eager=False))
+        blocks = shard_layout(build_postings(rows), "postings", touched).persist()
+        cached.append(blocks)
+        counts = shard_counts(tok, new_docs, blocks)
+        if inserted:
+            write_shards(spark, paths, "postings", of_shards(blocks, inserted), inserted,
+                         layout=touched)
+        if affected:
+            write_shards(spark, paths, "postings", of_shards(blocks, affected), affected,
+                         overwrite=True, layout=touched,
+                         present=[s for s in affected if counts[s]["blocks"]])
+        if inserted:
+            commit_manifest(spark, paths, f"stream-batch-{batch_id}", "append", blocks,
+                            inserted, parsed=tok, counts=counts, layout=touched)
+        if affected:
+            commit_manifest(spark, paths, f"stream-update-batch-{batch_id}", "snapshot",
+                            blocks, affected, parsed=tok, docs=new_docs, counts=counts,
+                            layout=touched)
+    finally:
+        for frame in cached:
+            frame.unpersist()
     fs_delete(spark, intent)  # commit point: marker gone = batch complete
 
 

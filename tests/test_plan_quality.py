@@ -119,7 +119,7 @@ def test_prefix_search_pushes_startswith_and_matches_scan(reader):
 
 # job counts measured on the 40-page, 4-shard index below
 BUILD_JOBS = 9
-STREAM_BATCH_JOBS = 36
+STREAM_BATCH_JOBS = 19
 
 
 def _spark_jobs(spark, action) -> int:
@@ -191,5 +191,172 @@ def test_index_reads_run_only_the_jobs_that_move_data(spark, reader):
         stream = _spark_jobs(spark, lambda: (_append_batch(spark, batch, 0, paths, 4),
                                              finalize_index(spark, paths)))
         assert stream <= STREAM_BATCH_JOBS, stream
+    finally:
+        shutil.rmtree(idx, ignore_errors=True)
+
+
+def _sql_executions(spark, action) -> list[list[tuple]]:
+    """The SQL executions ``action`` runs, read from the SQL status store
+    (it works with the UI off): per execution, its plan-graph nodes as
+    ``(name, desc, rows)`` where ``rows`` is the node's output-row count in
+    that execution, None when it has no such metric.  (The nodes of a
+    cached frame's plan are listed by every execution that reads the
+    cache, with 0 rows in all but the one that computed it.)"""
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def seq(x):
+        it, out = x.iterator(), []
+        while it.hasNext():
+            out.append(it.next())
+        return out
+
+    # the store keeps the latest spark.sql.ui.retainedExecutions, so new
+    # executions are found by id, once the listener bus has delivered them
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+    bus.waitUntilEmpty()
+    last = max((e.executionId() for e in seq(store.executionsList())), default=-1)
+    action()
+    bus.waitUntilEmpty()
+    out = []
+    for e in seq(store.executionsList()):
+        if e.executionId() <= last:
+            continue
+        values = store.executionMetrics(e.executionId())
+        nodes = []
+        for n in seq(store.planGraph(e.executionId()).allNodes()):
+            # a Scala Option of the formatted value: "Some(1,234)" or "None"
+            rows = [str(values.get(m.accumulatorId())) for m in seq(n.metrics())
+                    if m.name() == "number of output rows"]
+            rows = rows[0] if rows and rows[0] != "None" else None
+            nodes.append((n.name(), n.desc(),
+                          None if rows is None else int(rows[5:-1].replace(",", ""))))
+        out.append(nodes)
+    return out
+
+
+def _scanned_shards(nodes, table: str, n_shards: int) -> set[int]:
+    """The shards of index table ``table`` the parquet scans planned in an
+    execution read: their partition filters' shard values, or every shard
+    for a scan without one.  A scan counts where it is planned, not where
+    its tasks run: a scan under a checkpoint runs in the job of the frame's
+    first reader, whose plan shows only the checkpoint."""
+    import re
+
+    shards = set()
+    for name, desc, _ in nodes:
+        loc = re.search(r"Location: [^\[]*\[([^\]]*)\]", desc)
+        if "Scan parquet" not in name or not loc:
+            continue
+        if loc.group(1).rstrip("/").rsplit("/", 1)[-1] != table:
+            continue
+        part = re.search(r"PartitionFilters: \[([^\]]*)\]", desc)
+        pf = part.group(1) if part else ""
+        listed = re.search(r"shard#\d+ IN \(([^)]*)\)", pf)
+        equal = re.search(r"shard#\d+ = (\d+)\)", pf)
+        if listed:
+            shards |= {int(s) for s in listed.group(1).split(",")}
+        elif equal:
+            shards.add(int(equal.group(1)))
+        else:
+            shards |= set(range(n_shards))
+    return shards
+
+
+def test_stream_batch_reads_each_input_once(spark):
+    """One stream batch that appends to shards 1 and 2 and rewrites shard
+    0, over a 4-shard index: the guard scan is the only read of an
+    appended shard's docs, a rewritten shard's docs are read by the guard
+    and the rewrite only, shard 3 is never read, and the fused analyzer
+    runs in one execution.  A batch of only older and equal re-sends runs
+    no analyzer at all."""
+    from document_retrieval_system_spark.operators.index_build import (
+        IndexPaths,
+        add_doc_identity,
+        build_index,
+    )
+    from document_retrieval_system_spark.sources.corpus import (
+        PAGES_DDL,
+        gen_pages_pandas,
+        pages_df,
+    )
+    from document_retrieval_system_spark.streaming.incremental import _append_batch
+
+    idx = tempfile.mkdtemp(prefix="drs_batch_scans_")
+    try:
+        build_index(spark, pages_df(spark, 40), idx, n_shards=4)
+        paths = IndexPaths(idx)
+        old = spark.read.parquet(paths.docs).filter("shard = 0").orderBy("url")
+        resent = pd.DataFrame(
+            [(r["url"], r["warc_ts"] + datetime.timedelta(days=1), None,
+              "re-sent scan page", "en") for r in old.limit(2).collect()],
+            columns=["url", "warc_ts", "html", "text", "lang"])
+        new = gen_pages_pandas(30, start=40)
+        shard_of = {r["url"]: r["shard"] for r in add_doc_identity(
+            spark.createDataFrame(new, PAGES_DDL), 4).select("url", "shard").collect()}
+        new = new[new["url"].map(shard_of).isin([1, 2])]
+        assert set(new["url"].map(shard_of)) == {1, 2}
+        batch = spark.createDataFrame(pd.concat([new, resent]), PAGES_DDL)
+        execs = _sql_executions(spark, lambda: _append_batch(spark, batch, 0, paths, 4))
+
+        def reads(table, shard):
+            return sum(shard in _scanned_shards(nodes, table, 4) for nodes in execs)
+
+        assert [reads("docs", s) for s in (1, 2)] == [1, 1]
+        assert reads("docs", 0) <= 2
+        assert reads("docs", 3) == 0 and reads("postings", 3) == 0
+        analyzer = [nodes for nodes in execs
+                    if any("ArrowEvalPython" in name and rows
+                           for name, _, rows in nodes)]
+        assert len(analyzer) == 1, len(analyzer)
+
+        # the re-sent pages again, and older copies of the new ones
+        older = pd.concat([resent, new.assign(
+            warc_ts=new["warc_ts"] - datetime.timedelta(days=1))])
+        execs = _sql_executions(spark, lambda: _append_batch(
+            spark, spark.createDataFrame(older, PAGES_DDL), 1, paths, 4))
+        assert execs and not any("ArrowEvalPython" in name
+                                 for nodes in execs for name, _, _ in nodes)
+    finally:
+        shutil.rmtree(idx, ignore_errors=True)
+
+
+def test_a_repeated_build_and_batch_compiles_no_new_class(spark):
+    """The generated-class cache holds a whole build + stream batch: the
+    same build and batch again in one session compile nothing."""
+    from document_retrieval_system_spark.operators.index_build import (
+        IndexPaths,
+        build_index,
+        finalize_index,
+    )
+    from document_retrieval_system_spark.sources.corpus import (
+        PAGES_DDL,
+        gen_pages_pandas,
+        pages_df,
+    )
+    from document_retrieval_system_spark.streaming.incremental import _append_batch
+
+    compiled = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics \
+        .METRIC_COMPILATION_TIME()
+    idx = tempfile.mkdtemp(prefix="drs_codegen_cache_")
+    try:
+        paths = IndexPaths(idx)
+        pages = pages_df(spark, 40)
+
+        def cycle():
+            build_index(spark, pages, idx, n_shards=4)
+            old = spark.read.parquet(paths.docs).filter("shard = 0").orderBy("url")
+            resent = pd.DataFrame(
+                [(r["url"], r["warc_ts"] + datetime.timedelta(days=1), None,
+                  "re-sent codegen page", "en") for r in old.limit(2).collect()],
+                columns=["url", "warc_ts", "html", "text", "lang"])
+            batch = spark.createDataFrame(
+                pd.concat([gen_pages_pandas(8, start=40), resent]), PAGES_DDL)
+            _append_batch(spark, batch, 0, paths, 4)
+            finalize_index(spark, paths)
+
+        cycle()
+        before = compiled.getCount()
+        cycle()
+        assert compiled.getCount() - before == 0
     finally:
         shutil.rmtree(idx, ignore_errors=True)
