@@ -1177,11 +1177,14 @@ def rebuild_shard_postings(spark: SparkSession, paths: IndexPaths,
       a missing manifest snapshot); re-running the rebuild from current
       state is idempotent and converges to the op's intended outcome.
     """
-    docs = read_table(spark, paths, "docs").filter(
-        F.col("shard").isin([int(s) for s in shards]))
-    # lineage reads paths.postings, which is overwritten below — freeze;
-    # the blocks built from the frozen rows keep the shard layout
-    rows = live_postings(spark, paths, shards, docs).localCheckpoint(eager=True)
+    # one docs scan feeds the live_postings join and the counters
+    docs = (read_table(spark, paths, "docs")
+            .filter(F.col("shard").isin([int(s) for s in shards]))
+            .select("shard", "local_no", "doc_len").localCheckpoint(eager=False))
+    # lineage reads paths.postings, which is overwritten below — freeze
+    # (the counters' collect materializes it before the write); the
+    # blocks built from the frozen rows keep the shard layout
+    rows = live_postings(spark, paths, shards, docs).localCheckpoint(eager=False)
     blocks = shard_layout(build_postings(rows), "postings", shards).persist()
     try:
         counts = shard_counts(docs=docs, blocks=blocks)

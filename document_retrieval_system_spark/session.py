@@ -11,13 +11,83 @@ Settings chosen for 100 TB-scale behavior (and why):
   should be ~2-3x total executor cores (set via spark-submit).
 - maxRecordsPerBatch bounded so a batch of large HTML pages does not blow
   the Arrow buffer on executors.
+
+Importing this module also makes zip-importer cache invalidation cheap
+(``_stat_checked_zip_invalidation``), in the driver and in every Python
+worker that unpickles an engine UDF.
 """
 
 from __future__ import annotations
 
 import os
+import sys
+import zipimport
 
 from pyspark.sql import SparkSession
+
+
+def _stat_checked_zip_invalidation() -> None:
+    """Make ``zipimporter.invalidate_caches`` re-read an archive's
+    directory only when the archive changed on disk.
+
+    A PySpark worker calls ``importlib.invalidate_caches()`` at the start
+    of every task (``worker_util.setup_spark_files``).  On CPython < 3.13
+    each zip importer then re-reads its whole archive directory: 16 of
+    them per task on a stock install (``pyspark.zip`` and 12 of its
+    subpackages, the py4j zip, and the spark-core jar with its ``org``
+    package), ~80 ms of worker CPU on every task.  CPython 3.13 changed
+    ``invalidate_caches`` to only drop the cached directory, which the
+    next lookup re-reads; this leaves 3.13+ alone.
+
+    Every directory read (``zipimport._read_directory``, by a new
+    importer or an invalidation) records the archive's
+    ``(st_ino, st_mtime_ns, st_size)`` taken just before it.  An
+    invalidation whose stamp still matches keeps the directory in
+    ``zipimport._zip_directory_cache``, so a zip rewritten in place is
+    still re-read (the check CPython makes of a ``.py`` file against its
+    ``.pyc`` is the same kind, on mtime seconds and size), and the
+    importers of one archive (one per package prefix) share one re-read
+    through that cache.  The archives already cached are read once here,
+    so each gets a stamp."""
+    if sys.implementation.name != "cpython" or sys.version_info >= (3, 13):
+        return
+    full = zipimport.zipimporter.invalidate_caches
+    read = zipimport._read_directory
+    stamps: dict[str, tuple] = {}
+
+    def stamp_of(archive):
+        try:
+            st = os.stat(archive)
+        except OSError:
+            return None
+        return st.st_ino, st.st_mtime_ns, st.st_size
+
+    def read_directory(archive):
+        # stamped before the read: a rewrite during it shows as a change;
+        # a failed read leaves no stamp
+        stamps.pop(archive, None)
+        stamp = stamp_of(archive)
+        files = read(archive)
+        if stamp is not None:
+            stamps[archive] = stamp
+        return files
+
+    def invalidate_caches(self):
+        files = zipimport._zip_directory_cache.get(self.archive)
+        stamp = stamps.get(self.archive)
+        if files is not None and stamp is not None and stamp == stamp_of(self.archive):
+            self._files = files
+        else:
+            full(self)
+
+    zipimport._read_directory = read_directory
+    zipimport.zipimporter.invalidate_caches = invalidate_caches
+    for importer in list(sys.path_importer_cache.values()):
+        if isinstance(importer, zipimport.zipimporter):
+            importer.invalidate_caches()
+
+
+_stat_checked_zip_invalidation()
 
 
 def get_spark(

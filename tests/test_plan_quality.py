@@ -320,6 +320,41 @@ def test_stream_batch_reads_each_input_once(spark):
         shutil.rmtree(idx, ignore_errors=True)
 
 
+def test_compaction_reads_each_target_shards_docs_once(spark):
+    """Compaction of shards 0 and 2 of a 4-shard index with delta
+    segments: one docs scan of each target shard feeds both the live
+    postings join and the counters, and shards 1 and 3 are never read."""
+    from document_retrieval_system_spark.operators.index_build import (
+        IndexPaths,
+        build_index,
+    )
+    from document_retrieval_system_spark.sources.corpus import (
+        PAGES_DDL,
+        gen_pages_pandas,
+        pages_df,
+    )
+    from document_retrieval_system_spark.streaming.incremental import (
+        _append_batch,
+        compact_shards,
+    )
+
+    idx = tempfile.mkdtemp(prefix="drs_compact_scans_")
+    try:
+        build_index(spark, pages_df(spark, 40), idx, n_shards=4)
+        paths = IndexPaths(idx)
+        _append_batch(spark, spark.createDataFrame(gen_pages_pandas(20, start=40),
+                                                   PAGES_DDL), 0, paths, 4)
+        execs = _sql_executions(spark, lambda: compact_shards(spark, paths, [0, 2]))
+
+        def reads(table, shard):
+            return sum(shard in _scanned_shards(nodes, table, 4) for nodes in execs)
+
+        assert [reads("docs", s) for s in range(4)] == [1, 0, 1, 0]
+        assert [reads("postings", s) for s in range(4)] == [1, 0, 1, 0]
+    finally:
+        shutil.rmtree(idx, ignore_errors=True)
+
+
 def test_a_repeated_build_and_batch_compiles_no_new_class(spark):
     """The generated-class cache holds a whole build + stream batch: the
     same build and batch again in one session compile nothing."""
