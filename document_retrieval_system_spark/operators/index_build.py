@@ -430,10 +430,19 @@ def fs_exists(spark: SparkSession, path: str) -> bool:
     return bool(fs.exists(hpath))
 
 
+def _mutation(name: str) -> None:
+    """The crash seam of every index and ANN writer: a no-op that each
+    helper creating, replacing or deleting a file under such a directory
+    calls first, with the mutation's name.  The helpers look it up here at
+    call time, so a test patching this attribute reaches every writer."""
+
+
 def fs_touch(spark: SparkSession, path: str) -> None:
     """Create an (empty) marker directory via the Hadoop FileSystem API."""
     fs, hpath = _hadoop_fs(spark, path)
-    fs.mkdirs(hpath)
+    if not fs.exists(hpath):
+        _mutation(f"{path} touch")
+        fs.mkdirs(hpath)
 
 
 def fs_delete(spark: SparkSession, path: str) -> None:
@@ -442,11 +451,13 @@ def fs_delete(spark: SparkSession, path: str) -> None:
     onto the previous index."""
     fs, hpath = _hadoop_fs(spark, path)
     if fs.exists(hpath):
+        _mutation(f"{path} delete")
         fs.delete(hpath, True)
 
 
 def fs_write_text(spark: SparkSession, path: str, text: str) -> None:
     """Write a small text file via the Hadoop FileSystem API (overwrite)."""
+    _mutation(f"{path} write")
     fs, hpath = _hadoop_fs(spark, path)
     out = fs.create(hpath, True)
     try:
@@ -672,25 +683,34 @@ def write_shards(spark: SparkSession, paths: IndexPaths, table: str,
     replaces exactly the partitions of ``shards``.  ``layout``: the shards
     a persisted ``frame`` is laid out for when it holds more than
     ``shards``, so the write keeps that layout and runs no exchange.
-
-    Dynamic overwrite only replaces partitions PRESENT in the written
-    frame, so a target shard left empty has its stale partition deleted
-    here.  ``present`` names the shards that have rows; when the caller
-    does not know it, ``frame`` is read again for it, and overwriting
-    callers pass it materialized (its lineage reads the partitions being
-    replaced)."""
+    An overwrite needs ``present``, the shards with rows
+    (``overwrite_partitions``)."""
     path = getattr(paths, table)
-    writer = shard_layout(frame, table, layout or shards).write.partitionBy("shard")
+    writer = shard_layout(frame, table, layout or shards).write
     if table == "term_stats":
         writer = writer.option("parquet.block.size", TERM_STATS_ROW_GROUP_BYTES)
-    if not overwrite:
-        writer.mode("append").parquet(path)
-        return
-    writer.mode("overwrite").option("partitionOverwriteMode", "dynamic").parquet(path)
-    if present is None:
-        present = {r["shard"] for r in frame.select("shard").distinct().collect()}
-    for s in {int(x) for x in shards} - set(present):
-        fs_delete(spark, os.path.join(path, f"shard={s}"))
+    if overwrite:
+        overwrite_partitions(spark, writer, path, "shard", [int(s) for s in shards],
+                             present, f"{table} overwrite")
+    else:
+        _mutation(f"{table} append")
+        writer.partitionBy("shard").mode("append").parquet(path)
+
+
+def overwrite_partitions(spark: SparkSession, writer, path: str, column: str,
+                         parts, present, name: str) -> None:
+    """Replace exactly the ``parts`` partitions of the ``column``-
+    partitioned table at ``path`` with the rows of ``writer``: one dynamic
+    partition overwrite, which replaces only the partitions its rows
+    reach, then a delete of each of ``parts`` not in ``present`` (those
+    left with no rows, which the overwrite would keep stale).  ``present``
+    names the partitions with rows; callers pass it materialized, as the
+    written frame's lineage may read the partitions being replaced."""
+    _mutation(name)
+    (writer.partitionBy(column).mode("overwrite")
+     .option("partitionOverwriteMode", "dynamic").parquet(path))
+    for p in sorted(set(parts) - set(present)):
+        fs_delete(spark, os.path.join(path, f"{column}={p}"))
 
 
 _BYTE_COLS = ("doc_bytes", "tf_bytes", "dl_bytes", "pos_bytes")
@@ -777,15 +797,17 @@ def write_rows(spark: SparkSession, paths: IndexPaths, table: str,
     arrow = _arrow_schema(TABLE_SCHEMAS[table])
     t = pa.table([pa.array(col, type=f.type) for col, f in zip(zip(*rows), arrow)],
                  schema=arrow)
-    uri = getattr(paths, table)
+    uri, name = getattr(paths, table), f"{table} rows"
     if not driver_reads(spark, uri):
         writer = spark.createDataFrame(t).coalesce(1).write
         if table == "manifest":
+            _mutation(name)
             writer.mode("append").parquet(uri)
         else:
-            (writer.partitionBy("shard").mode("overwrite")
-             .option("partitionOverwriteMode", "dynamic").parquet(uri))
+            shards = t["shard"].to_pylist()
+            overwrite_partitions(spark, writer, uri, "shard", shards, shards, name)
         return
+    _mutation(name)
     import pyarrow.parquet as pq
     import uuid
 
@@ -1121,11 +1143,6 @@ def refresh_shard_stats(spark: SparkSession, paths: IndexPaths, shards: list[int
 # Maintenance rewrites (delete / compaction) + crash-replay repair
 # ---------------------------------------------------------------------------
 
-# test fault injection: called between the postings overwrite and the
-# manifest snapshot append of a maintenance rewrite (the crash window a
-# surviving intent marker repairs)
-_AFTER_POSTINGS_REWRITE_HOOK = None
-
 _MAINT_INTENT_FILE = "maintenance_intent.json"
 
 
@@ -1190,8 +1207,6 @@ def rebuild_shard_postings(spark: SparkSession, paths: IndexPaths,
         counts = shard_counts(docs=docs, blocks=blocks)
         write_shards(spark, paths, "postings", blocks, shards, overwrite=True,
                      present=[s for s, c in counts.items() if c["blocks"]])
-        if _AFTER_POSTINGS_REWRITE_HOOK is not None:
-            _AFTER_POSTINGS_REWRITE_HOOK()
         # snapshot rows for EVERY target shard (zero counters where emptied —
         # without them manifest_stats would keep the pre-rewrite counts)
         commit_manifest(spark, paths, status, "snapshot", blocks, shards, docs=docs,

@@ -403,15 +403,13 @@ def _rewrite_affected(spark, index_dir: str, assigned: DataFrame, part_col: str,
     partitions the batch lands in.  Their survivors (rows whose id is not
     resent, a broadcast anti-join) and the batch are checkpointed eagerly,
     because the read path is about to be overwritten, and then only those
-    partitions are dynamically overwritten.  Dynamic overwrite rewrites
-    only partitions present in the output, so an affected partition left
-    with no rows keeps its stale files and is deleted explicitly (the
-    pattern of emptied shards in `tables.delete_documents`).  Returns
-    the batch, affected-partition (``affected_cells``, LSH buckets
-    included) and rewritten-row counts."""
-    import os
-
-    from document_retrieval_system_spark.operators.index_build import fs_delete
+    partitions are overwritten, an affected partition left with no rows
+    deleted (``index_build.overwrite_partitions``).  Returns the batch,
+    affected-partition (``affected_cells``, LSH buckets included) and
+    rewritten-row counts."""
+    from document_retrieval_system_spark.operators.index_build import (
+        overwrite_partitions,
+    )
 
     new_ids = assigned.select(id_col).distinct()
     existing = spark.read.parquet(index_dir)
@@ -428,16 +426,9 @@ def _rewrite_affected(spark, index_dir: str, assigned: DataFrame, part_col: str,
         .select(*cols)
     )
     out = survivors.unionByName(assigned.select(*cols)).localCheckpoint(eager=True)
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        out.write.mode("overwrite").partitionBy(part_col).parquet(index_dir)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-    out_parts = {r[part_col] for r in out.select(part_col).distinct().collect()}
-    for part in affected:
-        if part not in out_parts:
-            fs_delete(spark, os.path.join(index_dir, f"{part_col}={part}"))
+    present = [r[part_col] for r in out.select(part_col).distinct().collect()]
+    overwrite_partitions(spark, out.write, index_dir, part_col, affected, present,
+                         f"{part_col} overwrite")
     return {"batch_rows": assigned.count(), "affected_cells": len(affected),
             "rewritten_rows": out.count()}
 

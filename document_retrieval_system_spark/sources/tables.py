@@ -132,11 +132,11 @@ def delete_documents(spark: SparkSession, index_dir: str,
     repair_maintenance(spark, paths)
     doc_ids = [hashlib.md5(u.encode("utf-8")).hexdigest() for u in urls]
     docs = read_table(spark, paths, "docs")
-    affected = sorted(
-        r["shard"]
-        for r in docs.filter(F.col("doc_id").isin(doc_ids))
-        .select("shard").distinct().collect()
-    )
+    # per shard: whether it holds a deleted doc, and whether only those
+    victim = F.col("doc_id").isin(doc_ids)
+    hits = docs.groupBy("shard").agg(F.max(victim).alias("hit"),
+                                     F.min(victim).alias("only")).filter("hit").collect()
+    affected = sorted(r["shard"] for r in hits)
     if not affected:
         return
 
@@ -145,16 +145,14 @@ def delete_documents(spark: SparkSession, index_dir: str,
     # rebuild_shard_postings re-blocks the survivors from the existing
     # compressed blocks (its docs join drops the deleted docs' rows);
     # the analyzer never runs
-    shard_filter = F.col("shard").isin([int(s) for s in affected])
-    keep = docs.filter(
-        shard_filter & ~F.col("doc_id").isin(doc_ids)
-    ).localCheckpoint(eager=True)
+    keep = docs.filter(F.col("shard").isin(affected) & ~victim).localCheckpoint(eager=True)
 
     # intent marker BEFORE the first mutation; deleted only after the
     # manifest snapshot + finalize — a crash in between leaves the marker
     # and the next maintenance entry point repairs the shards
     write_maintenance_intent(spark, paths, "delete", affected)
-    write_shards(spark, paths, "docs", keep, affected, overwrite=True)
+    write_shards(spark, paths, "docs", keep, affected, overwrite=True,
+                 present=[r["shard"] for r in hits if not r["only"]])
     rebuild_shard_postings(spark, paths, affected, status="delete")
     finalize_index(spark, paths)
     fs_delete(spark, maintenance_intent_path(paths))

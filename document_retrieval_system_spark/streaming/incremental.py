@@ -70,10 +70,6 @@ from document_retrieval_system_spark.operators.index_build import (
 )
 from document_retrieval_system_spark.sources.corpus import PAGES_DDL
 
-# test fault injection: called between the docs overwrite and the
-# postings overwrite of a shard rewrite (the replay crash window)
-_AFTER_DOCS_WRITE_HOOK = None
-
 
 def _rewrite_updated_shards(spark: SparkSession, paths: IndexPaths, tok: DataFrame,
                             affected: list[int], layout: list[int]) -> DataFrame:
@@ -115,8 +111,6 @@ def _rewrite_updated_shards(spark: SparkSession, paths: IndexPaths, tok: DataFra
     # every affected shard holds rows of this batch: none is emptied
     write_shards(spark, paths, "docs", docs, affected, overwrite=True,
                  present=affected, layout=layout)
-    if _AFTER_DOCS_WRITE_HOOK is not None:
-        _AFTER_DOCS_WRITE_HOOK()
     return docs
 
 

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import os
 import shutil
 import tempfile
 
@@ -104,3 +105,34 @@ def assert_stats_current(spark):
         assert {s: stats.get(s, (0, 0, None))[2] for s in heads} == heads, step
 
     return check
+
+
+class InjectedCrash(RuntimeError):
+    """The fault a test raises through the package's mutation seam."""
+
+
+@pytest.fixture
+def crash_seam(monkeypatch):
+    """``install(root="", crash_at=None, crash_before=None)`` patches the
+    one crash seam of every index and ANN writer (``index_build._mutation``)
+    and returns the list it logs each mutation's name to, paths under
+    ``root`` made relative to it.  It raises ``InjectedCrash`` before
+    mutation number ``crash_at`` (0-based), or before the first one whose
+    name starts with ``crash_before``.  ``install()`` disarms it."""
+    from document_retrieval_system_spark.operators import index_build as ib
+
+    def install(root="", crash_at=None, crash_before=None):
+        log = []
+
+        def mutation(name):
+            obj, verb = name.rsplit(" ", 1)
+            if root and (obj == root or obj.startswith(root + os.sep)):
+                name = f"{os.path.relpath(obj, root)} {verb}"
+            if len(log) == crash_at or (crash_before and name.startswith(crash_before)):
+                raise InjectedCrash(f"injected crash before {name}")
+            log.append(name)
+
+        monkeypatch.setattr(ib, "_mutation", mutation)
+        return log
+
+    return install

@@ -1,21 +1,22 @@
 """Crash windows of a stream batch's write order.  A batch that appends to
-one shard and rewrites another writes, in order: the docs of every touched
-shard, their postings, then per event its manifest rows, term stats and
-corpus rows, and last deletes its intent marker.  A fault injected before
-each of those mutations, followed by Structured Streaming's replay of the
-same batch, must leave stats equal to a full recount and answers equal to
-a fresh build of the live pages."""
+one shard and rewrites another creates its intent marker, then writes, in
+order: the docs of every touched shard, their postings, then per event its
+manifest rows, term stats and corpus rows, and last deletes its intent
+marker.  A fault injected through the package's mutation seam before each
+of those mutations, followed by Structured Streaming's replay of the same
+batch, must leave stats equal to a full recount and answers equal to a
+fresh build of the live pages."""
 
 from __future__ import annotations
 
 import datetime
+import re
 import shutil
 import tempfile
 
 import pandas as pd
 import pytest
 
-from document_retrieval_system_spark.operators import index_build as ib
 from document_retrieval_system_spark.operators.index_build import (
     IndexPaths,
     IndexReader,
@@ -35,15 +36,12 @@ QUERIES = ["search engine index", "crashwindowterm ranking"]
 
 # the mutations of a batch that appends to shard 1 and rewrites shard 0
 WRITE_ORDER = [
+    "intent touch",
     "docs append", "docs overwrite", "postings append", "postings overwrite",
     "manifest rows", "term_stats append", "corpus_stats rows",
     "manifest rows", "term_stats overwrite", "corpus_stats rows",
     "intent delete",
 ]
-
-
-class _Crash(RuntimeError):
-    pass
 
 
 @pytest.fixture(scope="module")
@@ -82,38 +80,6 @@ def _answers(spark, index_dir):
             for q in QUERIES for scorer in (bm25_search, bm25_wand_search)}
 
 
-def _record_mutations(monkeypatch, crash_at=None):
-    """Log every mutation of the batch; raise before mutation number
-    ``crash_at`` (0-based) when given."""
-    log = []
-
-    def mutation(name):
-        if crash_at is not None and len(log) == crash_at:
-            raise _Crash(f"injected crash before {name}")
-        log.append(name)
-
-    real_shards, real_rows, real_delete = ib.write_shards, ib.write_rows, inc.fs_delete
-
-    def write_shards(spark, paths, table, frame, shards, overwrite=False, **kw):
-        mutation(f"{table} {'overwrite' if overwrite else 'append'}")
-        real_shards(spark, paths, table, frame, shards, overwrite=overwrite, **kw)
-
-    def write_rows(spark, paths, table, rows):
-        if rows:
-            mutation(f"{table} rows")
-        real_rows(spark, paths, table, rows)
-
-    def fs_delete(spark, path):
-        mutation("intent delete")
-        real_delete(spark, path)
-
-    for module in (ib, inc):
-        monkeypatch.setattr(module, "write_shards", write_shards)
-    monkeypatch.setattr(ib, "write_rows", write_rows)
-    monkeypatch.setattr(inc, "fs_delete", fs_delete)
-    return log
-
-
 def _copy(base_dir):
     idx = tempfile.mkdtemp(prefix="drs_window_idx_")
     shutil.rmtree(idx)
@@ -121,16 +87,20 @@ def _copy(base_dir):
     return idx
 
 
-def test_replay_after_a_crash_before_each_mutation(spark, scenario, monkeypatch,
+def _labels(log):
+    """The seam's names with the batch's intent marker called ``intent``."""
+    return [name.replace(f"stream_intents/batch-{BATCH_ID}", "intent") for name in log]
+
+
+def test_replay_after_a_crash_before_each_mutation(spark, scenario, crash_seam,
                                                    assert_stats_current):
     base_dir, batch, want = scenario
     frame = spark.createDataFrame(batch, PAGES_DDL)
     idx = _copy(base_dir)
     try:
-        log = _record_mutations(monkeypatch)
+        order = crash_seam(idx)
         inc._append_batch(spark, frame, BATCH_ID, IndexPaths(idx), SHARDS)
-        monkeypatch.undo()
-        assert log == WRITE_ORDER
+        assert _labels(order) == WRITE_ORDER
     finally:
         shutil.rmtree(idx, ignore_errors=True)
 
@@ -139,12 +109,15 @@ def test_replay_after_a_crash_before_each_mutation(spark, scenario, monkeypatch,
         idx = _copy(base_dir)
         paths = IndexPaths(idx)
         try:
-            log = _record_mutations(monkeypatch, crash_at)
-            with pytest.raises(_Crash, match=f"before {mutation}$"):
+            log = crash_seam(idx, crash_at)
+            with pytest.raises(RuntimeError, match=(
+                    f"injected crash before {re.escape(order[crash_at])}$")):
                 inc._append_batch(spark, frame, BATCH_ID, paths, SHARDS)
-            monkeypatch.undo()
-            assert log == WRITE_ORDER[:crash_at], step
-            assert fs_exists(spark, inc._intent_marker(paths, BATCH_ID)), step
+            crash_seam()
+            assert _labels(log) == WRITE_ORDER[:crash_at], step
+            # the marker exists from the first mutation on
+            assert fs_exists(spark, inc._intent_marker(paths, BATCH_ID)) == (
+                crash_at > 0), step
 
             inc._append_batch(spark, frame, BATCH_ID, paths, SHARDS)  # the replay
             assert not fs_exists(spark, inc._intent_marker(paths, BATCH_ID)), step

@@ -207,7 +207,7 @@ def test_update_rewrite_analyzer_bounded_by_batch(spark, monkeypatch):
             shutil.rmtree(p, ignore_errors=True)
 
 
-def test_crash_replay_between_docs_and_postings_is_idempotent(spark, monkeypatch,
+def test_crash_replay_between_docs_and_postings_is_idempotent(spark, crash_seam,
                                                               assert_stats_current):
     """The replay crash window (ADVICE r2): docs partitions overwritten,
     crash before the postings overwrite, Structured Streaming re-runs the
@@ -236,18 +236,17 @@ def test_crash_replay_between_docs_and_postings_is_idempotent(spark, monkeypatch
         batch = spark.createDataFrame(upd, PAGES_DDL)
         paths = IndexPaths(d["index"])
 
-        def boom():
-            raise RuntimeError("injected crash between docs and postings")
-
-        monkeypatch.setattr(inc, "_AFTER_DOCS_WRITE_HOOK", boom)
+        # the crash: after the docs overwrite, before any postings write
+        log = crash_seam(crash_before="postings ")
         import pytest as _pytest
         with _pytest.raises(RuntimeError, match="injected crash"):
             inc._append_batch(spark, batch, 7, paths, 2)
+        assert log[-1] == "docs overwrite"
         # crash state: new docs written, postings stale, marker present
         from document_retrieval_system_spark.operators.index_build import fs_exists
         assert fs_exists(spark, inc._intent_marker(paths, 7))
 
-        monkeypatch.setattr(inc, "_AFTER_DOCS_WRITE_HOOK", None)
+        crash_seam()
         inc._append_batch(spark, batch, 7, paths, 2)  # foreachBatch replay
         assert not fs_exists(spark, inc._intent_marker(paths, 7))
         from document_retrieval_system_spark.operators.index_build import (
@@ -323,7 +322,7 @@ def test_compaction_merges_delta_segments(spark):
             shutil.rmtree(p, ignore_errors=True)
 
 
-def test_crash_replay_with_inserts_into_updated_shard(spark, monkeypatch,
+def test_crash_replay_with_inserts_into_updated_shard(spark, crash_seam,
                                                       assert_stats_current):
     """The r3 review's corruption repro: a batch carrying BOTH an update
     and brand-new urls that land in the same shard, crashing between the
@@ -373,15 +372,14 @@ def test_crash_replay_with_inserts_into_updated_shard(spark, monkeypatch,
         assert upd_shards & new_shards, (upd_shards, new_shards)
         paths = IndexPaths(idx)
 
-        def boom():
-            raise RuntimeError("injected crash between docs and postings")
-
-        monkeypatch.setattr(inc, "_AFTER_DOCS_WRITE_HOOK", boom)
+        # the crash: after the docs overwrite, before any postings write
+        log = crash_seam(crash_before="postings ")
         with pytest.raises(RuntimeError, match="injected crash"):
             inc._append_batch(spark, batch, 3, paths, 2)
+        assert log[-1] == "docs overwrite"
         assert fs_exists(spark, inc._intent_marker(paths, 3))
 
-        monkeypatch.setattr(inc, "_AFTER_DOCS_WRITE_HOOK", None)
+        crash_seam()
         inc._append_batch(spark, batch, 3, paths, 2)  # replay
         assert not fs_exists(spark, inc._intent_marker(paths, 3))
         from document_retrieval_system_spark.operators.index_build import (
@@ -628,12 +626,11 @@ def test_delete_crash_before_postings_rebuild_repairs(spark, monkeypatch,
         shutil.rmtree(idx, ignore_errors=True)
 
 
-def test_compaction_crash_before_manifest_snapshot_repairs(spark, monkeypatch,
+def test_compaction_crash_before_manifest_snapshot_repairs(spark, crash_seam,
                                                            assert_stats_current):
     """A compaction that dies after the postings overwrite but before its
     manifest snapshot leaves counters stale with no record of the
     rewrite; the surviving marker must repair on the next compaction."""
-    from document_retrieval_system_spark.operators import index_build as ib
     from document_retrieval_system_spark.operators.index_build import (
         IndexPaths,
         finalize_index,
@@ -661,17 +658,12 @@ def test_compaction_crash_before_manifest_snapshot_repairs(spark, monkeypatch,
             0, paths, 2,
         )
 
-        calls = {"n": 0}
-
-        def boom():
-            calls["n"] += 1
-            raise RuntimeError("injected crash before manifest snapshot")
-
-        monkeypatch.setattr(ib, "_AFTER_POSTINGS_REWRITE_HOOK", boom)
+        # the crash: after the postings overwrite, before the manifest snapshot
+        log = crash_seam(crash_before="manifest rows")
         with pytest.raises(RuntimeError, match="injected"):
             compact_shards(spark, paths)
-        monkeypatch.setattr(ib, "_AFTER_POSTINGS_REWRITE_HOOK", None)
-        assert calls["n"] == 1
+        crash_seam()
+        assert log[-1] == "postings overwrite"
         assert fs_exists(spark, maintenance_intent_path(paths))
 
         compact_shards(spark, paths)  # repairs, then compacts
