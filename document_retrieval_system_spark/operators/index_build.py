@@ -466,6 +466,24 @@ def fs_write_text(spark: SparkSession, path: str, text: str) -> None:
         out.close()
 
 
+def fs_rename(spark: SparkSession, src: str, dst: str) -> None:
+    """Rename ``src`` to ``dst`` via the Hadoop FileSystem API.  Onto an
+    existing directory, the local file system moves ``src`` into it."""
+    _mutation(f"{dst} rename")
+    fs, hsrc = _hadoop_fs(spark, src)
+    fs.rename(hsrc, _hadoop_fs(spark, dst)[1])
+
+
+def write_table(writer, path: str, partition: str | None = None) -> None:
+    """Write a whole table at ``path`` with ``writer``, replacing any
+    table there, partitioned by ``partition`` if given: the full builds
+    of the derived tables (doc norms, ANN indexes)."""
+    _mutation(f"{path} overwrite")
+    if partition is not None:
+        writer = writer.partitionBy(partition)
+    writer.mode("overwrite").parquet(path)
+
+
 def fs_read_text(spark: SparkSession, path: str) -> str:
     """Read a small text file via the Hadoop FileSystem API."""
     fs, hpath = _hadoop_fs(spark, path)
@@ -517,15 +535,17 @@ def table_fragments(paths: IndexPaths, table: str, filter: dict | None = None) -
     directories (a missing one is an empty shard); a row group survives
     when, for every filtered data column, its min/max statistics cover
     at least one filter value.  (pyarrow's own scan prunes row groups on
-    equalities, not on ``is_in``.)  The table must be on the local file
-    system (``driver_reads``)."""
+    equalities, not on ``is_in``.)  A missing postings directory is an
+    empty table, as ``_read_postings_or_empty`` reads it.  The table must
+    be on the local file system (``driver_reads``)."""
     uri = getattr(paths, table)
     fs, root = _fs_root(uri)
     want = {c: sorted(set(v)) for c, v in (filter or {}).items()}
     if table in _SHARD_TABLES:
         shards = want.pop("shard", None)
         if shards is None:
-            shards = [int(i.base_name.split("=", 1)[1]) for i in _data_files(fs, root)
+            listing = _data_files(fs, root, missing_ok=table == "postings")
+            shards = [int(i.base_name.split("=", 1)[1]) for i in listing
                       if i.type == pafs.FileType.Directory and i.base_name.startswith("shard=")]
         dirs = [(f"{root}/shard={s}", ds.field("shard") == s) for s in shards]
     else:
@@ -642,9 +662,9 @@ _SHARD_TABLES = {
     "corpus_stats": (_columns(CORPUS_STATS_SCHEMA), []),
 }
 
-# the row-group size bound of a term_stats file: a lookup reads one such
-# group per file per query term
-TERM_STATS_ROW_GROUP_BYTES = 1 << 17
+# the row-group size bound of the term-sorted files (postings and
+# term_stats): a term lookup reads about one such group per file per term
+TERM_ROW_GROUP_BYTES = 1 << 17
 
 
 def layout_partitions(shards) -> int:
@@ -687,8 +707,8 @@ def write_shards(spark: SparkSession, paths: IndexPaths, table: str,
     (``overwrite_partitions``)."""
     path = getattr(paths, table)
     writer = shard_layout(frame, table, layout or shards).write
-    if table == "term_stats":
-        writer = writer.option("parquet.block.size", TERM_STATS_ROW_GROUP_BYTES)
+    if table in ("postings", "term_stats"):
+        writer = writer.option("parquet.block.size", TERM_ROW_GROUP_BYTES)
     if overwrite:
         overwrite_partitions(spark, writer, path, "shard", [int(s) for s in shards],
                              present, f"{table} overwrite")
@@ -1303,25 +1323,28 @@ class IndexReader:
         only read by ``tfidf_search``.  The first call after a commit
         computes them (``_tfidf_norms``) into a hidden directory and
         renames it to ``doc_norms/<snapshot>``, so a concurrent reader
-        sees the whole table or none; earlier snapshots' tables are then
-        deleted.  Later calls read the published table."""
+        sees the whole table or none.  Every call then deletes the other
+        entries of ``doc_norms/``: earlier snapshots' tables and the
+        hidden tables computed for them, which a crash before the rename
+        leaks.  A hidden table of the current snapshot may be a concurrent
+        reader's write in progress, so it stays until the next snapshot."""
         spark, root = self.spark, self.paths.doc_norms
-        snap = os.path.join(root, snapshot_id(spark, self.paths))
+        snap_id = snapshot_id(spark, self.paths)
+        snap = os.path.join(root, snap_id)
         if not fs_exists(spark, snap):
             import uuid
 
-            tmp = os.path.join(root, f"_tmp-{uuid.uuid4().hex}")
-            _tfidf_norms(self).write.parquet(tmp)
-            fs, hsnap = _hadoop_fs(spark, snap)
-            fs.rename(_hadoop_fs(spark, tmp)[1], hsnap)
+            tmp = os.path.join(root, f"_tmp-{snap_id}-{uuid.uuid4().hex}")
+            write_table(_tfidf_norms(self).write, tmp)
+            fs_rename(spark, tmp, snap)
             # a concurrent reader that published first leaves ours nested
             # in (or beside) its table, under a hidden name: drop it
             fs_delete(spark, tmp)
             fs_delete(spark, os.path.join(snap, os.path.basename(tmp)))
-            for st in fs.listStatus(hsnap.getParent()):
-                name = st.getPath().getName()
-                if name != hsnap.getName() and not name.startswith(("_", ".")):
-                    fs.delete(st.getPath(), True)
+        fs, hroot = _hadoop_fs(spark, root)
+        for name in sorted(st.getPath().getName() for st in fs.listStatus(hroot)):
+            if name != snap_id and not name.startswith((f"_tmp-{snap_id}-", ".")):
+                fs_delete(spark, os.path.join(root, name))
         return spark.read.schema(DOC_NORMS_SCHEMA).parquet(snap)
 
     def manifest(self) -> DataFrame:

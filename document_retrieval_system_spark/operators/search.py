@@ -21,8 +21,8 @@ a pyarrow read of a few row groups, no Spark job) and shipped as
 literals/broadcasts, and the only shuffle is the final tiny
 groupBy(doc)/top-k.  The exhaustive scorers here decode posting blocks
 with ``index_build.flat_postings``, the one posting decoder; the pruned
-path is operators/wand.py.  Both BM25 paths share the query preamble
-(``bm25_query_blocks``) and the term score (``bm25_term_score``).  The
+path is operators/wand.py.  Both BM25 paths share the weights preamble
+(``bm25_query_weights``) and the term score (``bm25_term_score``).  The
 relational core of the exhaustive scorer, ``bm25_posting_sum`` (decoded
 postings + ``{term: w}`` + avgdl -> per-doc sum), is also what the
 entry queries call when they need per-posting control: per-term
@@ -69,26 +69,22 @@ def bm25_term_score(w, tf, dl, avgdl):
     return w * (tf / (tf + BM25_K1 * (1.0 - BM25_B + BM25_B * dl / avgdl)))
 
 
-def bm25_query_blocks(reader, queries: list[str], lang: str, analyzer):
-    """The query preamble of every BM25 scorer: analyze each query, read
-    the corpus scalars and the terms' dfs in the driver, weigh each
-    query's terms, and scan the posting blocks of every weighted term.
+def bm25_query_weights(reader, queries: list[str], lang: str, analyzer):
+    """The weights preamble of every BM25 scorer: analyze each query, read
+    the corpus scalars and the terms' dfs in the driver, and weigh each
+    query's terms.
 
-    Returns ``({query index: {term: w}}, avgdl, blocks)``.  A query with
-    no indexed term is absent from the dict; when none is left the dict
-    is empty and ``blocks`` None."""
+    Returns ``({query index: {term: w}}, avgdl, {term: df})``.  A query
+    with no indexed term is absent from the first dict, which may be
+    empty; the last holds the dfs of every indexed query term."""
     per_query = [analyzer(q, lang) for q in queries]
     all_terms = sorted({t for terms in per_query for t in terms})
     if not all_terms:
-        return {}, 0.0, None
+        return {}, 0.0, {}
     corpus, dfs = reader.query_stats(all_terms)
     weights = {qid: w for qid, terms in enumerate(per_query)
                if (w := bm25_weights(corpus["total_docs"], dfs, terms))}
-    if not weights:
-        return {}, 0.0, None
-    live = sorted({t for w in weights.values() for t in w})
-    blocks = reader.postings().filter(F.col("term").isin(live))
-    return weights, corpus["avg_doc_length"], blocks
+    return weights, corpus["avg_doc_length"], dfs
 
 
 def bm25_posting_sum(postings: DataFrame, weights: dict[str, float],
@@ -131,9 +127,10 @@ def bm25_search(
     analyzer=process_text,
 ) -> DataFrame:
     """Exhaustive relational BM25 (R3 naive form)."""
-    weights, avgdl, blocks = bm25_query_blocks(reader, [query], lang, analyzer)
+    weights, avgdl, _ = bm25_query_weights(reader, [query], lang, analyzer)
     if not weights:
         return _empty_result(reader.spark)
+    blocks = reader.postings().filter(F.col("term").isin(list(weights[0])))
     scored = bm25_posting_sum(flat_postings(blocks), weights[0], avgdl).filter(
         F.col("score") >= min_score
     )

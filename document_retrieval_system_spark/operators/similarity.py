@@ -22,6 +22,11 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from document_retrieval_system_spark.operators.index_build import (
+    overwrite_partitions,
+    write_table,
+)
+
 
 def _lit_array(values) -> "F.Column":
     """A literal double array as ONE parsed expression.  Building it from
@@ -153,13 +158,10 @@ def build_lsh_index(emb: DataFrame, index_dir: str, sig_bits: int = 16,
             )
         dim = len(row[0])
     planes = hyperplanes(dim, sig_bits, seed)
-    (
+    write_table(
         emb.withColumn("sig", lsh_signature_col(F.col(vec_col), planes))
         .withColumn("bucket", F.concat(F.lit(_BUCKET_TAG), F.substring("sig", 1, bucket_bits)))
-        .write.mode("overwrite")
-        .partitionBy("bucket")
-        .parquet(index_dir)
-    )
+        .write, index_dir, "bucket")
 
 
 def lsh_index_topk(spark, index_dir: str, query: list[float], k: int = 10,
@@ -311,15 +313,11 @@ def build_ivf_index(emb: DataFrame, index_dir: str, cents: np.ndarray,
     same physical contract as the LSH bucket index but with data-adapted
     Voronoi cells instead of random hyperplanes (better recall/probe on
     clustered data)."""
-    (
+    write_table(
         emb.withColumn(
             "ivf_cell",
             F.concat(F.lit(_BUCKET_TAG), ivf_assign_col(F.col(vec_col), cents).cast("string")),
-        )
-        .write.mode("overwrite")
-        .partitionBy("ivf_cell")
-        .parquet(index_dir)
-    )
+        ).write, index_dir, "ivf_cell")
 
 
 def query_cells(query: list[float], cents: np.ndarray, nprobe: int) -> list[str]:
@@ -407,10 +405,6 @@ def _rewrite_affected(spark, index_dir: str, assigned: DataFrame, part_col: str,
     deleted (``index_build.overwrite_partitions``).  Returns the batch,
     affected-partition (``affected_cells``, LSH buckets included) and
     rewritten-row counts."""
-    from document_retrieval_system_spark.operators.index_build import (
-        overwrite_partitions,
-    )
-
     new_ids = assigned.select(id_col).distinct()
     existing = spark.read.parquet(index_dir)
     old_parts = {
@@ -580,9 +574,9 @@ def build_pq_index(emb: DataFrame, index_dir: str, books: np.ndarray,
     that scales — the codes for 10^12 vectors are ~4 TB (vs 256 TB raw)
     and scan as a two-column parquet with full predicate/column
     pruning."""
-    emb.select(
+    write_table(emb.select(
         F.col(id_col), pq_encode_col(F.col(vec_col), books).alias("pq_code")
-    ).write.mode("overwrite").parquet(index_dir)
+    ).write, index_dir)
 
 
 def _adc_expr(dtm, m: int, code_col: str = "pq_code"):
@@ -685,15 +679,11 @@ def build_ivfpq_index(emb: DataFrame, index_dir: str, cents: np.ndarray,
             lambda a, b: a - b,
         ).alias("_resid"),
     ).localCheckpoint(eager=False)
-    (
+    write_table(
         staged.select(
             F.col(id_col), F.col("ivf_cell"),
             pq_encode_col(F.col("_resid"), books).alias("pq_code"),
-        )
-        .write.mode("overwrite")
-        .partitionBy("ivf_cell")
-        .parquet(index_dir)
-    )
+        ).write, index_dir, "ivf_cell")
 
 
 def ivfpq_topk(spark, index_dir: str, emb: DataFrame, query: list[float],

@@ -4,8 +4,8 @@ The reference scores exhaustively, term-at-a-time, over every posting
 (search_engine.py:458-471).  This module implements document-at-a-time
 top-k with **block-max pruning** per index shard:
 
-1. Per query term, read only that term's posting blocks (Parquet scan
-   with ``term IN (...)`` pushdown + ``shard`` partition pruning).
+1. Per query term, read only that term's posting blocks (``term IN
+   (...)`` row-group pruning + ``shard`` partition pruning).
 2. Each block carries (first_doc, last_doc, max_tf, min_dl); its score
    upper bound is ``w_t * tf_norm(max_tf, min_dl, avgdl)`` — valid for
    any avgdl because tf_norm is increasing in tf and decreasing in dl.
@@ -24,24 +24,35 @@ top-k with **block-max pruning** per index shard:
    searchsorted into decoded blocks), preserving the reference formula
    bit-for-bit.
 
-The kernel runs inside ``applyInPandas`` grouped by shard — shards are
-independent (document-sharded index), so a 1000-executor cluster runs
-1000 kernels in parallel with no cross-talk.  The ``groupBy("shard")``
-exchange stays: a shard's blocks may span several files (delta
-segments) and file splits, so a scan partition is not shard-aligned.
-A request on a local index therefore runs two Spark jobs, the block
-scan with that exchange and the kernel stage; everything else happens
-in the driver.  The term dfs and corpus scalars are pyarrow reads of
-the term_stats and corpus_stats files, and the merge is a driver merge
-of the kernel's <= k(+ties) rows per shard per query, not a shuffle:
-each query is cut at its k-th score, the doc_id and url of the rows
-left come from a row-group-pruned pyarrow lookup of the docs files, and
-each query keeps its top-k.  (An index on another file system is read
-by Spark instead, see ``index_build.read_table_arrow``; a request whose
-k covers the corpus keeps a lazy docs join, see ``_finish``.)
+A request's term dfs and corpus scalars are pyarrow reads of the
+term_stats and corpus_stats files in the driver.  Where the kernel runs
+depends on the index and on the request's size (``_hits``):
 
-Correctness contract (tested metamorphically in
-tests/test_wand.py): identical (doc_id, score) top-k as the exhaustive
+- On the local file system, when the query terms' postings (their summed
+  df) fit ``DRIVER_POSTINGS``, the driver reads the terms' blocks itself
+  (``read_table_arrow``: shard directories, then the term-sorted row
+  groups that can hold a query term) and runs each shard's kernel: the
+  request runs no Spark job.  On a local index a Spark job costs more
+  than the work inside it.
+- Otherwise (another file system, or more postings than the budget) the
+  kernel runs inside ``applyInPandas`` grouped by shard.  Shards are
+  independent (document-sharded index), so a 1000-executor cluster runs
+  1000 kernels in parallel with no cross-talk.  The ``groupBy("shard")``
+  exchange stays: a shard's blocks may span several files (delta
+  segments) and file splits, so a scan partition is not shard-aligned.
+  That is two Spark jobs, the block scan with that exchange and the
+  kernel stage.
+
+The merge is a driver merge of the kernel's <= k(+ties) rows per shard
+per query, not a shuffle: each query is cut at its k-th score, the doc_id
+and url of the rows left come from a row-group-pruned pyarrow lookup of
+the docs files, and each query keeps its top-k.  (An index on another
+file system is read by Spark instead, see
+``index_build.read_table_arrow``; a Spark-scored request whose k covers
+the corpus keeps a lazy docs join, see ``_finish``.)
+
+Correctness contract (tested metamorphically in tests/test_wand.py, on
+both paths in tests/test_wand_paths.py): identical (doc_id, score) top-k as the exhaustive
 scorer, including duplicate-document score ties, which are retained
 per-shard (everything scoring >= the kth score survives) and resolved
 globally by (score desc, doc_id asc).
@@ -53,18 +64,20 @@ import numpy as np
 import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 from document_retrieval_system_spark.functions.analyzer import process_text
 from document_retrieval_system_spark.operators.codec import decode_block
 from document_retrieval_system_spark.operators.index_build import (
     _arrow_schema,
     _columns,
+    driver_reads,
     read_table_arrow,
 )
 from document_retrieval_system_spark.operators.search import (
     RESULT_SCHEMA,
     _attach_doc_id,
-    bm25_query_blocks,
+    bm25_query_weights,
     bm25_term_score,
 )
 from document_retrieval_system_spark.oracle import DEFAULT_MAX_RESULTS, DEFAULT_MIN_SCORE
@@ -75,6 +88,10 @@ _DOC_FIELDS = "shard int, local_no long, doc_id string, url string"
 # the block columns the kernel reads
 _KERNEL_COLS = ["shard", "term", "first_doc", "last_doc", "max_tf", "min_dl",
                 "doc_bytes", "tf_bytes", "dl_bytes"]
+# the most postings (the summed df of its terms) a request scores in the
+# driver: above it the driver's single-threaded read and kernels lose to
+# Spark's per-shard tasks (see SCALE.md for the measured crossover)
+DRIVER_POSTINGS = 1_000_000
 
 
 def _no_scores() -> pd.DataFrame:
@@ -271,42 +288,67 @@ def _shard_kernel(pdf: pd.DataFrame, weights: dict[str, float], avgdl: float,
     )
 
 
-def _wand_scores(blocks: DataFrame, weights: dict[int, dict[str, float]],
-                 avgdl: float, k: int, min_score: float,
-                 counters: dict | None = None) -> DataFrame:
-    """(qid, shard, local_no, score): each query's per-shard WAND top-k
-    (``weights`` is {qid: {term: w}}), in ONE per-shard kernel job over
-    the shard's already-fetched blocks.  The queries of a shard share
-    its block decodes; the weight math stays per query."""
-    k, ms, a = int(k), float(min_score), float(avgdl)
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        raw_cache: dict = {}
-        outs = []
-        for qid, w in weights.items():
-            st: dict = {}
-            out = _shard_kernel(pdf[pdf["term"].isin(w)], w, a, k, ms,
-                                stats=st, raw_cache=raw_cache)
-            if counters is not None:
-                counters["total_blocks"].add(st.get("total_blocks", 0))
-                counters["decoded_blocks"].add(st.get("decoded_blocks", 0))
-            out.insert(0, "qid", np.int32(qid))
-            outs.append(out)
-        return pd.concat(outs, ignore_index=True)
-
-    return blocks.select(*_KERNEL_COLS).groupBy("shard").applyInPandas(
-        kernel, WAND_OUT_SCHEMA
-    )
+def _shard_queries(pdf: pd.DataFrame, weights: dict[int, dict[str, float]],
+                   avgdl: float, k: int, min_score: float,
+                   counters: dict | None = None) -> pd.DataFrame:
+    """(qid, shard, local_no, score): each query's WAND top-k in one
+    shard (``weights`` is {qid: {term: w}}), over the shard's blocks of
+    every query term.  The queries share the shard's block decodes; the
+    weight math stays per query."""
+    raw_cache: dict = {}
+    outs = []
+    for qid, w in weights.items():
+        st: dict = {}
+        out = _shard_kernel(pdf[pdf["term"].isin(w)], w, avgdl, k, min_score,
+                            stats=st, raw_cache=raw_cache)
+        if counters is not None:
+            counters["total_blocks"].add(st.get("total_blocks", 0))
+            counters["decoded_blocks"].add(st.get("decoded_blocks", 0))
+        out.insert(0, "qid", np.int32(qid))
+        outs.append(out)
+    return pd.concat(outs, ignore_index=True)
 
 
-def _finish(reader, scored: DataFrame | None, k: int, with_qid: bool) -> DataFrame:
+def _hits(reader, weights: dict[int, dict[str, float]], avgdl: float, dfs: dict,
+          k: int, min_score: float, counters: dict | None):
+    """Every query's per-shard top-k, (qid, shard, local_no, score).
+
+    On the local file system, when the query terms' postings (their
+    summed df) fit ``DRIVER_POSTINGS``, the driver reads those terms'
+    blocks (``read_table_arrow``: shard directories, then row groups
+    whose term range covers a query term) and runs each shard's kernel
+    itself: an Arrow table, no Spark job.  Otherwise one Spark job scans
+    the blocks and groups them by shard, since a shard's blocks may span
+    several files and file splits, and a second runs the kernels: a
+    lazy frame.  Either way a shard's blocks keep each file's row order,
+    and a doc's postings all lie in one file, so both sum a doc's
+    contributions in the same order."""
+    live = sorted({t for w in weights.values() for t in w})
+    spark, paths = reader.spark, reader.paths
+    if sum(dfs[t] for t in live) <= DRIVER_POSTINGS and driver_reads(spark, paths.postings):
+        blocks = read_table_arrow(spark, paths, "postings", _KERNEL_COLS,
+                                  {"term": live}).to_pandas()
+        parts = [_shard_queries(g, weights, avgdl, k, min_score, counters)
+                 for _, g in blocks.groupby("shard", sort=False)]
+        out = _arrow_schema(WAND_OUT_SCHEMA)
+        if not parts:
+            return out.empty_table()
+        return pa.Table.from_pandas(pd.concat(parts, ignore_index=True), out,
+                                    preserve_index=False)
+    blocks = reader.postings().filter(F.col("term").isin(live)).select(*_KERNEL_COLS)
+    return blocks.groupBy("shard").applyInPandas(
+        lambda pdf: _shard_queries(pdf, weights, avgdl, k, min_score, counters),
+        WAND_OUT_SCHEMA)
+
+
+def _finish(reader, hits, k: int, with_qid: bool) -> DataFrame:
     """The finish shared by both WAND entry points: each query's top-k by
     (score desc, doc_id asc) with its doc_id and url.
 
-    The kernel's (qid, shard, local_no, score) rows, <= k(+ties) per
-    shard per query, are collected, and each query is cut to its rows
-    scoring at least its k-th score (ties kept: doc_id breaks them), so at
-    most k(+ties) rows per query are looked up in the docs table: one
+    ``hits`` are ``_hits``' (qid, shard, local_no, score) rows, <= k(+ties)
+    per shard per query.  Each query is cut to its rows scoring at least
+    its k-th score (ties kept: doc_id breaks them), so at most k(+ties)
+    rows per query are looked up in the docs table: one
     ``shard IN (...) AND local_no IN (...)`` read over files sorted by
     local_no, so row groups prune.  The join is inner, like
     ``bm25_search``'s: a hit with no docs row (a delete or rewrite caught
@@ -314,16 +356,18 @@ def _finish(reader, scored: DataFrame | None, k: int, with_qid: bool) -> DataFra
     the cut are then looked up too so that another takes its place.
     Returns a local DataFrame: collecting it runs no job.
 
-    When k covers the corpus no query has rows to cut, so nothing would
-    bound the collect: the finish is then a lazy Spark join with docs."""
+    Hits the driver computed are bounded by the postings it read, so they
+    always finish here.  A Spark frame of hits whose k covers the corpus
+    has no rows to cut, so nothing would bound its collect: it finishes
+    as a lazy Spark join with docs."""
     schema = ("qid int, " if with_qid else "") + RESULT_SCHEMA
-    if scored is not None and k >= reader.corpus()["total_docs"]:
-        if not with_qid:
-            return _attach_doc_id(scored.drop("qid"), reader, k)
-        docs = reader.docs().select(*_columns(_DOC_FIELDS))
-        return scored.join(docs, ["shard", "local_no"]).select(*_columns(schema))
-    hits = (scored.toArrow() if scored is not None
-            else _arrow_schema(WAND_OUT_SCHEMA).empty_table())
+    if isinstance(hits, DataFrame):
+        if k >= reader.corpus()["total_docs"]:
+            if not with_qid:
+                return _attach_doc_id(hits.drop("qid"), reader, k)
+            docs = reader.docs().select(*_columns(_DOC_FIELDS))
+            return hits.join(docs, ["shard", "local_no"]).select(*_columns(schema))
+        hits = hits.toArrow()
     hits = hits.sort_by([("qid", "ascending"), ("score", "descending")])
     qid, score = hits["qid"].to_numpy(), hits["score"].to_numpy()
     first, end = np.searchsorted(qid, qid), np.searchsorted(qid, qid, side="right")
@@ -349,6 +393,16 @@ def _finish(reader, scored: DataFrame | None, k: int, with_qid: bool) -> DataFra
     return reader.spark.createDataFrame(ranked.select(_columns(schema)).to_pandas(), schema)
 
 
+def _request(reader, queries: list[str], lang: str, max_results: int,
+             min_score: float, analyzer, counters: dict | None,
+             with_qid: bool) -> DataFrame:
+    weights, avgdl, dfs = bm25_query_weights(reader, queries, lang, analyzer)
+    k = int(max_results)
+    hits = (_hits(reader, weights, float(avgdl), dfs, k, float(min_score), counters)
+            if weights else _arrow_schema(WAND_OUT_SCHEMA).empty_table())
+    return _finish(reader, hits, k, with_qid)
+
+
 def bm25_wand_search(
     reader,
     query: str,
@@ -359,17 +413,17 @@ def bm25_wand_search(
     counters: dict | None = None,
 ) -> DataFrame:
     """Block-max WAND BM25 top-k; same rows as search.bm25_search.  The
-    two Spark jobs (block scan, kernel) run in this call and the returned
-    frame is local, unless k covers the corpus (see ``_finish``).
+    returned frame is local.  On a local index whose query postings fit
+    ``DRIVER_POSTINGS`` the request runs no Spark job; otherwise its two
+    Spark jobs (block scan, kernel) run in this call, unless k covers the
+    corpus (see ``_finish``).
 
     ``counters``: optional {"total_blocks": Accumulator, "decoded_blocks":
     Accumulator} — each shard kernel adds its block totals, so a bench can
     report the decoded fraction (the pruning effectiveness) without
     touching the result schema."""
-    weights, avgdl, blocks = bm25_query_blocks(reader, [query], lang, analyzer)
-    scored = (_wand_scores(blocks, weights, avgdl, max_results, min_score, counters)
-              if weights else None)
-    return _finish(reader, scored, int(max_results), with_qid=False)
+    return _request(reader, [query], lang, max_results, min_score, analyzer,
+                    counters, with_qid=False)
 
 
 def bm25_wand_search_many(
@@ -381,18 +435,17 @@ def bm25_wand_search_many(
     analyzer=process_text,
 ) -> DataFrame:
     """Batched WAND: score N queries in ONE pass — one driver-side stats
-    lookup, one term-pushdown block scan over the union of query terms,
-    and one per-shard kernel job that runs every query against the
-    shard's already-fetched blocks — then one driver finish over every
-    query's <= k(+ties) rows per shard.  Two Spark jobs whatever N is,
-    the same as a single query: a serving tier evaluates a batch at
-    near-single-query cost.
+    lookup, one read of the blocks of the union of query terms, and one
+    kernel per shard that runs every query against the shard's
+    already-read blocks — then one driver finish over every query's
+    <= k(+ties) rows per shard.  The same work as a single query whatever
+    N is (no Spark job on a local index under ``DRIVER_POSTINGS``, two
+    otherwise): a serving tier evaluates a batch at near-single-query
+    cost.
 
     Returns a frame of (qid, doc_id, url, score, shard, local_no), local
-    unless k covers the corpus (see ``_finish``) —
+    unless a Spark-scored k covers the corpus (see ``_finish``) —
     per-query top-``max_results`` with the engine's (score desc, doc_id
     asc) tie-break; ``qid`` is the index into ``queries``."""
-    weights, avgdl, blocks = bm25_query_blocks(reader, queries, lang, analyzer)
-    scored = (_wand_scores(blocks, weights, avgdl, max_results, min_score)
-              if weights else None)
-    return _finish(reader, scored, int(max_results), with_qid=True)
+    return _request(reader, queries, lang, max_results, min_score, analyzer,
+                    None, with_qid=True)

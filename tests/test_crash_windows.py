@@ -8,8 +8,10 @@ must equal an uninterrupted run of the writer from the same start:
 - an index writer leaves ``fsck_index`` clean, stats equal to a recount,
   and BM25 and WAND answers equal to the uninterrupted run's (doc ids
   exact, scores to rel 1e-12);
-- an ANN upsert leaves the ``(id, partition, vector)`` rows of the
-  uninterrupted run, each id once.
+- an ANN upsert or full build leaves the ``(id, partition, vector)``
+  rows of the uninterrupted run, each id once;
+- the doc norms leave the uninterrupted run's rows and ``doc_norms/``
+  entries.
 
 Window 0 raises before the first mutation, so the writer's directory must
 be left exactly as it was: names, sizes and mtimes.
@@ -35,6 +37,7 @@ from document_retrieval_system_spark.operators.index_build import (
     build_index,
     finalize_index,
     repair_maintenance,
+    snapshot_id,
 )
 from document_retrieval_system_spark.operators.merge import merge_indexes
 from document_retrieval_system_spark.operators.search import bm25_search
@@ -96,6 +99,14 @@ WRITE_ORDER = {
     "ivf_upsert": ["ivf_cell overwrite", "ivf_cell=b0 delete", "ivf_cell=b1 delete"],
     "lsh_upsert": ["bucket overwrite", "bucket=b0001 delete", "bucket=b1110 delete"],
     "ivfpq_upsert": ["ivf_cell overwrite", "ivf_cell=b0 delete", "ivf_cell=b1 delete"],
+    "lsh_build": [". overwrite"],
+    "ivf_build": [". overwrite"],
+    "pq_build": [". overwrite"],
+    "ivfpq_build": [". overwrite"],
+    # <snap> is the current snapshot, <old> the one the norms were last
+    # derived for, * a hidden table's unique suffix
+    "doc_norms": ["doc_norms/_tmp-<snap>-* overwrite", "doc_norms/<snap> rename",
+                  "doc_norms/<old> delete"],
 }
 
 
@@ -104,7 +115,8 @@ class Writer(NamedTuple):
     run: Callable[[str], object]  # the writer, on a copy
     recover: Callable[[str], object]  # its documented recovery
     outcome: Callable[[str], object]  # what an uninterrupted run must match
-    ann: bool
+    kind: str  # "text" (an index writer), "ann" or "norms"
+    names: Callable[[str], str] = str  # a logged mutation name as pinned
 
 
 def _text_outcome(spark, index_dir):
@@ -114,8 +126,8 @@ def _text_outcome(spark, index_dir):
             for q in QUERIES for scorer in (bm25_search, bm25_wand_search)}
 
 
-def _ann_outcome(spark, index_dir, part_col, value_col):
-    return sorted((r["vec_id"], r[part_col], str(r[value_col]))
+def _ann_outcome(spark, index_dir, *cols):
+    return sorted((r["vec_id"], *(str(r[c]) for c in cols))
                   for r in spark.read.parquet(index_dir).collect())
 
 
@@ -155,12 +167,12 @@ class _Writers:
             ref = self.dir(w.start)
             order = crash_seam(ref)
             w.run(ref)
-            self.made[name] = (w, order, w.outcome(ref))
+            self.made[name] = (w, [w.names(n) for n in order], w.outcome(ref))
         return self.made[name]
 
     # ---- index writers -------------------------------------------------
     def text(self, start, run, recover):
-        return Writer(start, run, recover, lambda d: _text_outcome(self.spark, d), False)
+        return Writer(start, run, recover, lambda d: _text_outcome(self.spark, d), "text")
 
     def base(self):
         """24 built pages and an 8-page stream batch: two segments a shard."""
@@ -273,7 +285,67 @@ class _Writers:
         start = self.dir()
         build(start)
         return Writer(start, upsert, upsert,
-                      lambda d: _ann_outcome(self.spark, d, part_col, value_col), True)
+                      lambda d: _ann_outcome(self.spark, d, part_col, value_col), "ann")
+
+    def full_build(self, build, *cols):
+        """A full build of the base vectors over an earlier build of the
+        batch's in the same directory."""
+        base, batch, _, _ = self.vectors()
+        start = self.dir()
+        build(batch, start)
+        return Writer(start, lambda d: build(base, d), lambda d: build(base, d),
+                      lambda d: _ann_outcome(self.spark, d, *cols), "ann")
+
+    def lsh_build(self):
+        return self.full_build(lambda emb, d: similarity.build_lsh_index(
+            emb, d, sig_bits=8, bucket_bits=4, seed=7, dim=8), "bucket", "embedding")
+
+    def ivf_build(self):
+        cents = self.vectors()[2]
+        return self.full_build(lambda emb, d: similarity.build_ivf_index(emb, d, cents),
+                               "ivf_cell", "embedding")
+
+    def pq_build(self):
+        books = self.vectors()[3]
+        return self.full_build(lambda emb, d: similarity.build_pq_index(emb, d, books),
+                               "pq_code")
+
+    def ivfpq_build(self):
+        _, _, cents, books = self.vectors()
+        return self.full_build(
+            lambda emb, d: similarity.build_ivfpq_index(emb, d, cents, books),
+            "ivf_cell", "pq_code")
+
+    # ---- doc norms -----------------------------------------------------
+    def doc_norms(self):
+        """The first call after a commit, on an index whose norms were
+        derived for the snapshot before it.  A crash before the rename
+        leaks a hidden table of the current snapshot, which may as well
+        be a concurrent reader's write in progress: it stays until the
+        next snapshot, so the outcome leaves it out."""
+        start = self.dir(self.base())
+        IndexReader(self.spark, start).doc_norms()
+        old = snapshot_id(self.spark, IndexPaths(start))
+        inc._append_batch(self.spark, self.frame(gen_pages_pandas(4, start=40)), 2,
+                          IndexPaths(start), SHARDS)
+        snap = snapshot_id(self.spark, IndexPaths(start))
+        assert snap != old
+
+        def names(name):
+            name = name.replace(snap, "<snap>").replace(old, "<old>")
+            return re.sub(r"(_tmp-<snap>-)[0-9a-f]{32}", r"\1*", name)
+
+        def run(d):
+            IndexReader(self.spark, d).doc_norms()
+
+        def outcome(d):
+            rows = sorted(((r["shard"], r["local_no"]), r["tfidf_veclen"])
+                          for r in IndexReader(self.spark, d).doc_norms().collect())
+            entries = sorted(n for n in map(names, os.listdir(IndexPaths(d).doc_norms))
+                             if not n.startswith("_tmp-<snap>-"))
+            return rows, entries
+
+        return Writer(start, run, run, outcome, "norms", names)
 
     def ivf_upsert(self):
         base, batch, cents, _ = self.vectors()
@@ -324,17 +396,19 @@ def test_crash_window_recovers(spark, writers, crash_seam, assert_stats_current,
     d = writers.dir(w.start)
     before = _listing(d)
     log = crash_seam(d, crash_at=window)
-    with pytest.raises(RuntimeError, match=(
-            f"injected crash before {re.escape(WRITE_ORDER[name][window])}$")):
+    with pytest.raises(RuntimeError, match="^injected crash before ") as crash:
         w.run(d)
     crash_seam()
-    assert log == WRITE_ORDER[name][:window], step
+    assert w.names(str(crash.value).split(" before ", 1)[1]) == WRITE_ORDER[name][window]
+    assert [w.names(n) for n in log] == WRITE_ORDER[name][:window], step
     if window == 0:
         assert _listing(d) == before, step
 
     w.recover(d)
     got = w.outcome(d)
-    if w.ann:
+    if w.kind == "norms":
+        assert got == want, step
+    elif w.kind == "ann":
         assert got == want, step
         assert len({r[0] for r in got}) == len(got), step
     else:
@@ -344,4 +418,21 @@ def test_crash_window_recovers(spark, writers, crash_seam, assert_stats_current,
             assert [i for i, _ in got[key]] == [i for i, _ in rows], (step, key)
             for (_, a), (_, b) in zip(got[key], rows):
                 assert a == pytest.approx(b, rel=1e-12), (step, key)
+    shutil.rmtree(d)
+
+
+def test_doc_norms_leak_is_deleted_at_the_next_snapshot(spark, writers, crash_seam):
+    """A crash before the rename leaks the current snapshot's hidden
+    table; the first call after the next commit deletes it."""
+    w, _, _ = writers.get("doc_norms", crash_seam)
+    d = writers.dir(w.start)
+    crash_seam(d, crash_at=1)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        w.run(d)
+    crash_seam()
+    paths = IndexPaths(d)
+    assert any(n.startswith("_tmp-") for n in os.listdir(paths.doc_norms))
+    inc._append_batch(spark, writers.frame(gen_pages_pandas(2, start=60)), 3, paths, SHARDS)
+    w.run(d)
+    assert os.listdir(paths.doc_norms) == [snapshot_id(spark, paths)]
     shutil.rmtree(d)

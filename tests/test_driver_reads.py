@@ -93,7 +93,7 @@ def test_term_stats_lookup_reads_only_covering_row_groups(spark, monkeypatch):
     bounded row groups; the driver's term lookup opens only the row
     groups whose term min/max covers a query term, and returns what
     Spark's filtered read returns."""
-    monkeypatch.setattr(index_build, "TERM_STATS_ROW_GROUP_BYTES", 1)
+    monkeypatch.setattr(index_build, "TERM_ROW_GROUP_BYTES", 1)
     idx = tempfile.mkdtemp(prefix="drs_term_rg_")
     try:
         build_index(spark, spark.createDataFrame(gen_pages_pandas(60), PAGES_DDL),
@@ -164,8 +164,10 @@ def test_wand_doc_lookup_follows_every_segment_change(spark):
 
 
 def test_wand_equals_exhaustive_when_k_covers_the_corpus(reader):
-    """With k above the corpus size no query has rows to cut, and the
-    finish stays a lazy docs join: still bm25_search's rows."""
+    """With k above the corpus size no query has rows to cut: still
+    bm25_search's rows (a request the driver scores finishes in the
+    driver; a Spark-scored one keeps a lazy docs join,
+    tests/test_wand_paths.py)."""
     assert reader.corpus()["total_docs"] < 10**6
     _assert_wand_is_exhaustive(reader, ["数据 算法", "系统 网络 数据"], "zh",
                                "k covers the corpus", k=10**6)

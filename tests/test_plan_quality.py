@@ -134,12 +134,13 @@ def _spark_jobs(spark, action) -> int:
     return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
-def test_index_reads_run_only_the_jobs_that_move_data(spark, reader):
+def test_index_reads_run_only_the_jobs_that_move_data(spark, reader, monkeypatch):
     """Per-request job budgets.  Declared table schemas mean no read
     launches a schema-inference job; the corpus scalars and query-term
-    dfs are driver reads with no job; a WAND request, single or batched,
-    runs only the block scan with its shard exchange and the kernel
-    stage, and finishes in the driver.  Commits keep the stats current,
+    dfs are driver reads with no job; a WAND request on a local index,
+    single or batched, runs no job when its postings fit the driver's
+    budget, and otherwise only the block scan with its shard exchange and
+    the kernel stage, finishing in the driver.  Commits keep the stats current,
     so finalize_index on a committed index only reads the manifest and
     corpus rows in the driver; a build and a stream batch (one shard
     appended to, one rewritten) each run at most their pinned counts."""
@@ -149,6 +150,7 @@ def test_index_reads_run_only_the_jobs_that_move_data(spark, reader):
         build_index,
         finalize_index,
     )
+    from document_retrieval_system_spark.operators import wand
     from document_retrieval_system_spark.operators.wand import (
         bm25_wand_search,
         bm25_wand_search_many,
@@ -164,11 +166,20 @@ def test_index_reads_run_only_the_jobs_that_move_data(spark, reader):
     assert _spark_jobs(spark, reader.corpus) == 0
     single = _spark_jobs(spark, lambda: bm25_wand_search(
         reader, "数据 算法", "zh", 10, 0.0).collect())
-    assert single <= 2, single
+    assert single == 0, single
     batch = ["数据 算法", "系统", "网络 数据", "算法"] * 4
     many = _spark_jobs(spark, lambda: bm25_wand_search_many(
         reader, batch, "zh", 10, 0.0).collect())
-    assert many <= 2, many
+    assert many == 0, many
+    # over the budget, Spark scans the blocks and runs the kernels
+    monkeypatch.setattr(wand, "DRIVER_POSTINGS", 0)
+    over = _spark_jobs(spark, lambda: bm25_wand_search(
+        reader, "数据 算法", "zh", 10, 0.0).collect())
+    assert 1 <= over <= 2, over
+    over_many = _spark_jobs(spark, lambda: bm25_wand_search_many(
+        reader, batch, "zh", 10, 0.0).collect())
+    assert 1 <= over_many <= 2, over_many
+    monkeypatch.undo()
 
     idx = tempfile.mkdtemp(prefix="drs_job_budget_")
     try:
