@@ -92,8 +92,9 @@ _SPREAD_MIN_BYTES = int(os.environ.get("SPARK_GRAFT_SPREAD_MIN_BYTES",
 # v3: gap-aligned posting block boundaries.  v4: tagged ("b"-prefixed)
 # ANN bucket partition values.  v5: manifest kind+committed_at.
 # v6: URL-ordered local_no assignment (docID locality).  v7: per-shard
-# term_stats and corpus_stats written by each commit.
-ENTRY_CACHE_VERSION = 7
+# term and corpus stats written by each commit.  v8: a term's df and cf
+# read from its postings' block-0 rows; no separate term table.
+ENTRY_CACHE_VERSION = 8
 
 
 def _fingerprint(path: str) -> tuple[tuple[str, int, int], ...] | None:

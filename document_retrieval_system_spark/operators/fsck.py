@@ -9,7 +9,7 @@ invariants from the data itself and reports every violation as a row —
 empty result means clean bill.
 
 Checks (each one relational, fused over ONE decode pass of the
-postings plus the docs/stats sidecars):
+postings plus the docs and corpus_stats sidecars):
 
 - ``orphan_posting``    decoded posting references a (shard, ordinal)
                         absent from the docs table (crash between docs
@@ -25,15 +25,12 @@ postings plus the docs/stats sidecars):
                         must match the decoded payloads (codec or
                         re-block corruption; block-max pruning would
                         silently return wrong results on bad bounds).
-- ``df_local``          block 0's df_local, summed over the segments
-                        of a (shard, term) as the shard's term_stats
-                        rows sum it, must equal its total decoded
-                        postings.
+- ``df_local``          block 0's df_local and cf_local, summed over
+                        the segments of a (shard, term) as a term's
+                        df and cf are read, must equal its decoded
+                        postings' count and summed tf.
 - ``doc_len_mismatch``  dl replicated in posting blocks must equal the
                         docs table's doc_len for that ordinal.
-- ``term_stats``        each shard's term_stats rows, summed per term
-                        over its stats segments, must equal the df/cf
-                        of that shard's own decoded postings.
 - ``corpus_stats``      each shard's corpus row must equal the totals
                         of that shard's own docs (docs with tokens,
                         their summed doc_len).
@@ -61,7 +58,6 @@ from document_retrieval_system_spark.operators.index_build import (
     flat_postings,
     read_table,
     stats_state,
-    _read_postings_or_empty,
 )
 
 _OUT_COLS = ["check", "shard", "key", "expected", "actual"]
@@ -82,7 +78,7 @@ def fsck_index(spark: SparkSession, index_dir: str) -> DataFrame:
     (empty = consistent).  Read-only."""
     paths = IndexPaths(index_dir)
     docs = read_table(spark, paths, "docs")
-    blocks = _read_postings_or_empty(spark, paths)
+    blocks = read_table(spark, paths, "postings")
     decoded = flat_postings(blocks, with_positions="bytes").persist()
     doc_keys = docs.select("shard", "local_no", "doc_len", "doc_id")
 
@@ -140,9 +136,11 @@ def fsck_index(spark: SparkSession, index_dir: str) -> DataFrame:
         F.min("min_dl").alias("_adv_mindl"),
         # each appended segment has its own block 0
         F.sum(F.when(F.col("block_no") == 0, F.col("df_local"))).alias("_df0"),
+        F.sum(F.when(F.col("block_no") == 0, F.col("cf_local"))).alias("_cf0"),
     )
     act = decoded.groupBy("shard", "term").agg(
         F.count("*").alias("_act_n"),
+        F.sum("tf").alias("_act_cf"),
         F.min("local_no").alias("_act_first"),
         F.max("local_no").alias("_act_last"),
         F.max("tf").alias("_act_maxtf"),
@@ -166,8 +164,10 @@ def fsck_index(spark: SparkSession, index_dir: str) -> DataFrame:
     # null-SAFE: a term whose block 0 vanished advertises df_local
     # nowhere (_df0 NULL) — that is a violation, not a skip
     out.append(_violation(
-        meta.filter(~F.col("_df0").eqNullSafe(F.col("_act_n"))), "df_local",
-        F.col("term"), F.col("_act_n"), F.col("_df0")))
+        meta.filter(~F.col("_df0").eqNullSafe(F.col("_act_n"))
+                    | ~F.col("_cf0").eqNullSafe(F.col("_act_cf"))), "df_local",
+        F.col("term"), F.concat_ws("/", "_act_n", "_act_cf"),
+        F.concat_ws("/", "_df0", "_cf0")))
 
     # dl replicated in blocks must match the docs table
     dlm = (
@@ -183,21 +183,8 @@ def fsck_index(spark: SparkSession, index_dir: str) -> DataFrame:
         dlm, "doc_len_mismatch", F.col("local_no"),
         F.col("_dl_doc"), F.col("_dl_post")))
 
-    # per-shard stats: each shard's rows must re-derive from its own
-    # postings and docs, and carry the stamp of its latest manifest event
-    ts = read_table(spark, paths, "term_stats").groupBy("shard", "term").agg(
-        F.sum("df").alias("df"), F.sum("cf").alias("cf"))
-    re_ts = decoded.groupBy("shard", "term").agg(
-        F.count("*").alias("_df"), F.sum("tf").alias("_cf"))
-    ts_bad = (
-        ts.join(re_ts, ["shard", "term"], "full")
-        .filter((F.col("df") != F.col("_df")) | (F.col("cf") != F.col("_cf"))
-                | F.col("df").isNull() | F.col("_df").isNull())
-    )
-    out.append(_violation(
-        ts_bad, "term_stats", F.col("term"),
-        F.concat_ws("/", "_df", "_cf"), F.concat_ws("/", "df", "cf")))
-
+    # corpus stats: each shard's row must re-derive from its own docs, and
+    # carry the stamp of its latest manifest event
     cs = read_table(spark, paths, "corpus_stats")
     re_cs = docs.filter(F.col("doc_len") > 0).groupBy("shard").agg(
         F.count("*").alias("_td"), F.sum("doc_len").alias("_tt"))

@@ -30,9 +30,10 @@ Design notes for 10^12 docs / 1000 executors:
   avgdl) grows across incremental builds.
 - **Resumable waves + lineage** (north_star): shards are processed in
   waves; each wave appends its partitions, then its manifest rows
-  (data-before-marker ordering), then its shards' term and corpus
-  stats.  ``build_index(resume=True)`` skips shards already in the
-  manifest.  The manifest carries per-shard
+  (data-before-marker ordering), then its shards' corpus stats.  A
+  term's df and cf are not kept apart: every posting segment's block 0
+  carries them (``df_local``, ``cf_local``).  ``build_index(resume=True)``
+  skips shards already in the manifest.  The manifest carries per-shard
   counters: docs parsed, docs indexed, postings emitted, bytes compressed
   — the reference has only a tqdm bar (indexer.py:403).
 - The table layout (partition column ``shard``, files sorted by term,
@@ -103,20 +104,16 @@ MANIFEST_SCHEMA = (
     "blocks long, doc_bytes long, tf_bytes long, dl_bytes long, pos_bytes long, "
     "status string, kind string, committed_at timestamp"
 )
-# The global stats are kept per shard by the commit that changes a shard
-# (``commit_manifest``).  A term_stats row is one segment's (df, cf) of a
-# term in a shard — an append adds its segment's rows, a snapshot
-# replaces the shard's — so a term's global df is the integer sum of its
-# rows.  corpus_stats holds one row per shard, stamped with the manifest
-# event (``committed_at``) it reflects.
-TERM_STATS_SCHEMA = "shard int, term string, df long, cf long"
+# The corpus stats are kept per shard by the commit that changes a shard
+# (``commit_manifest``): one row per shard, stamped with the manifest event
+# (``committed_at``) it reflects.  A term's global df and cf are the integer
+# sums of the df_local and cf_local of every segment's block 0 in postings.
 CORPUS_STATS_SCHEMA = (
     "shard int, total_docs long, total_tokens long, committed_at timestamp"
 )
 TABLE_SCHEMAS = {
     "docs": DOCS_SCHEMA,
     "postings": POSTINGS_SCHEMA,
-    "term_stats": TERM_STATS_SCHEMA,
     "corpus_stats": CORPUS_STATS_SCHEMA,
     "manifest": MANIFEST_SCHEMA,
 }
@@ -411,7 +408,6 @@ class IndexPaths:
         self.root = index_dir
         self.postings = os.path.join(index_dir, "postings")
         self.docs = os.path.join(index_dir, "docs")
-        self.term_stats = os.path.join(index_dir, "term_stats")
         self.corpus_stats = os.path.join(index_dir, "corpus_stats")
         self.doc_norms = os.path.join(index_dir, "doc_norms")
         self.manifest = os.path.join(index_dir, "manifest")
@@ -500,17 +496,32 @@ def read_table(spark: SparkSession, paths: IndexPaths, table: str) -> DataFrame:
     """The index table ``table`` read under its declared schema — the one
     Spark read path of every index table.  A table directory that holds no
     data files (a wave whose documents all tokenize empty writes only
-    ``_SUCCESS`` under postings/) reads as empty."""
+    ``_SUCCESS`` under postings/) reads as empty, and so does a missing
+    postings directory (a stream batch that crashed before its first
+    postings write); real read errors (corruption, permissions, transient
+    store failures) propagate."""
+    if table == "postings" and not fs_exists(spark, paths.postings):
+        return spark.createDataFrame([], POSTINGS_SCHEMA)
     return spark.read.schema(TABLE_SCHEMAS[table]).parquet(getattr(paths, table))
 
 
-def _covers(stats: dict | None, values: list) -> bool:
+def _column_stats(frag, column: str) -> list:
+    """The parquet statistics of ``column`` in each row group of the
+    whole-file fragment ``frag``, read from its footer for that column
+    alone (``RowGroupInfo.statistics`` converts every column's, binary
+    payloads included)."""
+    md = frag.metadata
+    j = md.schema.names.index(column)
+    return [md.row_group(i).column(j).statistics for i in range(md.num_row_groups)]
+
+
+def _covers(stats, values: list) -> bool:
     """Whether a row group whose column statistics are ``stats`` may hold
     one of the sorted ``values``: some value lies in [min, max]."""
-    if not stats or stats.get("min") is None or stats.get("max") is None:
+    if stats is None or not stats.has_min_max:
         return True
-    i = bisect.bisect_left(values, stats["min"])
-    return i < len(values) and values[i] <= stats["max"]
+    i = bisect.bisect_left(values, stats.min)
+    return i < len(values) and values[i] <= stats.max
 
 
 def _data_files(fs, directory: str, missing_ok: bool = False) -> list:
@@ -534,10 +545,11 @@ def table_fragments(paths: IndexPaths, table: str, filter: dict | None = None) -
     ``shard`` filter on a shard-partitioned table lists only those shard
     directories (a missing one is an empty shard); a row group survives
     when, for every filtered data column, its min/max statistics cover
-    at least one filter value.  (pyarrow's own scan prunes row groups on
-    equalities, not on ``is_in``.)  A missing postings directory is an
-    empty table, as ``_read_postings_or_empty`` reads it.  The table must
-    be on the local file system (``driver_reads``)."""
+    at least one filter value; only the filtered columns' statistics are
+    read.  (pyarrow's own scan prunes row groups on equalities, not on
+    ``is_in``.)  A missing postings directory is an empty table, as
+    ``read_table`` reads it.  The table must be on the local file system
+    (``driver_reads``)."""
     uri = getattr(paths, table)
     fs, root = _fs_root(uri)
     want = {c: sorted(set(v)) for c, v in (filter or {}).items()}
@@ -558,9 +570,9 @@ def table_fragments(paths: IndexPaths, table: str, filter: dict | None = None) -
                 continue
             frag = fmt.make_fragment(info.path, fs, partition_expression=part)
             if want:
-                frag.ensure_complete_metadata()
-                keep = [rg.id for rg in frag.row_groups
-                        if all(_covers(rg.statistics.get(c), v) for c, v in want.items())]
+                stats = {c: _column_stats(frag, c) for c in want}
+                keep = [i for i in range(frag.metadata.num_row_groups)
+                        if all(_covers(stats[c][i], v) for c, v in want.items())]
                 if not keep:
                     continue
                 frag = frag.subset(row_group_ids=keep)
@@ -620,25 +632,13 @@ def ordinal_base(spark: SparkSession, paths: IndexPaths, shards) -> dict[int, in
     if driver_reads(spark, paths.docs):
         for s in base:
             for frag in table_fragments(paths, "docs", {"shard": [s]}):
-                frag.ensure_complete_metadata()
-                for rg in frag.row_groups:
-                    base[s] = max(base[s], rg.statistics["local_no"]["max"] + 1)
+                for st in _column_stats(frag, "local_no"):
+                    base[s] = max(base[s], st.max + 1)
         return base
     docs = read_table(spark, paths, "docs").filter(F.col("shard").isin(list(base)))
     for r in docs.groupBy("shard").agg(F.max("local_no").alias("m")).collect():
         base[r["shard"]] = r["m"] + 1
     return base
-
-
-def _read_postings_or_empty(spark: SparkSession, paths: IndexPaths) -> DataFrame:
-    """Postings table, or an empty frame when no blocks exist yet.  A
-    missing postings path maps to 'empty' here, a directory without data
-    files in ``read_table``; real read errors (corruption, permissions,
-    transient store failures) propagate instead of being silently
-    treated as an empty index."""
-    if not fs_exists(spark, paths.postings):
-        return spark.createDataFrame([], POSTINGS_SCHEMA)
-    return read_table(spark, paths, "postings")
 
 
 # shared by every writer, so a new column cannot silently vanish from one path
@@ -653,17 +653,15 @@ DOC_TABLE_COLS = _columns(DOCS_SCHEMA)
 # ---------------------------------------------------------------------------
 
 # table -> (columns, sort key of a shard's files): docs by ordinal, postings
-# and term_stats by term so row-group min/max statistics prune term-IN
-# filters
+# by term so row-group min/max statistics prune term-IN filters
 _SHARD_TABLES = {
     "docs": (DOC_TABLE_COLS, ["local_no"]),
     "postings": (_BLOCK_COLS, ["term", "block_no"]),
-    "term_stats": (_columns(TERM_STATS_SCHEMA), ["term"]),
     "corpus_stats": (_columns(CORPUS_STATS_SCHEMA), []),
 }
 
-# the row-group size bound of the term-sorted files (postings and
-# term_stats): a term lookup reads about one such group per file per term
+# the row-group size bound of the term-sorted postings files: a term lookup
+# reads about one such group per file per term
 TERM_ROW_GROUP_BYTES = 1 << 17
 
 
@@ -707,7 +705,7 @@ def write_shards(spark: SparkSession, paths: IndexPaths, table: str,
     (``overwrite_partitions``)."""
     path = getattr(paths, table)
     writer = shard_layout(frame, table, layout or shards).write
-    if table in ("postings", "term_stats"):
+    if table == "postings":
         writer = writer.option("parquet.block.size", TERM_ROW_GROUP_BYTES)
     if overwrite:
         overwrite_partitions(spark, writer, path, "shard", [int(s) for s in shards],
@@ -846,41 +844,28 @@ def write_rows(spark: SparkSession, paths: IndexPaths, table: str,
         publish(f"{root}/shard={s}", "part-00000.parquet", t.slice(i, 1).drop(["shard"]))
 
 
-def _segment_stats(blocks: DataFrame) -> DataFrame:
-    """term_stats rows of posting blocks: every segment's block 0 carries
-    its (shard, term) df_local and cf_local."""
-    return blocks.filter(F.col("block_no") == 0).select(
-        "shard", "term", F.col("df_local").cast("long").alias("df"),
-        F.col("cf_local").alias("cf"))
-
-
 def commit_manifest(spark: SparkSession, paths: IndexPaths, status: str,
                     kind: str, blocks: DataFrame, shards,
                     parsed: DataFrame | None = None,
                     docs: DataFrame | None = None,
-                    counts: dict | None = None, layout=None) -> None:
+                    counts: dict | None = None) -> None:
     """Commit an event of ``shards`` whose data is written: append one
     manifest row per shard of ``shards`` — only those with docs ``parsed``
     by the event when it parsed any (docs_parsed / docs_indexed
     counters), all of them with NULL parse counters when it parsed
-    nothing — then bring those shards' stats to the new manifest row.
+    nothing — then bring those shards' corpus rows to the new manifest
+    row.
 
     ``blocks`` gives the posting counters, zero where a shard has none:
     the event's own new segments for kind 'append' (and 'merge'), the
-    shard's full post-event postings for 'snapshot'.  Callers pass it
-    materialized and laid out by ``shard_layout(.., "postings", layout)``
-    (``layout`` defaults to ``shards``), so ``build_postings`` never runs
-    twice and the stats write runs with no exchange.
+    shard's full post-event postings for 'snapshot'.
 
-    The stats:
-    - 'snapshot': the shard's term_stats partition is replaced by the
-      block-0 rows of ``blocks`` and its corpus row recounted from
-      ``docs``, the shard's whole post-event docs;
-    - 'append': the event's block-0 rows are appended as the shard's new
-      stats segment and the event's counts added to its corpus row —
-      only where the shard's stats were current before the event.  A
-      stale shard (a crash left its stamp behind) is left stale for
-      ``finalize_index`` to recount.
+    The corpus row:
+    - 'snapshot': recounted from ``docs``, the shard's whole post-event
+      docs;
+    - 'append': the event's counts added to it — only where the shard's
+      row was current before the event.  A stale shard (a crash left its
+      stamp behind) is left stale for ``finalize_index`` to recount.
 
     ``counts``: this event's ``shard_counts(parsed, docs, blocks)``, when
     the caller already collected it."""
@@ -901,31 +886,18 @@ def commit_manifest(spark: SparkSession, paths: IndexPaths, status: str,
                      *[c[b] for b in _BYTE_COLS], status, kind, stamp))
     write_rows(spark, paths, "manifest", rows)
 
-    # an index whose docs all tokenize empty has no term rows: its
-    # term_stats table is an empty directory, not a missing one
-    fs_touch(spark, paths.term_stats)
-    layout = list(layout or shards)
-    with_blocks = [s for s in event if counts.get(s, zero)["blocks"]]
     if kind == "snapshot":
-        write_shards(spark, paths, "term_stats",
-                     _segment_stats(of_shards(blocks, event)), event,
-                     overwrite=True, present=with_blocks, layout=layout)
         corpus = [(s, counts.get(s, zero)["total_docs"],
                    counts.get(s, zero)["total_tokens"], stamp) for s in event]
     else:
-        current = [s for s in event
-                   if heads.get(s) == (stats[s][2] if s in stats else None)]
-        seg = [s for s in current if s in with_blocks]
-        if seg:
-            write_shards(spark, paths, "term_stats",
-                         _segment_stats(of_shards(blocks, seg)), seg,
-                         layout=layout)
         corpus = []
-        for s in current:
+        for s in event:
+            if heads.get(s) != (stats[s][2] if s in stats else None):
+                continue
             td, tt, _ = stats.get(s, (0, 0, None))
             c = counts.get(s, zero)
             corpus.append((s, td + c["docs_indexed"], tt + c["tokens"], stamp))
-    # last: a shard's corpus row stamp vouches for its term_stats rows
+    # last: a shard's corpus row stamp vouches for the row
     write_rows(spark, paths, "corpus_stats", corpus)
 
 
@@ -1058,10 +1030,10 @@ def build_index(
 
     ``wave_size``: shards per commit wave (None = all pending in one
     wave).  Each wave appends docs+postings partitions for its shards,
-    then appends manifest rows and writes the shards' stats — the
+    then appends manifest rows and writes the shards' corpus rows — the
     manifest row IS the per-partition checkpoint; on resume, shards
     present in the manifest are skipped without recomputation.  Data and
-    stats partitions for shards NOT in the manifest are deleted before
+    corpus partitions for shards NOT in the manifest are deleted before
     reprocessing: a crash between the docs append and the manifest commit
     leaves orphaned partitions that a naive re-append would duplicate.
     """
@@ -1099,10 +1071,10 @@ def build_index(
         # layout write_shards asks for, so the window and the docs write
         # share one exchange instead of moving the wide tokenized rows
         # twice.  Both frames are persisted in that layout, so the
-        # commit's counters and stats read them with no exchange.
+        # commit's counters read them with no exchange.
         tok = assign_local_no(
             tokenize_docs(docs, analyzer=analyzer)
-            .repartition(max(len(wave), 1), "shard")
+            .repartition(layout_partitions(wave), "shard")
         ).persist()
         blocks = shard_layout(build_postings(doc_term_rows(tok)), "postings",
                               wave).persist()
@@ -1122,15 +1094,16 @@ def build_index(
 def finalize_index(spark: SparkSession, paths: IndexPaths) -> None:
     """Bring every shard's stats up to its latest manifest event.
 
-    Commits keep the stats of the shards they touch current
+    Commits keep the corpus rows of the shards they touch current
     (``commit_manifest``), so after a normal commit this only reads the
     manifest and the corpus rows in the driver and runs no Spark job.
     A shard whose stamp is behind its manifest head — a crash between a
-    commit's manifest row and its stats — is recounted from its own
-    postings and docs (``refresh_shard_stats``).  The reference recomputes
-    its global weights after every build (indexer.py:423); the semantics
-    are kept, the full-corpus rescan is not.  TF-IDF doc norms are not
-    stats of a commit: ``IndexReader.doc_norms`` derives them on demand."""
+    commit's manifest row and its corpus row — is recounted from its own
+    docs (``refresh_shard_stats``).  Term dfs need no recount: they are
+    read from the postings' block-0 rows.  The reference recomputes its
+    global weights after every build (indexer.py:423); the semantics are
+    kept, the full-corpus rescan is not.  TF-IDF doc norms are not stats
+    of a commit: ``IndexReader.doc_norms`` derives them on demand."""
     heads, stats = stats_state(spark, paths)
     stale = sorted(s for s, head in heads.items()
                    if s not in stats or stats[s][2] != head)
@@ -1140,19 +1113,12 @@ def finalize_index(spark: SparkSession, paths: IndexPaths) -> None:
 
 def refresh_shard_stats(spark: SparkSession, paths: IndexPaths, shards: list[int],
                         heads: dict) -> None:
-    """Recount the stats of ``shards`` from their own postings and docs,
-    stamped with their manifest ``heads``: term_stats from every
-    segment's block 0 (I3), summed per (shard, term); corpus stats from
-    the docs with tokens (I4, indexer.py:53-54,86-90).  Other shards are
-    never read."""
-    shard_filter = F.col("shard").isin([int(s) for s in shards])
-    docs = read_table(spark, paths, "docs").filter(shard_filter)
+    """Recount the corpus rows of ``shards`` from their own docs (the
+    docs with tokens, I4, indexer.py:53-54,86-90), stamped with their
+    manifest ``heads``.  Other shards are never read."""
+    docs = read_table(spark, paths, "docs").filter(
+        F.col("shard").isin([int(s) for s in shards]))
     counts = shard_counts(docs=docs)
-    rows = (_segment_stats(_read_postings_or_empty(spark, paths).filter(shard_filter))
-            .repartition(max(len(shards), 1), "shard")
-            .groupBy("shard", "term").agg(F.sum("df").alias("df"), F.sum("cf").alias("cf")))
-    write_shards(spark, paths, "term_stats", rows, shards, overwrite=True,
-                 present=[s for s, c in counts.items() if c["total_docs"]])
     zero = dict.fromkeys(_COUNTER_NAMES, 0)
     write_rows(spark, paths, "corpus_stats", [
         (s, counts.get(s, zero)["total_docs"], counts.get(s, zero)["total_tokens"],
@@ -1188,7 +1154,7 @@ def live_postings(spark: SparkSession, paths: IndexPaths, shards,
     delete, a stream rewrite or a crashed attempt removed."""
     # first-ever stream batch crash window: docs written, postings never
     # created — the replay reads an empty frame, not PATH_NOT_FOUND
-    old_blocks = _read_postings_or_empty(spark, paths).filter(
+    old_blocks = read_table(spark, paths, "postings").filter(
         F.col("shard").isin([int(s) for s in shards]))
     return (
         flat_postings(old_blocks, with_positions="bytes")
@@ -1310,13 +1276,14 @@ class IndexReader:
         return self._table("docs")
 
     def postings(self) -> DataFrame:
-        return _read_postings_or_empty(self.spark, self.paths)
+        return self._table("postings")
 
     def term_stats(self) -> DataFrame:
-        """The global ``(term, df, cf)``: the integer sums of every shard's
-        per-segment rows."""
-        return self._table("term_stats").groupBy("term").agg(
-            F.sum("df").alias("df"), F.sum("cf").alias("cf"))
+        """The global ``(term, df, cf)``: the integer sums of the
+        ``df_local`` and ``cf_local`` that every posting segment's block 0
+        carries for its (shard, term)."""
+        return self.postings().filter(F.col("block_no") == 0).groupBy("term").agg(
+            F.sum("df_local").alias("df"), F.sum("cf_local").alias("cf"))
 
     def doc_norms(self) -> DataFrame:
         """The TF-IDF doc norms of the current snapshot (``snapshot_id``),
@@ -1362,13 +1329,14 @@ class IndexReader:
     def query_stats(self, terms) -> tuple[dict, dict]:
         """``(corpus(), {term: df})`` for the query ``terms``, read in the
         driver (no Spark job on a local index): the corpus rows and the
-        rows of the term-sorted term_stats files whose row groups can hold
-        a query term, one file per shard and stats segment, summed per
-        term.  Terms absent from the index are absent from the dict."""
-        ts = read_table_arrow(self.spark, self.paths, "term_stats", ["term", "df"],
-                              {"term": terms})
+        block-0 rows of the term-sorted postings files whose row groups can
+        hold a query term, one per shard and segment, their ``df_local``
+        summed per term.  Terms absent from the index are absent from the
+        dict."""
+        ts = read_table_arrow(self.spark, self.paths, "postings", ["term", "df_local"],
+                              {"term": terms, "block_no": [0]})
         dfs: dict[str, int] = {}
-        for t, df in zip(ts["term"].to_pylist(), ts["df"].to_pylist()):
+        for t, df in zip(ts["term"].to_pylist(), ts["df_local"].to_pylist()):
             dfs[t] = dfs.get(t, 0) + df
         return self.corpus(), dfs
 

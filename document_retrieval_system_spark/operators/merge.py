@@ -57,7 +57,6 @@ from document_retrieval_system_spark.operators.index_build import (
     read_table,
     shard_layout,
     write_shards,
-    _read_postings_or_empty,
 )
 
 
@@ -130,7 +129,7 @@ def merge_indexes(
         # postings — the losing copy's key is absent from `renum`.
         # --------------------------------------------------------------
         post_frames = [
-            flat_postings(_read_postings_or_empty(spark, sp), with_positions="bytes")
+            flat_postings(read_table(spark, sp, "postings"), with_positions="bytes")
             .withColumnRenamed("shard", "old_shard")
             .withColumnRenamed("local_no", "old_local")
             .withColumn("segment", F.lit(i))

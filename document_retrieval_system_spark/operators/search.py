@@ -377,18 +377,18 @@ def prefix_completions(reader, prefix: str, k: int = 10) -> DataFrame:
     (ties by term ascending) — the suggest-as-you-type surface every
     search box needs, served from index metadata alone.
 
-    Reads ONLY the term-stats sidecar (per shard and stats segment, one
-    row per term, df + cf — orders of magnitude smaller than postings),
-    through the global ``IndexReader.term_stats`` view.  The StartsWith
-    predicate pushes below that view's groupBy into its parquet scan:
-    each term_stats file is sorted by term in bounded row groups, so per
-    file the scan reads only the row groups whose term range meets the
-    prefix.  There is one file per shard and stats segment, so every
-    file is opened — the block scan's S-shard fan-out.  The matching
-    rows are summed per term (one exchange of prefix-matching rows), and
-    top-k is a TakeOrderedAndProject — no full sort.  (Same pushdown
-    shape as `prefix_search`, which pays the full postings decode this
-    operator never touches.)"""
+    Reads ONLY the block-0 ``(term, df_local, cf_local)`` of the postings
+    (one row per shard, segment and term), through the global
+    ``IndexReader.term_stats`` view; no payload column is scanned or
+    decoded.  The StartsWith predicate pushes below that view's groupBy
+    into its parquet scan: each postings file is sorted by term in
+    bounded row groups, so per file the scan reads only the row groups
+    whose term range meets the prefix.  There is one file per shard and
+    segment, so every file is opened — the block scan's S-shard fan-out.
+    The matching rows are summed per term (one exchange of
+    prefix-matching rows), and top-k is a TakeOrderedAndProject — no full
+    sort.  (Same pushdown shape as `prefix_search`, which pays the full
+    postings decode this operator never touches.)"""
     return (
         reader.term_stats()
         .filter(F.col("term").startswith(prefix))

@@ -24,8 +24,8 @@ top-k with **block-max pruning** per index shard:
    searchsorted into decoded blocks), preserving the reference formula
    bit-for-bit.
 
-A request's term dfs and corpus scalars are pyarrow reads of the
-term_stats and corpus_stats files in the driver.  Where the kernel runs
+A request's term dfs and corpus scalars are pyarrow reads in the driver:
+the query terms' block-0 postings rows and the corpus_stats files.  Where the kernel runs
 depends on the index and on the request's size (``_hits``):
 
 - On the local file system, when the query terms' postings (their summed

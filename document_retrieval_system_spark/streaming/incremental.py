@@ -8,8 +8,8 @@ feeding ``foreachBatch``:
 
 - **inserts** (urls never seen) append **delta segments** to the same
   index layout the batch builder writes: docs + posting blocks under a
-  fresh ``local_no`` range per shard, manifest row per batch, and a
-  term-stats segment (the new blocks' block-0 df/cf) per shard.
+  fresh ``local_no`` range per shard, and a manifest row per batch.
+  The new segment's block 0 of each (shard, term) carries its df/cf.
 - **updates** (url re-sent with newer warc_ts) map the reference's
   remove-then-add: the affected shards' docs and postings partitions are
   REWRITTEN without the superseded rows (dynamic partition overwrite),
@@ -25,7 +25,7 @@ of every touched shard (ordinals from ``ordinal_base``), one
 ``build_postings`` over those rows and the rewritten shards' surviving
 postings, one counter pass.  It writes through the commit protocol of
 ``operators/index_build``: the docs of every touched shard, their
-postings, then per event the manifest rows, term stats and corpus rows.
+postings, then per event the manifest rows and corpus rows.
 Untouched shards are never read, and ``finalize_index`` has nothing left
 to rescan.
 
@@ -66,7 +66,6 @@ from document_retrieval_system_spark.operators.index_build import (
     shard_layout,
     tokenize_docs,
     write_shards,
-    _read_postings_or_empty,
 )
 from document_retrieval_system_spark.sources.corpus import PAGES_DDL
 
@@ -208,11 +207,10 @@ def _append_batch(spark: SparkSession, batch_df: DataFrame, batch_id: int,
                          present=[s for s in affected if counts[s]["blocks"]])
         if inserted:
             commit_manifest(spark, paths, f"stream-batch-{batch_id}", "append", blocks,
-                            inserted, parsed=tok, counts=counts, layout=touched)
+                            inserted, parsed=tok, counts=counts)
         if affected:
             commit_manifest(spark, paths, f"stream-update-batch-{batch_id}", "snapshot",
-                            blocks, affected, parsed=tok, docs=new_docs, counts=counts,
-                            layout=touched)
+                            blocks, affected, parsed=tok, docs=new_docs, counts=counts)
     finally:
         for frame in cached:
             frame.unpersist()
@@ -251,7 +249,7 @@ def compact_shards(spark: SparkSession, paths: IndexPaths,
     if shards is None:
         shards = sorted(
             r["shard"]
-            for r in _read_postings_or_empty(spark, paths)
+            for r in read_table(spark, paths, "postings")
             .select("shard").distinct().collect()
         )
     if not shards:

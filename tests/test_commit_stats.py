@@ -146,7 +146,7 @@ def test_every_commit_keeps_the_stats_of_a_full_recount(spark, assert_stats_curr
 def _state(index_dir):
     """Every data file of the index with its bytes, hidden files aside."""
     out = {}
-    for table in ("docs", "postings", "manifest", "term_stats", "corpus_stats"):
+    for table in ("docs", "postings", "manifest", "corpus_stats"):
         for f in glob.glob(os.path.join(index_dir, table, "**", "*.parquet"),
                            recursive=True):
             with open(f, "rb") as fh:
@@ -238,3 +238,49 @@ def test_doc_norms_are_derived_once_per_snapshot(spark):
         assert norms_dirs() == [snapshot_id(spark, paths)]
     finally:
         shutil.rmtree(idx, ignore_errors=True)
+
+
+def test_a_leftover_term_stats_table_is_ignored(spark):
+    """An index written by earlier code keeps a ``term_stats/`` table of
+    per-segment (df, cf) rows.  A term's df and cf are read from the
+    postings' block-0 rows, so such a table, left stale by a later batch,
+    changes no answer: query_stats, term_stats(), WAND and bm25_search
+    equal those of the same index without it, and fsck finds it clean."""
+    from document_retrieval_system_spark.operators.wand import bm25_wand_search_many
+
+    idx = tempfile.mkdtemp(prefix="drs_commit_leftover_")
+    bare = tempfile.mkdtemp(prefix="drs_commit_bare_")
+    try:
+        build_index(spark, spark.createDataFrame(gen_pages_pandas(30), PAGES_DDL),
+                    idx, n_shards=2)
+        paths = IndexPaths(idx)
+        reader = IndexReader(spark, idx)
+        (reader.postings().filter("block_no = 0")
+         .select("shard", "term", F.col("df_local").cast("long").alias("df"),
+                 F.col("cf_local").alias("cf"))
+         .write.partitionBy("shard").parquet(os.path.join(idx, "term_stats")))
+        batch = pd.concat([gen_pages_pandas(8, start=30),
+                           _resend(spark, paths, 0, 3, "leftover re-sent page", 1)])
+        _append_batch(spark, spark.createDataFrame(batch, PAGES_DDL), 0, paths, 2)
+        finalize_index(spark, paths)
+        shutil.copytree(idx, bare, dirs_exist_ok=True)
+        shutil.rmtree(os.path.join(bare, "term_stats"))
+        without = IndexReader(spark, bare)
+
+        stats = sorted(tuple(r) for r in reader.term_stats().collect())
+        assert stats == sorted(tuple(r) for r in without.term_stats().collect())
+        terms = [t for t, _, _ in stats][::5] + ["leftover", "zzzzunknowntermzzz"]
+        assert reader.query_stats(terms) == without.query_stats(terms)
+        for q in QUERIES + ["leftover re-sent"]:
+            want = [tuple(r) for r in bm25_search(without, q, "en", K, 0.0).collect()]
+            assert want
+            for r in (reader, without):
+                assert [tuple(x) for x in bm25_search(r, q, "en", K, 0.0).collect()] == want
+                assert [tuple(x) for x in bm25_wand_search(r, q, "en", K, 0.0).collect()] == want
+        many = [sorted(tuple(x) for x in bm25_wand_search_many(
+            r, QUERIES, "en", K, 0.0).collect()) for r in (reader, without)]
+        assert many[0] == many[1] and many[0]
+        assert fsck_index(spark, idx).collect() == []
+    finally:
+        shutil.rmtree(idx, ignore_errors=True)
+        shutil.rmtree(bare, ignore_errors=True)

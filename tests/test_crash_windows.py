@@ -55,45 +55,37 @@ INTENT = "maintenance_intent.json"
 WRITE_ORDER = {
     "build_wave": [
         ". delete",
-        "docs append", "postings append", "manifest rows", "term_stats touch",
-        "term_stats append", "corpus_stats rows",
-        "docs append", "postings append", "manifest rows",
-        "term_stats append", "corpus_stats rows",
+        "docs append", "postings append", "manifest rows", "corpus_stats rows",
+        "docs append", "postings append", "manifest rows", "corpus_stats rows",
     ],
     "stream_append": [
         f"stream_intents/batch-{BATCH_ID} touch",
-        "docs append", "postings append", "manifest rows", "term_stats append",
-        "corpus_stats rows",
+        "docs append", "postings append", "manifest rows", "corpus_stats rows",
         f"stream_intents/batch-{BATCH_ID} delete",
     ],
     "stream_rewrite": [
         f"stream_intents/batch-{BATCH_ID} touch",
-        "docs overwrite", "postings overwrite", "manifest rows",
-        "term_stats overwrite", "corpus_stats rows",
+        "docs overwrite", "postings overwrite", "manifest rows", "corpus_stats rows",
         f"stream_intents/batch-{BATCH_ID} delete",
     ],
     "delete_documents": [
         f"{INTENT} write",
         "docs overwrite", "docs/shard=1 delete",
         "postings overwrite", "postings/shard=1 delete",
-        "manifest rows", "term_stats overwrite", "term_stats/shard=1 delete",
-        "corpus_stats rows",
+        "manifest rows", "corpus_stats rows",
         f"{INTENT} delete",
     ],
     "compact_shards": [
         f"{INTENT} write",
-        "postings overwrite", "manifest rows", "term_stats overwrite",
-        "corpus_stats rows",
+        "postings overwrite", "manifest rows", "corpus_stats rows",
         f"{INTENT} delete",
     ],
     "merge_indexes": [
         ". delete",
-        "docs append", "postings append", "manifest rows", "term_stats touch",
-        "term_stats append", "corpus_stats rows",
+        "docs append", "postings append", "manifest rows", "corpus_stats rows",
     ],
     "repair_maintenance": [
-        "postings overwrite", "manifest rows", "term_stats overwrite",
-        "corpus_stats rows",
+        "postings overwrite", "manifest rows", "corpus_stats rows",
         f"{INTENT} delete",
     ],
     "ivf_upsert": ["ivf_cell overwrite", "ivf_cell=b0 delete", "ivf_cell=b1 delete"],

@@ -43,8 +43,8 @@ K = 10
 
 def _spark_query_stats(reader, terms):
     """The Spark twin of ``IndexReader.query_stats``: the per-shard
-    corpus_stats rows summed, and the term-filtered global term_stats,
-    collected."""
+    corpus_stats rows summed, and the term-filtered global
+    ``IndexReader.term_stats()`` view, collected."""
     corpus = reader._table("corpus_stats").agg(
         F.sum("total_docs").alias("td"), F.sum("total_tokens").alias("tt")).collect()[0]
     dfs = {r["term"]: r["df"] for r in reader.term_stats().filter(
@@ -89,34 +89,37 @@ def test_wand_equals_exhaustive_on_absent_and_duplicate_terms(reader):
 
 
 def test_term_stats_lookup_reads_only_covering_row_groups(spark, monkeypatch):
-    """A commit writes each shard's term_stats file sorted by term in
-    bounded row groups; the driver's term lookup opens only the row
-    groups whose term min/max covers a query term, and returns what
-    Spark's filtered read returns."""
+    """A commit writes each shard's postings file sorted by term in
+    bounded row groups; the driver's df lookup opens only the row groups
+    whose term min/max covers a query term and whose block_no range
+    holds block 0, and returns what Spark's filtered read returns."""
     monkeypatch.setattr(index_build, "TERM_ROW_GROUP_BYTES", 1)
     idx = tempfile.mkdtemp(prefix="drs_term_rg_")
     try:
         build_index(spark, spark.createDataFrame(gen_pages_pandas(60), PAGES_DDL),
                     idx, n_shards=2)
         paths = IndexPaths(idx)
-        files = sorted(glob.glob(os.path.join(paths.term_stats, "shard=*", "*.parquet")))
+        files = sorted(glob.glob(os.path.join(paths.postings, "shard=*", "*.parquet")))
         ranges = {}
         for f in files:
             pf = pq.ParquetFile(f)
             terms = pf.read(columns=["term"]).column("term").to_pylist()
             assert terms == sorted(terms), f
+            names = pf.schema_arrow.names
             for i in range(pf.num_row_groups):
-                st = pf.metadata.row_group(i).column(0).statistics
-                ranges[(f, i)] = (st.min, st.max)
+                rg = pf.metadata.row_group(i)
+                term, block = (rg.column(names.index(c)).statistics
+                               for c in ("term", "block_no"))
+                ranges[(f, i)] = (term.min, term.max, block.min)
         assert max(i for _f, i in ranges) >= 2, ranges  # several row groups
 
         vocab = sorted(r["term"] for r in IndexReader(spark, idx).term_stats().collect())
         query = [vocab[1], vocab[len(vocab) // 2], "zzzzunknowntermzzz"]
-        read = {(frag.path, rg.id) for frag in table_fragments(paths, "term_stats",
-                                                               {"term": query})
+        read = {(frag.path, rg.id) for frag in table_fragments(
+                    paths, "postings", {"term": query, "block_no": [0]})
                 for rg in frag.row_groups}
-        covering = {key for key, (lo, hi) in ranges.items()
-                    if any(lo <= t <= hi for t in query)}
+        covering = {key for key, (lo, hi, first_block) in ranges.items()
+                    if first_block == 0 and any(lo <= t <= hi for t in query)}
         assert read == covering
         assert len(read) < len(ranges)
         reader = IndexReader(spark, idx)
@@ -205,7 +208,7 @@ def test_wand_fills_k_past_a_hit_without_a_docs_row(spark, index_dir):
 def test_driver_reads_open_a_file_uri_in_the_driver(spark, reader, index_dir):
     """A ``file://`` index is the local file system: pyarrow reads it."""
     uri_reader = IndexReader(spark, "file://" + index_dir)
-    assert index_build.driver_reads(spark, uri_reader.paths.term_stats)
+    assert index_build.driver_reads(spark, uri_reader.paths.postings)
     terms = ["数据", "算法", "zzzzunknowntermzzz"]
     assert uri_reader.query_stats(terms) == reader.query_stats(terms)
     _assert_wand_is_exhaustive(uri_reader, ["数据 算法", "系统"], "zh", "file uri",
@@ -223,7 +226,8 @@ def test_driver_reads_leave_other_file_systems_to_spark(spark, reader, index_dir
     remote = IndexReader(spark, f"viewfs://{mount}/idx")
     assert not index_build.driver_reads(spark, remote.paths.docs)
     for table, cols, filt in [("corpus_stats", None, None),
-                              ("term_stats", ["term", "df"], {"term": ["数据", "qqqq"]}),
+                              ("postings", ["term", "df_local"],
+                               {"term": ["数据", "qqqq"], "block_no": [0]}),
                               ("docs", ["shard", "local_no", "doc_id", "url"],
                                {"shard": [0, 3], "local_no": [0, 1, 5]})]:
         local = read_table_arrow(spark, reader.paths, table, cols, filt)

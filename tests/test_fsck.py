@@ -112,29 +112,32 @@ def test_tampered_block_max_tf_detected(spark, built):
 
 
 def test_tampered_term_stats_detected(spark, built):
-    """One shard's df of one term is off: the per-shard audit names that
-    shard and term, and nothing else fires."""
+    """One shard's block-0 df_local or cf_local of one term is off — the
+    df or cf every reader sums: the per-shard audit names that shard and
+    term, and nothing else fires."""
     import glob
 
+    import pyarrow as pa
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
-    d = _copy(built)
-    try:
-        paths = IndexPaths(d)
-        (f,) = glob.glob(os.path.join(paths.term_stats, "shard=1", "*.parquet"))
-        t = pq.read_table(f)
-        term = t["term"][0].as_py()
-        t = t.set_column(t.schema.get_field_index("df"), "df", pc.if_else(
-            pc.equal(t["term"], term), pc.add(t["df"], 7), t["df"]))
-        os.remove(f)
-        os.remove(os.path.join(os.path.dirname(f), f".{os.path.basename(f)}.crc"))
-        pq.write_table(t, f)
-        got = fsck_index(spark, d).collect()
-        assert {(r["check"], r["shard"], r["key"]) for r in got} == {
-            ("term_stats", 1, term)}
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
+    for column in ("df_local", "cf_local"):
+        d = _copy(built)
+        try:
+            (f,) = glob.glob(os.path.join(IndexPaths(d).postings, "shard=1", "*.parquet"))
+            t = pq.read_table(f)
+            term = t["term"][0].as_py()
+            hit = pc.and_(pc.equal(t["term"], term), pc.equal(t["block_no"], 0))
+            t = t.set_column(t.schema.get_field_index(column), column, pc.if_else(
+                hit, pc.add(t[column], pa.scalar(7, t[column].type)), t[column]))
+            os.remove(f)
+            os.remove(os.path.join(os.path.dirname(f), f".{os.path.basename(f)}.crc"))
+            pq.write_table(t, f)
+            got = fsck_index(spark, d).collect()
+            assert {(r["check"], r["shard"], r["key"]) for r in got} == {
+                ("df_local", 1, term)}, column
+        finally:
+            shutil.rmtree(d, ignore_errors=True)
 
 
 def test_merged_index_audits_clean(spark, built):

@@ -181,7 +181,7 @@ def test_merge_retry_after_partial_output_is_idempotent(spark, dirs):
     # simulate a crash window: manifest + one sidecar missing, postings
     # partially present — retry must not double-append or trust leftovers
     shutil.rmtree(os.path.join(m_dir, "manifest"))
-    shutil.rmtree(os.path.join(m_dir, "term_stats"))
+    shutil.rmtree(os.path.join(m_dir, "corpus_stats"))
     merge_indexes(spark, [a_dir, b_dir], m_dir, n_shards=2)
     after = IndexReader(spark, m_dir)
     assert _docs_key(after) == want_docs

@@ -118,8 +118,8 @@ def test_prefix_search_pushes_startswith_and_matches_scan(reader):
 
 
 # job counts measured on the 40-page, 4-shard index below
-BUILD_JOBS = 9
-STREAM_BATCH_JOBS = 19
+BUILD_JOBS = 8
+STREAM_BATCH_JOBS = 17
 
 
 def _spark_jobs(spark, action) -> int:
@@ -329,6 +329,30 @@ def test_stream_batch_reads_each_input_once(spark):
                                  for nodes in execs for name, _, _ in nodes)
     finally:
         shutil.rmtree(idx, ignore_errors=True)
+
+
+def test_every_build_wave_shuffles_its_docs_once(spark):
+    """A wave's tokenized docs are laid out as ``write_shards`` writes
+    them, two partitions at least, so a wave of one shard (``n_shards=1``
+    or ``wave_size=1``) writes its docs after one exchange, as a wave of
+    four shards does."""
+    from document_retrieval_system_spark.operators.index_build import build_index
+    from document_retrieval_system_spark.sources.corpus import pages_df
+
+    pages = pages_df(spark, 40)
+    for n_shards, wave_size, waves in ((4, None, 1), (1, None, 1), (2, 1, 2)):
+        idx = tempfile.mkdtemp(prefix="drs_wave_exchanges_")
+        try:
+            execs = _sql_executions(spark, lambda: build_index(
+                spark, pages, idx, n_shards=n_shards, wave_size=wave_size))
+            docs_writes = [nodes for nodes in execs if any(
+                "InsertIntoHadoopFsRelationCommand" in name and f"{idx}/docs" in desc
+                for name, desc, _ in nodes)]
+            exchanges = [sum(name == "Exchange" for name, _, _ in nodes)
+                         for nodes in docs_writes]
+            assert exchanges == [1] * waves, (n_shards, wave_size, exchanges)
+        finally:
+            shutil.rmtree(idx, ignore_errors=True)
 
 
 def test_compaction_reads_each_target_shards_docs_once(spark):

@@ -38,8 +38,8 @@ QUERIES = ["search engine index", "crashwindowterm ranking"]
 WRITE_ORDER = [
     "intent touch",
     "docs append", "docs overwrite", "postings append", "postings overwrite",
-    "manifest rows", "term_stats append", "corpus_stats rows",
-    "manifest rows", "term_stats overwrite", "corpus_stats rows",
+    "manifest rows", "corpus_stats rows",
+    "manifest rows", "corpus_stats rows",
     "intent delete",
 ]
 
