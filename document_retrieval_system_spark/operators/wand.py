@@ -25,8 +25,9 @@ top-k with **block-max pruning** per index shard:
    bit-for-bit.
 
 A request's term dfs and corpus scalars are pyarrow reads in the driver:
-the query terms' block-0 postings rows and the corpus_stats files.  Where the kernel runs
-depends on the index and on the request's size (``_hits``):
+the query terms' block-0 postings rows and the corpus_stats files.  Where
+the kernel runs depends on the index and on the request's size
+(``_hits``):
 
 - On the local file system, when the query terms' postings (their summed
   df) fit ``DRIVER_POSTINGS``, the driver reads the terms' blocks itself
